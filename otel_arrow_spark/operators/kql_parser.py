@@ -1289,7 +1289,12 @@ def _let(val: Column, body) -> Column:
     exactly this). Catalyst's higher-order-function lambda variables
     are bound once per row, so wrapping the value in a 1-element array
     and reading it through a transform() lambda gives CSE the
-    optimizer doesn't otherwise guarantee."""
+    optimizer doesn't otherwise guarantee. Critical when ``val`` is a
+    VARIANT → JSON-text → ``from_json`` re-parse referenced inside an
+    ``F.aggregate`` fold: without the binding each fold step re-parses
+    the document (kql_geo_polygon measured 49.6 s solo before, 5.2 s
+    after, with the literal-polygon compile-time fold contributing
+    too)."""
     return F.get(F.transform(F.array(val), body), 0)
 
 
@@ -2770,20 +2775,6 @@ def _geo_seg_point_dist(lon: Column, lat: Column,
     ).otherwise(endpoint)
 
 
-def _bind_once(col: Column, body) -> Column:
-    """Evaluate ``col`` once per row and pass it to ``body`` as a bound
-    lambda variable — the materialize-once rider (the same trick as
-    ``_series_seasonal``'s detected period): downstream lambdas and
-    repeated references see the bound value, never re-evaluating the
-    underlying expression. Critical when that expression is a
-    VARIANT → JSON-text → ``from_json`` re-parse referenced inside an
-    ``F.aggregate`` fold — without the rider each fold step re-parses
-    the document (kql_geo_polygon measured 49.6 s solo before, 5.2 s
-    after, with the literal-polygon compile-time fold contributing
-    too)."""
-    return F.element_at(F.transform(F.array(col), body), 1)
-
-
 def _geojson_coords(ke: KE, schema: str, depth: int) -> Column:
     """``coordinates`` of a GeoJSON dynamic as typed nested arrays.
 
@@ -2792,7 +2783,7 @@ def _geojson_coords(ke: KE, schema: str, depth: int) -> Column:
     array literals: zero per-row parsing, and Catalyst sees a foldable
     constant. Anything else re-enters array land via one ``from_json``
     of the VARIANT's JSON text — callers bind the result once per row
-    with ``_bind_once`` so chained references don't re-parse."""
+    with :func:`_let` so chained references don't re-parse."""
     import json as _json
 
     if ke.is_lit and isinstance(ke.lit, str):
@@ -3365,10 +3356,13 @@ class ExprParser:
             if len(args) == 2:
                 return KE(parts)
             # requestedIndex (0-based): single-element array with that
-            # substring; EMPTY array when out of range (Kusto)
+            # substring; EMPTY array when out of range (Kusto). A
+            # negative index becomes a null position — element index 0
+            # would raise INVALID_INDEX_OF_ZERO on the executor.
             idx = args[2].col.cast("int")
+            pos = F.when(idx >= 0, idx + 1)
             return KE(F.array_compact(
-                F.array(F.try_element_at(parts, idx + 1))))
+                F.array(F.try_element_at(parts, pos))))
         if lname == "array_join":
             if len(args) != 2:
                 raise KqlError("array_join needs (arr, delim)")
@@ -3610,7 +3604,7 @@ class ExprParser:
                     holes, lambda h: _geo_ring_contains(lon, lat, h))
                 return inside & ~F.coalesce(in_hole, F.lit(False))
 
-            return KE(_bind_once(rings, _pip))
+            return KE(_let(rings, _pip))
         if lname == "geo_polygon_area":
             # geo_polygon_area(polygon) — GeoJSON Polygon area in m²:
             # outer-ring spherical area minus the holes
@@ -3632,7 +3626,7 @@ class ExprParser:
                 return (_geo_ring_area(F.get(r, 0))
                         - F.coalesce(hole_sum, F.lit(0.0)))
 
-            return KE(_bind_once(rings, _area))
+            return KE(_let(rings, _area))
         if lname == "geo_distance_point_to_line":
             # geo_distance_point_to_line(longitude, latitude, line) —
             # minimum spherical distance (m) from the point to a
@@ -3641,7 +3635,7 @@ class ExprParser:
             # (_geo_seg_point_dist). Same planar-edge caveats as the
             # other geo fns (documented); literal lines fold at
             # compile time, data-dependent ones parse once per row via
-            # the _bind_once rider. NULL for fewer than 2 vertices.
+            # _let. NULL for fewer than 2 vertices.
             if len(args) != 3:
                 raise KqlError(
                     "geo_distance_point_to_line needs (lon, lat, line)")
@@ -3663,7 +3657,7 @@ class ExprParser:
                             F.get(F.get(pts, i + F.lit(1)), 1)))),
                 )
 
-            return KE(_bind_once(pts0, _p2l))
+            return KE(_let(pts0, _p2l))
         if lname == "geo_line_length":
             # geo_line_length(lineString) — GeoJSON LineString length
             # in meters: haversine sum over consecutive vertex pairs
@@ -3685,7 +3679,7 @@ class ExprParser:
                         F.get(F.get(pts, i + F.lit(1)), 1)))
                 return F.when(F.size(pts) >= F.lit(2), seg)
 
-            return KE(_bind_once(pts0, _llen))
+            return KE(_let(pts0, _llen))
         if lname in ("series_fft", "series_ifft"):
             # series_fft(re [, im]) — {re, im} bag (this engine's
             # two-output shape; Kusto multi-assigns). Direct DFT —
@@ -3975,20 +3969,21 @@ class ExprParser:
                     pieces.append(F.lit(tok))
             return KE(F.concat(*pieces))
         if lname in ("trim_start", "trim_end"):
-            # trim_start(regex, s) — strip a leading (trailing) match
+            # trim_start(regex, s) — strip every leading (trailing)
+            # match (Kusto)
             if len(args) != 2:
                 raise KqlError(f"{lname} needs (regex, s)")
             pat = _lit_str(args[0])
-            anchored = f"^(?:{pat})" if lname == "trim_start" else f"(?:{pat})$"
+            anchored = f"^(?:{pat})+" if lname == "trim_start" else f"(?:{pat})+$"
             return KE(F.regexp_replace(args[1].col, anchored, ""))
         if lname == "trim" and len(args) == 2:
-            # trim(regex, s) — strip one leading AND one trailing
-            # match (Kusto). The 1-arg whitespace form (an engine
+            # trim(regex, s) — strip every leading AND trailing match
+            # (Kusto). The 1-arg whitespace form (an engine
             # convenience) stays on the function table.
             pat = _lit_str(args[0])
             return KE(F.regexp_replace(
-                F.regexp_replace(args[1].col, f"^(?:{pat})", ""),
-                f"(?:{pat})$", ""))
+                F.regexp_replace(args[1].col, f"^(?:{pat})+", ""),
+                f"(?:{pat})+$", ""))
         if lname == "translate":
             # translate(searchList, replacementList, source)
             if len(args) != 3:
@@ -4214,7 +4209,8 @@ class ExprParser:
                     return KE(running)
                 # restart form: the accumulation resets AT each row
                 # where `restart` is true (that row's term included,
-                # Kusto row_cumsum). Closed form sharing the SAME
+                # Kusto row_cumsum; a null term counts as 0 so its
+                # restart is not skipped). Closed form sharing the SAME
                 # Exchange+Sort as the plain running sum: with
                 # S = running total, the latest restart row r at or
                 # before the current row contributes base S_r − x_r
@@ -4223,7 +4219,8 @@ class ExprParser:
                 # no per-segment re-partitioning, still one Window op
                 # chain over the serialize spec.
                 base = F.last(
-                    F.when(args[1].col, running - args[0].col),
+                    F.when(args[1].col,
+                           running - F.coalesce(args[0].col, F.lit(0))),
                     ignorenulls=True,
                 ).over(upto)
                 return KE(running - F.coalesce(base, F.lit(0)))

@@ -6,19 +6,21 @@ RFC5424 (`parser/rfc5424.rs`), RFC3164 (`parser/rfc3164.rs`), CEF
 (`parser/cef.rs`), and priority→(facility,severity) split
 (`parser/mod.rs:21-25`) — as declarative Spark expressions:
 
-- Format dispatch is a ``when`` chain on anchored regexes (the reference's
-  first-byte dispatch), fully inside whole-stage codegen.
-- Field extraction is ``regexp_extract`` / ``regexp_extract_all`` +
-  ``map_from_arrays`` — JVM-side, no Python in the hot path.
-- A pandas-UDF variant (:func:`parse_turns_pandas`) demonstrates the
-  Arrow-vectorized escape hatch for formats regex can't express; it is
-  cross-checked against the native path in tests.
+- One table (:data:`_FORMATS`) lists each format's name, anchored regex
+  and field→capture-group map, in detection order (the reference's
+  first-byte dispatch).
+- Every output column is a ``when`` chain folded over that table:
+  ``rlike`` guards + ``regexp_extract`` / ``regexp_extract_all`` +
+  ``map_from_arrays`` — JVM-side inside whole-stage codegen, no Python
+  in the hot path.
 
 Malformed lines never error — they get ``format='malformed'`` and null
 fields (chaos discipline: `go/pkg/otel/logs/validation_test.go:58-71`).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -34,14 +36,57 @@ PARSED_FIELDS = [
 ]
 
 
+class _Format(NamedTuple):
+    name: str
+    pattern: str
+    groups: dict[str, int]  # output field -> capture group in ``pattern``
+    kv: tuple[str, str] | None = None  # (key regex, value regex) over group "kv"
+
+
+# Detection order: the first pattern that matches names the format.
+# ``pri`` is the syslog PRI (split into facility/severity); a format that
+# maps ``severity`` directly carries no PRI.
+_FORMATS = (
+    _Format(
+        "rfc5424", V1_RE,
+        {"pri": 1, "host": 3, "app": 4, "event_name": 6, "kv": 7, "body": 8},
+        kv=(r'(\w+)="', r'="([^"]*)"'),
+    ),
+    _Format("rfc3164", V2_RE, {"pri": 1, "host": 5, "app": 6, "body": 7}),
+    # CEF groups: 1=vendor 2=product 3=ver 4=class 5=name 6=severity 7=extension;
+    # the product stands in for the origin host.
+    _Format(
+        "cef", V3_RE,
+        {"app": 1, "host": 2, "event_name": 5, "severity": 6, "kv": 7, "body": 7},
+        kv=(r'(\w+)=', r'=([^ ]*)'),
+    ),
+)
+
+
+def _chain(text: Column, branches) -> Column:
+    """Fold ``(pattern, value)`` pairs into one ``when`` chain (null if none match)."""
+    out = None
+    for pattern, value in branches:
+        cond = text.rlike(pattern)
+        out = F.when(cond, value) if out is None else out.when(cond, value)
+    return out
+
+
 def detect_format(text: Column) -> Column:
     """Format auto-detect (`parser/mod.rs:48-100` analog)."""
-    return (
-        F.when(text.rlike(V1_RE), F.lit("rfc5424"))
-        .when(text.rlike(V2_RE), F.lit("rfc3164"))
-        .when(text.rlike(V3_RE), F.lit("cef"))
-        .otherwise(F.lit("malformed"))
-    )
+    return _chain(
+        text, [(f.pattern, F.lit(f.name)) for f in _FORMATS]
+    ).otherwise(F.lit("malformed"))
+
+
+def _field(text: Column, field: str, cast: str | None = None) -> Column:
+    """``field`` from the first matching format that carries it."""
+    branches = []
+    for f in _FORMATS:
+        if field in f.groups:
+            value = F.regexp_extract(text, f.pattern, f.groups[field])
+            branches.append((f.pattern, value.try_cast(cast) if cast else value))
+    return _chain(text, branches)
 
 
 def _kv_map(payload: Column, key_re: str, val_re: str) -> Column:
@@ -58,249 +103,25 @@ def parse_turns(df: DataFrame, text_col: str = "text") -> DataFrame:
     byte-exact ``text``) pass through untouched.
     """
     t = F.col(text_col)
-    fmt = detect_format(t).alias("format")
-
-    pri = (
-        F.when(t.rlike(V1_RE), F.regexp_extract(t, V1_RE, 1))
-        .when(t.rlike(V2_RE), F.regexp_extract(t, V2_RE, 1))
-        .try_cast("int")
+    pri = _field(t, "pri").try_cast("int")
+    attrs = _chain(
+        t,
+        [
+            (f.pattern, _kv_map(F.regexp_extract(t, f.pattern, f.groups["kv"]), *f.kv))
+            for f in _FORMATS
+            if f.kv
+        ],
     )
-    # syslog PRI → facility*8 + severity (`parser/mod.rs:21-25`)
-    facility = (pri / 8).try_cast("int")
-    # CEF groups: 1=vendor 2=product 3=ver 4=class 5=name 6=severity 7=extension
-    severity = F.when(
-        t.rlike(V3_RE), F.regexp_extract(t, V3_RE, 6).try_cast("int")
-    ).otherwise(pri % 8)
-
-    host = (
-        F.when(t.rlike(V1_RE), F.regexp_extract(t, V1_RE, 3))
-        .when(t.rlike(V2_RE), F.regexp_extract(t, V2_RE, 5))
-        .when(t.rlike(V3_RE), F.regexp_extract(t, V3_RE, 2))  # CEF: product as origin
-    )
-    app = (
-        F.when(t.rlike(V1_RE), F.regexp_extract(t, V1_RE, 4))
-        .when(t.rlike(V2_RE), F.regexp_extract(t, V2_RE, 6))
-        .when(t.rlike(V3_RE), F.regexp_extract(t, V3_RE, 1))  # CEF: vendor
-    )
-    event_name = (
-        F.when(t.rlike(V1_RE), F.regexp_extract(t, V1_RE, 6))
-        .when(t.rlike(V3_RE), F.regexp_extract(t, V3_RE, 5))  # CEF event NAME
-    )
-    body = (
-        F.when(t.rlike(V1_RE), F.regexp_extract(t, V1_RE, 8))
-        .when(t.rlike(V2_RE), F.regexp_extract(t, V2_RE, 7))
-        .when(t.rlike(V3_RE), F.regexp_extract(t, V3_RE, 7))
-    )
-    attrs = (
-        F.when(
-            t.rlike(V1_RE),
-            _kv_map(F.regexp_extract(t, V1_RE, 7), r'(\w+)="', r'="([^"]*)"'),
-        )
-        .when(
-            t.rlike(V3_RE),
-            _kv_map(F.regexp_extract(t, V3_RE, 7), r'(\w+)=', r'=([^ ]*)'),
-        )
-    )
-
     return df.withColumns(
         {
-            "format": fmt,
-            "facility": facility.alias("facility"),
-            "severity": severity.alias("severity"),
-            "host": host.alias("host"),
-            "app": app.alias("app"),
-            "event_name": event_name.alias("event_name"),
-            "body": body.alias("body"),
-            "attrs": attrs.alias("attrs"),
+            "format": detect_format(t),
+            # syslog PRI → facility*8 + severity (`parser/mod.rs:21-25`)
+            "facility": (pri / 8).try_cast("int"),
+            "severity": _field(t, "severity", "int").otherwise(pri % 8),
+            "host": _field(t, "host"),
+            "app": _field(t, "app"),
+            "event_name": _field(t, "event_name"),
+            "body": _field(t, "body"),
+            "attrs": attrs,
         }
     )
-
-
-# ---------------------------------------------------------------------------
-# Arrow-vectorized alternative (the escape hatch for non-regex formats).
-# ---------------------------------------------------------------------------
-
-_PARSED_SCHEMA = (
-    "format string, facility int, severity int, host string, app string, "
-    "event_name string, body string, attrs map<string,string>"
-)
-
-
-def parse_turns_pandas(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Same contract as :func:`parse_turns` via an Arrow-batched pandas UDF.
-
-    One compiled-regex pass per batch using pandas' vectorized ``str``
-    methods — no per-row Python loops. This mirrors the reference's
-    single-pass dispatch parser and is the pattern to follow for payloads
-    regex can't handle (protobuf/JSON bodies, multimodal blobs).
-    """
-    import pandas as pd
-
-    def _parse(text: pd.Series) -> pd.DataFrame:
-        import re
-
-        v1 = text.str.extract(V1_RE)
-        v2 = text.str.extract(V2_RE)
-        v3 = text.str.extract(V3_RE)
-        is1, is2, is3 = v1[0].notna(), v2[0].notna(), v3[0].notna()
-        is2 &= ~is1
-        is3 &= ~is1 & ~is2
-        fmt = pd.Series("malformed", index=text.index)
-        fmt[is1], fmt[is2], fmt[is3] = "rfc5424", "rfc3164", "cef"
-
-        pri = pd.to_numeric(v1[0].where(is1, v2[0].where(is2)), errors="coerce")
-        facility = (pri // 8).astype("Int64")
-        # v3 0-indexed: 0=vendor 1=product 2=ver 3=class 4=name 5=severity 6=ext
-        severity = pd.to_numeric(v3[5].where(is3), errors="coerce").where(
-            is3, pri % 8
-        ).astype("Int64")
-        host = v1[2].where(is1, v2[4].where(is2, v3[1].where(is3)))
-        app = v1[3].where(is1, v2[5].where(is2, v3[0].where(is3)))
-        event_name = v1[5].where(is1, v3[4].where(is3))
-        body = v1[7].where(is1, v2[6].where(is2, v3[6].where(is3)))
-
-        kv1_re, kv3_re = re.compile(r'(\w+)="([^"]*)"'), re.compile(r"(\w+)=([^ ]*)")
-        attrs = pd.Series([None] * len(text), index=text.index, dtype=object)
-        attrs[is1] = v1[6][is1].map(lambda s: dict(kv1_re.findall(s)))
-        attrs[is3] = v3[6][is3].map(lambda s: dict(kv3_re.findall(s)))
-
-        return pd.DataFrame(
-            {
-                "format": fmt, "facility": facility, "severity": severity,
-                "host": host, "app": app, "event_name": event_name,
-                "body": body, "attrs": attrs,
-            }
-        )
-
-    _parse.__annotations__ = {"text": pd.Series, "return": pd.DataFrame}
-    parse_udf = F.pandas_udf(_parse, _PARSED_SCHEMA)
-    parsed = df.withColumn("_p", parse_udf(F.col(text_col)))
-    return parsed.select("*", "_p.*").drop("_p")
-
-
-# ---------------------------------------------------------------------------
-# Arrow-native variant: RE2 in C++ via pyarrow.compute, no pandas objects.
-# ---------------------------------------------------------------------------
-
-# Named-group renditions of the same patterns (RE2 ∩ Java subset).
-V1_NAMED = (
-    r'^<(?P<pri>\d{1,3})>1 (?P<ts>\S+) (?P<host>\S+) (?P<app>\S+) '
-    r'(?P<proc>\S+) (?P<msgid>\S+) \[kv@0 (?P<kv>[^\]]*)\] (?P<body>.*)$'
-)
-V2_NAMED = (
-    r'^<(?P<pri>\d{1,3})>(?P<mon>[A-Z][a-z]{2}) (?P<day>[ 0-9]?\d) '
-    r'(?P<time>\d{2}:\d{2}:\d{2}) (?P<host>\S+) (?P<tag>[^:]+): (?P<body>.*)$'
-)
-V3_NAMED = (
-    r'^CEF:0\|(?P<vendor>[^|]*)\|(?P<product>[^|]*)\|(?P<ver>[^|]*)\|'
-    r'(?P<cls>[^|]*)\|(?P<name>[^|]*)\|(?P<sev>[^|]*)\|(?P<ext>.*)$'
-)
-
-
-def parse_turns_arrow(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Same contract as :func:`parse_turns`, via ``mapInArrow`` + RE2.
-
-    One C++ ``extract_regex`` pass per format over the Arrow batch —
-    no pandas object columns, no Python-side string allocation, so it
-    scales with cores instead of with the memory allocator. The attrs
-    map is assembled JVM-side from the (short) extracted kv payload.
-    """
-    kv_field = "_kv_payload"
-    scalar_ddl = (
-        "format string, facility int, severity int, host string, "
-        "app string, event_name string, body string, "
-        f"{kv_field} string"
-    )
-    base_ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
-    out_ddl = base_ddl + ", " + scalar_ddl
-
-    def _parse(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        snull = pa.scalar(None, pa.string())
-
-        def masked(ok, struct, field):
-            return pc.if_else(ok, pc.struct_field(struct, field), snull)
-
-        for b in batches:
-            t = b.column(text_col)
-            if t.type != pa.string():
-                t = pc.cast(t, pa.string())
-            m1 = pc.extract_regex(t, V1_NAMED)
-            m2 = pc.extract_regex(t, V2_NAMED)
-            m3 = pc.extract_regex(t, V3_NAMED)
-            ok1 = pc.is_valid(m1)
-            ok2 = pc.and_(pc.is_valid(m2), pc.invert(ok1))
-            ok3 = pc.and_(
-                pc.is_valid(m3), pc.invert(pc.or_(ok1, ok2))
-            )
-            fmt = pc.if_else(
-                ok1, pa.scalar("rfc5424"),
-                pc.if_else(
-                    ok2, pa.scalar("rfc3164"),
-                    pc.if_else(ok3, pa.scalar("cef"), pa.scalar("malformed")),
-                ),
-            )
-            pri_s = pc.if_else(ok1, pc.struct_field(m1, "pri"),
-                               pc.if_else(ok2, pc.struct_field(m2, "pri"), snull))
-            pri = pc.cast(pri_s, pa.int32())
-            facility = pc.divide(pri, pa.scalar(8, pa.int32()))
-            pri_mod = pc.subtract(
-                pri, pc.multiply(facility, pa.scalar(8, pa.int32()))
-            )
-            sev_s = masked(ok3, m3, "sev")
-            sev_digits = pc.if_else(
-                pc.fill_null(
-                    pc.match_substring_regex(sev_s, r"^\d{1,9}$"), False
-                ),
-                sev_s, snull,
-            )
-            severity = pc.if_else(ok3, pc.cast(sev_digits, pa.int32()), pri_mod)
-            host = pc.if_else(
-                ok1, pc.struct_field(m1, "host"),
-                pc.if_else(ok2, pc.struct_field(m2, "host"),
-                           masked(ok3, m3, "product")),
-            )
-            app = pc.if_else(
-                ok1, pc.struct_field(m1, "app"),
-                pc.if_else(ok2, pc.struct_field(m2, "tag"),
-                           masked(ok3, m3, "vendor")),
-            )
-            event_name = pc.if_else(
-                ok1, pc.struct_field(m1, "msgid"), masked(ok3, m3, "name")
-            )
-            body = pc.if_else(
-                ok1, pc.struct_field(m1, "body"),
-                pc.if_else(ok2, pc.struct_field(m2, "body"),
-                           masked(ok3, m3, "ext")),
-            )
-            kv_payload = pc.if_else(
-                ok1, pc.struct_field(m1, "kv"), masked(ok3, m3, "ext")
-            )
-            arrays = list(b.columns) + [
-                fmt, facility, severity, host, app, event_name, body,
-                kv_payload,
-            ]
-            names = b.schema.names + [
-                "format", "facility", "severity", "host", "app",
-                "event_name", "body", kv_field,
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a
-                 for a in arrays],
-                names=names,
-            )
-
-    mapped = df.mapInArrow(_parse, out_ddl)
-    attrs = (
-        F.when(
-            F.col("format") == "rfc5424",
-            _kv_map(F.col(kv_field), r'(\w+)="', r'="([^"]*)"'),
-        )
-        .when(
-            F.col("format") == "cef",
-            _kv_map(F.col(kv_field), r"(\w+)=", r"=([^ ]*)"),
-        )
-    )
-    return mapped.withColumn("attrs", attrs).drop(kv_field)

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from .aggregate import counts_by_conv, counts_by_sink_tool_hour
 from .enrich import enrich_turns
-from .parse import parse_turns, parse_turns_pandas
+from .parse import parse_turns
 from .router import route_turns, sink_counts
 
 
@@ -35,41 +35,17 @@ def build_pipeline(
     transcripts: DataFrame,
     tool_catalog: DataFrame,
     role_catalog: DataFrame,
-    parse_impl: str = "native",
 ) -> PipelineResult:
     """Compose the full logical plan (lazy; nothing executes here).
 
     parse + enrich(broadcast) + route are all narrow — one fused pass
     over the input, no shuffle until the aggregations. This is the
     property that makes the job scale linearly with executors (the ≥0.8
-    scaling-efficiency requirement).
-
-    ``parse_impl`` (all three cross-checked equal on adversarial inputs):
-    - 'native' (default): pure Catalyst regex expressions. The
-      configuration the north-rule evidence is recorded with: 0.857
-      full-job scaling efficiency local[2]→local[8] at 20M rows
-      (`BENCH/BASELINE.md`).
-    - 'arrow': mapInArrow + RE2 (pyarrow.compute). ~6× the per-core
-      throughput (458k turns/s on 8 cores) but memory-bandwidth-bound:
-      on a single box extra cores add nothing. Runs with SPAWN-mode
-      Python workers (`spark.python.use.daemon=false`, wired in
-      run_pipeline/session): the forking daemon intermittently wedged a
-      worker mid-task (~50% of 20M-row local[2] runs; fork-per-task
-      still wedged, spawn showed 0/4 — fork unsafety with the
-      Arrow-threaded worker). Spawn costs ~25% at 2 cores (per-task
-      interpreter startup, amortized away at larger tasks/executors)
-      and still clears the native path by ~1.5×.
-    - 'pandas': pandas-str Arrow UDF; between the two, allocator-bound
-      at high core counts.
+    scaling-efficiency requirement). The parse is pure Catalyst regex
+    expressions (:func:`parse.parse_turns`): 0.857 full-job scaling
+    efficiency local[2]→local[8] at 20M rows (`BENCH/BASELINE.md`).
     """
-    from .parse import parse_turns_arrow
-
-    parse = {
-        "native": parse_turns,
-        "arrow": parse_turns_arrow,
-        "pandas": parse_turns_pandas,
-    }[parse_impl]
-    parsed = parse(transcripts)
+    parsed = parse_turns(transcripts)
     enriched = enrich_turns(parsed, tool_catalog, role_catalog)
     routed = route_turns(enriched)
     return PipelineResult(

@@ -55,18 +55,6 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"),
         )
     )
-    # Python-worker process model. Default: forking daemon (fastest).
-    # The Arrow/RE2 parse path (mapInArrow) intermittently wedges a
-    # forked worker (~50% of 20M-row runs at local[2]: one task hangs
-    # silently, "Python worker exited unexpectedly" surfaces on kill);
-    # spawn-mode workers (use.daemon=false) showed 0 wedges in 4/4 runs
-    # while fork-per-task (worker.reuse=false) still wedged — i.e. the
-    # fork itself is unsafe with the Arrow-threaded worker, so spawn is
-    # the mitigation. run_pipeline flips this automatically for
-    # SPARK_GRAFT_PARSE_IMPL=arrow; override with SPARK_GRAFT_PYTHON_DAEMON.
-    daemon = os.environ.get("SPARK_GRAFT_PYTHON_DAEMON")
-    if daemon is not None:
-        builder = builder.config("spark.python.use.daemon", daemon)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

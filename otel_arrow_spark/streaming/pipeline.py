@@ -710,11 +710,11 @@ def streaming_sliding_counts(
     lookback + delay; use ``dropDuplicatesWithinWatermark`` on the
     dedup leg); the parity test drives them complete-mode under
     ``availableNow`` where the single pass never advances the
-    watermark (same convention as the make-series twin above)."""
-    from datetime import datetime as _dt
+    watermark (same convention as the make-series twin above).
+    ``start``/``end`` are naive UTC, as in the batch plugin."""
+    from otel_arrow_spark.operators.kql_parser import _plugin_epoch
 
-    t0 = _dt.fromisoformat(start).timestamp()
-    t1 = _dt.fromisoformat(end).timestamp()
+    t0, t1 = _plugin_epoch(start), _plugin_epoch(end)
     s0, e0 = int(t0 // bin_sec), int(t1 // bin_sec)
     k = lookback_sec // bin_sec
     ep = F.col(on).cast("timestamp").cast("double")
@@ -748,10 +748,10 @@ def assemble_sliding_counts(
     """Read-time assembly for :func:`streaming_sliding_counts`: the
     [start, end] bin spine left-joins both incremental legs (zeros for
     silent bins), producing exactly the batch plugin's output shape."""
-    from datetime import datetime as _dt
+    from otel_arrow_spark.operators.kql_parser import _plugin_epoch
 
-    s0 = int(_dt.fromisoformat(start).timestamp() // bin_sec)
-    e0 = int(_dt.fromisoformat(end).timestamp() // bin_sec)
+    s0 = int(_plugin_epoch(start) // bin_sec)
+    e0 = int(_plugin_epoch(end) // bin_sec)
     spine = spark.range(s0, e0 + 1).select(F.col("id").alias("_t"))
     return (
         spine.join(counts, "_t", "left")

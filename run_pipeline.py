@@ -53,12 +53,6 @@ def main(argv: list[str] | None = None) -> int:
             return 2
         write_fixture_tables(args.input, args.gen_rows)
 
-    # Arrow parse path: spawn-mode Python workers (no forking daemon) —
-    # the measured fix for the intermittent forked-worker wedge (see
-    # session.get_spark). ~25% slower per-task startup at tiny core
-    # counts, zero hangs in 4/4 20M-row trials vs 2/4 with the daemon.
-    if os.environ.get("SPARK_GRAFT_PARSE_IMPL") == "arrow":
-        os.environ.setdefault("SPARK_GRAFT_PYTHON_DAEMON", "false")
     spark = get_spark(app_name="otel-arrow-pipeline")
     t0 = time.time()
     transcripts = spark.read.parquet(tpath)
@@ -138,23 +132,14 @@ def _bench(spark, args, transcripts, tools, roles) -> int:
 
     from otel_arrow_spark.enrich import enrich_turns
     from otel_arrow_spark.lineage import with_slice
-    from otel_arrow_spark.parse import (
-        parse_turns, parse_turns_arrow, parse_turns_pandas,
-    )
+    from otel_arrow_spark.parse import parse_turns
     from otel_arrow_spark.router import route_turns
-
-    impl = os.environ.get("SPARK_GRAFT_PARSE_IMPL", "native")
-    parse = {
-        "native": parse_turns,
-        "arrow": parse_turns_arrow,
-        "pandas": parse_turns_pandas,
-    }[impl]
 
     best = None
     for rep in range(max(args.repeat, 1)):
         t0 = time.time()
         routed = route_turns(
-            enrich_turns(parse(transcripts), tools, roles)
+            enrich_turns(parse_turns(transcripts), tools, roles)
         )
         routed = with_slice(routed, args.n_slices)
         if args.sink == "noop":
@@ -193,7 +178,6 @@ def _bench(spark, args, transcripts, tools, roles) -> int:
         "turns_per_sec": round(n / dt, 1),
         "master": spark.sparkContext.master,
         "repeats": args.repeat,
-        "parse_impl": impl,
         "sink": args.sink,
     }))
     return 0

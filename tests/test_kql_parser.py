@@ -4218,6 +4218,9 @@ def test_row_cumsum_restart(spark):
             ("a", 6, 3, True),    # consecutive reset -> 3
             ("b", 1, 4, True),    # first-row reset -> 4
             ("b", 2, 6, False),   # 10
+            ("c", 1, 5, False),   # 5
+            ("c", 2, None, True),  # reset on a null term -> 0
+            ("c", 3, 3, False),   # 3
         ],
         "g string, idx int, v long, rst boolean",
     )
@@ -4231,6 +4234,7 @@ def test_row_cumsum_restart(spark):
     assert rows == {
         ("a", 1): 10, ("a", 2): 5, ("a", 3): 7, ("a", 4): 8,
         ("a", 5): 2, ("a", 6): 3, ("b", 1): 4, ("b", 2): 10,
+        ("c", 1): 5, ("c", 2): 0, ("c", 3): 3,
     }
 
 
@@ -4456,7 +4460,7 @@ def test_split_plain_delimiter_and_requested_index(spark):
     """Kusto split: the delimiter is a PLAIN string (a '.' or '|'
     splits literally, never as a regex), trailing empties are kept,
     and the 3-arg requestedIndex form returns a single-element array
-    (empty array when out of range)."""
+    (empty array when out of range, negative index included)."""
     from otel_arrow_spark.operators.kql_parser import kql
 
     df = spark.createDataFrame([("a.b.c", "x||y|", "1+2=3")],
@@ -4465,7 +4469,8 @@ def test_split_plain_delimiter_and_requested_index(spark):
         df,
         'T | project p1 = split(s1, "."), p2 = split(s2, "|"),'
         ' p3 = split(s3, "+"), one = split(s1, ".", 1),'
-        ' oob = split(s1, ".", 9), emp = split(s2, "|", 1)',
+        ' oob = split(s1, ".", 9), emp = split(s2, "|", 1),'
+        ' neg = split(s1, ".", -1)',
     ).collect()[0]
     assert r.p1 == ["a", "b", "c"]
     assert r.p2 == ["x", "", "y", ""]   # empties kept, incl. trailing
@@ -4473,18 +4478,23 @@ def test_split_plain_delimiter_and_requested_index(spark):
     assert r.one == ["b"]
     assert r.oob == []
     assert r.emp == [""]                # requested element IS empty
+    assert r.neg == []
 
 
 def test_trim_regex_both_ends(spark):
-    """Kusto trim(regex, text) strips one leading AND one trailing
-    match; the previous table entry silently whitespace-trimmed and
-    ignored the regex. 1-arg whitespace form unchanged."""
+    """Kusto trim(regex, text) strips every leading AND trailing
+    match, trim_start/trim_end every leading/trailing one; the previous
+    table entry silently whitespace-trimmed and ignored the regex.
+    1-arg whitespace form unchanged."""
     from otel_arrow_spark.operators.kql_parser import kql
 
     df = spark.createDataFrame([("--ab--", "  x  ", "aXa")],
                                "a string, b string, c string")
     r = kql(df, 'T | project t2 = trim("-+", a), t1 = trim(b),'
-                ' tc = trim("a", c)').collect()[0]
+                ' tc = trim("a", c), t3 = trim("-", a),'
+                ' ts = trim_start("-", a), te = trim_end("-", a)').collect()[0]
     assert r.t2 == "ab"
+    assert r.t3 == "ab"
+    assert (r.ts, r.te) == ("ab--", "--ab")
     assert r.t1 == "x"
     assert r.tc == "X"

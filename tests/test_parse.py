@@ -3,7 +3,7 @@
 import pandas as pd
 import pytest
 
-from otel_arrow_spark.parse import parse_turns, parse_turns_pandas
+from otel_arrow_spark.parse import parse_turns
 
 from .oracle import parse_oracle
 
@@ -70,14 +70,6 @@ def test_malformed_never_crashes(spark):
     out = parse_turns(df).collect()
     assert len(out) == len(rows)
     assert all(r["format"] in {"malformed", "cef"} for r in out)
-
-
-def test_pandas_udf_parity(spark, transcripts, spark_parsed):
-    """The Arrow-vectorized parser must agree with the native one."""
-    alt = _collect_parsed(parse_turns_pandas(transcripts))
-    for col in ["format", "facility", "severity", "host", "app", "event_name", "body"]:
-        a, b = alt[col], spark_parsed[col]
-        assert ((a.isna() & b.isna()) | (a == b)).all(), col
 
 
 def test_text_passthrough_byte_exact(transcripts, fixture_pdf):

@@ -604,7 +604,11 @@ def test_streaming_sliding_counts_equals_batch(spark, stream_dirs):
     (counts + dedup-dcounts) + read-time spine assembly must equal the
     batch `evaluate sliding_window_counts` output exactly — including
     the pre-start lookback seeding (start is mid-stream) and trailing
-    empty bins."""
+    empty bins — on a UTC driver and on one whose local zone is not UTC
+    (the naive start/end bounds are UTC, never the driver's zone)."""
+    import os
+    import time
+
     from otel_arrow_spark.operators.kql_parser import kql
     from otel_arrow_spark.streaming import read_transcript_stream
     from otel_arrow_spark.streaming.pipeline import (
@@ -613,26 +617,29 @@ def test_streaming_sliding_counts_equals_batch(spark, stream_dirs):
 
     start, end = "2026-08-16 02:00:00", "2026-08-16 06:00:00"
     in_dir, _out, _ckpt = stream_dirs
-    counts, dcounts = streaming_sliding_counts(
-        read_transcript_stream(spark, in_dir),
-        start, end, lookback_sec=7200, bin_sec=3600,
-    )
-    qs = []
-    for name, leg in (("swc_counts", counts), ("swc_dcounts", dcounts)):
-        qs.append(
-            leg.writeStream.format("memory").queryName(name)
-            .outputMode("complete").trigger(availableNow=True).start())
-    for q in qs:
-        q.awaitTermination(300)
-    got = {
-        str(r.ts): (r.count_, r.dcount)
-        for r in assemble_sliding_counts(
-            spark,
-            spark.sql("SELECT * FROM swc_counts"),
-            spark.sql("SELECT * FROM swc_dcounts"),
-            start, end, bin_sec=3600,
-        ).collect()
-    }
+
+    def streamed(tag: str) -> dict:
+        counts, dcounts = streaming_sliding_counts(
+            read_transcript_stream(spark, in_dir),
+            start, end, lookback_sec=7200, bin_sec=3600,
+        )
+        qs = []
+        for name, leg in ((f"swc_counts_{tag}", counts),
+                          (f"swc_dcounts_{tag}", dcounts)):
+            qs.append(
+                leg.writeStream.format("memory").queryName(name)
+                .outputMode("complete").trigger(availableNow=True).start())
+        for q in qs:
+            q.awaitTermination(300)
+        return {
+            str(r.ts): (r.count_, r.dcount)
+            for r in assemble_sliding_counts(
+                spark,
+                spark.sql(f"SELECT * FROM swc_counts_{tag}"),
+                spark.sql(f"SELECT * FROM swc_dcounts_{tag}"),
+                start, end, bin_sec=3600,
+            ).collect()
+        }
 
     batch = kql(
         spark.read.parquet(in_dir),
@@ -640,8 +647,22 @@ def test_streaming_sliding_counts_equals_batch(spark, stream_dirs):
         f" datetime({start}), datetime({end}), 2h, 1h)",
     )
     exp = {str(r.ts): (r.count_, r.dcount) for r in batch.collect()}
-    assert got == exp
+    assert streamed("utc") == exp
     assert len(exp) == 5  # 02:00 .. 06:00 inclusive
     # pre-start seeding is actually exercised: the first bin inherits
     # rows from 01:00 (before start)
     assert exp[min(exp)][0] > 0
+
+    # same twin on a driver whose local zone is UTC+05:30 (POSIX form,
+    # so no tz database is needed)
+    saved = os.environ.get("TZ")
+    os.environ["TZ"] = "IST-05:30"
+    time.tzset()
+    try:
+        assert streamed("ist") == exp
+    finally:
+        if saved is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = saved
+        time.tzset()

@@ -34,7 +34,6 @@ def run_level(cores: int, in_dir: str, out_dir: str, zip_path: str,
         SPARK_GRAFT_CPUS=str(cores),
         SPARK_GRAFT_SHUFFLE_PARTITIONS=str(max(cores * 2, 16)),
         SPARK_GRAFT_DRIVER_MEM="48g",
-        SPARK_GRAFT_PARSE_IMPL=os.environ.get("SPARK_GRAFT_PARSE_IMPL", "native"),
     )
     cmd = [
         "spark-submit", "--master", f"local[{cores}]",
@@ -158,9 +157,7 @@ study" below).
   {summary['sink_counts_equal']} — the router is a pure function of row
   content, never of parallelism.
 - Per-sink counts: `{json.dumps(plo['sink_counts'])}`
-- Config: parse_impl=native (see `pipeline.build_pipeline` for the
-  measured arrow/pandas trade-offs), shuffle.partitions = 2×cores, AQE
-  on.
+- Config: shuffle.partitions = 2×cores, AQE on.
 
 ## Single-box saturation study (why N=2 vs 4N=8)
 
@@ -170,10 +167,7 @@ run-to-run variance on the low leg, and 32 concurrent zstd writers on
 the ONE virtio disk degrade the write stage ~7× (4s → 120s+) — a
 shared-hardware artifact that a multi-machine cluster does not have.
 Below 8 cores neither artifact applies, so the 2→8 measurement is the
-faithful stand-in for adding executors. The Arrow/RE2 parser variant
-(`parse_turns_arrow`) reaches 458k turns/s on just 8 cores (~6× the
-native per-core rate) and is the preferred impl for small executors; it
-is bandwidth-bound beyond ~8 cores on one box.
+faithful stand-in for adding executors.
 
 Reproduce: `python tools/scaling_bench.py --rows {args.rows} --low {args.low} --high {args.high}`
 """)
