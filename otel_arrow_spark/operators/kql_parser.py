@@ -123,18 +123,104 @@ class KqlError(ValueError):
 
 
 # ---------------------------------------------------------------------------
+# lexical rule: string literals and the top-level scanner
+# ---------------------------------------------------------------------------
+
+# The one KQL string literal (kql.pest string rule): verbatim @'…'/@"…"
+# takes no escapes, '…'/"…" take backslash escapes. Every tokenizer,
+# splitter and literal-stripping regex in this package is built on it.
+_STR_LIT = r"""@'[^']*'|@"[^"]*"|'(?:[^'\\]|\\.)*'|"(?:[^"\\]|\\.)*\""""
+_STR_LIT_RE = re.compile(_STR_LIT)
+_STR_SEG_RE = re.compile(f"({_STR_LIT})")  # re.split keeps the literals
+
+
+def _unquote(s: str) -> str:
+    """Decode a `_STR_LIT` literal to its value."""
+    if s[0] == "@":
+        return s[2:-1]
+    return re.sub(r"\\(.)", r"\1", s[1:-1])
+
+
+def _scan(src: str, start: int = 0):
+    """Yield ``(index, depth)`` for every character of ``src`` at or
+    after ``start`` that lies outside a string literal. ``depth`` counts
+    the ``()[]{}`` brackets open around the character; an opening and
+    its closing bracket report the same depth. An unterminated literal
+    runs to the end of the text."""
+    depth, i, n = 0, start, len(src)
+    while i < n:
+        ch = src[i]
+        if ch in "'\"" or (ch == "@" and src[i + 1:i + 2] in ("'", '"')):
+            m = _STR_LIT_RE.match(src, i)
+            if m is None:
+                return
+            i = m.end()
+            continue
+        if ch in ")]}":
+            depth -= 1
+        yield i, depth
+        if ch in "([{":
+            depth += 1
+        i += 1
+
+
+def _split_top_level(q: str, sep: str) -> list[str]:
+    """Split on ``sep`` outside string literals and brackets; parts are
+    stripped and empty ones dropped."""
+    parts, last = [], 0
+    for i, depth in _scan(q):
+        if depth == 0 and q[i] == sep:
+            parts.append(q[last:i].strip())
+            last = i + 1
+    parts.append(q[last:].strip())
+    return [p for p in parts if p]
+
+
+def _find_top(src: str, pattern: str, start: int = 0,
+              any_depth: bool = False) -> int | None:
+    """First index at/after ``start``, outside string literals and (unless
+    ``any_depth``) brackets, where regex ``pattern`` matches; else None.
+    Lookbehinds in ``pattern`` see the text before the index."""
+    rx = re.compile(pattern)
+    for i, depth in _scan(src, start):
+        if (any_depth or depth == 0) and rx.match(src, i):
+            return i
+    return None
+
+
+def _find_kw_top(src: str, kw: str) -> int | None:
+    """First index of word ``kw`` outside strings/brackets, or None."""
+    return _find_top(src, rf"(?<!\w){kw}(?!\w)")
+
+
+def _find_by_top(src: str) -> int | None:
+    """Index of a top-level `` by `` clause keyword (whitespace on both
+    sides), or None."""
+    return _find_top(src, r"(?<=\s)by\s")
+
+
+def _matching_paren(src: str, open_idx: int) -> int:
+    """Index of the ``)`` closing ``src[open_idx] == '('``."""
+    for i, depth in _scan(src, open_idx):
+        if depth == 0 and i > open_idx:
+            if src[i] == ")":
+                return i
+            break
+    raise KqlError(f"unbalanced parentheses at {src[open_idx:]!r}")
+
+
+# ---------------------------------------------------------------------------
 # tokenizer
 # ---------------------------------------------------------------------------
 
 _TOKEN_RE = re.compile(
-    r"""
+    rf"""
     (?P<ws>\s+)
   | (?P<datetime>datetime\(\s*[^)]*\))
   | (?P<timespan>\d+(?:\.\d+)?(?:ms|d|h|m|s)\b)
   | (?P<number>0[xX][0-9a-fA-F]+|\d+\.\d+|\d+)
-  | (?P<vstring>@"[^"]*"|@'[^']*')              # verbatim (no escapes)
-  | (?P<string>"(?:[^"\\]|\\.)*"|'(?:[^'\\]|\\.)*')
-  | (?P<op>=~|!~|==|!=|<=|>=|\.\.|<|>|\+|-|\*|/|%|=|\(|\)|\[|\]|\{|\}|,|:|;|\.)
+  | (?P<string>{_STR_LIT})
+  | (?P<op>=~|!~|==|!=|<=|>=|\.\.|<|>|\+|-|\*|/|%|=|\(|\)|\[|\]|\{{|\}}|,|:|;|\.)
   | (?P<bang_ident>![a-zA-Z_][a-zA-Z0-9_]*~?)  # !in, !in~, !contains…
   | (?P<ident>[a-zA-Z_][a-zA-Z0-9_]*~?)        # idents and in~ / =~ words
     """,
@@ -157,14 +243,6 @@ def tokenize(s: str) -> list[Tok]:
         i = m.end()
         kind = m.lastgroup
         if kind == "ws":
-            continue
-        if kind == "vstring":
-            # Kusto verbatim string @"…" — backslashes are literal.
-            # Normalize to an ordinary escaped string token so every
-            # downstream consumer (_unquote included) works unchanged.
-            body = m.group()[2:-1]
-            esc = body.replace("\\", "\\\\").replace('"', '\\"')
-            out.append(Tok("string", '"' + esc + '"'))
             continue
         out.append(Tok(kind, m.group()))
     out.append(Tok("eof", ""))
@@ -1880,7 +1958,7 @@ _FUNC_MAP_SIMPLE = {
     "replace_string": lambda a: F.replace(a[0], a[1], a[2]),
     "tolower": lambda a: F.lower(a[0]),
     "toupper": lambda a: F.upper(a[0]),
-    "trim": lambda a: F.trim(a[1] if len(a) > 1 else a[0]),
+    "trim": lambda a: F.trim(a[0]),
     # conversion (convert_scalar_expression.rs:7-24)
     "tobool": lambda a: a[0].cast("boolean"),
     "toint": lambda a: a[0].cast("int"),
@@ -1891,11 +1969,10 @@ _FUNC_MAP_SIMPLE = {
     "todatetime": lambda a: a[0].cast("timestamp"),
     # Kusto typed-literal constructors — `long(null)`, `real(4)` …
     # (a cast superset: Kusto only allows literals inside; datetime(…)
-    # stays a tokenizer literal and never reaches this map)
+    # stays a tokenizer literal and never reaches this map); `int` and
+    # `double` are the OTTL converter aliases further down
     "long": lambda a: a[0].cast("bigint"),
-    "int": lambda a: a[0].cast("int"),
     "real": lambda a: a[0].cast("double"),
-    "double": lambda a: a[0].cast("double"),
     "bool": lambda a: a[0].cast("boolean"),
     # scalar range(start, stop[, step]) — inclusive numeric series
     "range": _scalar_range,
@@ -1927,7 +2004,6 @@ _FUNC_MAP_SIMPLE = {
     "startofday": lambda a: F.date_trunc("day", a[0]),
     "startofhour": lambda a: F.date_trunc("hour", a[0]),
     # collection (collection_scalar_expression.rs:7-13)
-    "array_concat": lambda a: F.concat(*a),
     "array_length": lambda a: F.size(a[0]),
     "pack_array": lambda a: F.array(*a),
     # math (cont.)
@@ -2874,6 +2950,48 @@ def _make_bag(m: Column) -> Column:
     return F.parse_json(F.to_json(F.map_from_entries(dedup)))
 
 
+def _bag_pack(args: list[KE]) -> KE:
+    """bag_pack(k1, v1, k2, v2, …) → dynamic bag (variant), so
+    accessors/bag_keys/bag_unpack compose with the result.
+
+    Both forms also carry the map<string,variant> TWIN parsed from the
+    SAME JSON string (exact parity by construction), so bag surgery /
+    fused accessors on the result skip the VARIANT re-serialization —
+    and when only the twin is consumed, Catalyst prunes the VARIANT
+    column entirely."""
+    if len(args) < 2 or len(args) % 2:
+        raise KqlError("bag_pack needs (k1, v1[, k2, v2…])")
+    if all(args[i].is_lit for i in range(0, len(args), 2)):
+        # literal keys (the common case): a typed struct keeps each
+        # value's JSON type (numbers stay numbers)
+        fields = [
+            args[i + 1].col.alias(str(args[i].lit))
+            for i in range(0, len(args), 2)
+        ]
+        js = F.to_json(F.struct(*fields))
+    else:
+        # column-valued keys: map form; values stringify (the JSON type
+        # degrades, same as Kusto dynamic-from-map)
+        js = F.to_json(F.map_from_arrays(
+            F.array(*[args[i].col.cast("string")
+                      for i in range(0, len(args), 2)]),
+            F.array(*[args[i].col.cast("string")
+                      for i in range(1, len(args), 2)]),
+        ))
+    return KE(F.parse_json(js), variant=True,
+              bag_map=F.from_json(js, "map<string, variant>"))
+
+
+def _bag_json(ke: KE) -> Column:
+    """JSON text of a bag argument: a VARIANT bag or a bag twin
+    serializes; any other value is taken as JSON text already."""
+    if ke.variant:
+        return F.to_json(ke.col)
+    if ke.bag_map is not None:
+        return F.to_json(ke.bag_map)
+    return ke.col
+
+
 def _percentiles_array(args: list[KE]) -> KE:
     """percentiles_array(x, p1, p2, …) → array of exact percentiles.
 
@@ -3197,6 +3315,7 @@ class ExprParser:
         (kql.pest:126-133)."""
         self.expect("(")
         t = self.next()
+        bag_map = None
         if t.text == "[":
             items = []
             if self.peek().text != "]":
@@ -3207,7 +3326,7 @@ class ExprParser:
             self.expect("]")
             out = F.array(*[i.col for i in items])
         elif t.text == "{":
-            kvs: list[Column] = []
+            kvs: list[KE] = []
             if self.peek().text != "}":
                 while True:
                     key = self.next()
@@ -3215,16 +3334,18 @@ class ExprParser:
                         raise KqlError("dynamic map key must be string")
                     kname = _unquote(key.text) if key.kind == "string" else key.text
                     self.expect(":")
-                    kvs += [F.lit(kname), self._or().col]
+                    kvs += [_mklit(kname), self._or()]
                     if self.peek().text != ",":
                         break
                     self.next()
             self.expect("}")
-            out = F.create_map(*kvs)
+            out = F.create_map(*[kv.col for kv in kvs])
+            # accessors read the map; bag functions read bag_pack's twin
+            bag_map = _bag_pack(kvs).bag_map if kvs else None
         else:
             raise KqlError("dynamic() needs [..] or {..}")
         self.expect(")")
-        return KE(out)
+        return KE(out, bag_map=bag_map)
 
     def _call(self, name: str) -> KE:
         self.expect("(")
@@ -3835,10 +3956,6 @@ class ExprParser:
             return KE(F.timestamp_add(
                 _lit_str(args[0]).upper(), args[1].col, args[2].col
             ))
-        if lname == "extract_json":
-            if len(args) != 2:
-                raise KqlError("extract_json needs (path, s)")
-            return KE(F.get_json_object(args[1].col, _lit_str(args[0])))
         if lname == "ismatch":  # OTTL IsMatch(target, pattern)
             if len(args) != 2:
                 raise KqlError("IsMatch needs (target, pattern)")
@@ -4002,20 +4119,14 @@ class ExprParser:
         if lname == "bag_keys":
             if len(args) != 1:
                 raise KqlError("bag_keys needs (dynamic)")
-            src = args[0].col
-            if args[0].variant:
-                src = F.to_json(src)
-            return KE(F.json_object_keys(src))
+            return KE(F.json_object_keys(_bag_json(args[0])))
         if lname == "bag_has_key":
             # bag_has_key(bag, key) — top-level key membership
             if len(args) != 2:
                 raise KqlError("bag_has_key needs (bag, key)")
-            src = args[0].col
-            if args[0].variant:
-                src = F.to_json(src)
             return KE(F.coalesce(
                 F.array_contains(
-                    F.json_object_keys(src),
+                    F.json_object_keys(_bag_json(args[0])),
                     args[1].col.cast("string")),
                 F.lit(False)))
         if lname == "indexof" and len(args) == 3:
@@ -4125,34 +4236,7 @@ class ExprParser:
                 return KE(F.to_json(args[0].bag_map))
             return KE(F.to_json(args[0].col))
         if lname in ("bag_pack", "pack", "pack_dictionary"):
-            # bag_pack(k1, v1, k2, v2, …) → dynamic bag (variant), so
-            # accessors/bag_keys/bag_unpack compose with the result
-            if len(args) < 2 or len(args) % 2:
-                raise KqlError("bag_pack needs (k1, v1[, k2, v2…])")
-            # Both forms also carry the map<string,variant> TWIN parsed
-            # from the SAME JSON string (exact parity by construction),
-            # so bag surgery / fused accessors on the result skip the
-            # VARIANT re-serialization — and when only the twin is
-            # consumed, Catalyst prunes the VARIANT column entirely.
-            if all(args[i].is_lit for i in range(0, len(args), 2)):
-                # literal keys (the common case): a typed struct keeps
-                # each value's JSON type (numbers stay numbers)
-                fields = [
-                    args[i + 1].col.alias(str(args[i].lit))
-                    for i in range(0, len(args), 2)
-                ]
-                js = F.to_json(F.struct(*fields))
-            else:
-                # column-valued keys: map form; values stringify (the
-                # JSON type degrades, same as Kusto dynamic-from-map)
-                js = F.to_json(F.map_from_arrays(
-                    F.array(*[args[i].col.cast("string")
-                              for i in range(0, len(args), 2)]),
-                    F.array(*[args[i].col.cast("string")
-                              for i in range(1, len(args), 2)]),
-                ))
-            return KE(F.parse_json(js), variant=True,
-                      bag_map=F.from_json(js, "map<string, variant>"))
+            return _bag_pack(args)
         if lname == "parse_url":
             # dynamic bag result (Kusto shape) so VARIANT path
             # accessors chain: `parse_url(u).Host`, `u['Path']`
@@ -4290,11 +4374,6 @@ class ExprParser:
         raise KqlError(f"unknown function {name}")
 
 
-def _unquote(s: str) -> str:
-    body = s[1:-1]
-    return re.sub(r"\\(.)", r"\1", body)
-
-
 def parse_expr_ke(s: str, bindings: dict[str, "KE | Column"] | None = None,
                   wspec=None, variant_cols: set[str] | None = None,
                   bag_twins: dict[str, Column] | None = None) -> KE:
@@ -4315,47 +4394,6 @@ def parse_expr(s: str, bindings: dict[str, "KE | Column"] | None = None,
 
 
 # ---------------------------------------------------------------------------
-# tabular pipeline parser
-# ---------------------------------------------------------------------------
-
-def _split_top_level(q: str, sep: str) -> list[str]:
-    """Split on a top-level separator (not inside quotes/brackets)."""
-    parts, depth, buf, i = [], 0, [], 0
-    in_str: str | None = None
-    while i < len(q):
-        ch = q[i]
-        if in_str:
-            buf.append(ch)
-            if ch == "\\":
-                if i + 1 < len(q):
-                    buf.append(q[i + 1])
-                    i += 1
-            elif ch == in_str:
-                in_str = None
-        elif ch in "'\"":
-            in_str = ch
-            buf.append(ch)
-        elif ch in "([{":
-            depth += 1
-            buf.append(ch)
-        elif ch in ")]}":
-            depth -= 1
-            buf.append(ch)
-        elif ch == sep and depth == 0:
-            parts.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    parts.append("".join(buf).strip())
-    return [p for p in parts if p]
-
-
-def _split_pipes(q: str) -> list[str]:
-    return _split_top_level(q, "|")
-
-
-# ---------------------------------------------------------------------------
 # scan declare(...) expression compiler
 # ---------------------------------------------------------------------------
 # `scan` state-variable programs run INSIDE the per-group state machine
@@ -4371,7 +4409,7 @@ def _split_pipes(q: str) -> list[str]:
 
 _SCAN_TOK = re.compile(
     r"\s*(?:(?P<num>\d+\.\d*|\.\d+|\d+)"
-    r"|(?P<str>'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\")"
+    rf"|(?P<str>{_STR_LIT})"
     r"|(?P<id>[A-Za-z_]\w*)"
     r"|(?P<op><=|>=|==|!=|[-+*/%(),<>]))"
 )
@@ -4647,38 +4685,12 @@ _SCAN_DECL_TYPES = {
 }
 
 
-def _split_commas(s: str) -> list[str]:
-    parts, depth, buf = [], 0, []
-    in_str: str | None = None
-    for i, ch in enumerate(s):
-        if in_str:
-            buf.append(ch)
-            if ch == in_str and (i == 0 or s[i - 1] != "\\"):
-                in_str = None
-        elif ch in "'\"":
-            in_str = ch
-            buf.append(ch)
-        elif ch in "([":
-            depth += 1
-            buf.append(ch)
-        elif ch in ")]":
-            depth -= 1
-            buf.append(ch)
-        elif ch == "," and depth == 0:
-            parts.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-    parts.append("".join(buf).strip())
-    return [p for p in parts if p]
-
-
 _ASSIGN_RE = re.compile(r"^\s*([A-Za-z_][A-Za-z0-9_]*)\s*=(?![=~])\s*(.+)$", re.S)
 
 
 def _parse_assignments(s: str) -> list[tuple[str | None, str]]:
     out = []
-    for part in _split_commas(s):
+    for part in _split_top_level(s, ","):
         m = _ASSIGN_RE.match(part)
         if m:
             out.append((m.group(1), m.group(2)))
@@ -4691,7 +4703,7 @@ _LET_RE = re.compile(r"^\s*let\s+([A-Za-z_][A-Za-z0-9_]*)\s*=\s*(.+)$", re.S)
 
 # one `parse` pattern token: quoted literal | `*` | field name[:type]
 _PARSE_TOKEN_RE = re.compile(
-    r"""\s*(?:("(?:[^"\\]|\\.)*"|'(?:[^'\\]|\\.)*')"""
+    rf"""\s*(?:({_STR_LIT})"""
     r"""|(\*)"""
     r"""|([A-Za-z_][A-Za-z0-9_]*)(?:\s*:\s*([a-z]+))?)"""
 )
@@ -4816,12 +4828,12 @@ def _literal_source(head: str, bindings: dict) -> DataFrame:
             "boolean": "boolean",
         }
         cols = []
-        for part in _split_commas(m.group(1)):
+        for part in _split_top_level(m.group(1), ","):
             cm = re.match(r"^([A-Za-z_]\w*)\s*:\s*([a-z]+)$", part.strip())
             if not cm or cm.group(2) not in _DT_TYPES:
                 raise KqlError(f"bad datatable column {part.strip()!r}")
             cols.append((cm.group(1), _DT_TYPES[cm.group(2)]))
-        vals = [v for v in _split_commas(m.group(2)) if v.strip()]
+        vals = [v for v in _split_top_level(m.group(2), ",") if v.strip()]
         if not cols or not vals or len(vals) % len(cols):
             raise KqlError(
                 f"datatable needs a multiple of {len(cols)} values, "
@@ -4861,7 +4873,7 @@ def _literal_source(head: str, bindings: dict) -> DataFrame:
             "bool": "boolean", "boolean": "boolean",
         }
         fields = []
-        for part in _split_commas(m.group(1)):
+        for part in _split_top_level(m.group(1), ","):
             cm = re.match(
                 r"^([A-Za-z_]\w*)\s*:\s*([a-z]+)$", part.strip())
             if not cm or cm.group(2) not in _DT_TYPES:
@@ -4871,13 +4883,13 @@ def _literal_source(head: str, bindings: dict) -> DataFrame:
                 f"{cm.group(1)} {_DT_TYPES[cm.group(2)]}")
         paths = [
             _unquote(p.strip())
-            for p in _split_commas(m.group(2)) if p.strip()
+            for p in _split_top_level(m.group(2), ",") if p.strip()
         ]
         if not fields or not paths:
             raise KqlError(
                 "externaldata needs (col: type, …) ['path', …]")
         opts = {}
-        for part in _split_commas(m.group(3) or ""):
+        for part in _split_top_level(m.group(3) or "", ","):
             om = re.match(r"^(\w+)\s*=\s*(.+)$", part.strip())
             if om:
                 opts[om.group(1).lower()] = _unquote(
@@ -4906,7 +4918,7 @@ def _parse_source(src: str, tables: dict[str, DataFrame] | None,
     src = src.strip()
     if src.startswith("(") and src.endswith(")"):
         src = src[1:-1].strip()
-    stages = _split_pipes(src)
+    stages = _split_top_level(src, "|")
     if not stages:
         raise KqlError("empty join/union source")
     name = stages[0].strip()
@@ -4956,8 +4968,6 @@ _GRAPH_EDGE_RES = (
 # so a typo can't compile a 50-way self-join
 _GRAPH_MAX_HOPS = 8
 
-_STR_SEG_RE = re.compile(r"('(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\")")
-
 
 def _parse_graph_pattern(
     src: str, pos: int,
@@ -5003,35 +5013,6 @@ def _parse_graph_pattern(
     return nodes, edges, pos
 
 
-def _find_kw_top(src: str, kw: str) -> int | None:
-    """First index of word ``kw`` outside strings/brackets, or None."""
-    depth, i, in_str = 0, 0, None
-    n, k = len(src), len(kw)
-    while i < n:
-        ch = src[i]
-        if in_str:
-            if ch == "\\":
-                i += 1
-            elif ch == in_str:
-                in_str = None
-        elif ch in "'\"":
-            in_str = ch
-        elif ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            depth -= 1
-        elif depth == 0 and src.startswith(kw, i):
-            before_ok = i == 0 or not (src[i - 1].isalnum()
-                                       or src[i - 1] == "_")
-            after = i + k
-            after_ok = after >= n or not (src[after].isalnum()
-                                          or src[after] == "_")
-            if before_ok and after_ok:
-                return i
-        i += 1
-    return None
-
-
 def _rewrite_graph_refs(src: str, gvars: set[str]) -> str:
     """Rewrite ``var.prop`` → ``var__prop`` for pattern variables,
     outside string literals (variant paths on other names untouched)."""
@@ -5039,12 +5020,8 @@ def _rewrite_graph_refs(src: str, gvars: set[str]) -> str:
         return (f"{m.group(1)}__{m.group(2)}"
                 if m.group(1) in gvars else m.group(0))
 
-    parts = _STR_SEG_RE.split(src)
-    return "".join(
-        p if i % 2 else
-        re.sub(r"\b([A-Za-z_]\w*)\.([A-Za-z_]\w*)\b", rw, p)
-        for i, p in enumerate(parts)
-    )
+    return _sub_outside_strings(
+        src, r"\b([A-Za-z_]\w*)\.([A-Za-z_]\w*)\b", rw)
 
 
 def _sub_outside_strings(src: str, pat: str, repl) -> str:
@@ -5053,53 +5030,6 @@ def _sub_outside_strings(src: str, pat: str, repl) -> str:
         p if i % 2 else re.sub(pat, repl, p)
         for i, p in enumerate(parts)
     )
-
-
-def _find_call_top(src: str, fn: str, start: int = 0) -> int | None:
-    """Index of ``fn(`` (word-boundary, outside strings) at/after
-    ``start`` — unlike `_find_kw_top` this does NOT require top-level
-    bracket depth, so nested calls like ``not(all(e, …))`` are found."""
-    i, n, in_str = start, len(src), None
-    while i < n:
-        ch = src[i]
-        if in_str:
-            if ch == "\\":
-                i += 1
-            elif ch == in_str:
-                in_str = None
-        elif ch in "'\"":
-            in_str = ch
-        elif src.startswith(fn, i):
-            before_ok = i == 0 or not (src[i - 1].isalnum()
-                                       or src[i - 1] == "_")
-            m = re.match(rf"{fn}\s*\(", src[i:])
-            if before_ok and m:
-                return i
-        i += 1
-    return None
-
-
-def _matching_paren(src: str, open_idx: int) -> int:
-    """Index of the ``)`` matching ``src[open_idx] == '('`` (string
-    aware)."""
-    depth, i, in_str = 0, open_idx, None
-    while i < len(src):
-        ch = src[i]
-        if in_str:
-            if ch == "\\":
-                i += 1
-            elif ch == in_str:
-                in_str = None
-        elif ch in "'\"":
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    raise KqlError(f"unbalanced parentheses at {src[open_idx:]!r}")
 
 
 def _expand_varlen_refs(src: str, ev: str,
@@ -5114,41 +5044,31 @@ def _expand_varlen_refs(src: str, ev: str,
             body, rf"\b{re.escape(ev)}\.([A-Za-z_]\w*)\b",
             lambda m: f"{hop}.{m.group(1)}")
 
-    for fn, joiner, empty in (("all", " and ", "true"),
-                              ("any", " or ", "false")):
+    def fold(joiner: str, empty: str):
+        return lambda body: (empty if not hop_names else "(" + joiner.join(
+            "(" + per_hop(body, h) + ")" for h in hop_names) + ")")
+
+    rewrites = (
+        ("all", fold(" and ", "true")),
+        ("any", fold(" or ", "false")),
+        ("map", lambda body: "pack_array(" + ", ".join(
+            per_hop(body, h) for h in hop_names) + ")"
+            if hop_names else "dynamic([])"),
+    )
+    for fn, rewrite in rewrites:
         pos = 0
-        while True:
-            i = _find_call_top(src, fn, pos)
-            if i is None:
-                break
+        # any depth: nested calls like ``not(all(e, …))`` count too
+        while (i := _find_top(src, rf"(?<!\w){fn}\s*\(", pos,
+                              any_depth=True)) is not None:
             op_idx = src.index("(", i)
             cl_idx = _matching_paren(src, op_idx)
             args = _split_top_level(src[op_idx + 1:cl_idx], ",")
             if len(args) == 2 and args[0].strip() == ev:
-                body = args[1]
-                rep = (empty if not hop_names else "(" + joiner.join(
-                    "(" + per_hop(body, h) + ")" for h in hop_names
-                ) + ")")
+                rep = rewrite(args[1])
                 src = src[:i] + rep + src[cl_idx + 1:]
                 pos = i + len(rep)
             else:
                 pos = op_idx + 1
-    pos = 0
-    while True:
-        i = _find_call_top(src, "map", pos)
-        if i is None:
-            break
-        op_idx = src.index("(", i)
-        cl_idx = _matching_paren(src, op_idx)
-        args = _split_top_level(src[op_idx + 1:cl_idx], ",")
-        if len(args) == 2 and args[0].strip() == ev:
-            rep = ("pack_array(" + ", ".join(
-                per_hop(args[1], h) for h in hop_names) + ")"
-                if hop_names else "dynamic([])")
-            src = src[:i] + rep + src[cl_idx + 1:]
-            pos = i + len(rep)
-        else:
-            pos = op_idx + 1
     # bare ev.prop — array of the per-hop values
     if hop_names:
         src = _sub_outside_strings(
@@ -5490,30 +5410,14 @@ def kql_fork(df: DataFrame, query: str,
         if not m:
             raise KqlError(f"bad fork leg at {rest[pos:pos + 20]!r}")
         start = pos + m.end()  # just past the opening paren
-        depth, i, in_str = 1, start, None
-        while i < len(rest) and depth:
-            ch = rest[i]
-            if in_str:
-                if ch == "\\":
-                    i += 1
-                elif ch == in_str:
-                    in_str = None
-            elif ch in "'\"":
-                in_str = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            i += 1
-        if depth:
-            raise KqlError("unbalanced parens in fork leg")
+        close = _matching_paren(rest, start - 1)
         n += 1
         name = m.group(1) or f"leg{n}"
-        body = rest[start:i - 1].strip()
         legs[name] = _apply_stages(
-            df, _split_pipes(body), dict(bindings), tables,
+            df, _split_top_level(rest[start:close], "|"), dict(bindings),
+            tables,
         )
-        pos = i
+        pos = close + 1
     if not legs:
         raise KqlError("fork needs at least one leg")
     return legs
@@ -5571,7 +5475,7 @@ def _prepare(df: DataFrame, query: str,
             if not (psrc.startswith("(") and psrc.endswith(")")):
                 raise KqlError(f"bad function parameters in {rhs!r}")
             params: list[tuple[str, str]] = []
-            for p in _split_commas(psrc[1:-1]):
+            for p in _split_top_level(psrc[1:-1], ","):
                 if not p.strip():
                     continue
                 pname, _, ptyp = p.partition(":")
@@ -5581,7 +5485,7 @@ def _prepare(df: DataFrame, query: str,
                 m.group(1), params, body.rstrip().rstrip("}").strip()
             )
             continue
-        head = _split_pipes(rhs)[0].strip()
+        head = _split_top_level(rhs, "|")[0].strip()
         if re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", head) and head in tables:
             # table-valued let: `let T2 = T | where …;` — binds a new
             # relation into the registry (a registered table name on the
@@ -5591,7 +5495,7 @@ def _prepare(df: DataFrame, query: str,
             bindings[m.group(1)] = parse_expr_ke(m.group(2), bindings)
     query = statements[-1]
 
-    stages = _split_pipes(query)
+    stages = _split_top_level(query, "|")
     if stages and (stages[0].strip().startswith(_SOURCE_OPS)
                    or stages[0].strip().startswith("datatable")):
         df = _literal_source(stages[0].strip(), bindings)
@@ -5761,9 +5665,10 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                              if "num_partitions" in shints else [])
                     df = df.repartition(
                         *parts, F.col(shints["shufflekey"]))
-            if " by " in rest:
-                agg_part, by_part = rest.split(" by ", 1)
-                by_items = _parse_assignments(by_part)
+            by_at = _find_by_top(rest)
+            if by_at is not None:
+                agg_part = rest[:by_at]
+                by_items = _parse_assignments(rest[by_at + 2:])
             else:
                 agg_part, by_items = rest, []
             keys = [
@@ -5790,7 +5695,7 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                     expr.strip(), re.S)
                 if mp:
                     tuple_names, wtd, inner = mp.groups()
-                    parts = [p.strip() for p in _split_commas(inner)]
+                    parts = [p.strip() for p in _split_top_level(inner, ",")]
                     nlead = 2 if wtd else 1
                     try:
                         ps = [float(p) for p in parts[nlead:]]
@@ -5953,7 +5858,7 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
             rest = re.sub(r"^by\s+", "", rest)
             cols = []
             order_src: list[tuple[str, bool] | None] = []
-            for part in _split_commas(rest):
+            for part in _split_top_level(rest, ","):
                 part = part.strip()
                 # `… [asc|desc] [nulls first|nulls last]` — explicit
                 # null placement; defaults match both KQL and Spark
@@ -6017,7 +5922,8 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                           rest, re.S)
             assigns_src = rest
             if m2:
-                key_srcs = [k.strip() for k in _split_commas(m2.group(1))]
+                key_srcs = [k.strip() for k in
+                            _split_top_level(m2.group(1), ",")]
                 keys = [pe(k) for k in key_srcs]
                 sctx["wspec"] = Window.partitionBy(*keys).orderBy(
                     *sctx["order"])
@@ -6071,7 +5977,7 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
             if not m2:
                 raise KqlError("top needs `top N by expr [asc|desc]`")
             cols = []
-            for part in _split_commas(m2.group(2)):
+            for part in _split_top_level(m2.group(2), ","):
                 toks = part.rsplit(None, 1)
                 if len(toks) == 2 and toks[1].lower() in ("asc", "desc"):
                     c = pe(toks[0])
@@ -6276,7 +6182,7 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
             if len(pd_) != 1:
                 raise KqlError("parse-kv pair_delimiter must be one char")
             cols = {}
-            for item in _split_commas(m2.group(2)):
+            for item in _split_top_level(m2.group(2), ","):
                 name, _, ty = item.strip().partition(":")
                 name, ty = name.strip(), (ty.strip() or None)
                 esc_pd = re.escape(pd_)
@@ -6345,7 +6251,7 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                 right = right.repartition(*parts, F.col(sk))
             keys: list[str] = []
             pairs: list[tuple[str, str]] = []
-            for item in _split_commas(m2.group(2)):
+            for item in _split_top_level(m2.group(2), ","):
                 item = item.strip()
                 mm = re.fullmatch(
                     r"\$left\.([A-Za-z_][A-Za-z0-9_]*)\s*==\s*"
@@ -6408,7 +6314,7 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                     None: "left"}[m2.group(1)]
             right = _parse_source(m2.group(2), tables, bindings)
             keys = []
-            for item in _split_commas(m2.group(3)):
+            for item in _split_top_level(m2.group(3), ","):
                 item = item.strip()
                 if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", item):
                     raise KqlError(f"lookup key must be a column: {item!r}")
@@ -6437,7 +6343,7 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
             fuzzy = m2.group(3) == "true"
             if srccol:
                 df = df.withColumn(srccol, F.lit("T"))
-            for i, item in enumerate(_split_commas(m2.group(4))):
+            for i, item in enumerate(_split_top_level(m2.group(4), ",")):
                 try:
                     other = _parse_source(item, tables, bindings)
                 except KqlError:
@@ -6481,7 +6387,7 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
             pkey, sub = m2.groups()
             _ROW_LOCAL = ("where", "extend", "project", "project-away",
                           "project-keep", "project-rename", "parse")
-            for st in _split_pipes(sub):
+            for st in _split_top_level(sub, "|"):
                 sm = re.match(r"^([a-z-]+)\s*(.*)$", st.strip(), re.S)
                 if not sm:
                     raise KqlError(f"bad partition substage {st!r}")
@@ -6489,7 +6395,8 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                 if sop in _ROW_LOCAL:
                     df = _apply_stages(df, [st.strip()], bindings, tables)
                 elif sop == "summarize":
-                    joiner = ", " if " by " in srest else " by "
+                    joiner = (", " if _find_by_top(srest) is not None
+                              else " by ")
                     df = _apply_stages(
                         df, ["summarize " + srest + joiner + pkey],
                         bindings, tables,
@@ -6501,7 +6408,7 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                             raise KqlError("top needs `top N by expr`")
                         n = int(tm.group(1))
                         order = []
-                        for part in _split_commas(tm.group(2)):
+                        for part in _split_top_level(tm.group(2), ","):
                             toks = part.rsplit(None, 1)
                             if (len(toks) == 2
                                     and toks[1].lower() in ("asc", "desc")):
@@ -6588,7 +6495,7 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
             decl_src = m2.group(2)
             declares: list[tuple[str, str, object, object]] = []
             if decl_src and decl_src.strip():
-                for item in _split_commas(decl_src):
+                for item in _split_top_level(decl_src, ","):
                     dm = re.match(
                         r"^([A-Za-z_]\w*)\s*:\s*([A-Za-z]\w*)"
                         r"\s*(?:=\s*(.+))?$",
@@ -6622,24 +6529,6 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                     declares.append((vname, spark_t, py_t, init))
             declared_names = frozenset(d[0] for d in declares)
 
-            def _split_arrow(s: str) -> tuple[str, str | None]:
-                in_str, depth = None, 0
-                for i, ch in enumerate(s):
-                    if in_str:
-                        if ch == in_str and s[i - 1] != "\\":
-                            in_str = None
-                    elif ch in "'\"":
-                        in_str = ch
-                    elif ch in "([":
-                        depth += 1
-                    elif ch in ")]":
-                        depth -= 1
-                    elif (ch == "=" and depth == 0
-                          and s[i:i + 2] == "=>"
-                          and (i == 0 or s[i - 1] not in "=!<>")):
-                        return s[:i].strip(), s[i + 2:].strip()
-                return s.strip(), None
-
             steps = []       # (name, pred_src)
             step_assigns = []  # list[list[(var, fn, cols)]]
             step_modes = []    # per step: "all" (default) | "last" | "none"
@@ -6653,14 +6542,18 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                 if not sm:
                     raise KqlError(f"bad scan step {st!r}")
                 step_modes.append(sm.group(2) or "all")
-                pred_src, assign_src = _split_arrow(sm.group(3))
+                body = sm.group(3)
+                arrow = _find_top(body, r"(?<![=!<>])=>")
+                pred_src, assign_src = (
+                    (body.strip(), None) if arrow is None
+                    else (body[:arrow].strip(), body[arrow + 2:].strip()))
                 assigns = []
                 if assign_src is not None:
                     if not declares:
                         raise KqlError(
                             "scan step assignments need declare(...)"
                         )
-                    for a in _split_commas(assign_src):
+                    for a in _split_top_level(assign_src, ","):
                         am = re.match(r"^([A-Za-z_]\w*)\s*=\s*(.+)$",
                                       a.strip(), re.S)
                         if not am or am.group(1) not in declared_names:
@@ -6690,11 +6583,10 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
             # inside the machine. String literals are stripped before
             # the reference scan so a literal containing a variable's
             # name doesn't force the Python path.
-            _lit_re = r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\""
             pred_fns: list = []   # per step: None (JVM flag) or closure
             pred_cols: set = set()
             for _nm, pred in steps:
-                no_lits = re.sub(_lit_re, " ", pred)
+                no_lits = _STR_LIT_RE.sub(" ", pred)
                 if declared_names and any(
                     w in declared_names
                     for w in re.findall(r"[A-Za-z_]\w*", no_lits)
@@ -6871,7 +6763,7 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                     "scalar function"
                 )
             scalars = [p for p, k in fn.params if k == "scalar"]
-            argsrcs = [a for a in _split_commas(argsrc) if a.strip()]
+            argsrcs = [a for a in _split_top_level(argsrc, ",") if a.strip()]
             if len(argsrcs) != len(scalars):
                 raise KqlError(
                     f"invoke {fname}() takes {len(scalars)} scalar "
@@ -6899,7 +6791,7 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
             # stack is a zero-shuffle union. Values render as strings
             # so heterogeneous columns stack into one schema.
             rest2 = re.sub(r"^by\s+", "", rest)
-            fcols = [c.strip() for c in _split_commas(rest2)]
+            fcols = [c.strip() for c in _split_top_level(rest2, ",")]
             if not fcols or not all(
                 re.fullmatch(r"[A-Za-z_]\w*", c) for c in fcols
             ):
@@ -8061,11 +7953,11 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                             f"{c!r}")
                 seq = [
                     _unquote(p.strip())
-                    for p in _split_commas(seq_src) if p.strip()
+                    for p in _split_top_level(seq_src, ",") if p.strip()
                 ]
                 wins = [
                     _timespan_secs(p.strip())
-                    for p in _split_commas(win_src) if p.strip()
+                    for p in _split_top_level(win_src, ",") if p.strip()
                 ]
                 if len(seq) < 1 or len(wins) not in (
                         len(seq), max(len(seq) - 1, 1)):
@@ -8151,7 +8043,7 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                             f"funnel_sequence: no column {c!r}")
                 seq = [
                     _unquote(p.strip())
-                    for p in _split_commas(seq_src) if p.strip()
+                    for p in _split_top_level(seq_src, ",") if p.strip()
                 ]
                 if len(seq) < 2:
                     raise KqlError(
@@ -8225,7 +8117,7 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                 from otel_arrow_spark.operators.sequence import (
                     sequence_detect,
                 )
-                sparts = _split_commas(msq.group(1))
+                sparts = _split_top_level(msq.group(1), ",")
                 if len(sparts) < 5:
                     raise KqlError(
                         "sequence_detect needs (timeline, stepWindow, "
@@ -8286,7 +8178,7 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                 # Percent2, Pattern. All JVM: split → array_distinct →
                 # explode → one conditional aggregate; the two cohort
                 # totals ride the same pass as a grand-total row.
-                dt_parts = _split_commas(mdt.group(1))
+                dt_parts = _split_top_level(mdt.group(1), ",")
                 if len(dt_parts) not in (2, 3):
                     raise KqlError(
                         "diffpatterns_text takes "
@@ -8359,7 +8251,7 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                 # values, NULLs marked). The projected input is
                 # persisted across the passes (the cohort-total action
                 # warms it); released via release_caches().
-                dp_parts = _split_commas(mdp.group(1))
+                dp_parts = _split_top_level(mdp.group(1), ",")
                 if len(dp_parts) > 2:
                     raise KqlError(
                         "diffpatterns takes (split_pred [, max_size])"
@@ -8510,7 +8402,7 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                 # shape). Without one, a key-discovery aggregation runs
                 # first (distinct json keys — same two-job cost profile
                 # as value-less pivot; keys sorted for determinism).
-                parts = _split_commas(mbag.group(1))
+                parts = _split_top_level(mbag.group(1), ",")
                 src = parts[0].strip()
                 bag = parse_expr_ke(src, bindings)
                 is_var_col = (
@@ -8587,9 +8479,8 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
             vals = None
             if valsrc:
                 vals = [
-                    _unquote(v.strip()) if v.strip()[:1] in "'\""
-                    else v.strip()
-                    for v in _split_commas(valsrc)
+                    _unquote(v) if _STR_LIT_RE.fullmatch(v) else v
+                    for v in _split_top_level(valsrc, ",")
                 ]
             # group keys = every column except the pivot column and the
             # aggregate's inputs (KQL pivot plugin contract). Only
@@ -8598,8 +8489,7 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
             # (a literal containing the word "count" must not drop a
             # `count` column) and skip tokens used as function names
             # (`count()` the aggregate vs `count` the column).
-            no_lits = re.sub(r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"",
-                             " ", aggsrc)
+            no_lits = _STR_LIT_RE.sub(" ", aggsrc)
             agg_cols = {
                 m.group(1)
                 for m in re.finditer(r"([A-Za-z_]\w*)\s*(\()?", no_lits)
@@ -8634,9 +8524,10 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                 "_mvid", F.monotonically_increasing_id()
             ).withColumn(name, F.explode(pe(arrsrc)))
             substages = []
-            for st in _split_pipes(sub):
+            for st in _split_top_level(sub, "|"):
                 if re.match(r"^summarize\b", st.strip()):
-                    joiner = ", " if " by " in st else " by "
+                    joiner = (", " if _find_by_top(st) is not None
+                              else " by ")
                     st = st + joiner + ", ".join(base_cols + ["_mvid"])
                 substages.append(st)
             df = _apply_stages(mv, substages, bindings, tables)
@@ -8729,7 +8620,7 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                 m2 = re.match(
                     r"^(\d+)\s+of\s+([A-Za-z_]\w*)\s*"
                     r"(?:with\s+others\s*=\s*"
-                    r"('(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\")\s*)?"
+                    rf"({_STR_LIT})\s*)?"
                     r"\s+by\s+(?:([A-Za-z_]\w*)\s*=\s*)?(.+)$",
                     lvl.strip(), re.S,
                 )
@@ -8813,14 +8704,14 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                     "find needs `in (T1, T2, …) where pred "
                     "[project col, …]`")
             src_names = [n.strip() for n in
-                         _split_commas(m2.group(1))]
+                         _split_top_level(m2.group(1), ",")]
             tail2 = m2.group(2)
             pidx = _find_kw_top(tail2, "project")
             pred_src = tail2[:pidx].strip() if pidx is not None \
                 else tail2.strip()
             proj_names = (
                 [c.strip() for c in
-                 _split_commas(tail2[pidx + len("project"):])]
+                 _split_top_level(tail2[pidx + len("project"):], ",")]
                 if pidx is not None else None)
             parts: list[DataFrame] = []
             for name in src_names:

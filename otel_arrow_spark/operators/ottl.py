@@ -40,7 +40,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from otel_arrow_spark.operators.kql_parser import (
-    KqlError, _split_commas, parse_expr, parse_expr_ke,
+    _STR_LIT, KqlError, _find_top, _split_top_level, _unquote, parse_expr,
+    parse_expr_ke,
 )
 
 
@@ -50,7 +51,7 @@ class OttlError(ValueError):
 
 _STMT_RE = re.compile(r"^\s*([A-Za-z_][A-Za-z0-9_]*)\s*\((.*)\)\s*$", re.S)
 _TARGET_RE = re.compile(
-    r"""^\s*([A-Za-z_][A-Za-z0-9_]*)\s*(?:\[\s*(?:"([^"]*)"|'([^']*)')\s*\])?\s*$"""
+    rf"^\s*([A-Za-z_][A-Za-z0-9_]*)\s*(?:\[\s*({_STR_LIT})\s*\])?\s*$"
 )
 
 
@@ -59,8 +60,7 @@ def _parse_target(s: str) -> tuple[str, str | None]:
     m = _TARGET_RE.match(s)
     if not m:
         raise OttlError(f"bad target path {s!r}")
-    key = m.group(2) if m.group(2) is not None else m.group(3)
-    return m.group(1), key
+    return m.group(1), m.group(2) and _unquote(m.group(2))
 
 
 def _lit_str_arg(s: str) -> str:
@@ -81,7 +81,7 @@ def _list_of_str(s: str) -> list[str]:
     s = s.strip()
     if not (s.startswith("[") and s.endswith("]")):
         raise OttlError(f"expected a [\"…\"] list, got {s!r}")
-    return [_lit_str_arg(p) for p in _split_commas(s[1:-1])]
+    return [_lit_str_arg(p) for p in _split_top_level(s[1:-1], ",")]
 
 
 def _conditional(df: DataFrame, col_name: str, edited: Column,
@@ -102,39 +102,11 @@ def _set_map_key(m: Column, key: str, value: Column) -> Column:
     return F.coalesce(F.map_concat(cleaned, entry), entry)
 
 
-def _split_where(stmt: str) -> tuple[str, str | None]:
-    """Split ``call(...) where cond`` at a top-level ``where`` keyword
-    (never inside quotes or brackets)."""
-    depth, in_str, i = 0, None, 0
-    while i < len(stmt):
-        ch = stmt[i]
-        if in_str:
-            if ch == "\\":
-                i += 1
-            elif ch == in_str:
-                in_str = None
-        elif ch in "'\"":
-            in_str = ch
-        elif ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            depth -= 1
-        elif (
-            depth == 0
-            and stmt.startswith("where", i)
-            and (i == 0 or stmt[i - 1].isspace())
-            and (
-                i + 5 == len(stmt)
-                or not (stmt[i + 5].isalnum() or stmt[i + 5] == "_")
-            )
-        ):
-            return stmt[:i], stmt[i + 5:]
-        i += 1
-    return stmt, None
-
-
 def apply_statement(df: DataFrame, stmt: str) -> DataFrame:
-    call_src, where_src = _split_where(stmt)
+    # split ``call(...) where cond`` at a top-level ``where`` keyword
+    at = _find_top(stmt, r"(?<!\S)where(?!\w)")
+    call_src, where_src = (
+        (stmt, None) if at is None else (stmt[:at], stmt[at + 5:]))
     cond = None
     if where_src is not None:
         try:
@@ -145,7 +117,7 @@ def apply_statement(df: DataFrame, stmt: str) -> DataFrame:
     if not m:
         raise OttlError(f"bad statement {stmt!r}")
     name, argstr = m.group(1).lower(), m.group(2).strip()
-    args = _split_commas(argstr) if argstr else []
+    args = _split_top_level(argstr, ",")
 
     def need(n: int) -> None:
         if len(args) != n:

@@ -219,6 +219,77 @@ def test_dynamic_literals(events):
     assert all(r.n == 3 and r.b == 2 for r in got)
 
 
+def test_dynamic_map_literal_is_a_bag(spark):
+    """A ``dynamic({…})`` literal feeds the bag functions like bag_pack
+    output, while accessors and dynamic_to_json read it as before."""
+    row = kql(
+        spark.range(1),
+        "print ks = bag_keys(dynamic({'x': 1, 'y': 2})),"
+        " h = bag_has_key(dynamic({'x': 1}), 'x'),"
+        " h0 = bag_has_key(dynamic({'x': 1}), 'z'),"
+        " mj = dynamic_to_json("
+        "bag_merge(dynamic({'x': 1}), dynamic({'y': 2}))),"
+        " x = dynamic({'x': 1})['x'],"
+        " j = dynamic_to_json(dynamic({'y': 1, 'x': 2}))",
+    ).collect()[0]
+    assert row.ks == ["x", "y"]
+    assert (row.h, row.h0) == (True, False)
+    assert row.mj == '{"x":1,"y":2}'
+    assert row.x == 1
+    assert row.j == '{"y":1,"x":2}'
+    # an extended literal column keeps both readings in later stages
+    got = kql(
+        spark.range(1),
+        "T | extend m = dynamic({'x': 1, 'y': 2})"
+        " | project x = m['x'], ks = bag_keys(m)",
+        tables={"T": spark.range(1)},
+    ).collect()[0]
+    assert (got.x, got.ks) == (1, ["x", "y"])
+
+
+@pytest.fixture(scope="module")
+def lex_rows(spark):
+    return spark.createDataFrame(
+        [("a", "x by y", "C:\\", 1, "=>\\"), ("a", "z", "D:", 2, "go"),
+         ("b", "x by y", "C:\\", 3, "go")],
+        "k string, s string, p string, v long, et string",
+    )
+
+
+@pytest.mark.parametrize("query, expected", [
+    # verbatim literal ending in `\` before `|`, `;` and `,`
+    (r"T | where p != @'C:\' | project v", [(2,)]),
+    (r"let d = @'C:\'; T | where p == d | project v", [(1,), (3,)]),
+    (r"T | where v == 1 | extend a = @'C:\', b = 2 | project a, b",
+     [("C:\\", 2)]),
+    # an escaped backslash ends the literal
+    (r"T | where v == 1 | extend x = 'a\\', y = 2 | project x, y",
+     [("a\\", 2)]),
+    (r"T | where v == 1 | project x = 'a\\', v", [("a\\", 1)]),
+    # `by` inside a literal is not the by-clause
+    (r'T | summarize c = countif(s == "x by y") by k',
+     [("a", 1), ("b", 1)]),
+    (r'T | summarize c = countif(s == "x by y")', [(2,)]),
+    (r'T | partition by k (summarize c = countif(s == "x by y"))',
+     [("a", 1), ("b", 1)]),
+    (r'T | where v == 1 | mv-apply t = dynamic(["x by y", "q"]) on'
+     r' (summarize c = countif(t == "x by y")) | project v, c', [(1, 1)]),
+    # `)` inside a literal does not close a fork leg
+    (r"T | fork (where s != @')\' and v > 1 | project v)", [(2,), (3,)]),
+    # `=>` inside a literal does not start a scan step's assignments
+    (r'T | sort by v asc | scan declare (n: long = 0) with'
+     r' (step s: et == "=>\\" => n = n + 1) | project v, n', [(1, 1)]),
+])
+def test_one_string_literal_rule(lex_rows, query, expected):
+    from otel_arrow_spark.operators.kql_parser import kql_fork
+
+    if "| fork" in query:
+        out = kql_fork(lex_rows, query)["leg1"]
+    else:
+        out = kql(lex_rows, query, tables={"T": lex_rows})
+    assert sorted(map(tuple, out.collect())) == expected
+
+
 def test_ago_is_timestamp(events):
     out = kql(events, "events | where ts < ago(1h) | count").collect()
     assert out[0]["count_"] >= 0
