@@ -198,7 +198,7 @@ class CheckpointedPipeline:
 
         from .enrich import enrich_turns
         from .parse import parse_turns
-        from .router import SINKS, route_turns
+        from .router import observed_sink_counts, route_turns, sink_count_metrics
 
         batch_id = batch_id or uuid.uuid4().hex[:12]
         done = self.ledger.completed_slices(input_fingerprint)
@@ -228,17 +228,14 @@ class CheckpointedPipeline:
             observed = routed.observe(
                 obs,
                 F.count(F.lit(1)).alias("row_count"),
-                *[
-                    F.sum(F.when(F.col("sink") == k, 1).otherwise(0)).alias(f"n_{k}")
-                    for k in SINKS
-                ],
+                *sink_count_metrics(),
                 F.expr("bit_xor(xxhash64(conv_id, turn_idx, text))").alias("checksum"),
             )
             # dynamic partition overwrite: a retry REPLACES this slice's
             # output — never duplicates (exactly-once sink semantics).
             self.catalog.overwrite_partitions(observed, self.table, [SLICE_COL, "sink"])
             m = obs.get
-            per_sink = {k: int(m[f"n_{k}"]) for k in SINKS if int(m[f"n_{k}"] or 0)}
+            per_sink = observed_sink_counts(m)
             self.ledger.append(
                 {
                     "slice_id": s,

@@ -94,6 +94,17 @@ serialize window's one Exchange+Sort) and ``series_seasonal`` /
 (series_periods_detect @ 0.7, zero-series fallback, detection
 materialized once per row via a transform-bound lambda variable).
 
+Builtin functions: each name is one entry of the registry ``_FUNCS``
+— lowercase name → (min_args, max_args or None when variadic,
+builder). Column-pure functions are declared with their arity in
+``_FUNC_MAP_SIMPLE`` (scalars) and ``_AGG_MAP`` (aggregates); functions
+that read literal arguments, KE flags or the parser's bindings/window
+spec are ``ExprParser`` methods registered with ``@_builtin(names,
+min_args, max_args)``. A name registered twice fails at import.
+``ExprParser._call`` looks the name up and checks the argument count
+once (``_check_arity``, which also checks user functions and the
+functions of ``scan`` expressions) before building.
+
 Implementation note: every parse result is a ``KE`` node — a Catalyst
 Column plus, when the expression is a literal, its Python value. Literal
 arguments (regex patterns, delimiters, bin widths, accessor keys) travel
@@ -1023,8 +1034,6 @@ def _scalar_range(a: list[Column]) -> Column:
     lane); an empty span (start past stop in step's direction) → [].
     Values are doubles (one documented engine-wide numeric lane;
     Kusto preserves long for integral inputs)."""
-    if len(a) not in (2, 3):
-        raise KqlError("range needs (start, stop[, step])")
     start = a[0].cast("double")
     stop = a[1].cast("double")
     step = a[2].cast("double") if len(a) == 3 else F.lit(1.0)
@@ -1951,125 +1960,147 @@ def _b64_to_bytes(s: Column) -> Column:
                   F.array().cast("array<bigint>")).otherwise(body)
 
 
+# ---------------------------------------------------------------------------
+# builtin function registry
+# ---------------------------------------------------------------------------
+
+# name → (min_args, max_args or None when variadic, builder), see the
+# module docstring; the column tables name aliases in one key.
+_FUNCS: dict[str, tuple] = {}
+
+
+def _builtin(names: str, lo: int, hi: int | None):
+    """Register the decorated builder under each space-separated name;
+    each name may be registered once."""
+    def reg(fn):
+        for n in names.split():
+            if n in _FUNCS:
+                raise ValueError(f"builtin {n}() registered twice")
+            _FUNCS[n] = (lo, hi, fn)
+        return fn
+    return reg
+
+
+def _check_arity(name: str, n: int, lo: int, hi: int | None) -> None:
+    """The one argument-count rule for builtins, user functions and
+    scan expressions."""
+    if n < lo or (hi is not None and n > hi):
+        want = lo if lo == hi else f"{lo}..{'' if hi is None else hi}"
+        raise KqlError(f"{name}() takes {want} argument(s), got {n}")
+
+
 _FUNC_MAP_SIMPLE = {
     # text (text_scalar_expression.rs:7-22)
-    "strlen": lambda a: F.length(a[0]),
-    "strcat": lambda a: F.concat(*a),
-    "replace_string": lambda a: F.replace(a[0], a[1], a[2]),
-    "tolower": lambda a: F.lower(a[0]),
-    "toupper": lambda a: F.upper(a[0]),
-    "trim": lambda a: F.trim(a[0]),
+    "strlen len": (1, 1, lambda a: F.length(a[0])),
+    "strcat": (1, None, lambda a: F.concat(*a)),
+    "replace_string": (3, 3, lambda a: F.replace(a[0], a[1], a[2])),
+    "tolower": (1, 1, lambda a: F.lower(a[0])),
+    "toupper": (1, 1, lambda a: F.upper(a[0])),
     # conversion (convert_scalar_expression.rs:7-24)
-    "tobool": lambda a: a[0].cast("boolean"),
-    "toint": lambda a: a[0].cast("int"),
-    "tolong": lambda a: a[0].cast("bigint"),
-    "todouble": lambda a: a[0].cast("double"),
-    "toreal": lambda a: a[0].cast("double"),
-    "tostring": lambda a: a[0].cast("string"),
-    "todatetime": lambda a: a[0].cast("timestamp"),
-    # Kusto typed-literal constructors — `long(null)`, `real(4)` …
-    # (a cast superset: Kusto only allows literals inside; datetime(…)
-    # stays a tokenizer literal and never reaches this map); `int` and
-    # `double` are the OTTL converter aliases further down
-    "long": lambda a: a[0].cast("bigint"),
-    "real": lambda a: a[0].cast("double"),
-    "bool": lambda a: a[0].cast("boolean"),
+    # (+ the Kusto typed-literal constructors `long(null)`, `real(4)`,
+    # `bool(…)`: a cast superset — Kusto only allows literals inside;
+    # datetime(…) stays a tokenizer literal and never reaches this map;
+    # `int`, `double` and `string` are the OTTL converter aliases)
+    "tobool bool": (1, 1, lambda a: a[0].cast("boolean")),
+    "toint": (1, 1, lambda a: a[0].cast("int")),
+    "tolong long": (1, 1, lambda a: a[0].cast("bigint")),
+    "todouble toreal tofloat real": (1, 1, lambda a: a[0].cast("double")),
+    "tostring string": (1, 1, lambda a: a[0].cast("string")),
+    "todatetime": (1, 1, lambda a: a[0].cast("timestamp")),
     # scalar range(start, stop[, step]) — inclusive numeric series
-    "range": _scalar_range,
+    "range": (2, 3, _scalar_range),
     # conditional (scalar_expressions.rs:26-38)
-    "iff": lambda a: F.when(a[0], a[1]).otherwise(a[2]),
-    "iif": lambda a: F.when(a[0], a[1]).otherwise(a[2]),
-    "coalesce": lambda a: F.coalesce(*a),
-    "isnull": lambda a: a[0].isNull(),
-    "isnotnull": lambda a: a[0].isNotNull(),
-    "isempty": lambda a: a[0].isNull() | (a[0] == ""),
-    "isnotempty": lambda a: a[0].isNotNull() & (a[0] != ""),
-    "not": lambda a: ~a[0],
+    "iff iif": (3, 3, lambda a: F.when(a[0], a[1]).otherwise(a[2])),
+    "coalesce": (1, None, lambda a: F.coalesce(*a)),
+    "isnull": (1, 1, lambda a: a[0].isNull()),
+    "isnotnull": (1, 1, lambda a: a[0].isNotNull()),
+    "isempty": (1, 1, lambda a: a[0].isNull() | (a[0] == "")),
+    "isnotempty": (1, 1, lambda a: a[0].isNotNull() & (a[0] != "")),
+    "not": (1, 1, lambda a: ~a[0]),
     # math (math_scalar_expression.rs:7-34)
-    "floor": lambda a: F.floor(a[0]),
-    "ceiling": lambda a: F.ceil(a[0]),
-    "abs": lambda a: F.abs(a[0]),
-    "exp": lambda a: F.exp(a[0]),
-    "gamma": lambda a: _gamma(a[0]),
-    "loggamma": lambda a: _lgamma(a[0]),
-    "erf": lambda a: _erf(a[0]),
-    "erfc": lambda a: 1.0 - _erf(a[0]),
-    "log": lambda a: F.log(a[0]),
-    "sqrt": lambda a: F.sqrt(a[0]),
-    "pow": lambda a: F.pow(a[0], a[1]),
-    # parse_json is special-cased in _call (VARIANT result)
+    "ceiling": (1, 1, lambda a: F.ceil(a[0])),
+    "abs": (1, 1, lambda a: F.abs(a[0])),
+    "exp": (1, 1, lambda a: F.exp(a[0])),
+    "gamma": (1, 1, lambda a: _gamma(a[0])),
+    "loggamma": (1, 1, lambda a: _lgamma(a[0])),
+    "erf": (1, 1, lambda a: _erf(a[0])),
+    "erfc": (1, 1, lambda a: 1.0 - _erf(a[0])),
+    "log": (1, 1, lambda a: F.log(a[0])),
+    "sqrt": (1, 1, lambda a: F.sqrt(a[0])),
+    "pow": (2, 2, lambda a: F.pow(a[0], a[1])),
+    # parse_json (VARIANT result) is an ExprParser @_builtin method
     # temporal (temporal_scalar_expression.rs:7-10)
-    "now": lambda a: F.current_timestamp(),
-    "ago": lambda a: F.current_timestamp() - a[0],
-    "startofday": lambda a: F.date_trunc("day", a[0]),
-    "startofhour": lambda a: F.date_trunc("hour", a[0]),
+    "now": (0, 0, lambda a: F.current_timestamp()),
+    "ago": (1, 1, lambda a: F.current_timestamp() - a[0]),
+    "startofday": (1, 1, lambda a: F.date_trunc("day", a[0])),
+    "startofhour": (1, 1, lambda a: F.date_trunc("hour", a[0])),
     # collection (collection_scalar_expression.rs:7-13)
-    "array_length": lambda a: F.size(a[0]),
-    "pack_array": lambda a: F.array(*a),
+    "array_length": (1, 1, lambda a: F.size(a[0])),
+    "pack_array": (1, None, lambda a: F.array(*a)),
     # math (cont.)
-    "sign": lambda a: F.signum(a[0]),
-    "log2": lambda a: F.log2(a[0]),
-    "log10": lambda a: F.log10(a[0]),
-    "exp2": lambda a: F.pow(F.lit(2.0), a[0]),
-    "exp10": lambda a: F.pow(F.lit(10.0), a[0]),
-    "pi": lambda a: F.lit(3.141592653589793),
-    "cos": lambda a: F.cos(a[0]),
-    "sin": lambda a: F.sin(a[0]),
-    "tan": lambda a: F.tan(a[0]),
-    "atan": lambda a: F.atan(a[0]),
-    "acos": lambda a: F.acos(a[0]),
-    "asin": lambda a: F.asin(a[0]),
-    "atan2": lambda a: F.atan2(a[0], a[1]),
+    "sign": (1, 1, lambda a: F.signum(a[0])),
+    "log2": (1, 1, lambda a: F.log2(a[0])),
+    "log10": (1, 1, lambda a: F.log10(a[0])),
+    "exp2": (1, 1, lambda a: F.pow(F.lit(2.0), a[0])),
+    "exp10": (1, 1, lambda a: F.pow(F.lit(10.0), a[0])),
+    "pi": (0, 0, lambda a: F.lit(3.141592653589793)),
+    "cos": (1, 1, lambda a: F.cos(a[0])),
+    "sin": (1, 1, lambda a: F.sin(a[0])),
+    "tan": (1, 1, lambda a: F.tan(a[0])),
+    "atan": (1, 1, lambda a: F.atan(a[0])),
+    "acos": (1, 1, lambda a: F.acos(a[0])),
+    "asin": (1, 1, lambda a: F.asin(a[0])),
+    "atan2": (2, 2, lambda a: F.atan2(a[0], a[1])),
     # has_ipv4 family — token-delimited, octet-validated text scan
     # (see _ipv4_tokens); has_any_ipv4 takes the candidates as
     # trailing scalar args (the dynamic-array form is the same
     # fold spelled by the caller)
-    "has_ipv4": lambda a: F.exists(
-        _ipv4_tokens(a[0]), lambda t: t == a[1].cast("string")),
-    "has_ipv4_prefix": lambda a: F.exists(
+    "has_ipv4": (2, 2, lambda a: F.exists(
+        _ipv4_tokens(a[0]), lambda t: t == a[1].cast("string"))),
+    "has_ipv4_prefix": (2, 2, lambda a: F.exists(
         _ipv4_tokens(a[0]),
-        lambda t: F.startswith(t, a[1].cast("string"))),
-    "has_any_ipv4": lambda a: F.exists(
+        lambda t: F.startswith(t, a[1].cast("string")))),
+    "has_any_ipv4": (2, None, lambda a: F.exists(
         _ipv4_tokens(a[0]),
         lambda t: reduce(lambda acc, ip: acc | (t == ip.cast("string")),
-                         a[2:], t == a[1].cast("string"))),
-    "has_any_ipv4_prefix": lambda a: F.exists(
+                         a[2:], t == a[1].cast("string")))),
+    "has_any_ipv4_prefix": (2, None, lambda a: F.exists(
         _ipv4_tokens(a[0]),
         lambda t: reduce(
             lambda acc, p: acc | F.startswith(t, p.cast("string")),
-            a[2:], F.startswith(t, a[1].cast("string")))),
+            a[2:], F.startswith(t, a[1].cast("string"))))),
     # zlib/gzip ↔ base64 codec quartet (Arrow-batched seam, see
     # _b64_codec_udf)
-    "zlib_compress_to_base64_string": lambda a:
-        _zlib_compress_b64(a[0].cast("string")),
-    "zlib_decompress_from_base64_string": lambda a:
-        _zlib_decompress_b64(a[0].cast("string")),
-    "gzip_compress_to_base64_string": lambda a:
-        _gzip_compress_b64(a[0].cast("string")),
-    "gzip_decompress_from_base64_string": lambda a:
-        _gzip_decompress_b64(a[0].cast("string")),
+    "zlib_compress_to_base64_string": (1, 1, lambda a:
+        _zlib_compress_b64(a[0].cast("string"))),
+    "zlib_decompress_from_base64_string": (1, 1, lambda a:
+        _zlib_decompress_b64(a[0].cast("string"))),
+    "gzip_compress_to_base64_string": (1, 1, lambda a:
+        _gzip_compress_b64(a[0].cast("string"))),
+    "gzip_decompress_from_base64_string": (1, 1, lambda a:
+        _gzip_decompress_b64(a[0].cast("string"))),
     # RFC 3492 punycode quartet — same sanctioned codec seam; Kusto
     # returns '' on codec failure (not null), the helpers match
-    "punycode_from_string": lambda a:
-        _punycode_from_string(a[0].cast("string")),
-    "punycode_to_string": lambda a:
-        _punycode_to_string(a[0].cast("string")),
-    "punycode_domain_from_string": lambda a:
-        _punycode_domain_from_string(a[0].cast("string")),
-    "punycode_domain_to_string": lambda a:
-        _punycode_domain_to_string(a[0].cast("string")),
+    "punycode_from_string": (1, 1, lambda a:
+        _punycode_from_string(a[0].cast("string"))),
+    "punycode_to_string": (1, 1, lambda a:
+        _punycode_to_string(a[0].cast("string"))),
+    "punycode_domain_from_string": (1, 1, lambda a:
+        _punycode_domain_from_string(a[0].cast("string"))),
+    "punycode_domain_to_string": (1, 1, lambda a:
+        _punycode_domain_to_string(a[0].cast("string"))),
     # assert(cond[, msg]) — true, or fail the query (Kusto semantics);
     # assert_true yields NULL on pass, so coalesce restores the bool
-    "assert": lambda a: F.coalesce(
+    "assert": (1, 2, lambda a: F.coalesce(
         F.assert_true(
             a[0].cast("boolean"),
             a[1] if len(a) > 1 else F.lit("assert failed"),
         ).cast("boolean"),
-        F.lit(True)),
+        F.lit(True))),
     # has_any_index(source, values) — 0-based index of the first value
     # that matches source as a whole TERM (`has` boundary regex,
     # runtime-escaped), -1 when none match or the array is empty
-    "has_any_index": lambda a: F.when(
+    "has_any_index": (2, 2, lambda a: F.when(
         F.size(a[1]) > 0,
         F.coalesce(
             F.try_element_at(
@@ -2086,257 +2117,252 @@ _FUNC_MAP_SIMPLE = {
                             F.lit("($|[^a-zA-Z0-9])")))),
                 F.lit(1)),
             F.lit(-1))
-    ).otherwise(F.lit(-1)).cast("long"),
-    "degrees": lambda a: F.degrees(a[0]),
-    "radians": lambda a: F.radians(a[0]),
-    "isnan": lambda a: F.isnan(a[0].cast("double")),
-    "isfinite": lambda a: ~(
+    ).otherwise(F.lit(-1)).cast("long")),
+    "degrees": (1, 1, lambda a: F.degrees(a[0])),
+    "radians": (1, 1, lambda a: F.radians(a[0])),
+    "isnan": (1, 1, lambda a: F.isnan(a[0].cast("double"))),
+    "isfinite": (1, 1, lambda a: ~(
         F.isnan(a[0].cast("double"))
         | (F.abs(a[0].cast("double")) == float("inf"))
-    ),
-    "isinf": lambda a: F.abs(a[0].cast("double")) == float("inf"),
+    )),
+    "isinf": (1, 1, lambda a: F.abs(a[0].cast("double")) == float("inf")),
     # around(x, center, delta) — KQL proximity predicate
-    "around": lambda a: F.abs(a[0] - a[1]) <= a[2],
+    "around": (3, 3, lambda a: F.abs(a[0] - a[1]) <= a[2]),
     # text (cont.)
-    "reverse": lambda a: F.reverse(a[0]),
-    "strrep": lambda a: F.repeat(a[0], a[1]),
-    # KQL indexof is 0-based, -1 when absent; position is 1-based, 0
-    "indexof": lambda a: (F.position(a[1], a[0]) - 1).cast("bigint"),
-    # Kusto countof counts OVERLAPPING plain-string matches
-    "countof": lambda a: _countof_overlapping(a[0], a[1]),
-    "tohex": lambda a: F.lower(F.hex(a[0])),
+    "reverse array_reverse": (1, 1, lambda a: F.reverse(a[0])),
+    "strrep": (2, 2, lambda a: F.repeat(a[0], a[1])),
+    "tohex": (1, 1, lambda a: F.lower(F.hex(a[0]))),
     # temporal (cont.) — startofweek truncates to MONDAY (the Spark /
     # ISO / DuckDB convention; KQL's Sunday week start is a documented
     # deviation), dayofweek counts days since Monday 0..6 accordingly
-    "startofweek": lambda a: F.date_trunc("week", a[0]),
+    "startofweek": (1, 1, lambda a: F.date_trunc("week", a[0])),
     # endofweek = last microsecond of the ISO week startofweek opened
-    "endofweek": lambda a: F.timestamp_add(
+    "endofweek": (1, 1, lambda a: F.timestamp_add(
         "MICROSECOND", F.lit(-1),
         F.timestamp_add("DAY", F.lit(7), F.date_trunc("week", a[0])),
-    ),
-    "startofmonth": lambda a: F.date_trunc("month", a[0]),
+    )),
+    "startofmonth": (1, 1, lambda a: F.date_trunc("month", a[0])),
     # end-of-period twins (same convention as endofweek: last
     # microsecond before the next period starts)
-    "endofday": lambda a: F.timestamp_add(
+    "endofday": (1, 1, lambda a: F.timestamp_add(
         "MICROSECOND", F.lit(-1),
         F.timestamp_add("DAY", F.lit(1), F.date_trunc("day", a[0])),
-    ),
-    "endofmonth": lambda a: F.timestamp_add(
+    )),
+    "endofmonth": (1, 1, lambda a: F.timestamp_add(
         "MICROSECOND", F.lit(-1),
         F.timestamp_add("MONTH", F.lit(1), F.date_trunc("month", a[0])),
-    ),
-    "monthofyear": lambda a: F.month(a[0]).cast("bigint"),
-    "startofyear": lambda a: F.date_trunc("year", a[0]),
-    "endofyear": lambda a: F.timestamp_add(
+    )),
+    "monthofyear getmonth": (1, 1, lambda a: F.month(a[0]).cast("bigint")),
+    "startofyear": (1, 1, lambda a: F.date_trunc("year", a[0])),
+    "endofyear": (1, 1, lambda a: F.timestamp_add(
         "MICROSECOND", F.lit(-1),
         F.timestamp_add("YEAR", F.lit(1), F.date_trunc("year", a[0])),
-    ),
-    "startofquarter": lambda a: F.date_trunc("quarter", a[0]),
-    "endofquarter": lambda a: F.timestamp_add(
+    )),
+    "startofquarter": (1, 1, lambda a: F.date_trunc("quarter", a[0])),
+    "endofquarter": (1, 1, lambda a: F.timestamp_add(
         "MICROSECOND", F.lit(-1),
         F.timestamp_add(
             "QUARTER", F.lit(1), F.date_trunc("quarter", a[0])),
-    ),
-    "week_of_year": lambda a: F.weekofyear(a[0]).cast("bigint"),
-    "make_datetime": lambda a: F.make_timestamp_ntz(
+    )),
+    "week_of_year": (1, 1, lambda a: F.weekofyear(a[0]).cast("bigint")),
+    "make_datetime": (3, 6, lambda a: F.make_timestamp_ntz(
         a[0].cast("int"), a[1].cast("int"), a[2].cast("int"),
         (a[3] if len(a) > 3 else F.lit(0)).cast("int"),
         (a[4] if len(a) > 4 else F.lit(0)).cast("int"),
         (a[5] if len(a) > 5 else F.lit(0)).cast("double"),
-    ),
-    "unixtime_seconds_todatetime": lambda a: F.timestamp_seconds(
+    )),
+    "unixtime_seconds_todatetime": (1, 1, lambda a: F.timestamp_seconds(
         a[0]
-    ).cast("timestamp_ntz"),
-    "unixtime_milliseconds_todatetime": lambda a: F.timestamp_millis(
-        a[0].cast("bigint")).cast("timestamp_ntz"),
-    "unixtime_microseconds_todatetime": lambda a: F.timestamp_micros(
-        a[0].cast("bigint")).cast("timestamp_ntz"),
+    ).cast("timestamp_ntz")),
+    "unixtime_milliseconds_todatetime": (1, 1, lambda a: F.timestamp_millis(
+        a[0].cast("bigint")).cast("timestamp_ntz")),
+    "unixtime_microseconds_todatetime": (1, 1, lambda a: F.timestamp_micros(
+        a[0].cast("bigint")).cast("timestamp_ntz")),
     # ns → µs via decimal division: a double round-trip would lose
     # precision above 2^53 ns (~104 days), so divide exactly
-    "unixtime_nanoseconds_todatetime": lambda a: F.timestamp_micros(
+    "unixtime_nanoseconds_todatetime": (1, 1, lambda a: F.timestamp_micros(
         F.floor(a[0].cast("decimal(38,0)") / 1000).cast("bigint")
-    ).cast("timestamp_ntz"),
-    "base64_encode_tostring": lambda a: F.base64(a[0].cast("binary")),
-    "base64_decode_tostring": lambda a: F.unbase64(a[0]).cast("string"),
+    ).cast("timestamp_ntz")),
+    "base64_encode_tostring": (1, 1, lambda a: F.base64(a[0].cast("binary"))),
+    "base64_decode_tostring": (1, 1, lambda a:
+        F.unbase64(a[0]).cast("string")),
     # base64 ↔ dynamic byte-array pair (scalarfunctions.md). The array
     # form goes through the hex rendering so non-UTF8 bytes survive:
     # binary → hex pairs → long per byte (and back). Pure codegen.
-    "base64_decode_toarray": lambda a: _b64_to_bytes(a[0]),
-    "base64_encode_fromarray": lambda a: F.base64(F.unhex(F.array_join(
+    "base64_decode_toarray": (1, 1, lambda a: _b64_to_bytes(a[0])),
+    "base64_encode_fromarray": (1, 1, lambda a: F.base64(F.unhex(F.array_join(
         F.transform(a[0], lambda b: F.lpad(F.hex(b.cast("bigint")
                                                  % 256), 2, "0")),
-        ""))),
-    "isascii": lambda a: ~a[0].rlike("[^\\x00-\\x7f]"),
+        "")))),
+    "isascii": (1, 1, lambda a: ~a[0].rlike("[^\\x00-\\x7f]")),
     # regex_quote: backslash-escape every regex metacharacter (Kusto
     # returns a pattern matching the literal string). $1 backref with a
     # literal backslash prefix in the rewrite.
-    "regex_quote": lambda a: F.regexp_replace(
-        a[0], r"([.^$*+?()\[\]{}|\\])", r"\\$1"),
+    "regex_quote": (1, 1, lambda a: F.regexp_replace(
+        a[0], r"([.^$*+?()\[\]{}|\\])", r"\\$1")),
     # IPv6 quartet (scalarfunctions.md): canonical-form parse ± mask,
     # three-way compare, prefix match — accepts every RFC-4291 text
     # form plus bare IPv4 (mapped), all pure codegen
-    "parse_ipv6": lambda a: _parse_ipv6_masked(a[0], F.lit(128)),
-    "parse_ipv6_mask": lambda a: _parse_ipv6_masked(a[0], a[1]),
+    "parse_ipv6": (1, 1, lambda a: _parse_ipv6_masked(a[0], F.lit(128))),
+    "parse_ipv6_mask": (2, 2, lambda a: _parse_ipv6_masked(a[0], a[1])),
     # ipv6_is_in_range(ip, 'cidr') — membership per the range's
     # suffix; an inline suffix on the ip narrows further (min rule,
     # identical to ipv6_is_match with the 128 default), so the range
     # pair IS the match pair. *_any_range folds over the tail args.
-    "ipv6_is_in_range": lambda a: _ipv6_is_match(
-        a[0].cast("string"), a[1].cast("string"), F.lit(128)),
-    "ipv6_is_in_any_range": lambda a: reduce(
+    "ipv6_is_in_range": (2, 2, lambda a: _ipv6_is_match(
+        a[0].cast("string"), a[1].cast("string"), F.lit(128))),
+    "ipv6_is_in_any_range": (2, None, lambda a: reduce(
         lambda acc, r: acc | _ipv6_is_match(
             a[0].cast("string"), r.cast("string"), F.lit(128)),
         a[2:],
         _ipv6_is_match(a[0].cast("string"), a[1].cast("string"),
-                       F.lit(128))),
-    "ipv6_compare": lambda a: _ipv6_cmp(
-        a[0], a[1], a[2] if len(a) > 2 else F.lit(128)),
-    "ipv6_is_match": lambda a: _ipv6_is_match(
-        a[0], a[1], a[2] if len(a) > 2 else F.lit(128)),
+                       F.lit(128)))),
+    "ipv6_compare": (2, 3, lambda a: _ipv6_cmp(
+        a[0], a[1], a[2] if len(a) > 2 else F.lit(128))),
+    "ipv6_is_match": (2, 3, lambda a: _ipv6_is_match(
+        a[0], a[1], a[2] if len(a) > 2 else F.lit(128))),
     # ipv4_compare(a, b[, prefix]) — sign of the numeric difference
     # under the shared prefix mask; NULL when either side is malformed
-    "ipv4_compare": lambda a: F.signum(
+    "ipv4_compare": (2, 3, lambda a: F.signum(
         (_parse_ipv4_masked(a[0], (a[2] if len(a) > 2 else F.lit(32))
                             .cast("int"))
          - _parse_ipv4_masked(a[1], (a[2] if len(a) > 2 else F.lit(32))
                               .cast("int"))).cast("double")
-    ).cast("bigint"),
-    "strcmp": lambda a: F.when(a[0] == a[1], F.lit(0))
-    .when(a[0] < a[1], F.lit(-1))
-    .when(a[0] > a[1], F.lit(1))
-    .cast("bigint"),
-    # engine-defined 64-bit hash (xxhash64 here; Kusto's own hash() is
-    # likewise engine-specific) — pytest-only, no cross-engine oracle
-    "hash": lambda a: (
-        F.xxhash64(a[0]) if len(a) == 1
-        else F.pmod(F.xxhash64(a[0]), a[1])
-    ),
+    ).cast("bigint")),
+    "strcmp": (2, 2, lambda a: F.when(a[0] == a[1], F.lit(0))
+               .when(a[0] < a[1], F.lit(-1))
+               .when(a[0] > a[1], F.lit(1))
+               .cast("bigint")),
     # series_* — the make-series companion family (KQL series functions
     # subset). All NARROW: sequential array folds / elementwise
     # zip_with, deterministic evaluation order in both engines (no
     # parallel-accumulation float variance), codegen'd, zero shuffle.
-    "series_sum": lambda a: _series_sum(a[0]),
-    "series_avg": lambda a: _series_sum(a[0])
-    / F.greatest(F.size(a[0]), F.lit(1)),
-    "series_min": lambda a: F.array_min(a[0]),
-    "series_max": lambda a: F.array_max(a[0]),
-    "series_add": lambda a: F.zip_with(a[0], a[1], lambda x, y: x + y),
-    "series_subtract": lambda a: F.zip_with(a[0], a[1], lambda x, y: x - y),
-    "series_multiply": lambda a: F.zip_with(a[0], a[1], lambda x, y: x * y),
-    "series_divide": lambda a: F.zip_with(
-        a[0], a[1], lambda x, y: x.cast("double") / y.cast("double")),
-    "series_abs": lambda a: F.transform(a[0], F.abs),
-    "series_fit_line": lambda a: F.array(*_series_fit(a[0])),
-    "series_fit_line_dynamic": lambda a: _series_fit_dynamic(a[0]),
+    "series_sum array_sum": (1, 1, lambda a: _series_sum(a[0])),
+    "series_avg array_avg": (1, 1, lambda a: _series_sum(a[0])
+                             / F.greatest(F.size(a[0]), F.lit(1))),
+    "series_min series_stats_min": (1, 1, lambda a: F.array_min(a[0])),
+    "series_max series_stats_max": (1, 1, lambda a: F.array_max(a[0])),
+    "series_add": (2, 2, lambda a: F.zip_with(a[0], a[1], lambda x, y: x + y)),
+    "series_subtract": (2, 2, lambda a: F.zip_with(
+        a[0], a[1], lambda x, y: x - y)),
+    "series_multiply": (2, 2, lambda a: F.zip_with(
+        a[0], a[1], lambda x, y: x * y)),
+    "series_divide": (2, 2, lambda a: F.zip_with(
+        a[0], a[1], lambda x, y: x.cast("double") / y.cast("double"))),
+    "series_abs": (1, 1, lambda a: F.transform(a[0], F.abs)),
+    "series_fit_line": (1, 1, lambda a: F.array(*_series_fit(a[0]))),
+    "series_fit_line_dynamic": (1, 1, lambda a: _series_fit_dynamic(a[0])),
     # bag form of the gated array variant ([split, sl, il, sr, ir,
     # rss] → named keys + per-segment sub-bags)
-    "series_fit_2lines_dynamic": lambda a: _series_fit_2lines_bag(
-        _series_fit_2lines(a[0])),
+    "series_fit_2lines_dynamic": (1, 1, lambda a: _series_fit_2lines_bag(
+        _series_fit_2lines(a[0]))),
     # set predicates over dynamic arrays (arrays as sets — Spark's
     # array_intersect/union already dedupe)
-    "set_has_element": lambda a: F.array_contains(a[0], a[1]),
-    "jaccard_index": lambda a: F.when(
+    "set_has_element": (2, 2, lambda a: F.array_contains(a[0], a[1])),
+    "jaccard_index": (2, 2, lambda a: F.when(
         F.size(F.array_union(a[0], a[1])) > 0,
         F.size(F.array_intersect(a[0], a[1])).cast("double")
         / F.size(F.array_union(a[0], a[1])),
-    ),
-    "series_outliers": lambda a: _series_outliers(a[0]),
-    "series_pearson_correlation": lambda a: _series_pearson(a[0], a[1]),
+    )),
+    "series_outliers": (1, 1, lambda a: _series_outliers(a[0])),
+    "series_pearson_correlation": (2, 2, lambda a:
+        _series_pearson(a[0], a[1])),
     # null-gap fill with a constant (the make-series `default=` rule as
     # a standalone fn; captured arg is a literal in practice — cheap)
-    "series_fill_const": lambda a: F.transform(
-        a[0], lambda x: F.coalesce(x, a[1])),
-    "series_stats_min": lambda a: F.array_min(a[0]),
-    "series_stats_max": lambda a: F.array_max(a[0]),
+    "series_fill_const": (2, 2, lambda a: F.transform(
+        a[0], lambda x: F.coalesce(x, a[1]))),
     # centered moving average (window ±k, edges clamped) and the
     # residual-based anomaly flags built on it — see the helper
     # docstrings for the documented Kusto simplifications
-    "series_moving_avg": lambda a: _series_moving_avg(
-        a[0], a[1] if len(a) > 1 else F.lit(2)),
-    "series_decompose_forecast": lambda a: _series_forecast(
-        a[0], a[1], a[2]),
-    "series_decompose_anomalies": lambda a: _series_decompose_anomalies(
+    "series_moving_avg": (1, 2, lambda a: _series_moving_avg(
+        a[0], a[1] if len(a) > 1 else F.lit(2))),
+    "series_decompose_forecast": (3, 3, lambda a: _series_forecast(
+        a[0], a[1], a[2])),
+    "series_decompose_anomalies": (1, 3, lambda a: _series_decompose_anomalies(
         a[0],
         a[1] if len(a) > 1 else F.lit(1.5),
         a[2] if len(a) > 2 else F.lit(2),
-    ),
-    "series_fit_line_slope": lambda a: _series_fit(a[0])[0],
-    "series_fit_line_intercept": lambda a: _series_fit(a[0])[1],
+    )),
+    "series_fit_line_slope": (1, 1, lambda a: _series_fit(a[0])[0]),
+    "series_fit_line_intercept": (1, 1, lambda a: _series_fit(a[0])[1]),
     # FIR / IIR filters and the two-segment line fit — see the helper
     # docstrings for window anchoring, edge normalization, and the
     # reduced 2lines output shape
-    "series_fir": lambda a: _series_fir(
+    "series_fir": (2, 4, lambda a: _series_fir(
         a[0], a[1],
         a[2] if len(a) > 2 else F.lit(True),
         a[3] if len(a) > 3 else F.lit(False),
-    ),
-    "series_iir": lambda a: _series_iir(a[0], a[1], a[2]),
-    "series_periods_detect": lambda a: _series_periods(
+    )),
+    "series_iir": (3, 3, lambda a: _series_iir(a[0], a[1], a[2])),
+    "series_periods_detect": (1, 3, lambda a: _series_periods(
         a[0],
         a[1] if len(a) > 1 else F.lit(2),
         a[2] if len(a) > 2 else F.size(a[0]) / 2,
-    ),
-    "series_fit_2lines": lambda a: _series_fit_2lines(a[0]),
+    )),
+    "series_fit_2lines": (1, 1, lambda a: _series_fit_2lines(a[0])),
     # null-gap fills beyond const: forward / backward carries, linear
     # interpolation between anchors (edges take the nearest non-null)
-    "series_fill_forward": lambda a: _series_fill_forward(a[0]),
-    "series_fill_backward": lambda a: _series_fill_backward(a[0]),
-    "series_fill_linear": lambda a: _series_fill_linear(a[0]),
+    "series_fill_forward": (1, 1, lambda a: _series_fill_forward(a[0])),
+    "series_fill_backward": (1, 1, lambda a: _series_fill_backward(a[0])),
+    "series_fill_linear": (1, 1, lambda a: _series_fill_linear(a[0])),
     # element-wise math / comparisons (all narrow zip_with / transform)
-    "series_exp": lambda a: F.transform(a[0], lambda x: F.exp(x)),
-    "series_log": lambda a: F.transform(
-        a[0], lambda x: F.when(x > 0, F.log(x.cast("double")))),
-    "series_sign": lambda a: F.transform(
-        a[0], lambda x: F.signum(x.cast("double"))),
-    "series_floor": lambda a: F.transform(
-        a[0], lambda x: F.floor(x.cast("double")).cast("double")),
-    "series_ceiling": lambda a: F.transform(
-        a[0], lambda x: F.ceil(x.cast("double")).cast("double")),
-    "series_sin": lambda a: F.transform(
-        a[0], lambda x: F.sin(x.cast("double"))),
-    "series_cos": lambda a: F.transform(
-        a[0], lambda x: F.cos(x.cast("double"))),
-    "series_tan": lambda a: F.transform(
-        a[0], lambda x: F.tan(x.cast("double"))),
-    "series_asin": lambda a: F.transform(
+    "series_exp": (1, 1, lambda a: F.transform(a[0], lambda x: F.exp(x))),
+    "series_log": (1, 1, lambda a: F.transform(
+        a[0], lambda x: F.when(x > 0, F.log(x.cast("double"))))),
+    "series_sign": (1, 1, lambda a: F.transform(
+        a[0], lambda x: F.signum(x.cast("double")))),
+    "series_floor": (1, 1, lambda a: F.transform(
+        a[0], lambda x: F.floor(x.cast("double")).cast("double"))),
+    "series_ceiling": (1, 1, lambda a: F.transform(
+        a[0], lambda x: F.ceil(x.cast("double")).cast("double"))),
+    "series_sin": (1, 1, lambda a: F.transform(
+        a[0], lambda x: F.sin(x.cast("double")))),
+    "series_cos": (1, 1, lambda a: F.transform(
+        a[0], lambda x: F.cos(x.cast("double")))),
+    "series_tan": (1, 1, lambda a: F.transform(
+        a[0], lambda x: F.tan(x.cast("double")))),
+    "series_asin": (1, 1, lambda a: F.transform(
         a[0], lambda x: F.when(x.cast("double").between(-1, 1),
-                               F.asin(x.cast("double")))),
-    "series_acos": lambda a: F.transform(
+                               F.asin(x.cast("double"))))),
+    "series_acos": (1, 1, lambda a: F.transform(
         a[0], lambda x: F.when(x.cast("double").between(-1, 1),
-                               F.acos(x.cast("double")))),
-    "series_atan": lambda a: F.transform(
-        a[0], lambda x: F.atan(x.cast("double"))),
-    "series_pow": lambda a: F.zip_with(
-        a[0], a[1], lambda x, y: F.pow(x.cast("double"), y)),
-    "series_greater": lambda a: F.zip_with(a[0], a[1], lambda x, y: x > y),
-    "series_greater_equals": lambda a: F.zip_with(
-        a[0], a[1], lambda x, y: x >= y),
-    "series_less": lambda a: F.zip_with(a[0], a[1], lambda x, y: x < y),
-    "series_less_equals": lambda a: F.zip_with(
-        a[0], a[1], lambda x, y: x <= y),
-    "series_equals": lambda a: F.zip_with(a[0], a[1], lambda x, y: x == y),
-    "series_not_equals": lambda a: F.zip_with(
-        a[0], a[1], lambda x, y: x != y),
+                               F.acos(x.cast("double"))))),
+    "series_atan": (1, 1, lambda a: F.transform(
+        a[0], lambda x: F.atan(x.cast("double")))),
+    "series_pow": (2, 2, lambda a: F.zip_with(
+        a[0], a[1], lambda x, y: F.pow(x.cast("double"), y))),
+    "series_greater": (2, 2, lambda a: F.zip_with(
+        a[0], a[1], lambda x, y: x > y)),
+    "series_greater_equals": (2, 2, lambda a: F.zip_with(
+        a[0], a[1], lambda x, y: x >= y)),
+    "series_less": (2, 2, lambda a: F.zip_with(
+        a[0], a[1], lambda x, y: x < y)),
+    "series_less_equals": (2, 2, lambda a: F.zip_with(
+        a[0], a[1], lambda x, y: x <= y)),
+    "series_equals": (2, 2, lambda a: F.zip_with(
+        a[0], a[1], lambda x, y: x == y)),
+    "series_not_equals": (2, 2, lambda a: F.zip_with(
+        a[0], a[1], lambda x, y: x != y)),
     # seasonal component (explicit period, or -1/omitted = Kusto's
     # auto-detect via series_periods_detect @ 0.7 — see helper)
-    "series_seasonal": lambda a: _series_seasonal(
-        a[0], a[1] if len(a) > 1 else F.lit(-1)),
+    "series_seasonal": (1, 2, lambda a: _series_seasonal(
+        a[0], a[1] if len(a) > 1 else F.lit(-1))),
     # series_decompose components (seasonal medians + linefit trend on
     # the deseasonalized series — see _series_decompose_part; period
     # defaults to -1 auto-detect like Kusto's series_decompose)
-    "series_decompose_trend": lambda a: _series_decompose_part(
-        a[0], a[1] if len(a) > 1 else F.lit(-1), "trend"),
-    "series_decompose_baseline": lambda a: _series_decompose_part(
-        a[0], a[1] if len(a) > 1 else F.lit(-1), "baseline"),
-    "series_decompose_residual": lambda a: _series_decompose_part(
-        a[0], a[1] if len(a) > 1 else F.lit(-1), "residual"),
+    "series_decompose_trend": (1, 2, lambda a: _series_decompose_part(
+        a[0], a[1] if len(a) > 1 else F.lit(-1), "trend")),
+    "series_decompose_baseline": (1, 2, lambda a: _series_decompose_part(
+        a[0], a[1] if len(a) > 1 else F.lit(-1), "baseline")),
+    "series_decompose_residual": (1, 2, lambda a: _series_decompose_part(
+        a[0], a[1] if len(a) > 1 else F.lit(-1), "residual")),
     # vector ops (the embedding-column staples, shared with dataops ANN)
-    "series_dot_product": lambda a: _series_dot(a[0], a[1]),
-    "series_magnitude": lambda a: F.sqrt(_series_dot(a[0], a[0])),
-    "series_cosine_similarity": lambda a: _series_cosine(a[0], a[1]),
+    "series_dot_product": (2, 2, lambda a: _series_dot(a[0], a[1])),
+    "series_magnitude": (1, 1, lambda a: F.sqrt(_series_dot(a[0], a[0]))),
+    "series_cosine_similarity": (2, 2, lambda a: _series_cosine(a[0], a[1])),
     # series_stats companions beyond min/max: sample variance/stdev and
     # first-occurrence argmin/argmax (0-based, the Kusto shape)
-    "series_stats_variance": lambda a: F.when(
+    "series_stats_variance": (1, 1, lambda a: F.when(
         F.size(a[0]) > 1,
         (
             _series_sum(F.zip_with(
@@ -2345,8 +2371,8 @@ _FUNC_MAP_SIMPLE = {
             - _series_sum(a[0]) * _series_sum(a[0])
             / F.size(a[0]).cast("double")
         ) / (F.size(a[0]) - 1).cast("double"),
-    ),
-    "series_stats_stdev": lambda a: F.when(
+    )),
+    "series_stats_stdev": (1, 1, lambda a: F.when(
         F.size(a[0]) > 1,
         F.sqrt((
             _series_sum(F.zip_with(
@@ -2355,133 +2381,130 @@ _FUNC_MAP_SIMPLE = {
             - _series_sum(a[0]) * _series_sum(a[0])
             / F.size(a[0]).cast("double")
         ) / (F.size(a[0]) - 1).cast("double")),
-    ),
-    "series_stats_min_idx": lambda a: (
+    )),
+    "series_stats_min_idx": (1, 1, lambda a: (
         F.array_position(a[0], F.array_min(a[0])) - 1
-    ).cast("bigint"),
-    "series_stats_max_idx": lambda a: (
+    ).cast("bigint")),
+    "series_stats_max_idx": (1, 1, lambda a: (
         F.array_position(a[0], F.array_max(a[0])) - 1
-    ).cast("bigint"),
+    ).cast("bigint")),
     # IPv4 predicates (log-pipeline staples; all narrow arithmetic —
     # split + try_cast octets, no regex, no Python)
-    "ipv4_is_private": lambda a: (
+    "ipv4_is_private": (1, 1, lambda a: (
         (F.get(F.split(a[0], r"\."), 0).try_cast("int") == 10)
         | ((F.get(F.split(a[0], r"\."), 0).try_cast("int") == 172)
            & F.get(F.split(a[0], r"\."), 1).try_cast("int")
            .between(16, 31))
         | ((F.get(F.split(a[0], r"\."), 0).try_cast("int") == 192)
            & (F.get(F.split(a[0], r"\."), 1).try_cast("int") == 168))
-    ),
-    "ipv4_is_in_range": lambda a: _ipv4_in_range(a[0], a[1]),
-    "ipv4_is_match": lambda a: _ipv4_in_range(a[0], a[1]),
+    )),
+    "ipv4_is_in_range ipv4_is_match": (2, 2, lambda a:
+        _ipv4_in_range(a[0], a[1])),
     # parse_ipv4 accepts an optional /mask suffix (bits above the mask
     # zeroed — Kusto's semantics); parse_ipv4_mask takes the mask as a
     # second arg; format_ipv4 renders a numeric back to dotted-quad
     # (also accepts dotted input, masked); ipv4_netmask_suffix reads
     # the /m (32 when absent, NULL when malformed)
-    "parse_ipv4": lambda a: _parse_ipv4_masked(
+    "parse_ipv4": (1, 1, lambda a: _parse_ipv4_masked(
         F.try_element_at(F.split(a[0], "/"), F.lit(1)),
         F.coalesce(
             F.try_element_at(F.split(a[0], "/"), F.lit(2))
-            .try_cast("int"), F.lit(32))),
-    "parse_ipv4_mask": lambda a: _parse_ipv4_masked(
+            .try_cast("int"), F.lit(32)))),
+    "parse_ipv4_mask": (2, 2, lambda a: _parse_ipv4_masked(
         F.try_element_at(F.split(a[0], "/"), F.lit(1)),
-        a[1].try_cast("int")),
-    "ipv4_netmask_suffix": lambda a: F.when(
+        a[1].try_cast("int"))),
+    "ipv4_netmask_suffix": (1, 1, lambda a: F.when(
         _ip2long(F.try_element_at(F.split(a[0], "/"), F.lit(1)))
         .isNotNull(),
         F.coalesce(
             F.try_element_at(F.split(a[0], "/"), F.lit(2))
-            .try_cast("int"), F.lit(32))).cast("int"),
-    "format_ipv4": lambda a: _format_ipv4(*a),
+            .try_cast("int"), F.lit(32))).cast("int")),
+    "format_ipv4": (1, None, lambda a: _format_ipv4(*a)),
     # CIDR rendering of the masked address (Kusto returns '' on bad
     # input; this engine's error value is NULL, as documented for the
     # whole ipv4 family)
-    "format_ipv4_mask": lambda a: F.concat(
+    "format_ipv4_mask": (2, 2, lambda a: F.concat(
         _format_ipv4(a[0], a[1]), F.lit("/"),
         F.when(a[1].try_cast("int").between(0, 32),
-               a[1].cast("int")).cast("string")),
-    "ipv4_is_in_any_range": lambda a: reduce(
+               a[1].cast("int")).cast("string"))),
+    "ipv4_is_in_any_range": (2, None, lambda a: reduce(
         lambda acc, r: acc | _ipv4_in_range(a[0], r),
-        a[2:], _ipv4_in_range(a[0], a[1])),
+        a[2:], _ipv4_in_range(a[0], a[1]))),
     # KQL array_index_of is 0-based, -1 when absent (array_position is
     # 1-based, 0 when absent)
-    "array_index_of": lambda a: (
+    "array_index_of": (2, 2, lambda a: (
         F.array_position(a[0], a[1]) - 1
-    ).cast("bigint"),
-    "array_sum": lambda a: _series_sum(a[0]),
-    "array_avg": lambda a: _series_sum(a[0])
-    / F.greatest(F.size(a[0]), F.lit(1)),
+    ).cast("bigint")),
     # Kusto places null elements LAST in both directions (nulls_last
     # defaults true): F.array_sort does that ascending; descending,
     # sort_array(asc=False) already ends with nulls
-    "array_sort_asc": lambda a: F.array_sort(a[0]),
-    "array_sort_desc": lambda a: F.sort_array(a[0], asc=False),
+    "array_sort_asc": (1, 1, lambda a: F.array_sort(a[0])),
+    "array_sort_desc": (1, 1, lambda a: F.sort_array(a[0], asc=False)),
     # array shape/manipulation round-out (Kusto dynamic helpers) — all
     # narrow slice/concat arithmetic, see the helper docstrings
-    "array_slice": lambda a: _array_slice(a[0], a[1], a[2]),
-    "array_concat": lambda a: F.concat(*a),
-    "array_reverse": lambda a: F.reverse(a[0]),
-    "array_rotate_left": lambda a: _array_rotate(a[0], a[1]),
-    "array_rotate_right": lambda a: _array_rotate(a[0], -a[1]),
-    "array_shift_left": lambda a: _array_shift(
-        a[0], a[1], a[2] if len(a) > 2 else F.lit(None)),
-    "array_shift_right": lambda a: _array_shift(
-        a[0], -a[1], a[2] if len(a) > 2 else F.lit(None)),
+    "array_slice": (3, 3, lambda a: _array_slice(a[0], a[1], a[2])),
+    "array_concat": (1, None, lambda a: F.concat(*a)),
+    "array_rotate_left": (2, 2, lambda a: _array_rotate(a[0], a[1])),
+    "array_rotate_right": (2, 2, lambda a: _array_rotate(a[0], -a[1])),
+    "array_shift_left": (2, 3, lambda a: _array_shift(
+        a[0], a[1], a[2] if len(a) > 2 else F.lit(None))),
+    "array_shift_right": (2, 3, lambda a: _array_shift(
+        a[0], -a[1], a[2] if len(a) > 2 else F.lit(None))),
     # zip restricted to same-type arrays (Kusto zips to dynamic pairs;
     # the Spark twin is array<array<T>>)
-    "zip": lambda a: F.zip_with(
-        a[0], a[1], lambda x, y: F.array(x, y)),
-    "repeat": lambda a: F.array_repeat(a[0], a[1].cast("int")),
+    "zip": (2, 2, lambda a: F.zip_with(
+        a[0], a[1], lambda x, y: F.array(x, y))),
+    "repeat": (2, 2, lambda a: F.array_repeat(a[0], a[1].cast("int"))),
     # elementwise conditional over three equal-length arrays (Kusto
     # array_iff; scalar branches not supported in this subset)
-    "array_iff": lambda a: F.zip_with(
+    "array_iff": (3, 3, lambda a: F.zip_with(
         a[0],
         F.zip_with(
             a[1], a[2],
             lambda x, y: F.struct(x.alias("t"), y.alias("f")),
         ),
         lambda c, s: F.when(c.cast("boolean"), s["t"]).otherwise(s["f"]),
-    ),
-    "set_union": lambda a: F.array_distinct(F.array_union(a[0], a[1])),
-    "set_difference": lambda a: F.array_distinct(F.array_except(a[0], a[1])),
-    "set_intersect": lambda a: F.array_distinct(F.array_intersect(a[0], a[1])),
-    "dayofweek": lambda a: F.weekday(a[0]).cast("bigint"),
-    "hourofday": lambda a: F.hour(a[0]).cast("bigint"),
-    "getyear": lambda a: F.year(a[0]).cast("bigint"),
-    "getmonth": lambda a: F.month(a[0]).cast("bigint"),
-    "dayofmonth": lambda a: F.dayofmonth(a[0]).cast("bigint"),
+    )),
+    "set_union": (2, 2, lambda a: F.array_distinct(F.array_union(a[0], a[1]))),
+    "set_difference": (2, 2, lambda a: F.array_distinct(
+        F.array_except(a[0], a[1]))),
+    "set_intersect": (2, 2, lambda a: F.array_distinct(
+        F.array_intersect(a[0], a[1]))),
+    "dayofweek": (1, 1, lambda a: F.weekday(a[0]).cast("bigint")),
+    "hourofday": (1, 1, lambda a: F.hour(a[0]).cast("bigint")),
+    "getyear": (1, 1, lambda a: F.year(a[0]).cast("bigint")),
+    "dayofmonth": (1, 1, lambda a: F.dayofmonth(a[0]).cast("bigint")),
     # GetType (scalar_expressions.rs:41) — engine type name of the arg
-    "gettype": lambda a: F.typeof(a[0]),
-    "typeof": lambda a: F.typeof(a[0]),
+    "gettype typeof": (1, 1, lambda a: F.typeof(a[0])),
     # misc
-    "strlen_bytes": lambda a: F.octet_length(a[0]),
-    "hash_sha256": lambda a: F.sha2(a[0], 256),
-    "hash_sha1": lambda a: F.sha1(a[0].cast("string")),
-    "hash_md5": lambda a: F.md5(a[0].cast("string")),
+    "strlen_bytes": (1, 1, lambda a: F.octet_length(a[0])),
+    "hash_sha256": (1, 1, lambda a: F.sha2(a[0], 256)),
+    "hash_sha1": (1, 1, lambda a: F.sha1(a[0].cast("string"))),
+    "hash_md5": (1, 1, lambda a: F.md5(a[0].cast("string"))),
     # hash_xxhash64 is Kusto's only hash with a PINNED algorithm —
     # xxhash64 of the value bytes; Spark's builtin is the same family
     # but hashes Spark's internal row encoding with seed 42, so values
     # differ from Kusto's (engine-defined constant offset; distribution
     # and determinism properties hold). hash_combine/hash_many likewise
-    # engine-defined mixes (Kusto documents no algorithm).
-    "hash_xxhash64": lambda a: (
+    # engine-defined mixes (Kusto documents no algorithm), and so is
+    # the bare hash() (Kusto's own is likewise engine-specific) —
+    # pytest-only, no cross-engine oracle
+    "hash_xxhash64 hash": (1, 2, lambda a: (
         F.xxhash64(a[0]) if len(a) == 1
-        else F.pmod(F.xxhash64(a[0]), a[1])),
-    "hash_many": lambda a: F.xxhash64(*a),
-    "hash_combine": lambda a: F.xxhash64(*a),
+        else F.pmod(F.xxhash64(a[0]), a[1]))),
+    "hash_many hash_combine": (1, None, lambda a: F.xxhash64(*a)),
     # string_size = UTF-8 payload bytes (Kusto's string size estimate)
-    "string_size": lambda a: F.octet_length(a[0]).cast("bigint"),
+    "string_size": (1, 1, lambda a: F.octet_length(a[0]).cast("bigint")),
     # Spark strings are validated UTF-8 by construction, so any
     # non-null string IS utf8 (Kusto's isutf8 checks raw bytes)
-    "isutf8": lambda a: a[0].isNotNull(),
-    "new_guid": lambda a: F.uuid(),
-    "cot": lambda a: 1.0 / F.tan(a[0].cast("double")),
+    "isutf8": (1, 1, lambda a: a[0].isNotNull()),
+    "new_guid": (0, 0, lambda a: F.uuid()),
+    "cot": (1, 1, lambda a: 1.0 / F.tan(a[0].cast("double"))),
     # statistics trio (regularized incomplete beta backbone — see
     # _betainc): beta_cdf/beta_pdf take Kusto's (x, alpha, beta)
-    "beta_cdf": lambda a: _betainc(
-        a[1].cast("double"), a[2].cast("double"), a[0].cast("double")),
-    "beta_pdf": lambda a: F.when(
+    "beta_cdf": (3, 3, lambda a: _betainc(
+        a[1].cast("double"), a[2].cast("double"), a[0].cast("double"))),
+    "beta_pdf": (3, 3, lambda a: F.when(
         (a[1].cast("double") > 0) & (a[2].cast("double") > 0),
         F.when(
             a[0].cast("double").between(1e-300, 1 - 1e-16),
@@ -2494,111 +2517,110 @@ _FUNC_MAP_SIMPLE = {
                               + a[2].cast("double"))
                 - _lgamma_pos(a[1].cast("double"))
                 - _lgamma_pos(a[2].cast("double")))
-        ).when(a[0].cast("double").between(0.0, 1.0), F.lit(0.0))),
-    "welch_test": lambda a: _welch_test(*a),
+        ).when(a[0].cast("double").between(0.0, 1.0), F.lit(0.0)))),
+    "welch_test": (6, 6, lambda a: _welch_test(*a)),
     # beta_inv takes Kusto's (probability, alpha, beta)
-    "beta_inv": lambda a: _beta_inv(
-        a[0].cast("double"), a[1].cast("double"), a[2].cast("double")),
+    "beta_inv": (3, 3, lambda a: _beta_inv(
+        a[0].cast("double"), a[1].cast("double"), a[2].cast("double"))),
     # GUID ↔ base64 of the .NET mixed-endian 16-byte form; invalid
     # input → typed null (same contract as toguid)
-    "base64_encode_fromguid": lambda a: F.when(
+    "base64_encode_fromguid": (1, 1, lambda a: F.when(
         a[0].cast("string").rlike(
             r"^[0-9a-fA-F]{8}(-[0-9a-fA-F]{4}){3}-[0-9a-fA-F]{12}$"),
-        F.base64(F.unhex(_guid_hex_to_bytes_hex(a[0].cast("string"))))),
-    "base64_decode_toguid": lambda a: F.when(
+        F.base64(F.unhex(_guid_hex_to_bytes_hex(a[0].cast("string")))))),
+    "base64_decode_toguid": (1, 1, lambda a: F.when(
         F.octet_length(F.unbase64(a[0].cast("string"))) == 16,
         _bytes_hex_to_guid(F.lower(F.hex(F.unbase64(
-            a[0].cast("string")))))),
+            a[0].cast("string"))))))),
     # unit conversions (factor tables above; unknown unit → NULL)
-    "convert_angle": lambda a: _convert_unit("angle", *a),
-    "convert_energy": lambda a: _convert_unit("energy", *a),
-    "convert_force": lambda a: _convert_unit("force", *a),
-    "convert_length": lambda a: _convert_unit("length", *a),
-    "convert_mass": lambda a: _convert_unit("mass", *a),
-    "convert_speed": lambda a: _convert_unit("speed", *a),
-    "convert_volume": lambda a: _convert_unit("volume", *a),
-    "convert_temperature": lambda a: _convert_temperature(*a),
+    "convert_angle": (3, 3, lambda a: _convert_unit("angle", *a)),
+    "convert_energy": (3, 3, lambda a: _convert_unit("energy", *a)),
+    "convert_force": (3, 3, lambda a: _convert_unit("force", *a)),
+    "convert_length": (3, 3, lambda a: _convert_unit("length", *a)),
+    "convert_mass": (3, 3, lambda a: _convert_unit("mass", *a)),
+    "convert_speed": (3, 3, lambda a: _convert_unit("speed", *a)),
+    "convert_volume": (3, 3, lambda a: _convert_unit("volume", *a)),
+    "convert_temperature": (3, 3, lambda a: _convert_temperature(*a)),
     # Kusto decimal is a 128-bit base-10 type; decimal(38,14) covers
     # ±1e24 with 14 fractional digits — the practical envelope of the
     # reference's numeric tests (documented subset)
-    "todecimal": lambda a: a[0].try_cast("decimal(38,14)"),
+    "todecimal": (1, 1, lambda a: a[0].try_cast("decimal(38,14)")),
     # toguid validates + canonicalizes (lowercase, hyphenated form
     # only); anything else is the typed null, like the to*() family
-    "toguid": lambda a: F.when(
+    "toguid": (1, 1, lambda a: F.when(
         a[0].cast("string").rlike(
             r"^[0-9a-fA-F]{8}(-[0-9a-fA-F]{4}){3}-[0-9a-fA-F]{12}$"),
-        F.lower(a[0].cast("string"))),
+        F.lower(a[0].cast("string")))),
     # replace_strings(text, lookups, rewrites) — sequential fold;
     # a null/missing rewrite leaves the text unchanged (Kusto skips
     # invalid pairs rather than nulling the row)
-    "replace_strings": lambda a: F.aggregate(
+    "replace_strings": (3, 3, lambda a: F.aggregate(
         F.zip_with(a[1], a[2], lambda l, r: F.struct(
             l.cast("string").alias("l"), r.cast("string").alias("r"))),
         a[0].cast("string"),
         lambda acc, e: F.when(
             e["l"].isNotNull() & e["r"].isNotNull(),
-            F.replace(acc, e["l"], e["r"])).otherwise(acc)),
+            F.replace(acc, e["l"], e["r"])).otherwise(acc))),
     # rand() ∈ [0,1); rand(n) draws uniformly from {0, 1, …, n-1}
     # (nondeterministic — gate by invariants, never by value)
-    "rand": lambda a: (
+    "rand": (0, 1, lambda a: (
         F.rand() if not a
-        else F.floor(F.rand() * a[0].cast("double")).cast("double")),
+        else F.floor(F.rand() * a[0].cast("double")).cast("double"))),
     # engine-defined rough byte estimate (Kusto documents no formula):
     # the JSON rendering's UTF-8 payload of the argument tuple
-    "estimate_data_size": lambda a: F.octet_length(
-        F.to_json(F.struct(*a))).cast("bigint"),
+    "estimate_data_size": (1, None, lambda a: F.octet_length(
+        F.to_json(F.struct(*a))).cast("bigint")),
     # wall-clock shifts between UTC and an IANA zone; timestamps are
     # timestamp_ntz wall times labeled UTC throughout this engine, so
     # the shift is (from|to)_utc_timestamp on the raw wall time
-    "datetime_utc_to_local": lambda a: F.from_utc_timestamp(
+    "datetime_utc_to_local": (2, 2, lambda a: F.from_utc_timestamp(
         a[0].cast("timestamp_ntz").cast("string").cast("timestamp"),
-        a[1]).cast("string").cast("timestamp_ntz"),
-    "datetime_local_to_utc": lambda a: F.to_utc_timestamp(
+        a[1]).cast("string").cast("timestamp_ntz")),
+    "datetime_local_to_utc": (2, 2, lambda a: F.to_utc_timestamp(
         a[0].cast("timestamp_ntz").cast("string").cast("timestamp"),
-        a[1]).cast("string").cast("timestamp_ntz"),
+        a[1]).cast("string").cast("timestamp_ntz")),
     # URL codecs (Kusto url-encode/decode-function): url_encode is
     # form-encoding (space → '+', Java URLEncoder == Kusto), the
     # _component variant is RFC-3986 (space → %20; '+' in the input is
     # already %2B before the swap, so the replace is safe)
-    "url_encode": lambda a: F.url_encode(a[0]),
-    "url_decode": lambda a: F.url_decode(a[0]),
-    "url_encode_component": lambda a: F.replace(
-        F.url_encode(a[0]), F.lit("+"), F.lit("%20")),
+    "url_encode": (1, 1, lambda a: F.url_encode(a[0])),
+    "url_decode": (1, 1, lambda a: F.url_decode(a[0])),
+    "url_encode_component": (1, 1, lambda a: F.replace(
+        F.url_encode(a[0]), F.lit("+"), F.lit("%20"))),
     # indexof_regex — zero-based like indexof, -1 when no match
     # (regexp_instr is 1-based with 0 = miss, so -1 shifts both)
-    "indexof_regex": lambda a: (
-        F.regexp_instr(a[0], a[1]) - F.lit(1)).cast("bigint"),
+    "indexof_regex": (2, 2, lambda a: (
+        F.regexp_instr(a[0], a[1]) - F.lit(1)).cast("bigint")),
     # bit manipulation (Kusto binary-functions) — 64-bit semantics
-    "binary_and": lambda a: a[0].cast("long").bitwiseAND(
-        a[1].cast("long")),
-    "binary_or": lambda a: a[0].cast("long").bitwiseOR(
-        a[1].cast("long")),
-    "binary_xor": lambda a: a[0].cast("long").bitwiseXOR(
-        a[1].cast("long")),
-    "binary_not": lambda a: F.bitwise_not(a[0].cast("long")),
-    "binary_shift_left": lambda a: F.call_function(
-        "shiftleft", a[0].cast("long"), a[1].cast("int")),
-    "binary_shift_right": lambda a: F.call_function(
-        "shiftright", a[0].cast("long"), a[1].cast("int")),
-    "bitset_count_ones": lambda a: F.bit_count(
-        a[0].cast("long")).cast("bigint"),
+    "binary_and": (2, 2, lambda a: a[0].cast("long").bitwiseAND(
+        a[1].cast("long"))),
+    "binary_or": (2, 2, lambda a: a[0].cast("long").bitwiseOR(
+        a[1].cast("long"))),
+    "binary_xor": (2, 2, lambda a: a[0].cast("long").bitwiseXOR(
+        a[1].cast("long"))),
+    "binary_not": (1, 1, lambda a: F.bitwise_not(a[0].cast("long"))),
+    "binary_shift_left": (2, 2, lambda a: F.call_function(
+        "shiftleft", a[0].cast("long"), a[1].cast("int"))),
+    "binary_shift_right": (2, 2, lambda a: F.call_function(
+        "shiftright", a[0].cast("long"), a[1].cast("int"))),
+    "bitset_count_ones": (1, 1, lambda a: F.bit_count(
+        a[0].cast("long")).cast("bigint")),
     # geo — spherical-Earth great-circle (haversine, S2's mean radius
     # 6371.01 km, the geometry library Kusto's geo_* functions use).
     # args are (lon1, lat1, lon2, lat2 [, radius]) like Kusto.
-    "geo_distance_2points": lambda a: _geo_distance(*a[:4]),
-    "geo_point_in_circle": lambda a: (
-        _geo_distance(a[0], a[1], a[2], a[3]) <= a[4]),
+    "geo_distance_2points": (4, 4, lambda a: _geo_distance(*a)),
+    "geo_point_in_circle": (5, 5, lambda a: (
+        _geo_distance(a[0], a[1], a[2], a[3]) <= a[4])),
     # dcount_hll(sketch) — read the cardinality estimate out of an
     # hll()/hll_merge() sketch (Datasketches HLL; exact in sparse mode,
     # i.e. for small per-group cardinalities)
-    "dcount_hll": lambda a: F.hll_sketch_estimate(a[0]),
+    "dcount_hll": (1, 1, lambda a: F.hll_sketch_estimate(a[0])),
     # OTTL converter aliases (public OTTL LANGUAGE.md; the shared scalar
     # core the ottl module's value/where expressions parse through)
-    "len": lambda a: F.length(a[0]),
-    "int": lambda a: a[0].try_cast("bigint"),
-    "double": lambda a: a[0].try_cast("double"),
-    "string": lambda a: a[0].cast("string"),
-    "isstring": lambda a: a[0].cast("string").isNotNull(),
+    # (`len` and `string` share strlen's and tostring's entries)
+    "int": (1, 1, lambda a: a[0].try_cast("bigint")),
+    "double": (1, 1, lambda a: a[0].try_cast("double")),
+    "isstring": (1, 1, lambda a: a[0].cast("string").isNotNull()),
 }
 
 # conversions that need the string detour when applied to a VARIANT
@@ -2609,96 +2631,101 @@ _VARIANT_VIA_STRING = {
 
 _AGG_MAP = {
     # summary_data_expression.rs:215-221
-    "count": lambda a: F.count(F.lit(1)) if not a else F.count(a[0]),
-    "countif": lambda a: F.count(F.when(a[0], 1)),
-    "sum": lambda a: F.sum(a[0]),
-    "avg": lambda a: F.avg(a[0]),
-    "min": lambda a: F.min(a[0]),
-    "max": lambda a: F.max(a[0]),
-    "dcount": lambda a: F.countDistinct(a[0]),
-    "make_list": lambda a: F.collect_list(a[0]),
-    "make_set": lambda a: F.array_sort(F.collect_set(a[0])),
+    "count": (0, 1, lambda a: F.count(F.lit(1)) if not a else F.count(a[0])),
+    "countif": (1, 1, lambda a: F.count(F.when(a[0], 1))),
+    "sum": (1, 1, lambda a: F.sum(a[0])),
+    "avg": (1, 1, lambda a: F.avg(a[0])),
+    "min": (1, 1, lambda a: F.min(a[0])),
+    "max": (1, 1, lambda a: F.max(a[0])),
+    # count_distinct / count_distinctif — Kusto's EXACT distinct-count
+    # pair (dcount is the HLL estimate there; here bare dcount is
+    # already exact for oracle hashability, so these are true aliases)
+    "dcount count_distinct": (1, 1, lambda a: F.countDistinct(a[0])),
+    "make_list": (1, 1, lambda a: F.collect_list(a[0])),
+    "make_set": (1, 1, lambda a: F.array_sort(F.collect_set(a[0]))),
     # conditional aggregates: agg over `when(pred, expr)` — NULLs (rows
     # failing the predicate) are ignored by the aggregate, matching
     # KQL *if() and SQL `CASE WHEN pred THEN expr END` semantics
-    "sumif": lambda a: F.sum(F.when(a[1], a[0])),
-    "avgif": lambda a: F.avg(F.when(a[1], a[0])),
-    "minif": lambda a: F.min(F.when(a[1], a[0])),
-    "maxif": lambda a: F.max(F.when(a[1], a[0])),
+    "sumif": (2, 2, lambda a: F.sum(F.when(a[1], a[0]))),
+    "avgif": (2, 2, lambda a: F.avg(F.when(a[1], a[0]))),
+    "minif": (2, 2, lambda a: F.min(F.when(a[1], a[0]))),
+    "maxif": (2, 2, lambda a: F.max(F.when(a[1], a[0]))),
     # arg_max/arg_min(ExprToRank, ExprToReturn) — KQL argument order;
     # ties are arbitrary (use a unique ranking expr for determinism)
-    "arg_max": lambda a: F.max_by(a[1], a[0]),
-    "arg_min": lambda a: F.min_by(a[1], a[0]),
-    "stdev": lambda a: F.stddev_samp(a[0]),
-    "variance": lambda a: F.var_samp(a[0]),
-    "stdevif": lambda a: F.stddev_samp(F.when(a[1], a[0])),
-    "varianceif": lambda a: F.var_samp(F.when(a[1], a[0])),
-    "stdevp": lambda a: F.stddev_pop(a[0]),
-    "variancep": lambda a: F.var_pop(a[0]),
+    "arg_max": (2, 2, lambda a: F.max_by(a[1], a[0])),
+    "arg_min": (2, 2, lambda a: F.min_by(a[1], a[0])),
+    "stdev": (1, 1, lambda a: F.stddev_samp(a[0])),
+    "variance": (1, 1, lambda a: F.var_samp(a[0])),
+    "stdevif": (2, 2, lambda a: F.stddev_samp(F.when(a[1], a[0]))),
+    "varianceif": (2, 2, lambda a: F.var_samp(F.when(a[1], a[0]))),
+    "stdevp": (1, 1, lambda a: F.stddev_pop(a[0])),
+    "variancep": (1, 1, lambda a: F.var_pop(a[0])),
     # bitwise aggregate family — the lineage checksum pattern
     # (`lineage.py` uses bit_xor for order-insensitive content sums)
     # surfaced in the query language
-    "binary_all_and": lambda a: F.bit_and(a[0]),
-    "binary_all_or": lambda a: F.bit_or(a[0]),
-    "binary_all_xor": lambda a: F.bit_xor(a[0]),
+    "binary_all_and": (1, 1, lambda a: F.bit_and(a[0])),
+    "binary_all_or": (1, 1, lambda a: F.bit_or(a[0])),
+    "binary_all_xor": (1, 1, lambda a: F.bit_xor(a[0])),
     # take_any: KQL's arbitrary-row picker; Spark's any_value with
     # ignoreNulls — deterministic only when the expr is constant per
     # group (what the gated query does; general use is by-design
     # nondeterministic, same as KQL)
-    "take_any": lambda a: F.any_value(a[0], True),
-    "take_anyif": lambda a: F.any_value(F.when(a[1], a[0]), True),
-    "anyif": lambda a: F.any_value(F.when(a[1], a[0]), True),
-    "dcountif": lambda a: F.countDistinct(F.when(a[1], a[0])),
+    "take_any": (1, 1, lambda a: F.any_value(a[0], True)),
+    "take_anyif anyif": (2, 2, lambda a:
+        F.any_value(F.when(a[1], a[0]), True)),
+    "dcountif count_distinctif": (2, 2, lambda a:
+        F.countDistinct(F.when(a[1], a[0]))),
     # KQL dcount is approximate by design (HLL); the bare form above is
     # EXACT (cross-engine oracle hashability). dcount_approx opts into
     # the sketch: HyperLogLog++, bounded state per group at any scale,
     # mergeable map-side.
-    "dcount_approx": lambda a: F.approx_count_distinct(a[0]),
+    "dcount_approx": (1, 1, lambda a: F.approx_count_distinct(a[0])),
     # hll()/hll_merge() — Kusto's explicit-sketch pair (aggregates.md):
     # hll(x) folds values into a binary HLL sketch, hll_merge(s) unions
     # sketches, dcount_hll(s) (scalar) reads the estimate. Spark's
     # Datasketches HllSketch: fixed-size state per group, map-side
     # partial merge — the shape that makes per-hour→per-day distinct
     # rollups one shuffle of sketches instead of a re-scan at 100 TB.
-    "hll": lambda a: F.hll_sketch_agg(a[0]),
-    "hll_merge": lambda a: F.hll_union_agg(a[0]),
+    "hll": (1, 1, lambda a: F.hll_sketch_agg(a[0])),
+    "hll_merge": (1, 1, lambda a: F.hll_union_agg(a[0])),
     # make_list_if/make_set_if — collect_list/set skip NULLs, so the
     # failed-predicate rows vanish, matching KQL *if() semantics
-    "make_list_if": lambda a: F.collect_list(F.when(a[1], a[0])),
-    "make_set_if": lambda a: F.array_sort(F.collect_set(F.when(a[1], a[0]))),
+    "make_list_if": (2, 2, lambda a: F.collect_list(F.when(a[1], a[0]))),
+    "make_set_if": (2, 2, lambda a: F.array_sort(
+        F.collect_set(F.when(a[1], a[0])))),
     # make_bag(m) — union of property bags across the group. Entry
     # order follows collect_list (arbitrary across partitions, like
     # KQL); first occurrence of a key wins, enforced by the indexed
     # filter so conflicting keys can't crash map_from_entries.
-    "make_bag": lambda a: _make_bag(a[0]),
-    "make_bag_if": lambda a: _make_bag(F.when(a[1], a[0])),
+    "make_bag": (1, 1, lambda a: _make_bag(a[0])),
+    "make_bag_if": (2, 2, lambda a: _make_bag(F.when(a[1], a[0]))),
     # percentilew(x, weight, p) — exact weighted percentile: smallest x
     # whose cumulative weight reaches p% of the group's total weight
-    "percentilew": lambda a: _percentilew(a[0], a[1], a[2]),
+    "percentilew": (3, 3, lambda a: _percentilew(a[0], a[1], a[2])),
     # covariance family (aggregates.md): sample/population covariance
     # of two numeric expressions; the *if forms NULL out rows failing
     # the predicate (covar_* skips pairs with any NULL side — same as
     # Kusto, which ignores rows where either operand is null)
-    "covariance": lambda a: F.covar_samp(a[0].cast("double"),
-                                         a[1].cast("double")),
-    "covariancep": lambda a: F.covar_pop(a[0].cast("double"),
-                                         a[1].cast("double")),
-    "covarianceif": lambda a: F.covar_samp(
+    "covariance": (2, 2, lambda a: F.covar_samp(
+        a[0].cast("double"), a[1].cast("double"))),
+    "covariancep": (2, 2, lambda a: F.covar_pop(
+        a[0].cast("double"), a[1].cast("double"))),
+    "covarianceif": (3, 3, lambda a: F.covar_samp(
         F.when(a[2], a[0]).cast("double"),
-        F.when(a[2], a[1]).cast("double")),
-    "covariancepif": lambda a: F.covar_pop(
+        F.when(a[2], a[1]).cast("double"))),
+    "covariancepif": (3, 3, lambda a: F.covar_pop(
         F.when(a[2], a[0]).cast("double"),
-        F.when(a[2], a[1]).cast("double")),
-    # count_distinct / count_distinctif — Kusto's EXACT distinct-count
-    # pair (dcount is the HLL estimate there; here bare dcount is
-    # already exact for oracle hashability, so these are true aliases)
-    "count_distinct": lambda a: F.countDistinct(a[0]),
-    "count_distinctif": lambda a: F.countDistinct(F.when(a[1], a[0])),
+        F.when(a[2], a[1]).cast("double"))),
     # make_list_with_nulls — collect_list drops NULLs, so ferry each
     # value inside a (non-null) struct and unwrap after collection
-    "make_list_with_nulls": lambda a: F.transform(
-        F.collect_list(F.struct(a[0].alias("v"))), lambda s: s["v"]),
+    "make_list_with_nulls": (1, 1, lambda a: F.transform(
+        F.collect_list(F.struct(a[0].alias("v"))), lambda s: s["v"])),
 }
+
+for _table in (_FUNC_MAP_SIMPLE, _AGG_MAP):
+    for _name, (_lo, _hi, _fn) in _table.items():
+        _builtin(_name, _lo, _hi)(
+            lambda p, args, fn=_fn: KE(fn([a.col for a in args])))
 
 
 def _percentilew(v: Column, w: Column, p: Column) -> Column:
@@ -2959,7 +2986,7 @@ def _bag_pack(args: list[KE]) -> KE:
     fused accessors on the result skip the VARIANT re-serialization —
     and when only the twin is consumed, Catalyst prunes the VARIANT
     column entirely."""
-    if len(args) < 2 or len(args) % 2:
+    if len(args) % 2:
         raise KqlError("bag_pack needs (k1, v1[, k2, v2…])")
     if all(args[i].is_lit for i in range(0, len(args), 2)):
         # literal keys (the common case): a typed struct keeps each
@@ -2992,18 +3019,27 @@ def _bag_json(ke: KE) -> Column:
     return ke.col
 
 
-def _percentiles_array(args: list[KE]) -> KE:
-    """percentiles_array(x, p1, p2, …) → array of exact percentiles.
-
-    Exact (`F.percentile`, linear interpolation — bit-identical to
-    DuckDB `quantile_cont`) for cross-engine oracles; at 100 TB swap to
-    `percentile_approx` per the summary_data_points pattern
-    (`signals.py` `exact=` switch).
-    """
-    if len(args) < 2:
-        raise KqlError("percentiles_array needs (x, p1[, p2…])")
-    ps = [_lit_int(a) / 100.0 for a in args[1:]]
-    return KE(F.percentile(args[0].col, F.array(*[F.lit(p) for p in ps])))
+def _bag_map(ke: KE) -> Column:
+    """map<string, variant> twin of a bag argument, for property-bag
+    surgery (bag_merge/bag_set_key/bag_remove_keys). Bags travel as
+    VARIANT; surgery happens on the twin (from_json ↔ to_json
+    round-trips preserve JSON value types — measured) and the result
+    re-enters the VARIANT world, so accessors and the other bag
+    functions compose with it. Bags are unordered in Kusto — key order
+    of the rebuilt JSON is not part of the contract. CHAINED surgery
+    fuses in map-land: each result KE carries its map twin
+    (``bag_map``), nested calls consume it directly, and the extend
+    stage materializes it as a hidden sibling column so later
+    statements compose without re-entering JSON per call."""
+    if ke.bag_map is not None:  # fused: already in map-land
+        return ke.bag_map
+    src = ke.col
+    if ke.variant:
+        src = F.to_json(src)
+    return F.coalesce(
+        F.from_json(src, "map<string, variant>"),
+        F.from_json(F.lit("{}"), "map<string, variant>"),
+    )
 
 
 class ExprParser:
@@ -3281,10 +3317,8 @@ class ExprParser:
             inner = t.text[len("datetime("):-1].strip().strip("'\"")
             return KE(F.lit(inner).cast("timestamp"))
         if t.kind == "timespan":  # timespan literal 1h/5m/… (kql.pest:118-121)
-            num = float(re.match(r"[\d.]+", t.text).group())
-            unit = t.text[len(re.match(r"[\d.]+", t.text).group()):]
-            secs = {"d": 86400, "h": 3600, "m": 60, "s": 1, "ms": 0.001}[unit]
-            col = F.make_dt_interval(F.lit(0), F.lit(0), F.lit(0), F.lit(num * secs))
+            secs = _timespan_secs(t.text)
+            col = F.make_dt_interval(F.lit(0), F.lit(0), F.lit(0), F.lit(secs))
             return KE(col, t.text)  # lit = "1h" — recoverable by bin()
         if t.kind in ("ident", "bang_ident"):
             name = t.text
@@ -3367,7 +3401,6 @@ class ExprParser:
                 self.next()
                 args.append(self._or())
         self.expect(")")
-        lname = name.lower()
         ufn = self.bindings.get(name)
         if isinstance(ufn, KqlFunc):  # user function shadows builtins
             if ufn.table_params:
@@ -3375,11 +3408,7 @@ class ExprParser:
                     f"{name}() is table-valued — apply it with "
                     f"`| invoke {name}(…)`"
                 )
-            if len(args) != len(ufn.params):
-                raise KqlError(
-                    f"{name}() takes {len(ufn.params)} arg(s), "
-                    f"got {len(args)}"
-                )
+            _check_arity(name, len(args), len(ufn.params), len(ufn.params))
             if ufn.expanding:
                 raise KqlError(f"recursive user function {name}()")
             child = dict(self.bindings)
@@ -3390,988 +3419,960 @@ class ExprParser:
                 return parse_expr_ke(ufn.body, child, wspec=self.wspec)
             finally:
                 ufn.expanding = False
-        if lname == "case":  # case(p1, v1, …, default) (kql.pest:151-153)
-            if len(args) < 3 or len(args) % 2 == 0:
-                raise KqlError("case() needs odd ≥3 args")
-            c = F.when(args[0].col, args[1].col)
-            for i in range(2, len(args) - 1, 2):
-                c = c.when(args[i].col, args[i + 1].col)
-            return KE(c.otherwise(args[-1].col))
-        if lname == "bin_auto":
-            # bin_auto(value) — bin()/bin_at() whose width (and
-            # optional anchor) come from the bound query properties
-            # `query_bin_auto_size` / `query_bin_auto_at`. Kusto binds
-            # them with `set`; this engine's `let` is the same
-            # constant-binding mechanism, so the properties are plain
-            # let statements. Falls through to the gated bin/bin_at
-            # compilation below.
-            if len(args) != 1:
-                raise KqlError("bin_auto needs (value)")
-            size = self.bindings.get("query_bin_auto_size")
-            if not isinstance(size, KE) or not size.is_lit:
-                raise KqlError(
-                    "bin_auto needs a literal"
-                    " `let query_bin_auto_size = …;` binding")
-            anchor = self.bindings.get("query_bin_auto_at")
-            if anchor is None:
-                lname, args = "bin", [args[0], size]
-            else:
-                if not isinstance(anchor, KE):
-                    raise KqlError(
-                        "query_bin_auto_at must be a scalar literal")
-                lname, args = "bin_at", [args[0], size, anchor]
-        if lname == "bin":  # math bin (math_scalar_expression.rs:13)
-            from otel_arrow_spark.operators.kql import bin_
-
-            if len(args) != 2:
-                raise KqlError("bin() needs (value, width)")
-            if not args[1].is_lit:
-                raise KqlError("bin() width must be a literal")
-            w = args[1].lit
-            if not isinstance(w, bool) and isinstance(w, (int, float)):
-                return KE(F.floor(args[0].col / F.lit(w)) * F.lit(w))
-            return KE(bin_(args[0].col, str(w)))
-        if lname == "bin_at":
-            from otel_arrow_spark.operators.kql import bin_at_
-
-            if len(args) != 3:
-                raise KqlError("bin_at() needs (value, width, anchor)")
-            if not args[1].is_lit:
-                raise KqlError("bin_at() width must be a literal")
-            w = args[1].lit
-            if not isinstance(w, bool) and isinstance(w, (int, float)):
-                # numeric grid anchored at args[2]
-                return KE(
-                    args[2].col
-                    + F.floor((args[0].col - args[2].col) / F.lit(w))
-                    * F.lit(w)
-                )
-            return KE(bin_at_(args[0].col, str(w), args[2].col))
-        # literal-argument functions (patterns, delimiters, counts)
-        if lname == "strcat_delim":
-            if not args:
-                raise KqlError("strcat_delim needs (delim, parts…)")
-            return KE(F.concat_ws(_lit_str(args[0]), *[a.col for a in args[1:]]))
-        if lname == "substring":
-            if len(args) < 2:
-                raise KqlError("substring needs (s, start[, len])")
-            start = _lit_int(args[1])
-            if len(args) > 2:
-                return KE(F.substring(args[0].col, start + 1, _lit_int(args[2])))
-            return KE(F.substring(args[0].col, start + 1, 1 << 30))
-        if lname == "extract":
-            if len(args) != 3:
-                raise KqlError("extract needs (pattern, group, s)")
-            return KE(F.regexp_extract(args[2].col, _lit_str(args[0]),
-                                       _lit_int(args[1])))
-        if lname == "split":
-            if len(args) not in (2, 3):
-                raise KqlError("split needs (s, delim[, requestedIndex])")
-            d = _lit_str(args[1])
-            # Kusto's delimiter is a PLAIN string; Spark's is a regex.
-            # Literal-quote with \Q…\E (embedded \E spliced out, same
-            # discipline as _countof_overlapping) so metachar
-            # delimiters ('.', '|', '+', …) split literally.
-            quoted = "\\Q" + d.replace("\\E", "\\E\\\\E\\Q") + "\\E"
-            parts = F.split(args[0].col, quoted)
-            if len(args) == 2:
-                return KE(parts)
-            # requestedIndex (0-based): single-element array with that
-            # substring; EMPTY array when out of range (Kusto). A
-            # negative index becomes a null position — element index 0
-            # would raise INVALID_INDEX_OF_ZERO on the executor.
-            idx = args[2].col.cast("int")
-            pos = F.when(idx >= 0, idx + 1)
-            return KE(F.array_compact(
-                F.array(F.try_element_at(parts, pos))))
-        if lname == "array_join":
-            if len(args) != 2:
-                raise KqlError("array_join needs (arr, delim)")
-            return KE(F.array_join(args[0].col, _lit_str(args[1])))
-        if lname == "round":
-            if not args:
-                raise KqlError("round needs (x[, digits])")
-            digits = _lit_int(args[1]) if len(args) > 1 else 0
-            return KE(F.round(args[0].col, digits))
-        if lname in ("extract_all", "parse_regex"):
-            # extract_all(pattern, s) — array of matches; with a capture
-            # group the group's text, else the whole match
-            # (parse_scalar_expression.rs:7-14 ParseRegex)
-            if len(args) != 2:
-                raise KqlError("extract_all needs (pattern, s)")
-            pat = _lit_str(args[0])
-            grp = 1 if re.compile(pat).groups >= 1 else 0
-            return KE(F.regexp_extract_all(args[1].col, F.lit(pat), grp))
-        if lname == "countof" and len(args) == 3:
-            # countof(text, search, kind) — kind=regex counts regex
-            # matches (non-overlapping, Kusto's rule); kind=normal
-            # counts OVERLAPPING plain-string matches (the 2-arg map
-            # entry's lookahead formula)
-            kind = _lit_str(args[2])
-            if kind == "regex":
-                return KE(F.size(F.regexp_extract_all(
-                    args[0].col, F.lit(_lit_str(args[1])), 0
-                )).cast("bigint"))
-            if kind != "normal":
-                raise KqlError(
-                    "countof kind must be 'normal' or 'regex'")
-            return KE(_countof_overlapping(args[0].col, args[1].col))
-        if lname == "parse_csv":
-            # parse_csv(line) → array of fields, RFC-4180 quote-aware:
-            # split on commas OUTSIDE double quotes (Java-regex
-            # lookahead — even quote count to line end), then strip
-            # surrounding quotes and unescape "" per field. Single-line
-            # records (Kusto's scalar behaves the same).
-            if len(args) != 1:
-                raise KqlError("parse_csv needs (line)")
-            parts = F.split(
-                args[0].col, r',(?=(?:[^"]*"[^"]*")*[^"]*$)')
-            return KE(F.transform(
-                parts,
-                lambda f: F.when(
-                    f.rlike('^".*"$'),
-                    F.replace(
-                        F.substring(f, F.lit(2), F.length(f) - 2),
-                        F.lit('""'), F.lit('"')),
-                ).otherwise(f)))
-        if lname == "parse_user_agent":
-            # parse_user_agent(ua[, look_for]) → dynamic
-            # {Browser: {Family, MajorVersion},
-            #  OperatingSystem: {Family}}.
-            # Family/major-version SUBSET of Kusto's UA parser: Kusto
-            # ships the full uap-core regex corpus (thousands of
-            # patterns); this engine covers the major engine families
-            # (Edge/Opera/Chrome/Firefox/Safari/IE; Windows/Android/
-            # iOS/macOS/Linux) with ordered rlike chains — Edge and
-            # Opera before Chrome (their UAs embed `Chrome/`), iOS
-            # before macOS (iPad UAs embed `Mac OS X`), Android before
-            # Linux. Everything stays regexp codegen; unknown agents
-            # yield null fields, like Kusto's "Other" family. The
-            # optional look_for argument is accepted and ignored —
-            # both sections are always emitted (documented deviation).
-            if not args or len(args) > 2:
-                raise KqlError(
-                    "parse_user_agent needs (ua[, look_for])")
-            ua = args[0].col.cast("string")
-            fams = [
-                ("Edge", r"Edg(?:e|A|iOS)?/", r"Edg(?:e|A|iOS)?/(\d+)"),
-                ("Opera", r"OPR/|Opera[/ ]",
-                 r"(?:OPR|Opera)[/ ](\d+)"),
-                ("Chrome", r"Chrome/", r"Chrome/(\d+)"),
-                ("Firefox", r"Firefox/", r"Firefox/(\d+)"),
-                ("Safari", r"Version/\d+[^,]*Safari",
-                 r"Version/(\d+)"),
-                ("Internet Explorer", r"MSIE |Trident/",
-                 r"(?:MSIE |Trident/.*rv:)(\d+)"),
-            ]
-            b_fam, b_ver = F.lit(None).cast("string"), F.lit(None)
-            for fam, probe, verpat in reversed(fams):
-                hit = ua.rlike(probe)
-                b_fam = F.when(hit, F.lit(fam)).otherwise(b_fam)
-                b_ver = F.when(
-                    hit, F.nullif(F.regexp_extract(ua, verpat, 1),
-                                  F.lit(""))).otherwise(b_ver)
-            os_fam = (
-                F.when(ua.rlike(r"Windows NT"), "Windows")
-                .when(ua.rlike(r"Android"), "Android")
-                .when(ua.rlike(r"iPhone|iPad|iPod"), "iOS")
-                .when(ua.rlike(r"Mac OS X"), "macOS")
-                .when(ua.rlike(r"Linux"), "Linux"))
-            m = F.struct(
-                F.struct(b_fam.alias("Family"),
-                         b_ver.alias("MajorVersion")).alias("Browser"),
-                F.struct(os_fam.alias("Family"))
-                .alias("OperatingSystem"))
-            return KE(F.parse_json(F.to_json(m)), variant=True)
-        if lname == "bag_zip":
-            # bag_zip(keys, values) → dynamic bag; keys beyond the
-            # value array get null values, surplus values are ignored
-            # (Kusto's rule). Null keys are skipped and duplicate keys
-            # keep the FIRST occurrence — Kusto degrades gracefully on
-            # malformed key arrays, whereas a bare map_from_arrays
-            # would raise (Spark forbids null map keys and the default
-            # dedup policy is EXCEPTION), crashing the job on
-            # data-dependent keys.
-            if len(args) != 2:
-                raise KqlError("bag_zip needs (keys, values)")
-            keys = F.transform(args[0].col, lambda k: k.cast("string"))
-            vals = args[1].col
-            padded = F.transform(
-                F.sequence(F.lit(0), F.size(keys) - 1),
-                lambda i: F.try_element_at(vals, i.cast("int") + 1))
-            entries = F.filter(
-                F.zip_with(keys, padded, lambda k, v: F.struct(
-                    k.alias("key"), v.alias("value"))),
-                lambda e: e["key"].isNotNull())
-            ekeys = F.transform(entries, lambda e: e["key"])
-            dedup = F.filter(
-                entries,
-                lambda e, i: F.array_position(ekeys, e["key"]) == i + 1)
-            m = F.map_from_entries(dedup)
-            return KE(F.parse_json(F.to_json(m)), variant=True)
-        if lname == "format_bytes":
-            # format_bytes(size[, precision]) — auto unit ladder
-            # (binary 1024 steps, Kusto's units), fixed-precision round
-            if not args or len(args) > 2:
-                raise KqlError("format_bytes needs (size[, precision])")
-            size = args[0].col.cast("double")
-            prec = _lit_int(args[1]) if len(args) > 1 else 0
-            steps = [("PB", 1024.0 ** 5), ("TB", 1024.0 ** 4),
-                     ("GB", 1024.0 ** 3), ("MB", 1024.0 ** 2),
-                     ("KB", 1024.0)]
-            def _fmt(v: Column) -> Column:
-                # fixed-precision decimal string (no locale separators)
-                return F.round(v, prec).cast(
-                    f"decimal(38,{prec})").cast("string")
-
-            expr = F.concat(_fmt(size), F.lit(" Bytes"))
-            for unit, div in reversed(steps):
-                expr = F.when(
-                    F.abs(size) >= div,
-                    F.concat(_fmt(size / F.lit(div)),
-                             F.lit(f" {unit}")),
-                ).otherwise(expr)
-            return KE(expr)
-        if lname == "parse_path":
-            # parse_path(path) → dynamic bag of path components
-            # (Kusto shape; both / and \ separators). ADS names are
-            # not parsed (empty string, documented subset).
-            if len(args) != 1:
-                raise KqlError("parse_path needs (path)")
-            p = args[0].col
-            return KE(F.parse_json(F.to_json(F.struct(
-                F.regexp_extract(
-                    p, r"^([A-Za-z][A-Za-z0-9+.\-]*):[/\\]", 1
-                ).alias("Scheme"),
-                F.regexp_extract(
-                    p, r"^([A-Za-z]:|[/\\])", 1).alias("RootPath"),
-                F.regexp_extract(
-                    p, r"^(.*)[/\\][^/\\]*$", 1).alias("DirectoryPath"),
-                F.regexp_extract(
-                    p, r"([^/\\]+)[/\\][^/\\]*$", 1
-                ).alias("DirectoryName"),
-                F.regexp_extract(p, r"([^/\\]*)$", 1).alias("Filename"),
-                F.regexp_extract(
-                    p, r"\.([^./\\]+)$", 1).alias("Extension"),
-                F.lit("").alias("AlternateDataStreamName"),
-            ))), variant=True)
-        if lname in ("unicode_codepoints_from_string", "to_utf8"):
-            # per-character codepoint array — one transform over a
-            # character-index sequence; F.ascii returns the full
-            # codepoint of the first character (BMP + astral — Spark
-            # strings are codepoint-indexed)
-            if len(args) != 1:
-                raise KqlError(
-                    "unicode_codepoints_from_string needs (s)")
-            s = args[0].col
-            return KE(F.when(
-                F.length(s) > 0,
-                F.transform(
-                    F.sequence(F.lit(1), F.length(s)),
-                    lambda i: F.ascii(
-                        F.substring(s, i, F.lit(1))).cast("bigint")),
-            ).otherwise(F.array().cast("array<bigint>")))
-        if lname in ("unicode_codepoints_to_string", "make_string"):
-            # make_string is the documented inverse of to_utf8 —
-            # codepoints → string. The multi-arg form takes scalar
-            # codepoints (make_string(72, 105)); the 1-arg form takes
-            # the codepoint array.
-            if not args:
-                raise KqlError(f"{lname} needs (arr) or (cp, cp, …)")
-            arr = (args[0].col if len(args) == 1
-                   else F.array(*[a.col for a in args]))
-            return KE(F.array_join(
-                F.transform(arr, lambda c: F.char(c.cast("int"))),
-                ""))
-        if lname == "geo_point_to_geohash":
-            # geo_point_to_geohash(longitude, latitude[, accuracy])
-            if len(args) not in (2, 3):
-                raise KqlError(
-                    "geo_point_to_geohash needs (lon, lat[, acc])")
-            acc = _lit_int(args[2]) if len(args) > 2 else 5
-            if not 1 <= acc <= 18:
-                raise KqlError("geohash accuracy must be 1..18")
-            return KE(_geohash_encode(args[0].col, args[1].col, acc))
-        if lname == "geo_geohash_to_central_point":
-            if len(args) != 1:
-                raise KqlError(
-                    "geo_geohash_to_central_point needs (geohash)")
-            return KE(_geohash_decode(args[0].col), variant=True)
-        if lname == "geo_point_in_polygon":
-            # geo_point_in_polygon(longitude, latitude, polygon) —
-            # polygon is a GeoJSON Polygon dynamic
-            # {"type","coordinates":[outer, hole, …]}: inside the outer
-            # ring and inside no hole, each ring an even-odd ray cast
-            # (_geo_ring_contains). PLANAR-EDGE SUBSET of Kusto's
-            # spherical geodesic edges — agrees for the small cells
-            # telemetry geofencing uses, diverges on continent-scale
-            # edges or rings crossing the antimeridian (documented; the
-            # geodesic variant needs a geometry library this container
-            # does not ship).
-            if len(args) != 3:
-                raise KqlError(
-                    "geo_point_in_polygon needs (lon, lat, polygon)")
-            lon = args[0].col.cast("double")
-            lat = args[1].col.cast("double")
-            rings = _geojson_coords(
-                args[2], "array<array<array<double>>>", 3)
-
-            def _pip(r: Column) -> Column:
-                inside = _geo_ring_contains(lon, lat, F.get(r, 0))
-                holes = F.slice(
-                    r, F.lit(2),
-                    F.greatest(F.size(r) - F.lit(1), F.lit(0)))
-                in_hole = F.exists(
-                    holes, lambda h: _geo_ring_contains(lon, lat, h))
-                return inside & ~F.coalesce(in_hole, F.lit(False))
-
-            return KE(_let(rings, _pip))
-        if lname == "geo_polygon_area":
-            # geo_polygon_area(polygon) — GeoJSON Polygon area in m²:
-            # outer-ring spherical area minus the holes
-            # (_geo_ring_area, the Chamberlain–Duquette approximation
-            # of Kusto's geodesic area — documented divergence for
-            # continent-scale rings).
-            if len(args) != 1:
-                raise KqlError("geo_polygon_area needs (polygon)")
-            rings = _geojson_coords(
-                args[0], "array<array<array<double>>>", 3)
-
-            def _area(r: Column) -> Column:
-                holes = F.slice(
-                    r, F.lit(2),
-                    F.greatest(F.size(r) - F.lit(1), F.lit(0)))
-                hole_sum = F.aggregate(
-                    holes, F.lit(0.0),
-                    lambda acc, h: acc + _geo_ring_area(h))
-                return (_geo_ring_area(F.get(r, 0))
-                        - F.coalesce(hole_sum, F.lit(0.0)))
-
-            return KE(_let(rings, _area))
-        if lname == "geo_distance_point_to_line":
-            # geo_distance_point_to_line(longitude, latitude, line) —
-            # minimum spherical distance (m) from the point to a
-            # GeoJSON LineString: min over segments of the
-            # cross-track/endpoint-clamped distance
-            # (_geo_seg_point_dist). Same planar-edge caveats as the
-            # other geo fns (documented); literal lines fold at
-            # compile time, data-dependent ones parse once per row via
-            # _let. NULL for fewer than 2 vertices.
-            if len(args) != 3:
-                raise KqlError(
-                    "geo_distance_point_to_line needs (lon, lat, line)")
-            lon = args[0].col.cast("double")
-            lat = args[1].col.cast("double")
-            pts0 = _geojson_coords(args[2], "array<array<double>>", 2)
-
-            def _p2l(pts: Column) -> Column:
-                idx = F.sequence(F.lit(0), F.size(pts) - F.lit(2))
-                return F.when(
-                    F.size(pts) >= F.lit(2),
-                    F.array_min(F.transform(
-                        idx,
-                        lambda i: _geo_seg_point_dist(
-                            lon, lat,
-                            F.get(F.get(pts, i), 0),
-                            F.get(F.get(pts, i), 1),
-                            F.get(F.get(pts, i + F.lit(1)), 0),
-                            F.get(F.get(pts, i + F.lit(1)), 1)))),
-                )
-
-            return KE(_let(pts0, _p2l))
-        if lname == "geo_line_length":
-            # geo_line_length(lineString) — GeoJSON LineString length
-            # in meters: haversine sum over consecutive vertex pairs
-            # (the same spherical model as geo_distance_2points),
-            # folded with F.aggregate. NULL for fewer than 2 vertices.
-            if len(args) != 1:
-                raise KqlError("geo_line_length needs (lineString)")
-            pts0 = _geojson_coords(
-                args[0], "array<array<double>>", 2)
-
-            def _llen(pts: Column) -> Column:
-                idx = F.sequence(F.lit(0), F.size(pts) - F.lit(2))
-                seg = F.aggregate(
-                    idx, F.lit(0.0),
-                    lambda acc, i: acc + _geo_distance(
-                        F.get(F.get(pts, i), 0),
-                        F.get(F.get(pts, i), 1),
-                        F.get(F.get(pts, i + F.lit(1)), 0),
-                        F.get(F.get(pts, i + F.lit(1)), 1)))
-                return F.when(F.size(pts) >= F.lit(2), seg)
-
-            return KE(_let(pts0, _llen))
-        if lname in ("series_fft", "series_ifft"):
-            # series_fft(re [, im]) — {re, im} bag (this engine's
-            # two-output shape; Kusto multi-assigns). Direct DFT —
-            # see _series_dft.
-            if len(args) not in (1, 2):
-                raise KqlError(f"{lname} needs (re[, im])")
-
-            def _num_arr(ke: KE) -> Column:
-                # dynamic (VARIANT) series re-enter array land via the
-                # JSON text (todynamic(tostring(f.re)) round-trips)
-                c = ke.col
-                if ke.variant:
-                    c = F.from_json(c.cast("string"), "array<double>")
-                return F.transform(c, lambda v: v.cast("double"))
-
-            re_in = _num_arr(args[0])
-            im_in = (_num_arr(args[1]) if len(args) == 2
-                     else F.transform(re_in, lambda _: F.lit(0.0)))
-            inv = lname == "series_ifft"
-            return KE(_series_dft(
-                re_in, im_in, 1.0 if inv else -1.0, inv),
-                variant=True)
-        if lname == "series_stats_dynamic":
-            # one bag with the full series_stats tuple (min/max with
-            # first-occurrence indices, avg, stdev, variance, sum,
-            # len) — pure array arithmetic, rendered to dynamic once
-            if len(args) != 1:
-                raise KqlError("series_stats_dynamic needs (arr)")
-            xs = F.transform(args[0].col, lambda v: v.cast("double"))
-            n = F.size(xs).cast("double")
-            s1 = F.aggregate(
-                xs, F.lit(0.0), lambda acc, v: acc + v)
-            s2 = F.aggregate(
-                xs, F.lit(0.0), lambda acc, v: acc + v * v)
-            var = F.when(
-                F.size(xs) > 1, (s2 - s1 * s1 / n) / (n - 1.0))
-            bag = F.struct(
-                F.array_min(xs).alias("min"),
-                (F.array_position(xs, F.array_min(xs)) - 1)
-                .cast("bigint").alias("min_idx"),
-                F.array_max(xs).alias("max"),
-                (F.array_position(xs, F.array_max(xs)) - 1)
-                .cast("bigint").alias("max_idx"),
-                (s1 / n).alias("avg"),
-                F.sqrt(var).alias("stdev"),
-                var.alias("variance"),
-                s1.alias("sum"),
-                F.size(xs).cast("bigint").alias("len"))
-            return KE(F.parse_json(F.to_json(bag)), variant=True)
-        if lname in ("extract_json", "extractjson"):
-            # extract_json(path, source) — JSONPath subset ($.a.b[0],
-            # the Hive get_json_object dialect == Kusto's documented
-            # subset). The path must be a literal (it is in Kusto too:
-            # the engine compiles it). Optional typeof third arg is
-            # honored for long/real/bool/string (Kusto's sugar for a
-            # cast on the extracted text).
-            if len(args) not in (2, 3):
-                raise KqlError(
-                    f"{lname} needs (path, source[, typeof])")
-            got = F.get_json_object(
-                args[1].col.cast("string"), _lit_str(args[0]))
-            if len(args) == 3:
-                ty = _lit_str(args[2]).strip().lower()
-                casts = {"long": "bigint", "int": "int",
-                         "real": "double", "double": "double",
-                         "bool": "boolean", "boolean": "boolean",
-                         "string": None, "datetime": "timestamp_ntz"}
-                if ty not in casts:
-                    raise KqlError(
-                        f"{lname}: unsupported typeof({ty})")
-                if casts[ty]:
-                    got = got.try_cast(casts[ty])
-            return KE(got)
-        if lname == "capture":
-            # capture(s, pattern[, group]) — single-capture twin of
-            # extract (text exec `text_scalar_expressions.rs` Capture)
-            if len(args) < 2:
-                raise KqlError("capture needs (s, pattern[, group])")
-            grp = _lit_int(args[2]) if len(args) > 2 else 1
-            return KE(F.regexp_extract(args[0].col, _lit_str(args[1]), grp))
-        # array_slice is handled by _FUNC_MAP_SIMPLE (_array_slice:
-        # negative wrap-around indices, clamping, inverted -> empty)
-        if lname == "totimespan":
-            # literal timespan string "1h" / "90s" / "250ms"
-            # (convert_scalar_expression.rs:7-24 ToTimespan)
-            src = _lit_str(args[0])
-            m = re.fullmatch(r"([\d.]+)(d|h|m|s|ms)", src)
-            if not m:
-                raise KqlError(f"totimespan needs '<n><d|h|m|s|ms>', got {src!r}")
-            secs = float(m.group(1)) * {
-                "d": 86400, "h": 3600, "m": 60, "s": 1, "ms": 0.001
-            }[m.group(2)]
-            return KE(
-                F.make_dt_interval(F.lit(0), F.lit(0), F.lit(0), F.lit(secs)),
-                src,
-            )
-        if lname == "make_timespan":
-            # make_timespan([day,] hour, minute[, second]) — Kusto's
-            # three arities map 1:1 onto make_dt_interval
-            if len(args) == 2:
-                d, h, m2, s = (F.lit(0), args[0].col, args[1].col,
-                               F.lit(0.0))
-            elif len(args) == 3:
-                d, h, m2, s = (F.lit(0), args[0].col, args[1].col,
-                               args[2].col)
-            elif len(args) == 4:
-                d, h, m2, s = (a.col for a in args)
-            else:
-                raise KqlError("make_timespan needs 2-4 arguments")
-            return KE(F.make_dt_interval(
-                d.cast("int"), h.cast("int"), m2.cast("int"),
-                s.cast("double")))
-        if lname == "replace_regex":
-            # replace_regex(source, pattern, rewrite) — Kusto rewrites
-            # use RE2 \1 backrefs; Java uses $1. Translate literal
-            # rewrites (protecting literal $); column rewrites pass
-            # through untranslated.
-            if len(args) != 3:
-                raise KqlError(
-                    "replace_regex needs (source, pattern, rewrite)")
-            rw = args[2]
-            if rw.is_lit and isinstance(rw.lit, str):
-                java = rw.lit.replace("$", "\\$")
-                java = re.sub(r"\\(\d)", r"$\1", java)
-                return KE(F.regexp_replace(
-                    args[0].col, args[1].col, F.lit(java)))
-            return KE(F.regexp_replace(args[0].col, args[1].col, rw.col))
-        if lname == "datetime_part":
-            # datetime_part('part', d) — extract a named date part
-            if len(args) != 2:
-                raise KqlError("datetime_part needs (part, d)")
-            part = _lit_str(args[0]).lower()
-            extractors = {
-                "year": F.year, "month": F.month, "day": F.dayofmonth,
-                "hour": F.hour, "minute": F.minute, "second": F.second,
-                "weekofyear": F.weekofyear, "dayofyear": F.dayofyear,
-                "quarter": F.quarter,
-            }
-            if part not in extractors:
-                raise KqlError(f"datetime_part: unknown part {part!r}")
-            return KE(extractors[part](args[1].col).cast("bigint"))
-        if lname == "datetime_diff":
-            # datetime_diff('part', d1, d2) = d1 - d2 in whole parts;
-            # timestamp_diff(unit, start, end) = end - start
-            if len(args) != 3:
-                raise KqlError("datetime_diff needs (part, d1, d2)")
-            return KE(F.timestamp_diff(
-                _lit_str(args[0]).upper(), args[2].col, args[1].col
-            ))
-        if lname == "datetime_add":
-            if len(args) != 3:
-                raise KqlError("datetime_add needs (part, amount, d)")
-            return KE(F.timestamp_add(
-                _lit_str(args[0]).upper(), args[1].col, args[2].col
-            ))
-        if lname == "ismatch":  # OTTL IsMatch(target, pattern)
-            if len(args) != 2:
-                raise KqlError("IsMatch needs (target, pattern)")
-            return KE(args[0].col.rlike(_lit_str(args[1])))
-        if lname == "concat":  # OTTL Concat([parts…], delim) / varargs
-            if len(args) < 2:
-                raise KqlError("Concat needs (parts…, delim)")
-            delim = _lit_str(args[-1])
-            parts = [a.col for a in args[:-1]]
-            if len(parts) == 1:
-                return KE(F.array_join(parts[0], delim))
-            return KE(F.concat_ws(delim, *parts))
-        if lname == "strcat_array":
-            # delimiter must be a literal (array_join's contract);
-            # NULL elements are skipped (array_join semantics)
-            if len(args) != 2:
-                raise KqlError("strcat_array needs (arr, delim)")
-            return KE(F.array_join(
-                args[0].col.cast("array<string>"), _lit_str(args[1])
-            ))
-        if lname == "percentile":
-            if len(args) != 2:
-                raise KqlError("percentile needs (x, p)")
-            return KE(F.percentile_approx(args[0].col,
-                                          _lit_int(args[1]) / 100.0))
-        if lname in ("tdigest", "merge_tdigest", "tdigest_merge"):
-            # tdigest sketches compose ONLY inside
-            # percentile_tdigest/rank_tdigest in the same aggregate —
-            # this engine's "digest" is lossless (Catalyst's exact
-            # percentile replaces the sketch), so the composed result
-            # is the exact percentile, a strict superset of t-digest's
-            # accuracy contract. A bare tdigest() column (opaque
-            # intermediate blob) is not exposed.
-            if len(args) != 1:
-                raise KqlError(f"{lname} needs (expr)")
-            return KE(args[0].col, lit="__tdigest__")
-        if lname == "percentile_tdigest":
-            if (len(args) != 2 or args[0].lit != "__tdigest__"
-                    or not isinstance(args[1].lit, (int, float))):
-                raise KqlError(
-                    "percentile_tdigest must compose as "
-                    "percentile_tdigest(tdigest(x), p) within one "
-                    "summarize (engine subset — the digest is "
-                    "lossless, so this is the exact percentile)")
-            return KE(F.percentile(
-                args[0].col.cast("double"),
-                F.lit(float(args[1].lit) / 100.0)))
-        if lname in ("rank_tdigest", "percentrank_tdigest"):
-            # relative rank of v in the digested values, as [0, 100]
-            # (percentrank_tdigest is Kusto's other spelling of the
-            # same percentage-of-set rank; exact under the lossless-
-            # digest subset)
-            if len(args) != 2 or args[0].lit != "__tdigest__":
-                raise KqlError(
-                    f"{lname} must compose as "
-                    f"{lname}(tdigest(x), v)")
-            col, v = args[0].col, args[1].col
-            return KE(F.avg(
-                F.when(col.isNotNull() & (col <= v), 100.0)
-                .when(col.isNotNull(), 0.0)))
-        if lname == "percentiles_array":
-            return _percentiles_array(args)
-        if lname == "percentilesw_array":
-            # percentilesw_array(x, weight, p1, p2, …) — array of exact
-            # weighted percentiles; each entry is one _percentilew fold
-            # (k collect buffers for k percentiles — k is a query
-            # literal, same bounded-group contract as percentilew)
-            if len(args) < 3:
-                raise KqlError(
-                    "percentilesw_array needs (x, w, p1[, p2…])")
-            return KE(F.array(*[
-                _percentilew(args[0].col, args[1].col, a.col)
-                for a in args[2:]
-            ]))
-        if lname == "format_datetime":
-            # Kusto format tokens (yyyy MM dd HH mm ss …) are the Java
-            # DateTimeFormatter tokens Spark's date_format consumes
-            if len(args) != 2:
-                raise KqlError("format_datetime needs (dt, 'format')")
-            return KE(F.date_format(args[0].col, _lit_str(args[1])))
-        if lname == "parse_version":
-            # version string → one comparable decimal: up to 4 parts of
-            # up to 8 digits each; value = p1·10²⁴ + p2·10¹⁶ + p3·10⁸ +
-            # p4, built as a digit-string concat (no decimal pow chain),
-            # NULL on anything that isn't 1-4 dot-separated runs
-            if len(args) != 1:
-                raise KqlError("parse_version needs (s)")
-            s = args[0].col
-            parts = F.split(s, r"\.")
-            valid = s.rlike(r"^\d{1,8}(\.\d{1,8}){0,3}$")
-
-            def _vpart(i: int) -> Column:
-                return F.coalesce(
-                    F.try_element_at(parts, F.lit(i)), F.lit("0"))
-
-            num = F.concat(
-                _vpart(1), F.lpad(_vpart(2), 8, "0"),
-                F.lpad(_vpart(3), 8, "0"), F.lpad(_vpart(4), 8, "0"))
-            return KE(F.when(valid, num.cast("decimal(38,0)")))
-        if lname == "format_timespan":
-            # format_timespan(t, 'd.hh:mm:ss.fff') — t is a timespan
-            # (day-time interval) or plain seconds; token runs d/h/m/s/f
-            # render zero-padded to the run length (format_string, so
-            # wide values never truncate), everything else is literal
-            if len(args) != 2:
-                raise KqlError("format_timespan needs (t, 'format')")
-            fmt = _lit_str(args[1])
-            total = args[0].col.cast("decimal(18,6)")
-            comp = {
-                "d": F.floor(total / 86400).cast("long"),
-                "h": F.floor(total / 3600).cast("long") % 24,
-                "m": F.floor(total / 60).cast("long") % 60,
-                "s": F.floor(total).cast("long") % 60,
-            }
-            pieces: list[Column] = []
-            for run in re.finditer(r"(d+|h+|H+|m+|s+|f+|.)", fmt):
-                tok = run.group(1)
-                ch, n = tok[0].lower(), len(tok)
-                if tok[0] in "dhHms" and n <= 8:
-                    pieces.append(
-                        F.format_string(f"%0{n}d", comp[ch]))
-                elif tok[0] == "f":
-                    frac = F.floor(
-                        (total - F.floor(total)) * (10 ** n)
-                    ).cast("long")
-                    pieces.append(F.format_string(f"%0{n}d", frac))
-                else:
-                    pieces.append(F.lit(tok))
-            return KE(F.concat(*pieces))
-        if lname in ("trim_start", "trim_end"):
-            # trim_start(regex, s) — strip every leading (trailing)
-            # match (Kusto)
-            if len(args) != 2:
-                raise KqlError(f"{lname} needs (regex, s)")
-            pat = _lit_str(args[0])
-            anchored = f"^(?:{pat})+" if lname == "trim_start" else f"(?:{pat})+$"
-            return KE(F.regexp_replace(args[1].col, anchored, ""))
-        if lname == "trim" and len(args) == 2:
-            # trim(regex, s) — strip every leading AND trailing match
-            # (Kusto). The 1-arg whitespace form (an engine
-            # convenience) stays on the function table.
-            pat = _lit_str(args[0])
-            return KE(F.regexp_replace(
-                F.regexp_replace(args[1].col, f"^(?:{pat})+", ""),
-                f"(?:{pat})+$", ""))
-        if lname == "translate":
-            # translate(searchList, replacementList, source)
-            if len(args) != 3:
-                raise KqlError("translate needs (from, to, s)")
-            return KE(F.translate(
-                args[2].col, _lit_str(args[0]), _lit_str(args[1])
-            ))
-        if lname == "array_split":
-            if len(args) != 2:
-                raise KqlError("array_split needs (arr, indices)")
-            idxs = args[1].col
-            if args[1].is_lit and isinstance(args[1].lit, int):
-                # scalar split point — Kusto's 1-index overload
-                idxs = F.array(F.lit(args[1].lit).cast("bigint"))
-            return KE(_array_split(args[0].col, idxs))
-        if lname == "bag_keys":
-            if len(args) != 1:
-                raise KqlError("bag_keys needs (dynamic)")
-            return KE(F.json_object_keys(_bag_json(args[0])))
-        if lname == "bag_has_key":
-            # bag_has_key(bag, key) — top-level key membership
-            if len(args) != 2:
-                raise KqlError("bag_has_key needs (bag, key)")
-            return KE(F.coalesce(
-                F.array_contains(
-                    F.json_object_keys(_bag_json(args[0])),
-                    args[1].col.cast("string")),
-                F.lit(False)))
-        if lname == "indexof" and len(args) == 3:
-            # indexof(s, sub, start) — search from a 0-based offset
-            # (the 2-arg form stays in the scalar map). A NEGATIVE
-            # start is an offset from the END of the source string
-            # (Kusto semantics), clamped to 0 when it underflows.
-            s, sub, start = args[0].col, args[1].col, args[2].col
-            raw = start.cast("int")
-            off = F.greatest(
-                F.when(raw < 0, F.length(s) + raw).otherwise(raw),
-                F.lit(0))
-            hit = F.position(sub, F.substring(s, off + 1, F.length(s)))
-            return KE(F.when(
-                hit > 0, (hit + off - 1).cast("bigint")
-            ).otherwise(F.lit(-1).cast("bigint")))
-        if lname in ("bag_merge", "bag_set_key", "bag_remove_keys"):
-            # Property-bag surgery. Bags travel as VARIANT; surgery
-            # happens on a map<string, variant> twin (from_json ↔
-            # to_json round-trips preserve JSON value types — measured)
-            # and the result re-enters the VARIANT world, so accessors
-            # and the other bag functions compose with it. Bags are
-            # unordered in Kusto — key order of the rebuilt JSON is not
-            # part of the contract. CHAINED surgery fuses in map-land:
-            # each result KE carries its map twin (``bag_map``), nested
-            # calls consume it directly, and the extend stage
-            # materializes it as a hidden sibling column so later
-            # statements compose without re-entering JSON per call.
-            def _bag_map(ke: "KE") -> Column:
-                if ke.bag_map is not None:  # fused: already in map-land
-                    return ke.bag_map
-                src = ke.col
-                if ke.variant:
-                    src = F.to_json(src)
-                return F.coalesce(
-                    F.from_json(src, "map<string, variant>"),
-                    F.from_json(F.lit("{}"), "map<string, variant>"),
-                )
-
-            if lname == "bag_merge":
-                if len(args) < 2:
-                    raise KqlError("bag_merge needs ≥ 2 bags")
-                # Kusto: the FIRST bag's keys win. map_concat under the
-                # default EXCEPTION dedup policy must never see a
-                # duplicate, so later bags are key-filtered against the
-                # accumulated map before concatenation.
-                merged = _bag_map(args[0])
-                for a in args[1:]:
-                    seen = F.map_keys(merged)
-                    merged = F.map_concat(
-                        merged,
-                        F.map_filter(
-                            _bag_map(a),
-                            lambda k, _v: ~F.coalesce(
-                                F.array_contains(seen, k),
-                                F.lit(False))))
-                return KE(F.parse_json(F.to_json(merged)), variant=True,
-                          bag_map=merged)
-            if lname == "bag_set_key":
-                if len(args) != 3:
-                    raise KqlError(
-                        "bag_set_key needs (bag, key, value)")
-                key = args[1].col.cast("string")
-                m = F.map_concat(
-                    F.map_filter(
-                        _bag_map(args[0]), lambda k, _v: k != key),
-                    F.create_map(key, args[2].col.cast("variant")))
-                return KE(F.parse_json(F.to_json(m)), variant=True,
-                          bag_map=m)
-            # bag_remove_keys(bag, dynamic array of key names)
-            if len(args) != 2:
-                raise KqlError("bag_remove_keys needs (bag, keys)")
-            keys = args[1].col
-            m = F.map_filter(
-                _bag_map(args[0]),
-                lambda k, _v: ~F.coalesce(
-                    F.array_contains(keys, k), F.lit(False)))
-            return KE(F.parse_json(F.to_json(m)), variant=True,
-                      bag_map=m)
-        # todynamic/toobject are documented aliases of parse_json
-        if lname in ("parse_json", "todynamic", "toobject"):
-            if len(args) != 1:
-                raise KqlError(f"{lname} needs (s)")
-            # a literal JSON string stays carried on the KE so
-            # consumers (the geo fns) can fold it at compile time
-            return KE(F.parse_json(args[0].col),
-                      lit=args[0].lit if args[0].is_lit else _NOT_LIT,
-                      variant=True)
-        if lname == "parse_xml":
-            # XML → dynamic per Kusto's convention ('@attr' keys,
-            # '#text' mixed content, repeated tags → list). The XML→
-            # JSON step runs in the sanctioned codec seam (no XML
-            # reader in Catalyst expressions); invalid XML → NULL.
-            if len(args) != 1:
-                raise KqlError("parse_xml needs (s)")
-            return KE(
-                F.try_parse_json(_parse_xml_json(args[0].col.cast("string"))),
-                variant=True)
-        if lname == "dynamic_to_json":
-            # JSON text of a dynamic. Spark VARIANT stores object keys
-            # sorted, so the parse_json path matches Kusto's sorted-key
-            # canonicalization; the map-twin path renders storage order
-            # (documented subset)
-            if len(args) != 1:
-                raise KqlError("dynamic_to_json needs (d)")
-            if args[0].bag_map is not None:
-                return KE(F.to_json(args[0].bag_map))
-            return KE(F.to_json(args[0].col))
-        if lname in ("bag_pack", "pack", "pack_dictionary"):
-            return _bag_pack(args)
-        if lname == "parse_url":
-            # dynamic bag result (Kusto shape) so VARIANT path
-            # accessors chain: `parse_url(u).Host`, `u['Path']`
-            if len(args) != 1:
-                raise KqlError("parse_url needs (url)")
-            u = args[0].col
-            return KE(F.parse_json(F.to_json(F.struct(
-                F.parse_url(u, F.lit("PROTOCOL")).alias("Scheme"),
-                F.parse_url(u, F.lit("HOST")).alias("Host"),
-                # Hive parse_url has no PORT part — take it off the
-                # authority ('' when the URL carries none, KQL's shape)
-                F.regexp_extract(
-                    F.parse_url(u, F.lit("AUTHORITY")), r":(\d+)$", 1
-                ).alias("Port"),
-                F.parse_url(u, F.lit("PATH")).alias("Path"),
-                F.parse_url(u, F.lit("QUERY")).alias("Query"),
-                F.parse_url(u, F.lit("REF")).alias("Fragment"),
-            ))), variant=True)
-        if lname in ("row_number", "prev", "next", "row_cumsum",
-                     "row_rank_min", "row_rank_dense",
-                     "row_window_session"):
-            # Serialized-window functions. Legal only on a serialized
-            # row set (after `sort by`, optionally re-partitioned by
-            # `serialize by k…`) — the same precondition KQL enforces.
-            # Each compiles to ONE Catalyst Window expression over the
-            # stage-provided spec; with `serialize by` keys the window
-            # is partitioned (parallel, the 100 TB shape), without them
-            # it is a single ordered partition (KQL's own semantics for
-            # a fully serialized table — use on small/aggregated
-            # relations only; the docstring on `serialize` says so).
-            if self.wspec is None:
-                raise KqlError(
-                    f"{lname}() requires a serialized row set: "
-                    "`sort by …` first (add `serialize by key` to keep "
-                    "the window partitioned)"
-                )
-            w = self.wspec
-            if lname == "row_number":
-                if len(args) > 1:
-                    raise KqlError("row_number takes ([start])")
-                start = _lit_int(args[0]) if args else 1
-                return KE(F.row_number().over(w) + F.lit(start - 1))
-            if lname == "row_rank_min":
-                return KE(F.rank().over(w))
-            if lname == "row_rank_dense":
-                return KE(F.dense_rank().over(w))
-            if lname == "row_cumsum":
-                if len(args) not in (1, 2):
-                    raise KqlError("row_cumsum needs (x [, restart])")
-                upto = w.rowsBetween(Window.unboundedPreceding,
-                                     Window.currentRow)
-                running = F.sum(args[0].col).over(upto)
-                if len(args) == 1:
-                    return KE(running)
-                # restart form: the accumulation resets AT each row
-                # where `restart` is true (that row's term included,
-                # Kusto row_cumsum; a null term counts as 0 so its
-                # restart is not skipped). Closed form sharing the SAME
-                # Exchange+Sort as the plain running sum: with
-                # S = running total, the latest restart row r at or
-                # before the current row contributes base S_r − x_r
-                # (carried by last(…, ignorenulls) over the serialized
-                # window), and the result is S − coalesce(base, 0) —
-                # no per-segment re-partitioning, still one Window op
-                # chain over the serialize spec.
-                base = F.last(
-                    F.when(args[1].col,
-                           running - F.coalesce(args[0].col, F.lit(0))),
-                    ignorenulls=True,
-                ).over(upto)
-                return KE(running - F.coalesce(base, F.lit(0)))
-            if lname == "row_window_session":
-                # row_window_session(ts, MaxDistanceFromFirst,
-                # MaxDistanceBetweenNeighbors) — the session-START
-                # timestamp per row. Gap-based subset: a new session
-                # starts when the gap to the previous row exceeds the
-                # neighbor bound; the from-first bound depends on the
-                # running session start (inherently sequential), so it
-                # must be passed as 0 (= unbounded) — use `scan` for
-                # from-first windows. Closed form: session start =
-                # the latest boundary row's ts at or before the
-                # current row — a lag nested in a running max, two
-                # Window ops sharing one Exchange + Sort.
-                if len(args) != 3:
-                    raise KqlError(
-                        "row_window_session needs (ts, "
-                        "maxDistanceFromFirst, "
-                        "maxDistanceBetweenNeighbors)")
-                if not (args[1].is_lit and args[1].lit in (0, "0")):
-                    raise KqlError(
-                        "row_window_session: MaxDistanceFromFirst is "
-                        "sequential state — pass 0 (unbounded) or use "
-                        "the scan operator")
-                if not isinstance(args[2].lit, str):
-                    raise KqlError(
-                        "row_window_session: "
-                        "MaxDistanceBetweenNeighbors must be a "
-                        "timespan literal")
-                idle_us = _timespan_secs(args[2].lit) * 1_000_000.0
-                ts = args[0].col
-                prev_ts = F.lag(ts).over(w)
-                boundary = prev_ts.isNull() | (
-                    F.timestamp_diff("MICROSECOND", prev_ts, ts)
-                    > F.lit(idle_us))
-                return KE(F.max(F.when(boundary, ts)).over(
-                    w.rowsBetween(Window.unboundedPreceding,
-                                  Window.currentRow)))
-            # prev(x[, offset[, default]]) / next(…)
-            if not args or len(args) > 3:
-                raise KqlError(f"{lname} needs (x[, offset[, default]])")
-            off = _lit_int(args[1]) if len(args) > 1 else 1
-            if len(args) > 2:
-                if not args[2].is_lit:
-                    raise KqlError(f"{lname} default must be a literal")
-                dflt = args[2].lit
-            else:
-                dflt = None
-            fn = F.lag if lname == "prev" else F.lead
-            return KE(fn(args[0].col, off, dflt).over(w))
-        cols = [a.col for a in args]
-        if lname in _VARIANT_VIA_STRING and args and args[0].variant:
+        lname = name.lower()
+        if lname not in _FUNCS:
+            raise KqlError(f"unknown function {name}")
+        lo, hi, build = _FUNCS[lname]
+        _check_arity(name, len(args), lo, hi)
+        if lname in _VARIANT_VIA_STRING and args[0].variant:
             # numeric/bool conversion of a dynamic value: VARIANT casts
             # cleanly to string but try_cast to numeric yields NULL —
             # route through the string form (KQL toint(dyn) semantics)
-            cols = [args[0].col.cast("string")] + cols[1:]
-        try:
-            if lname in _FUNC_MAP_SIMPLE:
-                return KE(_FUNC_MAP_SIMPLE[lname](cols))
-            if lname in _AGG_MAP:
-                return KE(_AGG_MAP[lname](cols))
-        except KqlError:
-            raise
-        except IndexError:
-            raise KqlError(f"wrong number of arguments for {name}()")
-        raise KqlError(f"unknown function {name}")
+            args = [KE(args[0].col.cast("string")), *args[1:]]
+        return build(self, args)
+
+    # -- builtins that need KE arguments or the parser's state ---------
+
+    @_builtin("case", 3, None)  # case(p1, v1, …, default) (kql.pest:151-153)
+    def _fn_case(self, args):
+        if len(args) % 2 == 0:
+            raise KqlError("case() needs odd ≥3 args")
+        c = F.when(args[0].col, args[1].col)
+        for i in range(2, len(args) - 1, 2):
+            c = c.when(args[i].col, args[i + 1].col)
+        return KE(c.otherwise(args[-1].col))
+
+    @_builtin("bin_auto", 1, 1)
+    def _fn_bin_auto(self, args):
+        # bin_auto(value) — bin()/bin_at() whose width (and optional
+        # anchor) come from the bound query properties
+        # `query_bin_auto_size` / `query_bin_auto_at`. Kusto binds them
+        # with `set`; this engine's `let` is the same constant-binding
+        # mechanism, so the properties are plain let statements.
+        size = self.bindings.get("query_bin_auto_size")
+        if not isinstance(size, KE) or not size.is_lit:
+            raise KqlError(
+                "bin_auto needs a literal"
+                " `let query_bin_auto_size = …;` binding")
+        anchor = self.bindings.get("query_bin_auto_at")
+        if anchor is None:
+            return self._fn_bin([args[0], size])
+        if not isinstance(anchor, KE):
+            raise KqlError("query_bin_auto_at must be a scalar literal")
+        return self._fn_bin_at([args[0], size, anchor])
+
+    @_builtin("bin", 2, 2)  # math bin (math_scalar_expression.rs:13)
+    def _fn_bin(self, args):
+        from otel_arrow_spark.operators.kql import bin_
+
+        if not args[1].is_lit:
+            raise KqlError("bin() width must be a literal")
+        w = args[1].lit
+        if not isinstance(w, bool) and isinstance(w, (int, float)):
+            return KE(F.floor(args[0].col / F.lit(w)) * F.lit(w))
+        return KE(bin_(args[0].col, str(w)))
+
+    @_builtin("floor", 1, 2)
+    def _fn_floor(self, args):
+        # floor(x) rounds down; floor(x, roundTo) is Kusto's alias of bin
+        if len(args) == 1:
+            return KE(F.floor(args[0].col))
+        return self._fn_bin(args)
+
+    @_builtin("bin_at", 3, 3)
+    def _fn_bin_at(self, args):
+        from otel_arrow_spark.operators.kql import bin_at_
+
+        if not args[1].is_lit:
+            raise KqlError("bin_at() width must be a literal")
+        w = args[1].lit
+        if not isinstance(w, bool) and isinstance(w, (int, float)):
+            # numeric grid anchored at args[2]
+            return KE(
+                args[2].col
+                + F.floor((args[0].col - args[2].col) / F.lit(w))
+                * F.lit(w)
+            )
+        return KE(bin_at_(args[0].col, str(w), args[2].col))
+
+    # literal-argument functions (patterns, delimiters, counts)
+    @_builtin("strcat_delim", 1, None)
+    def _fn_strcat_delim(self, args):
+        return KE(F.concat_ws(_lit_str(args[0]),
+                              *[a.col for a in args[1:]]))
+
+    @_builtin("substring", 2, 3)
+    def _fn_substring(self, args):
+        start = _lit_int(args[1])
+        if len(args) > 2:
+            return KE(F.substring(args[0].col, start + 1,
+                                  _lit_int(args[2])))
+        return KE(F.substring(args[0].col, start + 1, 1 << 30))
+
+    @_builtin("extract", 3, 3)
+    def _fn_extract(self, args):
+        return KE(F.regexp_extract(args[2].col, _lit_str(args[0]),
+                                   _lit_int(args[1])))
+
+    @_builtin("split", 2, 3)
+    def _fn_split(self, args):
+        d = _lit_str(args[1])
+        # Kusto's delimiter is a PLAIN string; Spark's is a regex.
+        # Literal-quote with \Q…\E (embedded \E spliced out, same
+        # discipline as _countof_overlapping) so metachar delimiters
+        # ('.', '|', '+', …) split literally.
+        quoted = "\\Q" + d.replace("\\E", "\\E\\\\E\\Q") + "\\E"
+        parts = F.split(args[0].col, quoted)
+        if len(args) == 2:
+            return KE(parts)
+        # requestedIndex (0-based): single-element array with that
+        # substring; EMPTY array when out of range (Kusto). A negative
+        # index becomes a null position — element index 0 would raise
+        # INVALID_INDEX_OF_ZERO on the executor.
+        idx = args[2].col.cast("int")
+        pos = F.when(idx >= 0, idx + 1)
+        return KE(F.array_compact(
+            F.array(F.try_element_at(parts, pos))))
+
+    @_builtin("array_join", 2, 2)
+    def _fn_array_join(self, args):
+        return KE(F.array_join(args[0].col, _lit_str(args[1])))
+
+    @_builtin("round", 1, 2)
+    def _fn_round(self, args):
+        digits = _lit_int(args[1]) if len(args) > 1 else 0
+        return KE(F.round(args[0].col, digits))
+
+    @_builtin("extract_all parse_regex", 2, 2)
+    def _fn_extract_all(self, args):
+        # extract_all(pattern, s) — array of matches; with a capture
+        # group the group's text, else the whole match
+        # (parse_scalar_expression.rs:7-14 ParseRegex)
+        pat = _lit_str(args[0])
+        grp = 1 if re.compile(pat).groups >= 1 else 0
+        return KE(F.regexp_extract_all(args[1].col, F.lit(pat), grp))
+
+    @_builtin("countof", 2, 3)
+    def _fn_countof(self, args):
+        # countof(text, search[, kind]) — kind=normal (the default)
+        # counts OVERLAPPING plain-string matches, kind=regex counts
+        # regex matches (non-overlapping, Kusto's rule)
+        kind = _lit_str(args[2]) if len(args) == 3 else "normal"
+        if kind == "regex":
+            return KE(F.size(F.regexp_extract_all(
+                args[0].col, F.lit(_lit_str(args[1])), 0
+            )).cast("bigint"))
+        if kind != "normal":
+            raise KqlError("countof kind must be 'normal' or 'regex'")
+        return KE(_countof_overlapping(args[0].col, args[1].col))
+
+    @_builtin("parse_csv", 1, 1)
+    def _fn_parse_csv(self, args):
+        # parse_csv(line) → array of fields, RFC-4180 quote-aware:
+        # split on commas OUTSIDE double quotes (Java-regex lookahead —
+        # even quote count to line end), then strip surrounding quotes
+        # and unescape "" per field. Single-line records (Kusto's
+        # scalar behaves the same).
+        parts = F.split(
+            args[0].col, r',(?=(?:[^"]*"[^"]*")*[^"]*$)')
+        return KE(F.transform(
+            parts,
+            lambda f: F.when(
+                f.rlike('^".*"$'),
+                F.replace(
+                    F.substring(f, F.lit(2), F.length(f) - 2),
+                    F.lit('""'), F.lit('"')),
+            ).otherwise(f)))
+
+    @_builtin("parse_user_agent", 1, 2)
+    def _fn_parse_user_agent(self, args):
+        # parse_user_agent(ua[, look_for]) → dynamic
+        # {Browser: {Family, MajorVersion}, OperatingSystem: {Family}}.
+        # Family/major-version SUBSET of Kusto's UA parser: Kusto ships
+        # the full uap-core regex corpus (thousands of patterns); this
+        # engine covers the major engine families (Edge/Opera/Chrome/
+        # Firefox/Safari/IE; Windows/Android/iOS/macOS/Linux) with
+        # ordered rlike chains — Edge and Opera before Chrome (their
+        # UAs embed `Chrome/`), iOS before macOS (iPad UAs embed
+        # `Mac OS X`), Android before Linux. Everything stays regexp
+        # codegen; unknown agents yield null fields, like Kusto's
+        # "Other" family. The optional look_for argument is accepted
+        # and ignored — both sections are always emitted (documented
+        # deviation).
+        ua = args[0].col.cast("string")
+        fams = [
+            ("Edge", r"Edg(?:e|A|iOS)?/", r"Edg(?:e|A|iOS)?/(\d+)"),
+            ("Opera", r"OPR/|Opera[/ ]", r"(?:OPR|Opera)[/ ](\d+)"),
+            ("Chrome", r"Chrome/", r"Chrome/(\d+)"),
+            ("Firefox", r"Firefox/", r"Firefox/(\d+)"),
+            ("Safari", r"Version/\d+[^,]*Safari", r"Version/(\d+)"),
+            ("Internet Explorer", r"MSIE |Trident/",
+             r"(?:MSIE |Trident/.*rv:)(\d+)"),
+        ]
+        b_fam, b_ver = F.lit(None).cast("string"), F.lit(None)
+        for fam, probe, verpat in reversed(fams):
+            hit = ua.rlike(probe)
+            b_fam = F.when(hit, F.lit(fam)).otherwise(b_fam)
+            b_ver = F.when(
+                hit, F.nullif(F.regexp_extract(ua, verpat, 1),
+                              F.lit(""))).otherwise(b_ver)
+        os_fam = (
+            F.when(ua.rlike(r"Windows NT"), "Windows")
+            .when(ua.rlike(r"Android"), "Android")
+            .when(ua.rlike(r"iPhone|iPad|iPod"), "iOS")
+            .when(ua.rlike(r"Mac OS X"), "macOS")
+            .when(ua.rlike(r"Linux"), "Linux"))
+        m = F.struct(
+            F.struct(b_fam.alias("Family"),
+                     b_ver.alias("MajorVersion")).alias("Browser"),
+            F.struct(os_fam.alias("Family")).alias("OperatingSystem"))
+        return KE(F.parse_json(F.to_json(m)), variant=True)
+
+    @_builtin("bag_zip", 2, 2)
+    def _fn_bag_zip(self, args):
+        # bag_zip(keys, values) → dynamic bag; keys beyond the value
+        # array get null values, surplus values are ignored (Kusto's
+        # rule). Null keys are skipped and duplicate keys keep the
+        # FIRST occurrence — Kusto degrades gracefully on malformed key
+        # arrays, whereas a bare map_from_arrays would raise (Spark
+        # forbids null map keys and the default dedup policy is
+        # EXCEPTION), crashing the job on data-dependent keys.
+        keys = F.transform(args[0].col, lambda k: k.cast("string"))
+        vals = args[1].col
+        padded = F.transform(
+            F.sequence(F.lit(0), F.size(keys) - 1),
+            lambda i: F.try_element_at(vals, i.cast("int") + 1))
+        entries = F.filter(
+            F.zip_with(keys, padded, lambda k, v: F.struct(
+                k.alias("key"), v.alias("value"))),
+            lambda e: e["key"].isNotNull())
+        ekeys = F.transform(entries, lambda e: e["key"])
+        dedup = F.filter(
+            entries,
+            lambda e, i: F.array_position(ekeys, e["key"]) == i + 1)
+        m = F.map_from_entries(dedup)
+        return KE(F.parse_json(F.to_json(m)), variant=True)
+
+    @_builtin("format_bytes", 1, 2)
+    def _fn_format_bytes(self, args):
+        # format_bytes(size[, precision]) — auto unit ladder (binary
+        # 1024 steps, Kusto's units), fixed-precision round
+        size = args[0].col.cast("double")
+        prec = _lit_int(args[1]) if len(args) > 1 else 0
+        steps = [("PB", 1024.0 ** 5), ("TB", 1024.0 ** 4),
+                 ("GB", 1024.0 ** 3), ("MB", 1024.0 ** 2),
+                 ("KB", 1024.0)]
+
+        def _fmt(v: Column) -> Column:
+            # fixed-precision decimal string (no locale separators)
+            return F.round(v, prec).cast(
+                f"decimal(38,{prec})").cast("string")
+
+        expr = F.concat(_fmt(size), F.lit(" Bytes"))
+        for unit, div in reversed(steps):
+            expr = F.when(
+                F.abs(size) >= div,
+                F.concat(_fmt(size / F.lit(div)), F.lit(f" {unit}")),
+            ).otherwise(expr)
+        return KE(expr)
+
+    @_builtin("parse_path", 1, 1)
+    def _fn_parse_path(self, args):
+        # parse_path(path) → dynamic bag of path components (Kusto
+        # shape; both / and \ separators). ADS names are not parsed
+        # (empty string, documented subset).
+        p = args[0].col
+        return KE(F.parse_json(F.to_json(F.struct(
+            F.regexp_extract(
+                p, r"^([A-Za-z][A-Za-z0-9+.\-]*):[/\\]", 1
+            ).alias("Scheme"),
+            F.regexp_extract(
+                p, r"^([A-Za-z]:|[/\\])", 1).alias("RootPath"),
+            F.regexp_extract(
+                p, r"^(.*)[/\\][^/\\]*$", 1).alias("DirectoryPath"),
+            F.regexp_extract(
+                p, r"([^/\\]+)[/\\][^/\\]*$", 1
+            ).alias("DirectoryName"),
+            F.regexp_extract(p, r"([^/\\]*)$", 1).alias("Filename"),
+            F.regexp_extract(
+                p, r"\.([^./\\]+)$", 1).alias("Extension"),
+            F.lit("").alias("AlternateDataStreamName"),
+        ))), variant=True)
+
+    @_builtin("unicode_codepoints_from_string to_utf8", 1, 1)
+    def _fn_to_utf8(self, args):
+        # per-character codepoint array — one transform over a
+        # character-index sequence; F.ascii returns the full codepoint
+        # of the first character (BMP + astral — Spark strings are
+        # codepoint-indexed)
+        s = args[0].col
+        return KE(F.when(
+            F.length(s) > 0,
+            F.transform(
+                F.sequence(F.lit(1), F.length(s)),
+                lambda i: F.ascii(
+                    F.substring(s, i, F.lit(1))).cast("bigint")),
+        ).otherwise(F.array().cast("array<bigint>")))
+
+    @_builtin("unicode_codepoints_to_string make_string", 1, None)
+    def _fn_make_string(self, args):
+        # make_string is the documented inverse of to_utf8 —
+        # codepoints → string. The multi-arg form takes scalar
+        # codepoints (make_string(72, 105)); the 1-arg form takes the
+        # codepoint array.
+        arr = (args[0].col if len(args) == 1
+               else F.array(*[a.col for a in args]))
+        return KE(F.array_join(
+            F.transform(arr, lambda c: F.char(c.cast("int"))), ""))
+
+    @_builtin("geo_point_to_geohash", 2, 3)
+    def _fn_geo_point_to_geohash(self, args):
+        # geo_point_to_geohash(longitude, latitude[, accuracy])
+        acc = _lit_int(args[2]) if len(args) > 2 else 5
+        if not 1 <= acc <= 18:
+            raise KqlError("geohash accuracy must be 1..18")
+        return KE(_geohash_encode(args[0].col, args[1].col, acc))
+
+    @_builtin("geo_geohash_to_central_point", 1, 1)
+    def _fn_geo_geohash_to_central_point(self, args):
+        return KE(_geohash_decode(args[0].col), variant=True)
+
+    @_builtin("geo_point_in_polygon", 3, 3)
+    def _fn_geo_point_in_polygon(self, args):
+        # geo_point_in_polygon(longitude, latitude, polygon) — polygon
+        # is a GeoJSON Polygon dynamic {"type","coordinates":[outer,
+        # hole, …]}: inside the outer ring and inside no hole, each
+        # ring an even-odd ray cast (_geo_ring_contains). PLANAR-EDGE
+        # SUBSET of Kusto's spherical geodesic edges — agrees for the
+        # small cells telemetry geofencing uses, diverges on
+        # continent-scale edges or rings crossing the antimeridian
+        # (documented; the geodesic variant needs a geometry library
+        # this container does not ship).
+        lon = args[0].col.cast("double")
+        lat = args[1].col.cast("double")
+        rings = _geojson_coords(
+            args[2], "array<array<array<double>>>", 3)
+
+        def _pip(r: Column) -> Column:
+            inside = _geo_ring_contains(lon, lat, F.get(r, 0))
+            holes = F.slice(
+                r, F.lit(2),
+                F.greatest(F.size(r) - F.lit(1), F.lit(0)))
+            in_hole = F.exists(
+                holes, lambda h: _geo_ring_contains(lon, lat, h))
+            return inside & ~F.coalesce(in_hole, F.lit(False))
+
+        return KE(_let(rings, _pip))
+
+    @_builtin("geo_polygon_area", 1, 1)
+    def _fn_geo_polygon_area(self, args):
+        # geo_polygon_area(polygon) — GeoJSON Polygon area in m²:
+        # outer-ring spherical area minus the holes (_geo_ring_area,
+        # the Chamberlain–Duquette approximation of Kusto's geodesic
+        # area — documented divergence for continent-scale rings).
+        rings = _geojson_coords(
+            args[0], "array<array<array<double>>>", 3)
+
+        def _area(r: Column) -> Column:
+            holes = F.slice(
+                r, F.lit(2),
+                F.greatest(F.size(r) - F.lit(1), F.lit(0)))
+            hole_sum = F.aggregate(
+                holes, F.lit(0.0),
+                lambda acc, h: acc + _geo_ring_area(h))
+            return (_geo_ring_area(F.get(r, 0))
+                    - F.coalesce(hole_sum, F.lit(0.0)))
+
+        return KE(_let(rings, _area))
+
+    @_builtin("geo_distance_point_to_line", 3, 3)
+    def _fn_geo_distance_point_to_line(self, args):
+        # geo_distance_point_to_line(longitude, latitude, line) —
+        # minimum spherical distance (m) from the point to a GeoJSON
+        # LineString: min over segments of the cross-track/
+        # endpoint-clamped distance (_geo_seg_point_dist). Same
+        # planar-edge caveats as the other geo fns (documented);
+        # literal lines fold at compile time, data-dependent ones parse
+        # once per row via _let. NULL for fewer than 2 vertices.
+        lon = args[0].col.cast("double")
+        lat = args[1].col.cast("double")
+        pts0 = _geojson_coords(args[2], "array<array<double>>", 2)
+
+        def _p2l(pts: Column) -> Column:
+            idx = F.sequence(F.lit(0), F.size(pts) - F.lit(2))
+            return F.when(
+                F.size(pts) >= F.lit(2),
+                F.array_min(F.transform(
+                    idx,
+                    lambda i: _geo_seg_point_dist(
+                        lon, lat,
+                        F.get(F.get(pts, i), 0),
+                        F.get(F.get(pts, i), 1),
+                        F.get(F.get(pts, i + F.lit(1)), 0),
+                        F.get(F.get(pts, i + F.lit(1)), 1)))),
+            )
+
+        return KE(_let(pts0, _p2l))
+
+    @_builtin("geo_line_length", 1, 1)
+    def _fn_geo_line_length(self, args):
+        # geo_line_length(lineString) — GeoJSON LineString length in
+        # meters: haversine sum over consecutive vertex pairs (the same
+        # spherical model as geo_distance_2points), folded with
+        # F.aggregate. NULL for fewer than 2 vertices.
+        pts0 = _geojson_coords(args[0], "array<array<double>>", 2)
+
+        def _llen(pts: Column) -> Column:
+            idx = F.sequence(F.lit(0), F.size(pts) - F.lit(2))
+            seg = F.aggregate(
+                idx, F.lit(0.0),
+                lambda acc, i: acc + _geo_distance(
+                    F.get(F.get(pts, i), 0),
+                    F.get(F.get(pts, i), 1),
+                    F.get(F.get(pts, i + F.lit(1)), 0),
+                    F.get(F.get(pts, i + F.lit(1)), 1)))
+            return F.when(F.size(pts) >= F.lit(2), seg)
+
+        return KE(_let(pts0, _llen))
+
+    @_builtin("series_fft", 1, 2)
+    def _fn_series_fft(self, args, inv=False):
+        # series_fft(re [, im]) — {re, im} bag (this engine's
+        # two-output shape; Kusto multi-assigns). Direct DFT — see
+        # _series_dft.
+        def _num_arr(ke: KE) -> Column:
+            # dynamic (VARIANT) series re-enter array land via the JSON
+            # text (todynamic(tostring(f.re)) round-trips)
+            c = ke.col
+            if ke.variant:
+                c = F.from_json(c.cast("string"), "array<double>")
+            return F.transform(c, lambda v: v.cast("double"))
+
+        re_in = _num_arr(args[0])
+        im_in = (_num_arr(args[1]) if len(args) == 2
+                 else F.transform(re_in, lambda _: F.lit(0.0)))
+        return KE(_series_dft(
+            re_in, im_in, 1.0 if inv else -1.0, inv), variant=True)
+
+    @_builtin("series_ifft", 1, 2)
+    def _fn_series_ifft(self, args):
+        return self._fn_series_fft(args, inv=True)
+
+    @_builtin("series_stats_dynamic", 1, 1)
+    def _fn_series_stats_dynamic(self, args):
+        # one bag with the full series_stats tuple (min/max with
+        # first-occurrence indices, avg, stdev, variance, sum, len) —
+        # pure array arithmetic, rendered to dynamic once
+        xs = F.transform(args[0].col, lambda v: v.cast("double"))
+        n = F.size(xs).cast("double")
+        s1 = F.aggregate(
+            xs, F.lit(0.0), lambda acc, v: acc + v)
+        s2 = F.aggregate(
+            xs, F.lit(0.0), lambda acc, v: acc + v * v)
+        var = F.when(
+            F.size(xs) > 1, (s2 - s1 * s1 / n) / (n - 1.0))
+        bag = F.struct(
+            F.array_min(xs).alias("min"),
+            (F.array_position(xs, F.array_min(xs)) - 1)
+            .cast("bigint").alias("min_idx"),
+            F.array_max(xs).alias("max"),
+            (F.array_position(xs, F.array_max(xs)) - 1)
+            .cast("bigint").alias("max_idx"),
+            (s1 / n).alias("avg"),
+            F.sqrt(var).alias("stdev"),
+            var.alias("variance"),
+            s1.alias("sum"),
+            F.size(xs).cast("bigint").alias("len"))
+        return KE(F.parse_json(F.to_json(bag)), variant=True)
+
+    @_builtin("extract_json extractjson", 2, 3)
+    def _fn_extract_json(self, args):
+        # extract_json(path, source) — JSONPath subset ($.a.b[0], the
+        # Hive get_json_object dialect == Kusto's documented subset).
+        # The path must be a literal (it is in Kusto too: the engine
+        # compiles it). Optional typeof third arg is honored for
+        # long/real/bool/string (Kusto's sugar for a cast on the
+        # extracted text).
+        got = F.get_json_object(
+            args[1].col.cast("string"), _lit_str(args[0]))
+        if len(args) == 3:
+            ty = _lit_str(args[2]).strip().lower()
+            casts = {"long": "bigint", "int": "int",
+                     "real": "double", "double": "double",
+                     "bool": "boolean", "boolean": "boolean",
+                     "string": None, "datetime": "timestamp_ntz"}
+            if ty not in casts:
+                raise KqlError(f"extract_json: unsupported typeof({ty})")
+            if casts[ty]:
+                got = got.try_cast(casts[ty])
+        return KE(got)
+
+    @_builtin("capture", 2, 3)
+    def _fn_capture(self, args):
+        # capture(s, pattern[, group]) — single-capture twin of extract
+        # (text exec `text_scalar_expressions.rs` Capture)
+        grp = _lit_int(args[2]) if len(args) > 2 else 1
+        return KE(F.regexp_extract(args[0].col, _lit_str(args[1]), grp))
+
+    @_builtin("totimespan", 1, 1)
+    def _fn_totimespan(self, args):
+        # literal timespan string "1h" / "90s" / "250ms"
+        # (convert_scalar_expression.rs:7-24 ToTimespan)
+        src = _lit_str(args[0])
+        secs = _timespan_secs(src)
+        return KE(
+            F.make_dt_interval(F.lit(0), F.lit(0), F.lit(0), F.lit(secs)),
+            src,
+        )
+
+    @_builtin("make_timespan", 2, 4)
+    def _fn_make_timespan(self, args):
+        # make_timespan([day,] hour, minute[, second]) — Kusto's three
+        # arities map 1:1 onto make_dt_interval
+        if len(args) == 2:
+            d, h, m, s = (F.lit(0), args[0].col, args[1].col, F.lit(0.0))
+        elif len(args) == 3:
+            d, h, m, s = (F.lit(0), args[0].col, args[1].col, args[2].col)
+        else:
+            d, h, m, s = (a.col for a in args)
+        return KE(F.make_dt_interval(
+            d.cast("int"), h.cast("int"), m.cast("int"),
+            s.cast("double")))
+
+    @_builtin("replace_regex", 3, 3)
+    def _fn_replace_regex(self, args):
+        # replace_regex(source, pattern, rewrite) — Kusto rewrites use
+        # RE2 \1 backrefs; Java uses $1. Translate literal rewrites
+        # (protecting literal $); column rewrites pass through
+        # untranslated.
+        rw = args[2]
+        if rw.is_lit and isinstance(rw.lit, str):
+            java = rw.lit.replace("$", "\\$")
+            java = re.sub(r"\\(\d)", r"$\1", java)
+            return KE(F.regexp_replace(
+                args[0].col, args[1].col, F.lit(java)))
+        return KE(F.regexp_replace(args[0].col, args[1].col, rw.col))
+
+    @_builtin("datetime_part", 2, 2)
+    def _fn_datetime_part(self, args):
+        # datetime_part('part', d) — extract a named date part
+        part = _lit_str(args[0]).lower()
+        extractors = {
+            "year": F.year, "month": F.month, "day": F.dayofmonth,
+            "hour": F.hour, "minute": F.minute, "second": F.second,
+            "weekofyear": F.weekofyear, "dayofyear": F.dayofyear,
+            "quarter": F.quarter,
+        }
+        if part not in extractors:
+            raise KqlError(f"datetime_part: unknown part {part!r}")
+        return KE(extractors[part](args[1].col).cast("bigint"))
+
+    @_builtin("datetime_diff", 3, 3)
+    def _fn_datetime_diff(self, args):
+        # datetime_diff('part', d1, d2) = d1 - d2 in whole parts;
+        # timestamp_diff(unit, start, end) = end - start
+        return KE(F.timestamp_diff(
+            _lit_str(args[0]).upper(), args[2].col, args[1].col
+        ))
+
+    @_builtin("datetime_add", 3, 3)
+    def _fn_datetime_add(self, args):
+        return KE(F.timestamp_add(
+            _lit_str(args[0]).upper(), args[1].col, args[2].col
+        ))
+
+    @_builtin("ismatch", 2, 2)  # OTTL IsMatch(target, pattern)
+    def _fn_ismatch(self, args):
+        return KE(args[0].col.rlike(_lit_str(args[1])))
+
+    @_builtin("concat", 2, None)  # OTTL Concat([parts…], delim) / varargs
+    def _fn_concat(self, args):
+        delim = _lit_str(args[-1])
+        parts = [a.col for a in args[:-1]]
+        if len(parts) == 1:
+            return KE(F.array_join(parts[0], delim))
+        return KE(F.concat_ws(delim, *parts))
+
+    @_builtin("strcat_array", 2, 2)
+    def _fn_strcat_array(self, args):
+        # delimiter must be a literal (array_join's contract); NULL
+        # elements are skipped (array_join semantics)
+        return KE(F.array_join(
+            args[0].col.cast("array<string>"), _lit_str(args[1])
+        ))
+
+    @_builtin("percentile", 2, 2)
+    def _fn_percentile(self, args):
+        return KE(F.percentile_approx(args[0].col,
+                                      _lit_int(args[1]) / 100.0))
+
+    @_builtin("tdigest merge_tdigest tdigest_merge", 1, 1)
+    def _fn_tdigest(self, args):
+        # tdigest sketches compose ONLY inside
+        # percentile_tdigest/rank_tdigest in the same aggregate — this
+        # engine's "digest" is lossless (Catalyst's exact percentile
+        # replaces the sketch), so the composed result is the exact
+        # percentile, a strict superset of t-digest's accuracy
+        # contract. A bare tdigest() column (opaque intermediate blob)
+        # is not exposed.
+        return KE(args[0].col, lit="__tdigest__")
+
+    @_builtin("percentile_tdigest", 2, 2)
+    def _fn_percentile_tdigest(self, args):
+        if (args[0].lit != "__tdigest__"
+                or not isinstance(args[1].lit, (int, float))):
+            raise KqlError(
+                "percentile_tdigest must compose as "
+                "percentile_tdigest(tdigest(x), p) within one "
+                "summarize (engine subset — the digest is "
+                "lossless, so this is the exact percentile)")
+        return KE(F.percentile(
+            args[0].col.cast("double"),
+            F.lit(float(args[1].lit) / 100.0)))
+
+    @_builtin("rank_tdigest percentrank_tdigest", 2, 2)
+    def _fn_rank_tdigest(self, args):
+        # relative rank of v in the digested values, as [0, 100]
+        # (percentrank_tdigest is Kusto's other spelling of the same
+        # percentage-of-set rank; exact under the lossless-digest
+        # subset)
+        if args[0].lit != "__tdigest__":
+            raise KqlError(
+                "rank_tdigest must compose as rank_tdigest(tdigest(x), v)")
+        col, v = args[0].col, args[1].col
+        return KE(F.avg(
+            F.when(col.isNotNull() & (col <= v), 100.0)
+            .when(col.isNotNull(), 0.0)))
+
+    @_builtin("percentiles_array", 2, None)
+    def _fn_percentiles_array(self, args):
+        # percentiles_array(x, p1, p2, …) → array of exact percentiles.
+        # Exact (`F.percentile`, linear interpolation — bit-identical
+        # to DuckDB `quantile_cont`) for cross-engine oracles; at 100 TB
+        # swap to `percentile_approx` per the summary_data_points
+        # pattern (`signals.py` `exact=` switch).
+        ps = [_lit_int(a) / 100.0 for a in args[1:]]
+        return KE(F.percentile(args[0].col,
+                               F.array(*[F.lit(p) for p in ps])))
+
+    @_builtin("percentilesw_array", 3, None)
+    def _fn_percentilesw_array(self, args):
+        # percentilesw_array(x, weight, p1, p2, …) — array of exact
+        # weighted percentiles; each entry is one _percentilew fold (k
+        # collect buffers for k percentiles — k is a query literal,
+        # same bounded-group contract as percentilew)
+        return KE(F.array(*[
+            _percentilew(args[0].col, args[1].col, a.col)
+            for a in args[2:]
+        ]))
+
+    @_builtin("format_datetime", 2, 2)
+    def _fn_format_datetime(self, args):
+        # Kusto format tokens (yyyy MM dd HH mm ss …) are the Java
+        # DateTimeFormatter tokens Spark's date_format consumes
+        return KE(F.date_format(args[0].col, _lit_str(args[1])))
+
+    @_builtin("parse_version", 1, 1)
+    def _fn_parse_version(self, args):
+        # version string → one comparable decimal: up to 4 parts of up
+        # to 8 digits each; value = p1·10²⁴ + p2·10¹⁶ + p3·10⁸ + p4,
+        # built as a digit-string concat (no decimal pow chain), NULL
+        # on anything that isn't 1-4 dot-separated runs
+        s = args[0].col
+        parts = F.split(s, r"\.")
+        valid = s.rlike(r"^\d{1,8}(\.\d{1,8}){0,3}$")
+
+        def _vpart(i: int) -> Column:
+            return F.coalesce(
+                F.try_element_at(parts, F.lit(i)), F.lit("0"))
+
+        num = F.concat(
+            _vpart(1), F.lpad(_vpart(2), 8, "0"),
+            F.lpad(_vpart(3), 8, "0"), F.lpad(_vpart(4), 8, "0"))
+        return KE(F.when(valid, num.cast("decimal(38,0)")))
+
+    @_builtin("format_timespan", 2, 2)
+    def _fn_format_timespan(self, args):
+        # format_timespan(t, 'd.hh:mm:ss.fff') — t is a timespan
+        # (day-time interval) or plain seconds; token runs d/h/m/s/f
+        # render zero-padded to the run length (format_string, so wide
+        # values never truncate), everything else is literal
+        fmt = _lit_str(args[1])
+        total = args[0].col.cast("decimal(18,6)")
+        comp = {
+            "d": F.floor(total / 86400).cast("long"),
+            "h": F.floor(total / 3600).cast("long") % 24,
+            "m": F.floor(total / 60).cast("long") % 60,
+            "s": F.floor(total).cast("long") % 60,
+        }
+        pieces: list[Column] = []
+        for run in re.finditer(r"(d+|h+|H+|m+|s+|f+|.)", fmt):
+            tok = run.group(1)
+            ch, n = tok[0].lower(), len(tok)
+            if tok[0] in "dhHms" and n <= 8:
+                pieces.append(
+                    F.format_string(f"%0{n}d", comp[ch]))
+            elif tok[0] == "f":
+                frac = F.floor(
+                    (total - F.floor(total)) * (10 ** n)
+                ).cast("long")
+                pieces.append(F.format_string(f"%0{n}d", frac))
+            else:
+                pieces.append(F.lit(tok))
+        return KE(F.concat(*pieces))
+
+    @_builtin("trim", 1, 2)
+    def _fn_trim(self, args):
+        # trim(s) strips whitespace (an engine convenience); trim(regex,
+        # s) strips every leading AND trailing match (Kusto)
+        if len(args) == 1:
+            return KE(F.trim(args[0].col))
+        return self._fn_trim_end([args[0], self._fn_trim_start(args)])
+
+    @_builtin("trim_start", 2, 2)
+    def _fn_trim_start(self, args):
+        # trim_start(regex, s) — strip every leading match (Kusto)
+        return KE(F.regexp_replace(
+            args[1].col, f"^(?:{_lit_str(args[0])})+", ""))
+
+    @_builtin("trim_end", 2, 2)
+    def _fn_trim_end(self, args):
+        return KE(F.regexp_replace(
+            args[1].col, f"(?:{_lit_str(args[0])})+$", ""))
+
+    @_builtin("translate", 3, 3)
+    def _fn_translate(self, args):
+        # translate(searchList, replacementList, source)
+        return KE(F.translate(
+            args[2].col, _lit_str(args[0]), _lit_str(args[1])
+        ))
+
+    @_builtin("array_split", 2, 2)
+    def _fn_array_split(self, args):
+        idxs = args[1].col
+        if args[1].is_lit and isinstance(args[1].lit, int):
+            # scalar split point — Kusto's 1-index overload
+            idxs = F.array(F.lit(args[1].lit).cast("bigint"))
+        return KE(_array_split(args[0].col, idxs))
+
+    @_builtin("bag_keys", 1, 1)
+    def _fn_bag_keys(self, args):
+        return KE(F.json_object_keys(_bag_json(args[0])))
+
+    @_builtin("bag_has_key", 2, 2)
+    def _fn_bag_has_key(self, args):
+        # bag_has_key(bag, key) — top-level key membership
+        return KE(F.coalesce(
+            F.array_contains(
+                F.json_object_keys(_bag_json(args[0])),
+                args[1].col.cast("string")),
+            F.lit(False)))
+
+    @_builtin("indexof", 2, 3)
+    def _fn_indexof(self, args):
+        # indexof(s, sub[, start]) — 0-based, -1 when absent (position
+        # is 1-based, 0). A start searches from a 0-based offset; a
+        # NEGATIVE start is an offset from the END of the source string
+        # (Kusto semantics), clamped to 0 when it underflows.
+        if len(args) == 2:
+            return KE((F.position(args[1].col, args[0].col) - 1)
+                      .cast("bigint"))
+        s, sub, start = args[0].col, args[1].col, args[2].col
+        raw = start.cast("int")
+        off = F.greatest(
+            F.when(raw < 0, F.length(s) + raw).otherwise(raw),
+            F.lit(0))
+        hit = F.position(sub, F.substring(s, off + 1, F.length(s)))
+        return KE(F.when(
+            hit > 0, (hit + off - 1).cast("bigint")
+        ).otherwise(F.lit(-1).cast("bigint")))
+
+    @_builtin("bag_merge", 2, None)
+    def _fn_bag_merge(self, args):
+        # Kusto: the FIRST bag's keys win. map_concat under the default
+        # EXCEPTION dedup policy must never see a duplicate, so later
+        # bags are key-filtered against the accumulated map before
+        # concatenation.
+        merged = _bag_map(args[0])
+        for a in args[1:]:
+            seen = F.map_keys(merged)
+            merged = F.map_concat(
+                merged,
+                F.map_filter(
+                    _bag_map(a),
+                    lambda k, _v: ~F.coalesce(
+                        F.array_contains(seen, k), F.lit(False))))
+        return KE(F.parse_json(F.to_json(merged)), variant=True,
+                  bag_map=merged)
+
+    @_builtin("bag_set_key", 3, 3)
+    def _fn_bag_set_key(self, args):
+        key = args[1].col.cast("string")
+        m = F.map_concat(
+            F.map_filter(_bag_map(args[0]), lambda k, _v: k != key),
+            F.create_map(key, args[2].col.cast("variant")))
+        return KE(F.parse_json(F.to_json(m)), variant=True, bag_map=m)
+
+    @_builtin("bag_remove_keys", 2, 2)
+    def _fn_bag_remove_keys(self, args):
+        # bag_remove_keys(bag, dynamic array of key names)
+        keys = args[1].col
+        m = F.map_filter(
+            _bag_map(args[0]),
+            lambda k, _v: ~F.coalesce(
+                F.array_contains(keys, k), F.lit(False)))
+        return KE(F.parse_json(F.to_json(m)), variant=True, bag_map=m)
+
+    # todynamic/toobject are documented aliases of parse_json
+    @_builtin("parse_json todynamic toobject", 1, 1)
+    def _fn_parse_json(self, args):
+        # a literal JSON string stays carried on the KE so consumers
+        # (the geo fns) can fold it at compile time
+        return KE(F.parse_json(args[0].col),
+                  lit=args[0].lit if args[0].is_lit else _NOT_LIT,
+                  variant=True)
+
+    @_builtin("parse_xml", 1, 1)
+    def _fn_parse_xml(self, args):
+        # XML → dynamic per Kusto's convention ('@attr' keys, '#text'
+        # mixed content, repeated tags → list). The XML→JSON step runs
+        # in the sanctioned codec seam (no XML reader in Catalyst
+        # expressions); invalid XML → NULL.
+        return KE(
+            F.try_parse_json(_parse_xml_json(args[0].col.cast("string"))),
+            variant=True)
+
+    @_builtin("dynamic_to_json", 1, 1)
+    def _fn_dynamic_to_json(self, args):
+        # JSON text of a dynamic. Spark VARIANT stores object keys
+        # sorted, so the parse_json path matches Kusto's sorted-key
+        # canonicalization; the map-twin path renders storage order
+        # (documented subset)
+        if args[0].bag_map is not None:
+            return KE(F.to_json(args[0].bag_map))
+        return KE(F.to_json(args[0].col))
+
+    @_builtin("bag_pack pack pack_dictionary", 2, None)
+    def _fn_bag_pack(self, args):
+        return _bag_pack(args)
+
+    @_builtin("parse_url", 1, 1)
+    def _fn_parse_url(self, args):
+        # dynamic bag result (Kusto shape) so VARIANT path accessors
+        # chain: `parse_url(u).Host`, `u['Path']`
+        u = args[0].col
+        return KE(F.parse_json(F.to_json(F.struct(
+            F.parse_url(u, F.lit("PROTOCOL")).alias("Scheme"),
+            F.parse_url(u, F.lit("HOST")).alias("Host"),
+            # Hive parse_url has no PORT part — take it off the
+            # authority ('' when the URL carries none, KQL's shape)
+            F.regexp_extract(
+                F.parse_url(u, F.lit("AUTHORITY")), r":(\d+)$", 1
+            ).alias("Port"),
+            F.parse_url(u, F.lit("PATH")).alias("Path"),
+            F.parse_url(u, F.lit("QUERY")).alias("Query"),
+            F.parse_url(u, F.lit("REF")).alias("Fragment"),
+        ))), variant=True)
+
+    # Serialized-window functions. Legal only on a serialized row set
+    # (after `sort by`, optionally re-partitioned by `serialize by k…`)
+    # — the same precondition KQL enforces. Each compiles to ONE
+    # Catalyst Window expression over the stage-provided spec; with
+    # `serialize by` keys the window is partitioned (parallel, the
+    # 100 TB shape), without them it is a single ordered partition
+    # (KQL's own semantics for a fully serialized table — use on
+    # small/aggregated relations only; the docstring on `serialize`
+    # says so).
+    def _window(self, fn: str):
+        if self.wspec is None:
+            raise KqlError(
+                f"{fn}() requires a serialized row set: `sort by …` "
+                "first (add `serialize by key` to keep the window "
+                "partitioned)")
+        return self.wspec
+
+    @_builtin("row_number", 0, 1)
+    def _fn_row_number(self, args):
+        w = self._window("row_number")
+        start = _lit_int(args[0]) if args else 1
+        return KE(F.row_number().over(w) + F.lit(start - 1))
+
+    @_builtin("row_rank_min", 0, 1)
+    def _fn_row_rank_min(self, args):
+        return KE(F.rank().over(self._window("row_rank_min")))
+
+    @_builtin("row_rank_dense", 0, 1)
+    def _fn_row_rank_dense(self, args):
+        return KE(F.dense_rank().over(self._window("row_rank_dense")))
+
+    @_builtin("row_cumsum", 1, 2)
+    def _fn_row_cumsum(self, args):
+        upto = self._window("row_cumsum").rowsBetween(
+            Window.unboundedPreceding, Window.currentRow)
+        running = F.sum(args[0].col).over(upto)
+        if len(args) == 1:
+            return KE(running)
+        # restart form: the accumulation resets AT each row where
+        # `restart` is true (that row's term included, Kusto
+        # row_cumsum; a null term counts as 0 so its restart is not
+        # skipped). Closed form sharing the SAME Exchange+Sort as the
+        # plain running sum: with S = running total, the latest restart
+        # row r at or before the current row contributes base S_r − x_r
+        # (carried by last(…, ignorenulls) over the serialized window),
+        # and the result is S − coalesce(base, 0) — no per-segment
+        # re-partitioning, still one Window op chain over the serialize
+        # spec.
+        base = F.last(
+            F.when(args[1].col,
+                   running - F.coalesce(args[0].col, F.lit(0))),
+            ignorenulls=True,
+        ).over(upto)
+        return KE(running - F.coalesce(base, F.lit(0)))
+
+    @_builtin("row_window_session", 3, 3)
+    def _fn_row_window_session(self, args):
+        # row_window_session(ts, MaxDistanceFromFirst,
+        # MaxDistanceBetweenNeighbors) — the session-START timestamp
+        # per row. Gap-based subset: a new session starts when the gap
+        # to the previous row exceeds the neighbor bound; the
+        # from-first bound depends on the running session start
+        # (inherently sequential), so it must be passed as 0
+        # (= unbounded) — use `scan` for from-first windows. Closed
+        # form: session start = the latest boundary row's ts at or
+        # before the current row — a lag nested in a running max, two
+        # Window ops sharing one Exchange + Sort.
+        w = self._window("row_window_session")
+        if not (args[1].is_lit and args[1].lit in (0, "0")):
+            raise KqlError(
+                "row_window_session: MaxDistanceFromFirst is "
+                "sequential state — pass 0 (unbounded) or use "
+                "the scan operator")
+        if not isinstance(args[2].lit, str):
+            raise KqlError(
+                "row_window_session: MaxDistanceBetweenNeighbors "
+                "must be a timespan literal")
+        idle_us = _timespan_secs(args[2].lit) * 1_000_000.0
+        ts = args[0].col
+        prev_ts = F.lag(ts).over(w)
+        boundary = prev_ts.isNull() | (
+            F.timestamp_diff("MICROSECOND", prev_ts, ts)
+            > F.lit(idle_us))
+        return KE(F.max(F.when(boundary, ts)).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+
+    @_builtin("prev", 1, 3)
+    def _fn_prev(self, args, fn=F.lag, name="prev"):
+        # prev(x[, offset[, default]]) / next(…)
+        w = self._window(name)
+        off = _lit_int(args[1]) if len(args) > 1 else 1
+        dflt = args[2].lit if len(args) > 2 else None
+        if dflt is _NOT_LIT:
+            raise KqlError(f"{name} default must be a literal")
+        return KE(fn(args[0].col, off, dflt).over(w))
+
+    @_builtin("next", 1, 3)
+    def _fn_next(self, args):
+        return self._fn_prev(args, F.lead, "next")
 
 
 def parse_expr_ke(s: str, bindings: dict[str, "KE | Column"] | None = None,
@@ -4414,10 +4415,48 @@ _SCAN_TOK = re.compile(
     r"|(?P<op><=|>=|==|!=|[-+*/%(),<>]))"
 )
 
-_SCAN_FNS = frozenset(
-    {"strcat", "iff", "tolong", "toreal", "todouble", "tostring",
-     "strlen", "abs", "min_of", "max_of"}
-)
+def _scan_cast(a, cast):
+    """Null-propagating conversion of a scan closure; a value that does
+    not convert is null."""
+    def f(r, s):
+        v = a(r, s)
+        try:
+            return None if v is None else cast(v)
+        except (TypeError, ValueError):
+            return None
+    return f
+
+
+def _scan_fold(red):
+    """min_of/max_of over the non-null arguments (null when none)."""
+    def build(*args):
+        def f(r, s):
+            vals = [v for a in args if (v := a(r, s)) is not None]
+            return red(vals) if vals else None
+        return f
+    return build
+
+
+# Functions of scan expressions: name → (min_args, max_args, builder).
+# A builder takes the argument closures and returns fn(row, state); the
+# argument count is checked by _check_arity, like every KQL builtin.
+_SCAN_FNS = {
+    "strcat": (1, None, lambda *args: lambda r, s: "".join(
+        "" if (v := a(r, s)) is None else str(v) for a in args)),
+    "iff": (3, 3, lambda c, t, e: lambda r, s: (
+        t(r, s) if c(r, s) is True else e(r, s))),
+    "tolong": (1, 1, lambda a: _scan_cast(a, lambda v: int(float(v)))),
+    "toreal": (1, 1, lambda a: _scan_cast(a, float)),
+    "todouble": (1, 1, lambda a: _scan_cast(a, float)),
+    "tostring": (1, 1, lambda a: lambda r, s: (
+        "" if (v := a(r, s)) is None else str(v))),
+    "strlen": (1, 1, lambda a: lambda r, s: (
+        None if (v := a(r, s)) is None else len(str(v)))),
+    "abs": (1, 1, lambda a: lambda r, s: (
+        None if (v := a(r, s)) is None else abs(v))),
+    "min_of": (1, None, _scan_fold(min)),
+    "max_of": (1, None, _scan_fold(max)),
+}
 
 
 def _scan_tokenize(src: str) -> list[tuple[str, str]]:
@@ -4431,8 +4470,7 @@ def _scan_tokenize(src: str) -> list[tuple[str, str]]:
             raise KqlError(
                 f"scan declare expression: cannot tokenize {src[i:]!r} "
                 "(supported: literals, columns/variables, + - * / %, "
-                "comparisons, and/or/not, strcat/iff/tolong/toreal/"
-                "tostring/strlen/abs/min_of/max_of)"
+                f"comparisons, and/or/not, {'/'.join(_SCAN_FNS)})"
             )
         i = m.end()
         for kind in ("num", "str", "id", "op"):
@@ -4576,60 +4614,6 @@ def _compile_scan_expr(
             )
         return p_primary()
 
-    def _call(name, args):
-        if name == "strcat":
-            return lambda r, s: "".join(
-                "" if (v := a(r, s)) is None else str(v) for a in args
-            )
-        if name == "iff":
-            if len(args) != 3:
-                raise KqlError("iff takes 3 arguments")
-            c, t, e = args
-            return lambda r, s: t(r, s) if c(r, s) is True else e(r, s)
-        if name == "tolong":
-            (a,) = args
-
-            def f(r, s):
-                v = a(r, s)
-                try:
-                    return None if v is None else int(float(v))
-                except (TypeError, ValueError):
-                    return None
-            return f
-        if name in ("toreal", "todouble"):
-            (a,) = args
-
-            def f(r, s):
-                v = a(r, s)
-                try:
-                    return None if v is None else float(v)
-                except (TypeError, ValueError):
-                    return None
-            return f
-        if name == "tostring":
-            (a,) = args
-            return lambda r, s: (
-                "" if (v := a(r, s)) is None else str(v)
-            )
-        if name == "strlen":
-            (a,) = args
-            return lambda r, s: (
-                None if (v := a(r, s)) is None else len(str(v))
-            )
-        if name == "abs":
-            (a,) = args
-            return lambda r, s: (
-                None if (v := a(r, s)) is None else abs(v)
-            )
-        if name in ("min_of", "max_of"):
-            red = min if name == "min_of" else max
-
-            def f(r, s):
-                vals = [v for a in args if (v := a(r, s)) is not None]
-                return red(vals) if vals else None
-            return f
-        raise KqlError(f"scan expression: unsupported function {name}()")
-
     def p_primary():
         k, v = advance()
         if k == "num":
@@ -4660,7 +4644,9 @@ def _compile_scan_expr(
                         advance()
                         args.append(p_or())
                 expect(")")
-                return _call(v, args)
+                lo, hi, build = _SCAN_FNS[v]
+                _check_arity(v, len(args), lo, hi)
+                return build(*args)
             if v in declared:
                 uses_state[0] = True
                 return lambda r, s, n=v: s[n]

@@ -24,6 +24,17 @@ SINKS = ["sink_traces", "sink_metrics", "sink_logs", "sink_malformed"]
 METRIC_EVENT_RE = r"^metric[.:]"
 
 
+def sink_count_metrics() -> list[Column]:
+    """``n_<sink>`` row counters for ``df.observe()`` on a routed frame."""
+    return [F.sum(F.when(F.col("sink") == k, 1).otherwise(0)).alias(f"n_{k}")
+            for k in SINKS]
+
+
+def observed_sink_counts(m: dict) -> dict[str, int]:
+    """Non-empty sinks' counts from an observation of sink_count_metrics()."""
+    return {k: int(m[f"n_{k}"]) for k in SINKS if int(m[f"n_{k}"] or 0)}
+
+
 def sink_expr(
     role: Column | None = None,
     tool: Column | None = None,

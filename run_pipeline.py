@@ -128,12 +128,15 @@ def _bench(spark, args, transcripts, tools, roles) -> int:
     """Single-pass throughput: the full dataflow incl. partitioned sink
     write, one Spark job graph — the unit the scaling-efficiency rule
     measures at two parallelism levels."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from otel_arrow_spark.enrich import enrich_turns
     from otel_arrow_spark.lineage import with_slice
     from otel_arrow_spark.parse import parse_turns
-    from otel_arrow_spark.router import route_turns
+    from otel_arrow_spark.router import (
+        observed_sink_counts, route_turns, sink_count_metrics,
+    )
 
     best = None
     for rep in range(max(args.repeat, 1)):
@@ -146,15 +149,11 @@ def _bench(spark, args, transcripts, tools, roles) -> int:
             # perf-exporter analog (`crates/otap/src/perf_exporter`): the
             # noop-FORMAT write materializes every output column (a bare
             # count would let Catalyst prune the pipeline down to the
-            # router subtree); counters then come from a second, pruned
-            # pass — mirroring the parquet read-back.
-            routed.write.format("noop").mode("overwrite").save()
-            counts = {
-                r["sink"]: r["n"]
-                for r in routed.groupBy("sink")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
+            # router subtree); the per-sink counters ride the same job.
+            obs = Observation()
+            observed = routed.observe(obs, *sink_count_metrics())
+            observed.write.format("noop").mode("overwrite").save()
+            counts = observed_sink_counts(obs.get)
         else:
             out = os.path.join(args.output, f"routed_bench_{rep}")
             routed.write.mode("overwrite").partitionBy("sink").parquet(out)

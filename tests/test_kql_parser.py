@@ -1224,6 +1224,12 @@ def test_scan_declare_state_variables(spark):
     with pytest.raises(KqlError):  # collision with an input column
         kql(df, "T | sort by uid asc | serialize by uid | scan"
                 " declare (v: long = 0) with (step a: true)")
+    # scan functions take the same argument-count check as builtins
+    for call in ("tolong(v, v)", "strlen()"):
+        with pytest.raises(KqlError, match=r"argument\(s\), got"):
+            kql(df, "T | sort by uid asc | serialize by uid | scan"
+                    " declare (n2: long = 0) with"
+                    f" (step a: true => n2 = {call})")
 
 
 def test_scan_declare_property_vs_reference(spark):
@@ -4569,3 +4575,24 @@ def test_trim_regex_both_ends(spark):
     assert (r.ts, r.te) == ("ab--", "--ab")
     assert r.t1 == "x"
     assert r.tc == "X"
+
+
+def test_every_builtin_checks_its_argument_count(spark):
+    """One arity rule: every registry entry rejects max+1 arguments (and
+    min−1 where min > 0) with KqlError before building — never a silent
+    truncation, an IndexError or any other exception type."""
+    for q in ("strlen(s, 'zzz')", "sum(n, n)", "totimespan()"):
+        with pytest.raises(KqlError, match=r"argument\(s\), got"):
+            parse_expr(q)
+    parse_expr("tofloat(x)")  # the todouble builder
+
+    from otel_arrow_spark.operators.kql_parser import (
+        _FUNCS, _VARIANT_VIA_STRING,
+    )
+
+    assert _VARIANT_VIA_STRING <= _FUNCS.keys()
+    for name, (lo, hi, _build) in _FUNCS.items():
+        bad = ([] if hi is None else [hi + 1]) + ([lo - 1] if lo else [])
+        for n in bad:
+            with pytest.raises(KqlError):
+                parse_expr(f"{name}({', '.join(['1'] * n)})")

@@ -113,3 +113,21 @@ def test_fan_out_writes_observed_counts(spark, transcripts, tmp_path):
     assert sum(counts.values()) == transcripts.count()
     for sink, n in counts.items():
         assert cat.read(sink).count() == n
+
+
+def test_bench_noop_and_parquet_sink_counts_agree(spark, tmp_path, capsys):
+    """`run_pipeline --bench`: the noop leg observes its sink counts on
+    the write job itself, the parquet leg reads the written sink back —
+    both report the same counts for the same input."""
+    import json
+
+    import run_pipeline
+
+    base = ["--input", str(tmp_path / "in"), "--output", str(tmp_path / "out"),
+            "--gen-rows", "3000", "--n-slices", "2", "--bench"]
+    got = {}
+    for sink in ("noop", "parquet"):
+        assert run_pipeline.main(base + ["--sink", sink]) == 0
+        got[sink] = json.loads(capsys.readouterr().out.splitlines()[-1])
+    assert got["noop"]["sink_counts"] == got["parquet"]["sink_counts"]
+    assert got["noop"]["rows"] == 3000
