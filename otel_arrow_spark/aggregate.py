@@ -10,7 +10,7 @@ partial aggregation; no driver-side loops.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -34,24 +34,3 @@ def counts_by_conv(routed: DataFrame) -> DataFrame:
         F.min("ts").alias("first_ts"),
         F.max("ts").alias("last_ts"),
     )
-
-
-def stable_order(df: DataFrame) -> DataFrame:
-    """Global stable (conv_id, turn_idx) ordering — the text-equality gate order.
-
-    A total sort is a range-partitioned exchange; at scale prefer
-    ``sortWithinPartitions`` after hash-partitioning on conv_id (done in the
-    sink writes) and reserve this global sort for bounded outputs.
-    """
-    return df.orderBy("conv_id", "turn_idx")
-
-
-def with_turn_rank(df: DataFrame) -> DataFrame:
-    """Stable per-conversation ordering rank via a window.
-
-    `Window.partitionBy(conv_id).orderBy(turn_idx)` is the skew hotspot for
-    mega-conversations — callers on skewed data should bound it with
-    :func:`otel_arrow_spark.ordering.salted_window_rank` instead.
-    """
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return df.withColumn("turn_rank", F.row_number().over(w))

@@ -105,6 +105,19 @@ min_args, max_args)``. A name registered twice fails at import.
 once (``_check_arity``, which also checks user functions and the
 functions of ``scan`` expressions) before building.
 
+``evaluate`` plugins: each is one entry of the registry ``_PLUGINS`` —
+name → (min_args, max_args or None when variadic, handler) — declared
+by a module function registered with ``@_plugin(name, min_args,
+max_args)`` (a name registered twice fails at import). ``_evaluate``
+parses the call once (name, balanced parentheses, nothing after them),
+rejects an unknown name, checks the argument count with
+``_check_arity`` and hands the top-level-split argument texts to the
+handler as ``_PluginArgs``. Its shared readers (input column,
+``datetime(…)``, timespan, integer, number, flag, ``dynamic([…])``
+list) raise a ``KqlError`` that names the plugin; checks that are not
+about one argument (lookup tables, a serialized row set, the optional
+datetime pair) stay in the handler.
+
 Implementation note: every parse result is a ``KE`` node — a Catalyst
 Column plus, when the expression is a literal, its Python value. Literal
 arguments (regex patterns, delimiters, bin widths, accessor keys) travel
@@ -1969,16 +1982,22 @@ def _b64_to_bytes(s: Column) -> Column:
 _FUNCS: dict[str, tuple] = {}
 
 
-def _builtin(names: str, lo: int, hi: int | None):
-    """Register the decorated builder under each space-separated name;
-    each name may be registered once."""
-    def reg(fn):
-        for n in names.split():
-            if n in _FUNCS:
-                raise ValueError(f"builtin {n}() registered twice")
-            _FUNCS[n] = (lo, hi, fn)
-        return fn
-    return reg
+def _registry(table: dict, kind: str):
+    """The ``(names, lo, hi)`` decorator of ``table``: it registers the
+    decorated function under each space-separated name, each name
+    once."""
+    def register(names: str, lo: int, hi: int | None):
+        def reg(fn):
+            for n in names.split():
+                if n in table:
+                    raise ValueError(f"{kind} {n}() registered twice")
+                table[n] = (lo, hi, fn)
+            return fn
+        return reg
+    return register
+
+
+_builtin = _registry(_FUNCS, "builtin")
 
 
 def _check_arity(name: str, n: int, lo: int, hi: int | None) -> None:
@@ -3659,6 +3678,9 @@ class ExprParser:
         # 1024 steps, Kusto's units), fixed-precision round
         size = args[0].col.cast("double")
         prec = _lit_int(args[1]) if len(args) > 1 else 0
+        if not 0 <= prec <= 38:
+            raise KqlError(
+                f"format_bytes() precision must be in 0..38, got {prec}")
         steps = [("PB", 1024.0 ** 5), ("TB", 1024.0 ** 4),
                  ("GB", 1024.0 ** 3), ("MB", 1024.0 ** 2),
                  ("KB", 1024.0)]
@@ -5494,6 +5516,1543 @@ def _prepare(df: DataFrame, query: str,
     return df, stages, bindings, tables
 
 
+# ---------------------------------------------------------------------------
+# evaluate plugin registry
+# ---------------------------------------------------------------------------
+
+# plugin name → (min_args, max_args or None when variadic, handler), see
+# the module docstring. A handler is ``(df, args, **ctx) -> DataFrame``:
+# ``args`` is a ``_PluginArgs`` and ``ctx`` holds the stage's ``pe``
+# (expression compiler), ``bindings``, ``tables`` and ``wspec`` (the
+# serialized order before the stage, for ``narrow``/``rows_near``).
+_PLUGINS: dict[str, tuple] = {}
+_plugin = _registry(_PLUGINS, "evaluate plugin")
+
+
+class _PluginArgs(list):
+    """The argument texts of one ``evaluate`` call (top-level split,
+    stripped) and the readers the plugins share. Every reader error
+    names the plugin."""
+
+    def __init__(self, plugin: str, texts: list[str], columns: list[str]):
+        super().__init__(texts)
+        self.plugin, self.columns = plugin, columns
+
+    def _read(self, i: int, what: str, pattern: str, conv):
+        """``conv(match)`` of argument ``i`` against ``pattern``; a
+        mismatch, a ``KqlError`` or ``None`` from ``conv`` is an error."""
+        m = re.fullmatch(pattern, self[i], re.S)
+        try:
+            v = None if m is None else conv(m)
+        except KqlError:
+            v = None
+        if v is None:
+            raise KqlError(
+                f"{self.plugin}: argument {i % len(self) + 1} must be "
+                f"{what}, got {self[i]!r}")
+        return v
+
+    def col(self, i: int) -> str:
+        """Argument ``i``: a column of the input frame."""
+        if self[i] not in self.columns:
+            raise KqlError(f"{self.plugin}: no column {self[i]!r}")
+        return self[i]
+
+    def cols(self, i: int) -> list[str]:
+        """Arguments ``i``… : columns of the input frame."""
+        return [self.col(j) for j in range(i, len(self))]
+
+    def datetime(self, i: int) -> float:
+        """Argument ``i``: a ``datetime(…)`` literal, as epoch seconds."""
+        return self._read(i, "a datetime(…) literal",
+                          r"datetime\(([^)]*)\)",
+                          lambda m: _plugin_epoch(m.group(1)))
+
+    def timespan(self, i: int) -> float:
+        """Argument ``i``: a timespan literal, in seconds."""
+        return self._read(i, "a timespan <n><d|h|m|s|ms>", r".*",
+                          lambda m: _timespan_secs(m.group(0)))
+
+    def integer(self, i: int, lo: int = 1) -> int:
+        """Argument ``i``: an integer literal ≥ ``lo``."""
+        return self._read(i, f"an integer ≥ {lo}", r"\d+",
+                          lambda m: int(m.group(0))
+                          if int(m.group(0)) >= lo else None)
+
+    def number(self, i: int) -> float:
+        """Argument ``i``: a non-negative number literal."""
+        return self._read(i, "a number", r"\d+\.?\d*|\.\d+",
+                          lambda m: float(m.group(0)))
+
+    def flag(self, i: int, key: str) -> bool:
+        """Argument ``i``: ``true``/``false``, optionally ``key = …``."""
+        return self._read(i, f"[{key} =] true|false",
+                          rf"(?:{key}\s*=\s*)?(true|false)",
+                          lambda m: m.group(1) == "true")
+
+    def dynamic(self, i: int, conv=_unquote) -> list:
+        """Argument ``i``: a ``dynamic([…])`` list, each element read
+        by ``conv``."""
+        return self._read(i, "a dynamic([…]) list",
+                          r"dynamic\(\s*\[(.*)\]\s*\)",
+                          lambda m: [conv(p) for p in
+                                     _split_top_level(m.group(1), ",")])
+
+
+def _evaluate(df: DataFrame, call: str, **ctx) -> DataFrame:
+    """``evaluate plugin(args…)``: the one call parse, lookup and
+    argument-count check, then the plugin's handler."""
+    m = re.match(r"([A-Za-z_]\w*)\s*\(", call)
+    if m is None:
+        raise KqlError(f"evaluate needs plugin(args…), got {call!r}")
+    name = m.group(1)
+    if name not in _PLUGINS:
+        raise KqlError(f"unknown evaluate plugin {name!r}")
+    close = _matching_paren(call, m.end() - 1)
+    if call[close + 1:].strip():
+        raise KqlError(
+            f"{name}(): unexpected {call[close + 1:].strip()!r} after "
+            "the call")
+    lo, hi, handler = _PLUGINS[name]
+    args = _PluginArgs(
+        name, _split_top_level(call[m.end():close], ","), df.columns)
+    _check_arity(name, len(args), lo, hi)
+    return handler(df, args, **ctx)
+
+
+def _ip_lookup_args(args: _PluginArgs, tables: dict | None) -> tuple:
+    """``(LookupTable, SourceIPColumn, IPNetworkColumn[,
+    return_unmatched])`` of ``ipv4_lookup``/``ipv6_lookup`` → (lookup
+    frame, source column, network column, join type)."""
+    lutname, netc = args[0], args[2]
+    if not tables or lutname not in tables:
+        raise KqlError(
+            f"{args.plugin}: unknown table {lutname!r} — "
+            "pass it via kql(..., tables={...})")
+    ipc = args.col(1)
+    lut = tables[lutname]
+    if netc not in lut.columns:
+        raise KqlError(
+            f"{args.plugin}: lookup table has no column {netc!r}")
+    unmatched = len(args) == 4 and args.flag(3, "return_unmatched")
+    return lut, ipc, netc, "left" if unmatched else "inner"
+
+
+@_plugin("narrow", 0, 0)
+def _ev_narrow(df, args, wspec, **_):
+    """`evaluate narrow()` — transpose each row to (Row, Column,
+    Value-as-string) triples (the Kusto plugin). Row is the 0-based
+    index in the serialized order, so like the other serialized-window
+    ops it requires `sort by …` first; the transpose itself is one
+    explode over a per-row literal struct array (narrow, no extra
+    shuffle beyond the serialize window). Use on small/aggregated
+    relations — the Row index is a global window by construction,
+    exactly KQL's serialized-table semantics."""
+    if wspec is None:
+        raise KqlError(
+            "evaluate narrow() requires a serialized row "
+            "set: `sort by …` first"
+        )
+    entries = F.array(*[
+        F.struct(
+            F.lit(c).alias("Column"),
+            F.col(c).cast("string").alias("Value"),
+        )
+        for c in df.columns
+    ])
+    # Row must bind BEFORE the explode (same-select windows
+    # evaluate after Generate — measured: Row would then
+    # number the exploded triples, not the source rows)
+    return df.select(
+        (F.row_number().over(wspec) - 1).alias("Row"),
+        entries.alias("_es"),
+    ).select(
+        "Row", F.explode("_es").alias("_e")
+    ).select("Row", "_e.Column", "_e.Value")
+
+
+@_plugin("rows_near", 2, 3)
+def _ev_rows_near(df, args, pe, wspec, **_):
+    """`evaluate rows_near(Condition, NumRows[, RowsAfter])` — keep every
+    row within NumRows before / RowsAfter (default NumRows) after any
+    row satisfying Condition, in the serialized order (Kusto's
+    context-rows plugin; reference grammar has no scan/rows_near — this
+    is the beyond-reference log-forensics shape). One Window over the
+    serialize order: row i survives iff some condition row j exists with
+    j−before ≤ i ≤ j+after ⇔ j ∈ [i−after, i+before], i.e. max(cond)
+    over ROWS BETWEEN after PRECEDING AND before FOLLOWING — a single
+    bounded frame, no self-join, no explode. Like the other serialized
+    ops it requires `sort by …` (or `serialize by …`) first; output
+    order must be re-stated downstream (evaluate clears it)."""
+    if wspec is None:
+        raise KqlError(
+            "evaluate rows_near() requires a serialized "
+            "row set: `sort by …` first")
+    before = args.integer(1, lo=0)
+    after = args.integer(2, lo=0) if len(args) == 3 else before
+    flag = F.when(pe(args[0]), 1).otherwise(0)
+    near = F.max(flag).over(
+        wspec.rowsBetween(-after, before))
+    return (
+        df.withColumn("_near", near)
+        .filter(F.col("_near") == 1)
+        .drop("_near")
+    )
+
+
+@_plugin("basket", 0, 1)
+def _ev_basket(df, args, **_):
+    """`evaluate basket(SupportFrac)` — frequent itemset mining over the
+    (categorical) input columns at ARBITRARY itemset size, two-pass
+    FP-growth-shaped:
+
+      pass 1 (Apriori base): ONE melt + aggregate finds
+        the frequent single (column, value) items; the
+        driver collect is bounded (≤ ncols/frac items can
+        clear the support floor) and broadcasts back as
+        literal isin lists;
+      pass 2: each row keeps only its frequent items
+        (anti-monotonicity: every member of a frequent
+        itemset is itself frequent, so nothing is lost),
+        then a bitmask explode emits the row's 2^m − 1
+        sub-itemsets (m ≤ ncols ≤ 12 — Kusto's own
+        MaxDimensions default is 5) and ONE shuffle on
+        the canonical column-ordered itemset array
+        counts supports.
+
+    NULL in the output marks a wildcard position (Kusto's shape); a
+    genuinely-NULL frequent value is kept as an item via an internal
+    marker and renders as NULL too (same ambiguity as the plain groupBy
+    it replaces)."""
+    frac = args.number(0) if args else 0.05
+    from otel_arrow_spark.dataops.dedup import (
+        persist_registered,
+    )
+
+    cols = df.columns
+    if len(cols) > 12:
+        raise KqlError(
+            "basket supports at most 12 input columns — "
+            "project the candidate dimensions first"
+        )
+    # persist the (already-projected) input across the two
+    # passes; the total-count action doubles as the
+    # cache-warming pass; released by release_caches().
+    df = persist_registered(df)
+    total = df.count()
+    thresh = max(int(total * frac), 1)
+    nullm = "\x00null\x00"
+    sv = [
+        F.coalesce(F.col(c).cast("string"), F.lit(nullm))
+        for c in cols
+    ]
+    freq_rows = (
+        df.select(F.explode(F.array(*[
+            F.struct(F.lit(i).alias("ci"), v.alias("v"))
+            for i, v in enumerate(sv)])).alias("it"))
+        .groupBy("it.ci", "it.v")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") >= thresh)
+        .collect()
+    )
+    freq: dict[int, list[str]] = {}
+    for r in freq_rows:
+        freq.setdefault(r.ci, []).append(r.v)
+    if not freq:
+        return df.limit(0).select(
+            *[F.col(c).cast("string").alias(c)
+              for c in cols],
+            F.lit(0).cast("long").alias("support_count"),
+        )
+    row_items = F.filter(
+        F.array(*[
+            F.when(
+                sv[i].isin(freq[i]),
+                F.struct(F.lit(i).alias("ci"),
+                         sv[i].alias("v")),
+            )
+            for i in sorted(freq)
+        ]),
+        lambda x: x.isNotNull(),
+    )
+    counted = (
+        df.select(row_items.alias("__items"))
+        .filter(F.size("__items") > 0)
+        .select(
+            "__items",
+            F.expr(
+                "explode(sequence(1, "
+                "shiftleft(1, size(__items)) - 1))"
+            ).alias("__mask"),
+        )
+        .select(F.expr(
+            "filter(__items, (x, i) -> "
+            "(shiftright(__mask, i) & 1) = 1)"
+        ).alias("__set"))
+        .groupBy("__set")
+        .agg(F.count(F.lit(1)).alias("support_count"))
+        .filter(F.col("support_count") >= thresh)
+    )
+    bm = F.map_from_entries("__set")
+    return counted.select(*[
+        F.when(
+            F.try_element_at(bm, F.lit(i)) == nullm,
+            F.lit(None).cast("string"),
+        ).otherwise(F.try_element_at(bm, F.lit(i)))
+        .alias(c)
+        for i, c in enumerate(cols)
+    ] + [F.col("support_count")])
+
+
+@_plugin("autocluster", 0, 1)
+def _ev_autocluster(df, args, **_):
+    """`evaluate autocluster([MinPercentFrac])` — Kusto's third
+    pattern-mining plugin (family: basket, diffpatterns): segments =
+    attribute-value patterns covering a large share of the input.
+    Documented subset of Kusto's seed-based search: ALL patterns of 1
+    and 2 columns above the coverage threshold (deterministic,
+    exhaustive at these sizes — the sizes that stay tractable without
+    the seed heuristic). Output = Kusto's shape: segment_id (0-based, by
+    coverage desc, stable tiebreak), count_, percent, then the input
+    columns with NULL marking a wildcard position. Same persist-once leg
+    loop as basket; the final ranking window runs over the tiny
+    above-threshold pattern set only."""
+    min_frac = args.number(0) if args else 0.05
+    from otel_arrow_spark.dataops.dedup import (
+        persist_registered,
+    )
+
+    df = persist_registered(df)
+    ac_total = max(df.count(), 1)
+    ac_thresh = max(int(ac_total * min_frac), 1)
+    cols = df.columns
+    legs = []
+
+    def _ac_leg(keys):
+        return (
+            df.groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("count_"))
+            .filter(F.col("count_") >= ac_thresh)
+            .select(*[
+                (F.col(c).cast("string") if c in keys
+                 else F.lit(None).cast("string")).alias(c)
+                for c in cols
+            ] + [F.col("count_")])
+        )
+
+    for i, c1 in enumerate(cols):
+        legs.append(_ac_leg([c1]))
+        for c2 in cols[i + 1:]:
+            legs.append(_ac_leg([c1, c2]))
+    out = legs[0]
+    for leg in legs[1:]:
+        out = out.unionByName(leg)
+    pattern_key = F.concat_ws(
+        "|", *[F.coalesce(F.col(c), F.lit("~*~"))
+               for c in cols]
+    )
+    w = Window.orderBy(
+        F.col("count_").desc(), pattern_key.asc()
+    )
+    return out.select(
+        (F.row_number().over(w) - 1).alias("segment_id"),
+        F.col("count_"),
+        F.round(
+            F.col("count_") / F.lit(float(ac_total)) * 100, 4
+        ).alias("percent"),
+        *cols,
+    )
+
+
+@_plugin("activity_engagement", 4, 6)
+def _ev_activity_engagement(df, args, **_):
+    """`evaluate activity_engagement(id, timeline, [datetime(start),
+    datetime(end),] inner, outer)` — the Kusto DAU/MAU plugin: per
+    inner-window slot, the ratio of distinct ids active in that slot to
+    distinct ids active in the TRAILING outer window ending at it. Shape
+    for scale: activity first collapses to DISTINCT (id, slot) — the
+    only relation the rest touches — then the trailing membership is a
+    bounded explode of k = outer/inner slot ids per activity row (k is a
+    query constant, e.g. 7 or 28), never a range self-join. Without
+    bounds, slots with no inner activity are not emitted (Kusto
+    behavior); WITH explicit Start/End bounds every slot in
+    [start//inner, end//inner] is emitted via a driver-range slot spine
+    left-join (zero dcounts, null ratio when the outer window is empty),
+    and records outside [start, end] are filtered first."""
+    if len(args) == 5:
+        raise KqlError(
+            "activity_engagement: pass both datetime(start) and "
+            "datetime(end), or neither")
+    bounded = len(args) == 6
+    idc, tc = args.col(0), args.col(1)
+    inner_s = args.timespan(-2)
+    outer_s = args.timespan(-1)
+    k = outer_s / inner_s
+    if k < 1 or abs(k - round(k)) > 1e-9:
+        raise KqlError(
+            "activity_engagement: OuterActivityWindow must "
+            "be a positive integer multiple of "
+            "InnerActivityWindow")
+    k = int(round(k))
+    from otel_arrow_spark.dataops.dedup import (
+        persist_registered,
+    )
+    src = df
+    if bounded:
+        ae_t0, ae_t1 = args.datetime(2), args.datetime(3)
+        ep = F.col(tc).cast("timestamp").cast("double")
+        src = df.filter((ep >= ae_t0) & (ep <= ae_t1))
+    slot = F.floor(
+        F.col(tc).cast("timestamp").cast("double")
+        / F.lit(float(inner_s))).cast("long")
+    # act feeds both dcounts — persist so the distinct
+    # shuffle runs once, not per consumer
+    act = persist_registered(src.select(
+        F.col(idc).alias("_id"), slot.alias("_slot")
+    ).distinct())
+    inner_d = act.groupBy("_slot").agg(
+        F.count_distinct("_id").alias(
+            "dcount_activities_inner"))
+    outer_d = (
+        act.select(
+            "_id",
+            F.explode(
+                F.sequence(
+                    F.col("_slot"),
+                    F.col("_slot") + F.lit(k - 1))
+            ).alias("_slot"))
+        .distinct()
+        .groupBy("_slot")
+        .agg(F.count_distinct("_id").alias(
+            "dcount_activities_outer"))
+    )
+    if bounded:
+        spine = df.sparkSession.range(
+            int(ae_t0 // inner_s), int(ae_t1 // inner_s) + 1
+        ).select(F.col("id").alias("_slot"))
+        joined = (
+            spine.join(inner_d, "_slot", "left")
+            .join(outer_d, "_slot", "left")
+            .select(
+                "_slot",
+                F.coalesce(
+                    "dcount_activities_inner", F.lit(0)
+                ).alias("dcount_activities_inner"),
+                F.coalesce(
+                    "dcount_activities_outer", F.lit(0)
+                ).alias("dcount_activities_outer"),
+            )
+        )
+    else:
+        joined = inner_d.join(outer_d, "_slot", "inner")
+    return joined.select(
+        F.timestamp_seconds(
+            F.col("_slot") * F.lit(float(inner_s))
+        ).cast("timestamp_ntz").alias(tc),
+        "dcount_activities_inner",
+        "dcount_activities_outer",
+        F.when(
+            F.col("dcount_activities_outer") > 0,
+            F.round(
+                F.col("dcount_activities_inner")
+                / F.col("dcount_activities_outer"), 6
+            ),
+        ).alias("activity_ratio"),
+    )
+
+
+@_plugin("ipv4_lookup", 3, 4)
+def _ev_ipv4_lookup(df, args, tables, **_):
+    """`evaluate ipv4_lookup(LookupTable, SourceIPColumn, IPNetworkColumn[,
+    return_unmatched])` — longest-prefix-match CIDR enrichment, the
+    classic distributed LPM join: the lookup table derives (mask len m,
+    prefix = ⌊net/2^(32−m)⌋); each DISTINCT source IP explodes into one
+    candidate (m, prefix) per mask length PRESENT in the table (≤33 by
+    IPv4 construction — the one bounded driver collect), equi-joins the
+    broadcast lookup (a dimension by contract), and a per-IP rank keeps
+    the longest mask (ties broken on the network string). The enriched
+    (ip → row) map then joins back on the IP key — never a theta/range
+    join."""
+    lut, ipc, netc, how = _ip_lookup_args(args, tables)
+    netp = F.split(F.col(netc), "/")
+    mlen = F.coalesce(
+        F.try_element_at(netp, F.lit(2)).try_cast("int"),
+        F.lit(32))
+    nint = _ip2long(F.try_element_at(netp, F.lit(1)))
+    lut2 = lut.withColumns({
+        "__m": mlen,
+        "__pref": F.floor(
+            nint / F.pow(F.lit(2.0), 32 - mlen)
+        ).cast("long"),
+    })
+    masks = sorted(
+        r[0] for r in
+        lut2.select("__m").distinct().collect()
+        if r[0] is not None)
+    if not masks:
+        raise KqlError("ipv4_lookup: empty lookup table")
+    ips = (
+        df.select(F.col(ipc).alias("__ip")).distinct()
+        .withColumn("__ipl", _ip2long(F.col("__ip")))
+    )
+    cand = ips.select(
+        "__ip",
+        F.explode(F.array(*[
+            F.struct(
+                F.lit(m).alias("__m"),
+                F.floor(
+                    F.col("__ipl")
+                    / F.lit(float(2 ** (32 - m)))
+                ).cast("long").alias("__pref"))
+            for m in masks])).alias("__c"),
+    ).select("__ip", "__c.__m", "__c.__pref")
+    matched = cand.join(
+        F.broadcast(lut2), ["__m", "__pref"], "inner")
+    wip = Window.partitionBy("__ip").orderBy(
+        F.col("__m").desc(), F.col(netc).asc())
+    best = (
+        matched.withColumn(
+            "__r", F.row_number().over(wip))
+        .filter(F.col("__r") == 1)
+        .drop("__m", "__pref", "__r", "__ipl")
+    )
+    for c in best.columns:
+        if c != "__ip" and c in df.columns:
+            best = best.withColumnRenamed(c, c + "1")
+    return df.join(
+        best, df[ipc] == best["__ip"], how
+    ).drop("__ip")
+
+
+@_plugin("ipv6_lookup", 3, 4)
+def _ev_ipv6_lookup(df, args, tables, **_):
+    """`evaluate ipv6_lookup(LookupTable, SourceIPColumn, IPNetworkColumn[,
+    return_unmatched])` — the IPv6 twin of ipv4_lookup's distributed
+    LPM: the lookup table derives (mask m, masked canonical prefix) per
+    network; each DISTINCT source IP parses its 16-bit groups ONCE
+    (`_ipv6_group_vals`) and derives one candidate canonical per mask
+    length PRESENT in the table (≤129 by construction — the one bounded
+    driver collect), equi-joins the broadcast lookup, and a per-IP rank
+    keeps the longest mask (ties on the network string). Enriched rows
+    join back on the IP key — never a theta join on the big side."""
+    lut, ipc, netc, how = _ip_lookup_args(args, tables)
+    netp = F.split(F.col(netc), "/")
+    mlen6 = F.coalesce(
+        F.try_element_at(netp, F.lit(2)).try_cast("int"),
+        F.lit(128))
+    lut2 = lut.withColumns({
+        "__m": mlen6,
+        "__pref": _parse_ipv6_masked(
+            F.try_element_at(netp, F.lit(1)), mlen6),
+    })
+    masks = sorted(
+        r[0] for r in
+        lut2.select("__m").distinct().collect()
+        if r[0] is not None)
+    if not masks:
+        raise KqlError("ipv6_lookup: empty lookup table")
+    ips = (
+        df.select(F.col(ipc).alias("__ip")).distinct()
+        .withColumn("__g", _ipv6_group_vals(F.col("__ip")))
+    )
+    cand = ips.select(
+        "__ip",
+        F.explode(F.array(*[
+            F.struct(
+                F.lit(m).alias("__m"),
+                _ipv6_canon_from_groups(
+                    F.col("__g"), F.lit(m)
+                ).alias("__pref"))
+            for m in masks])).alias("__c"),
+    ).select("__ip", "__c.__m", "__c.__pref")
+    matched = cand.join(
+        F.broadcast(lut2), ["__m", "__pref"], "inner")
+    wip = Window.partitionBy("__ip").orderBy(
+        F.col("__m").desc(), F.col(netc).asc())
+    best = (
+        matched.withColumn(
+            "__r", F.row_number().over(wip))
+        .filter(F.col("__r") == 1)
+        .drop("__m", "__pref", "__r")
+    )
+    for c in best.columns:
+        if c != "__ip" and c in df.columns:
+            best = best.withColumnRenamed(c, c + "1")
+    return df.join(
+        best, df[ipc] == best["__ip"], how
+    ).drop("__ip")
+
+
+@_plugin("active_users_count", 5, 5)
+def _ev_active_users_count(df, args, **_):
+    """`evaluate active_users_count(id, timeline, period, lookback,
+    min_active_periods)` — per period slot, the count of ids active in ≥
+    m DISTINCT periods of the trailing lookback window (Kusto's plugin
+    with its ActivePeriodsCount threshold). Same scale shape as
+    activity_engagement: distinct (id, slot) first, then a bounded
+    k=lookback/period explode carrying the SOURCE slot, so the
+    per-(target, id) aggregate counts distinct active periods; ids
+    crossing the threshold aggregate once more to the per-slot count."""
+    idc, tc = args.col(0), args.col(1)
+    per_s = args.timespan(2)
+    look_s = args.timespan(3)
+    k = look_s / per_s
+    if k < 1 or abs(k - round(k)) > 1e-9:
+        raise KqlError(
+            "active_users_count: LookbackWindow must be a "
+            "positive integer multiple of Period")
+    k, m = int(round(k)), args.integer(4)
+    if m > k:
+        raise KqlError(
+            "active_users_count: MinActivePeriods must be "
+            "in [1, lookback/period]")
+    slot = F.floor(
+        F.col(tc).cast("timestamp").cast("double")
+        / F.lit(float(per_s))).cast("long")
+    act = df.select(
+        F.col(idc).alias("_id"), slot.alias("_slot")
+    ).distinct()
+    # act is DISTINCT (id, slot), so after the explode each
+    # (target slot, id) row stands for one distinct active
+    # source period — a plain count IS the distinct-period
+    # count, no second distinct needed
+    spread = act.select(
+        "_id",
+        F.explode(F.sequence(
+            F.col("_slot"),
+            F.col("_slot") + F.lit(k - 1))).alias("_slot"))
+    per_id = spread.groupBy("_slot", "_id").agg(
+        F.count(F.lit(1)).alias("_np"))
+    return (
+        per_id.filter(F.col("_np") >= m)
+        .groupBy("_slot")
+        .agg(F.count(F.lit(1)).alias("dcount_values"))
+        .select(
+            F.timestamp_seconds(
+                F.col("_slot") * F.lit(float(per_s))
+            ).cast("timestamp_ntz").alias(tc),
+            "dcount_values")
+    )
+
+
+@_plugin("sliding_window_counts", 6, None)
+def _ev_sliding_window_counts(df, args, **_):
+    """`evaluate sliding_window_counts(id, timeline, datetime(start),
+    datetime(end), LookbackWindow, Bin [, dim…])` — per bin in [start,
+    end]: record count and distinct-id count over the trailing lookback
+    window (Kusto's plugin). Scale shape: one per-(slot, dims) aggregate
+    for counts and one DISTINCT (id, slot, dims) relation for dcounts,
+    each spread to its k = lookback/bin target bins by a bounded explode
+    (k is a query constant) — never a range self-join. The bin spine
+    (range × distinct dims — both small by plugin contract) left-joins
+    so empty bins emit zeros. Records in the pre-start lookback tail
+    [start − lookback + bin, start) seed the first bins (full Kusto
+    semantics): the slot filter keeps slot ≥ s0 − k + 1, and the target
+    sequence clamps to [s0, e0] so pre-start rows contribute without
+    emitting pre-start bins."""
+    idc, tc, dims = args.col(0), args.col(1), args.cols(6)
+    bin_s = args.timespan(5)
+    look_s = args.timespan(4)
+    k = look_s / bin_s
+    if k < 1 or abs(k - round(k)) > 1e-9:
+        raise KqlError(
+            "sliding_window_counts: LookbackWindow must be "
+            "a positive integer multiple of Bin")
+    k = int(round(k))
+    t0, t1 = args.datetime(2), args.datetime(3)
+    s0 = int(t0 // bin_s)
+    e0 = int(t1 // bin_s)
+    from otel_arrow_spark.dataops.dedup import (
+        persist_registered,
+    )
+    epoch = F.col(tc).cast("timestamp").cast("double")
+    slot_raw = F.floor(
+        epoch / F.lit(float(bin_s))).cast("long")
+    # ev feeds both the count and the distinct-id legs —
+    # persist so the filtered scan runs once; the lower
+    # bound admits the pre-start lookback tail
+    ev = persist_registered(
+        df.filter(
+            (epoch <= t1) & (slot_raw >= s0 - k + 1)
+        ).select(
+            *dims, F.col(idc).alias("_id"),
+            slot_raw.alias("_s")))
+    tgt = F.explode(F.sequence(
+        F.greatest(F.col("_s"), F.lit(s0)),
+        F.least(F.col("_s") + F.lit(k - 1), F.lit(e0)),
+    )).alias("_t")
+    cnts = (
+        ev.select(*dims, tgt)
+        .groupBy(*dims, "_t")
+        .agg(F.count(F.lit(1)).alias("count_"))
+    )
+    dcs = (
+        ev.distinct()
+        .select(*dims, "_id", tgt)
+        .groupBy(*dims, "_t")
+        .agg(F.count_distinct("_id").alias("dcount"))
+    )
+    spine = df.sparkSession.range(s0, e0 + 1).select(
+        F.col("id").alias("_t"))
+    if dims:
+        spine = spine.crossJoin(
+            ev.select(*dims).distinct())
+    return (
+        spine.join(cnts, ["_t", *dims], "left")
+        .join(dcs, ["_t", *dims], "left")
+        .select(
+            F.timestamp_seconds(
+                F.col("_t") * F.lit(float(bin_s))
+            ).cast("timestamp_ntz").alias(tc),
+            *dims,
+            F.coalesce("count_", F.lit(0)).alias("count_"),
+            F.coalesce("dcount", F.lit(0)).alias("dcount"),
+        )
+    )
+
+
+@_plugin("rolling_percentile", 5, None)
+def _ev_rolling_percentile(df, args, **_):
+    """`evaluate rolling_percentile(ValueColumn, Percentile, IndexColumn,
+    BinSize, BinsPerWindow [, dim…])` — per bin of the index column, the
+    EXACT percentile of the value over the trailing BinsPerWindow bins
+    (Kusto's plugin; exact rather than t-digest — F.percentile is a
+    single-pass partial aggregate and matches the DuckDB oracle's
+    quantile_cont bit-for-bit). Scale shape: each row spreads to its W
+    target bins by a bounded explode (W is a query constant), then ONE
+    hash aggregate per (bin, dims) — no range self-join, no per-row
+    window. Every bin the spread reaches is emitted (full Kusto
+    semantics): trailing and gap bins that only inherit lookback rows
+    get their percentile from the inherited window."""
+    vc, ic, dims = args.col(0), args.col(2), args.cols(5)
+    w = args.integer(4)
+    pct = args.number(1)
+    is_ts = dict(df.dtypes)[ic].startswith("timestamp")
+    if is_ts:
+        bin_s = args.timespan(3)
+        idx = F.col(ic).cast("timestamp").cast("double")
+    else:
+        bin_s = args.number(3)
+        idx = F.col(ic).cast("double")
+    slot = F.floor(idx / F.lit(bin_s)).cast("long")
+    spread = df.select(
+        *dims, F.col(vc).alias("_v"),
+        F.explode(F.sequence(
+            slot, slot + F.lit(w - 1)
+        )).alias("_t"))
+    out_name = (
+        f"rolling_{w}_percentile_{vc}_"
+        + (f"{pct:g}".replace(".", "_")))
+    agg = (
+        spread.groupBy(*dims, "_t")
+        .agg(F.percentile("_v", F.lit(pct / 100.0))
+             .alias(out_name))
+    )
+    bcol = (
+        F.timestamp_seconds(F.col("_t") * F.lit(bin_s))
+        .cast("timestamp_ntz") if is_ts
+        else (F.col("_t") * F.lit(bin_s))
+    ).alias(ic)
+    return agg.select(bcol, *dims, out_name)
+
+
+@_plugin("activity_counts_metrics", 5, 5)
+def _ev_activity_counts_metrics(df, args, **_):
+    """`evaluate activity_counts_metrics(id, timeline, datetime(start),
+    datetime(end), bin)` — per bin: record count, distinct ids,
+    first-ever-seen ids (new_dcount) and the running distinct total
+    (aggregated_dcount = ids seen so far ≡ cumulative sum of new). One
+    DISTINCT (id, slot) relation feeds everything; the only window is
+    the running sum over the BIN SPINE — a (end−start)/bin-row relation,
+    the skew-free small-relation global window (same shape as
+    training_order's bucket offsets)."""
+    idc, tc = args.col(0), args.col(1)
+    bin_s = args.timespan(4)
+    t0, t1 = args.datetime(2), args.datetime(3)
+    s0, e0 = int(t0 // bin_s), int(t1 // bin_s)
+    from otel_arrow_spark.dataops.dedup import (
+        persist_registered,
+    )
+    epoch = F.col(tc).cast("timestamp").cast("double")
+    base = persist_registered(
+        df.filter((epoch >= t0) & (epoch <= t1)).select(
+            F.col(idc).alias("_id"),
+            F.floor(epoch / F.lit(float(bin_s)))
+            .cast("long").alias("_s")))
+    per_bin = base.groupBy("_s").agg(
+        F.count(F.lit(1)).alias("count_"),
+        F.count_distinct("_id").alias("dcount"))
+    news = (
+        base.groupBy("_id").agg(F.min("_s").alias("_s"))
+        .groupBy("_s")
+        .agg(F.count(F.lit(1)).alias("new_dcount"))
+    )
+    spine = df.sparkSession.range(s0, e0 + 1).select(
+        F.col("id").alias("_s"))
+    wrun = Window.orderBy("_s").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow)
+    return (
+        spine.join(per_bin, "_s", "left")
+        .join(news, "_s", "left")
+        .select(
+            "_s",
+            F.coalesce("count_", F.lit(0)).alias("count_"),
+            F.coalesce("dcount", F.lit(0)).alias("dcount"),
+            F.coalesce("new_dcount", F.lit(0))
+            .alias("new_dcount"))
+        .withColumn(
+            "aggregated_dcount",
+            F.sum("new_dcount").over(wrun))
+        .select(
+            F.timestamp_seconds(
+                F.col("_s") * F.lit(float(bin_s))
+            ).cast("timestamp_ntz").alias(tc),
+            "count_", "dcount", "new_dcount",
+            "aggregated_dcount")
+    )
+
+
+@_plugin("session_count", 6, 6)
+def _ev_session_count(df, args, **_):
+    """`evaluate session_count(id, timeline, datetime(start),
+    datetime(end), Bin, LookBackWindow)` — active sessions per bin. A
+    session starts at an activity with no same-id activity in the
+    preceding LookBackWindow and stays active until LookBackWindow after
+    its last activity (this engine's precise rendering of Kusto's
+    plugin; boundary: gap strictly greater than the window starts a new
+    session). Shape: gap-sessionize per id (one lag+cumsum window, one
+    shuffle), one aggregate to session spans, then each span explodes to
+    the bins it covers — bounded by the query's own (End−Start)/Bin bin
+    count, never by data size."""
+    idc, tc = args.col(0), args.col(1)
+    bin_s = args.timespan(4)
+    look_s = args.timespan(5)
+    t0, t1 = args.datetime(2), args.datetime(3)
+    s0, e0 = int(t0 // bin_s), int(t1 // bin_s)
+    from otel_arrow_spark.operators.sequence import (
+        sessionize,
+    )
+    epoch = F.col(tc).cast("timestamp").cast("double")
+    base = df.filter((epoch >= t0) & (epoch <= t1)).select(
+        F.col(idc).alias("_id"), epoch.alias("_e"))
+    sess = sessionize(base, ["_id"], "_e", look_s)
+    spans = sess.groupBy("_id", "session_id").agg(
+        F.min("_e").alias("_st"),
+        F.max("_e").alias("_en"))
+    b0 = F.floor(
+        F.col("_st") / F.lit(float(bin_s))).cast("long")
+    b1 = F.least(
+        F.floor((F.col("_en") + F.lit(float(look_s)))
+                / F.lit(float(bin_s))).cast("long"),
+        F.lit(e0))
+    bins = spans.select(
+        F.explode(F.sequence(b0, b1)).alias("_t"))
+    counts = bins.groupBy("_t").agg(
+        F.count(F.lit(1)).alias("count_sessions"))
+    spine = df.sparkSession.range(s0, e0 + 1).select(
+        F.col("id").alias("_t"))
+    return (
+        spine.join(counts, "_t", "left")
+        .select(
+            F.timestamp_seconds(
+                F.col("_t") * F.lit(float(bin_s))
+            ).cast("timestamp_ntz").alias(tc),
+            F.coalesce("count_sessions", F.lit(0))
+            .alias("count_sessions"))
+    )
+
+
+@_plugin("new_activity_metrics", 5, None)
+def _ev_new_activity_metrics(df, args, **_):
+    """`evaluate new_activity_metrics(id, timeline, datetime(start),
+    datetime(end), window)` — cohort retention matrix: ids are cohorted
+    by the window of their FIRST activity; for every (from, to) pair the
+    plugin reports the cohort size, how many of the cohort were active
+    at `to`, and the retention/churn rates. Shape: first-activity
+    aggregate → cohort join back on id → one (cohort, slot) count; the
+    (from, to) spine is range×range (bins², small) left-joined so
+    silent-cohort bins emit zeros. Trailing bare column names are split
+    dimensions (Kusto's *dim variant): activity, cohorting, and the
+    spine all carry the dim tuple, so each dim combination gets its own
+    cohort matrix."""
+    idc, tc, nam_dims = args.col(0), args.col(1), args.cols(5)
+    win_s = args.timespan(4)
+    t0, t1 = args.datetime(2), args.datetime(3)
+    s0, e0 = int(t0 // win_s), int(t1 // win_s)
+    from otel_arrow_spark.dataops.dedup import (
+        persist_registered,
+    )
+    epoch = F.col(tc).cast("timestamp").cast("double")
+    act = persist_registered(
+        df.filter((epoch >= t0) & (epoch <= t1)).select(
+            *nam_dims,
+            F.col(idc).alias("_id"),
+            F.floor(epoch / F.lit(float(win_s)))
+            .cast("long").alias("_s")).distinct())
+    firsts = act.groupBy(*nam_dims, "_id").agg(
+        F.min("_s").alias("_from"))
+    cohort_n = firsts.groupBy(*nam_dims, "_from").agg(
+        F.count(F.lit(1)).alias("new_dcount"))
+    ret = (
+        act.join(firsts, [*nam_dims, "_id"])
+        .groupBy(*nam_dims, "_from",
+                 F.col("_s").alias("_to"))
+        .agg(F.count(F.lit(1)).alias("retained_dcount"))
+    )
+    sess = df.sparkSession
+    spine = (
+        sess.range(s0, e0 + 1).select(
+            F.col("id").alias("_from"))
+        .crossJoin(sess.range(s0, e0 + 1).select(
+            F.col("id").alias("_to")))
+        .filter(F.col("_to") >= F.col("_from"))
+    )
+    if nam_dims:
+        spine = spine.crossJoin(
+            act.select(*nam_dims).distinct())
+    return (
+        spine
+        .join(F.broadcast(cohort_n),
+              [*nam_dims, "_from"], "left")
+        .join(ret, [*nam_dims, "_from", "_to"], "left")
+        .select(
+            F.timestamp_seconds(
+                F.col("_from") * F.lit(float(win_s))
+            ).cast("timestamp_ntz").alias("from_" + tc),
+            F.timestamp_seconds(
+                F.col("_to") * F.lit(float(win_s))
+            ).cast("timestamp_ntz").alias("to_" + tc),
+            *nam_dims,
+            F.coalesce("new_dcount", F.lit(0))
+            .alias("new_dcount"),
+            F.coalesce("retained_dcount", F.lit(0))
+            .alias("retained_dcount"),
+            F.round(
+                F.coalesce("retained_dcount", F.lit(0))
+                / F.col("new_dcount"), 6
+            ).alias("retention_rate"),
+            F.round(
+                1 - F.coalesce("retained_dcount", F.lit(0))
+                / F.col("new_dcount"), 6
+            ).alias("churn_rate"),
+        )
+    )
+
+
+@_plugin("activity_metrics", 3, 5)
+def _ev_activity_metrics(df, args, **_):
+    """`evaluate activity_metrics(id, timeline, [datetime(start),
+    datetime(end),] window)` — per window slot: distinct actives,
+    first-ever-seen actives (new), retention rate (slot t-1 actives
+    still active in t / slot t-1 actives) and churn (1 − retention). All
+    from ONE distinct (id, slot) relation: new = min-slot-per-id
+    aggregate, retained = self equi-join on (id, slot-1) — no window
+    over ids, no range join. Without bounds, slots with no activity are
+    not emitted; WITH bounds every slot in [start//win, end//win] is
+    emitted via a driver-range spine left-join (zero dcounts, null
+    rates), with out-of-bounds records filtered first — the same bounded
+    contract as activity_engagement."""
+    if len(args) == 4:
+        raise KqlError(
+            "activity_metrics: pass both datetime(start) and "
+            "datetime(end), or neither")
+    bounded = len(args) == 5
+    idc, tc = args.col(0), args.col(1)
+    win_s = args.timespan(-1)
+    from otel_arrow_spark.dataops.dedup import (
+        persist_registered,
+    )
+    src = df
+    if bounded:
+        am_t0, am_t1 = args.datetime(2), args.datetime(3)
+        ep = F.col(tc).cast("timestamp").cast("double")
+        src = df.filter((ep >= am_t0) & (ep <= am_t1))
+    slot = F.floor(
+        F.col(tc).cast("timestamp").cast("double")
+        / F.lit(float(win_s))).cast("long")
+    # act feeds four consumers (dcounts, firsts, both
+    # sides of the retained self-join) — persist so the
+    # distinct shuffle runs once
+    act = persist_registered(src.select(
+        F.col(idc).alias("_id"), slot.alias("_slot")
+    ).distinct())
+    dcounts = act.groupBy("_slot").agg(
+        F.count(F.lit(1)).alias("dcount_values"))
+    firsts = act.groupBy("_id").agg(
+        F.min("_slot").alias("_slot"))
+    news = firsts.groupBy("_slot").agg(
+        F.count(F.lit(1)).alias("dcount_newvalues"))
+    nxt = act.select(
+        "_id", (F.col("_slot") + 1).alias("_slot"))
+    retained = act.join(nxt, ["_id", "_slot"]).groupBy(
+        "_slot").agg(F.count(F.lit(1)).alias("_ret"))
+    prev_d = dcounts.select(
+        (F.col("_slot") + 1).alias("_slot"),
+        F.col("dcount_values").alias("_prev"))
+    if bounded:
+        spine = df.sparkSession.range(
+            int(am_t0 // win_s), int(am_t1 // win_s) + 1
+        ).select(F.col("id").alias("_slot"))
+        base = spine.join(dcounts, "_slot", "left")
+    else:
+        base = dcounts
+    out = (
+        base
+        .join(news, "_slot", "left")
+        .join(retained, "_slot", "left")
+        .join(prev_d, "_slot", "left")
+    )
+    rr = F.when(
+        F.col("_prev").isNotNull(),
+        F.round(
+            F.coalesce(F.col("_ret"), F.lit(0))
+            / F.col("_prev"), 6))
+    return out.select(
+        F.timestamp_seconds(
+            F.col("_slot") * F.lit(float(win_s))
+        ).cast("timestamp_ntz").alias(tc),
+        F.coalesce(
+            F.col("dcount_values"), F.lit(0)
+        ).alias("dcount_values"),
+        F.coalesce(
+            F.col("dcount_newvalues"), F.lit(0)
+        ).alias("dcount_newvalues"),
+        rr.alias("retention_rate"),
+        F.when(rr.isNotNull(),
+               F.round(1 - rr, 6)).alias("churn_rate"),
+    )
+
+
+@_plugin("dcount_intersect", 2, 4)
+def _ev_dcount_intersect(df, args, **_):
+    """`evaluate dcount_intersect(hll_1, …, hll_n)` — Kusto's
+    set-intersection-cardinality plugin over hll() sketch columns: s_k =
+    |A_1 ∩ … ∩ A_{k+1}| by inclusion-exclusion over row-level sketch
+    unions (F.hll_union — sketches are fixed-size, so the whole
+    computation is per-row JVM codegen, no re-scan of the source rows:
+    the 100 TB shape where the heavy distinct work happened once in the
+    upstream hll() aggregate). Sparse-mode sketches make it exact at
+    gate scale (aggregates.md); estimates are clamped at ≥ 0."""
+    hcols = args.cols(0)
+    from itertools import combinations as _combos
+
+    def _union_est(sub: tuple) -> Column:
+        c = F.col(sub[0])
+        for x in sub[1:]:
+            c = F.hll_union(c, x)
+        return F.hll_sketch_estimate(c)
+
+    outs = {}
+    for k in range(1, len(hcols) + 1):
+        e = None
+        for r in range(1, k + 1):
+            for sub in _combos(hcols[:k], r):
+                t = _union_est(sub)
+                t = t if r % 2 == 1 else -t
+                e = t if e is None else e + t
+        outs[f"s{k - 1}"] = F.greatest(
+            e, F.lit(0)).cast("long")
+    keep = [c for c in df.columns if c not in hcols]
+    return df.select(
+        *keep,
+        *[outs[n].alias(n) for n in sorted(outs)])
+
+
+@_plugin("funnel_sequence_completion", 8, 8)
+def _ev_funnel_sequence_completion(df, args, **_):
+    """`evaluate funnel_sequence_completion(id, timeline, datetime(start),
+    datetime(end), Bin, state, dynamic(['s1', …]), dynamic([w1, …]))` —
+    per sequence PREFIX and per bin, how many ids completed that prefix
+    in the bin (the funnel-completion matrix). Prefix k completes at the
+    anchored-earliest chain's t_k with the FROM-FIRST bound t_k − t_1 ≤
+    w_k (each w_k a timespan literal, one per step). Shape: k chained
+    set-minima windows over ONE per-id Exchange (the from-first bound
+    references t_1, itself a partition constant — still pure windows, no
+    state machine), one per-id aggregate, then one small (step, bin)
+    count."""
+    idc, tc, statec = args.col(0), args.col(1), args.col(5)
+    seq = args.dynamic(6)
+    wins = args.dynamic(7, _timespan_secs)
+    if len(seq) < 1 or len(wins) not in (
+            len(seq), max(len(seq) - 1, 1)):
+        raise KqlError(
+            "funnel_sequence_completion: one max window "
+            "per step (or per transition)")
+    if len(wins) == len(seq) - 1:
+        # per-transition form → shift to per-step (the
+        # anchor step has no bound)
+        wins = [0.0] + wins
+    bin_s = args.timespan(4)
+    t0, t1e = args.datetime(2), args.datetime(3)
+    epoch = F.col(tc).cast("timestamp").cast("double")
+    base = df.filter((epoch >= t0) & (epoch <= t1e)).select(
+        F.col(idc).alias("_id"), epoch.alias("_e"),
+        F.col(statec).alias("_st"))
+    wid = Window.partitionBy("_id")
+    chain = base
+    prev_t = None
+    first_t = None
+    tcols = []
+    for i, s in enumerate(seq):
+        cond = F.col("_st") == s
+        if prev_t is not None:
+            cond = cond & (F.col("_e") > prev_t) & (
+                F.col("_e")
+                <= first_t + F.lit(float(wins[i])))
+        col = f"_t{i}"
+        chain = chain.withColumn(
+            col, F.min(F.when(cond, F.col("_e"))).over(wid))
+        prev_t = F.col(col)
+        if first_t is None:
+            first_t = F.col(col)
+        tcols.append(col)
+    per_id = chain.groupBy("_id").agg(
+        *[F.min(c).alias(c) for c in tcols])
+    legs = []
+    for i, s in enumerate(seq):
+        legs.append(
+            per_id.filter(F.col(tcols[i]).isNotNull())
+            .select(
+                F.lit(s).alias(statec),
+                F.floor(
+                    F.col(tcols[i]) / F.lit(float(bin_s))
+                ).cast("long").alias("_b"))
+        )
+    out = legs[0]
+    for leg in legs[1:]:
+        out = out.unionByName(leg)
+    return out.groupBy(statec, "_b").agg(
+        F.count(F.lit(1)).alias("dcount")
+    ).select(
+        F.timestamp_seconds(
+            F.col("_b") * F.lit(float(bin_s))
+        ).cast("timestamp_ntz").alias(tc),
+        statec, "dcount")
+
+
+@_plugin("funnel_sequence", 7, 7)
+def _ev_funnel_sequence(df, args, **_):
+    """`evaluate funnel_sequence(id, timeline, datetime(start),
+    datetime(end), MaxStepWindow, state, dynamic(['s1', 's2', …]))` —
+    for ids that performed the state sequence (anchored-earliest chain,
+    adjacent steps within MaxStepWindow), the distribution of the state
+    just BEFORE the sequence and just AFTER it — Kusto's funnel context
+    plugin. Shape: the chain is funnel_steps' set-minima (N windows over
+    ONE per-id Exchange — no sort, no state machine); prev/next are two
+    max_by/min_by aggregates against the completed-id anchors. Ties in
+    the timeline break on the state value (documented; keeps both
+    engines deterministic)."""
+    idc, tc, statec = args.col(0), args.col(1), args.col(5)
+    seq = args.dynamic(6)
+    if len(seq) < 2:
+        raise KqlError(
+            "funnel_sequence: the sequence needs ≥ 2 states")
+    win_s = args.timespan(4)
+    t0, t1 = args.datetime(2), args.datetime(3)
+    from otel_arrow_spark.dataops.dedup import (
+        persist_registered,
+    )
+    epoch = F.col(tc).cast("timestamp").cast("double")
+    # base feeds the chain windows AND both context lookups
+    base = persist_registered(
+        df.filter((epoch >= t0) & (epoch <= t1)).select(
+            F.col(idc).alias("_id"),
+            epoch.alias("_e"),
+            F.col(statec).alias("_st")))
+    wid = Window.partitionBy("_id")
+    chain = base
+    prev_t = None
+    tcols = []
+    for i, s in enumerate(seq):
+        cond = F.col("_st") == s
+        if prev_t is not None:
+            cond = cond & (F.col("_e") > prev_t) & (
+                F.col("_e") <= prev_t + F.lit(float(win_s)))
+        col = f"_t{i}"
+        chain = chain.withColumn(
+            col, F.min(F.when(cond, F.col("_e"))).over(wid))
+        prev_t = F.col(col)
+        tcols.append(col)
+    anchors = (
+        chain.groupBy("_id")
+        .agg(F.min(tcols[0]).alias("_first"),
+             F.min(tcols[-1]).alias("_last"))
+        .filter(F.col("_last").isNotNull())
+    )
+    prevs = (
+        base.join(anchors, "_id")
+        .filter(F.col("_e") < F.col("_first"))
+        .groupBy("_id")
+        .agg(F.max_by(
+            "_st", F.struct("_e", "_st")).alias("prev"))
+    )
+    nexts = (
+        base.join(anchors, "_id")
+        .filter(F.col("_e") > F.col("_last"))
+        .groupBy("_id")
+        .agg(F.min_by(
+            "_st", F.struct("_e", "_st")).alias("next"))
+    )
+    return (
+        anchors
+        .join(prevs, "_id", "left")
+        .join(nexts, "_id", "left")
+        .groupBy("prev", "next")
+        .agg(F.count_distinct("_id").alias("dcount"))
+    )
+
+
+@_plugin("sequence_detect", 5, None)
+def _ev_sequence_detect(df, args, pe, **_):
+    """`evaluate sequence_detect(timeline, stepWindow, maxDuration, step1,
+    step2, …, key1, …)` — steps are boolean columns/expressions (or
+    `name = pred` extensions), trailing bare names of non-boolean input
+    columns are the partition keys (the Kusto argument order makes this
+    split unambiguous). Compiles to chained window set-minima
+    (operators/sequence.py sequence_detect; anchored-earliest subset
+    documented there)."""
+    from otel_arrow_spark.operators.sequence import (
+        sequence_detect,
+    )
+    timeline = args.col(0)
+    win_s = args.timespan(1)
+    dur_s = args.timespan(2)
+    bool_cols = {
+        f.name for f in df.schema.fields
+        if f.dataType.typeName() == "boolean"
+    }
+    rest_parts = args[3:]
+    keys: list[str] = []
+    while rest_parts and re.fullmatch(
+            r"[A-Za-z_]\w*", rest_parts[-1]) and \
+            rest_parts[-1] in df.columns and \
+            rest_parts[-1] not in bool_cols:
+        keys.insert(0, rest_parts.pop())
+    if not keys:
+        raise KqlError(
+            "sequence_detect needs at least one trailing "
+            "key column (non-boolean input column)")
+    if len(rest_parts) < 2:
+        raise KqlError(
+            "sequence_detect needs at least two steps")
+    steps = []
+    for i, p in enumerate(rest_parts):
+        nm, ex = None, p
+        for an, ae in _parse_assignments(p):
+            nm, ex = an, ae
+        name = nm or (
+            ex if re.fullmatch(r"[A-Za-z_]\w*", ex.strip())
+            else f"expr{i + 1}")
+        steps.append(
+            (name.strip(), pe(ex).cast("boolean")))
+    return sequence_detect(
+        df, keys, timeline, win_s, dur_s, steps)
+
+
+@_plugin("diffpatterns_text", 2, 3)
+def _ev_diffpatterns_text(df, args, pe, **_):
+    """`evaluate diffpatterns_text(text_col, split_pred [, top_k])` —
+    Kusto's text-cohort diff plugin, re-expressed as its documented
+    token-level subset: whitespace-tokenize the text, count LINES
+    containing each distinct token in the split=true (1) vs split=false
+    (2) cohorts, and return the top_k tokens (default 32) by |Percent1 −
+    Percent2| (Kusto mines multi-token wildcard patterns seeded from the
+    same per-token divergences; single tokens are the deterministic,
+    exhaustive core of that search). Shape follows Kusto: Count1,
+    Count2, Percent1, Percent2, Pattern. All JVM: split → array_distinct
+    → explode → one conditional aggregate; the two cohort totals ride
+    the same pass as a grand-total row."""
+    dt_text = pe(args[0]).cast("string")
+    dt_pred = pe(args[1]).cast("boolean")
+    dt_k = args.integer(2) if len(args) == 3 else 32
+    toks = F.array_distinct(F.filter(
+        F.split(F.coalesce(dt_text, F.lit("")), r"\s+"),
+        lambda t: t != ""))
+    base = df.select(
+        dt_pred.alias("__in1"),
+        # grand-total sentinel rides as one extra token so
+        # cohort sizes come out of the SAME aggregate
+        F.array_union(
+            toks, F.array(F.lit(" total"))
+        ).alias("__toks"))
+    tok = base.select(
+        "__in1",
+        F.explode("__toks").alias("Pattern"))
+    counted = tok.groupBy("Pattern").agg(
+        F.count_if(F.col("__in1")).alias("Count1"),
+        F.count_if(~F.col("__in1")).alias("Count2"))
+    tot = F.broadcast(
+        counted.filter(F.col("Pattern") == " total")
+        .select(F.col("Count1").alias("__t1"),
+                F.col("Count2").alias("__t2")))
+    scored = (
+        counted.filter(F.col("Pattern") != " total")
+        .crossJoin(tot)
+        .select(
+            "Count1", "Count2",
+            F.round(100.0 * F.col("Count1")
+                    / F.greatest("__t1", F.lit(1)), 4)
+            .alias("Percent1"),
+            F.round(100.0 * F.col("Count2")
+                    / F.greatest("__t2", F.lit(1)), 4)
+            .alias("Percent2"),
+            "Pattern"))
+    return (
+        scored
+        # round the rank key too: 100−33.3333 and
+        # 66.6667−0 must TIE, not differ in the last ulp
+        .orderBy(
+            F.round(F.abs(F.col("Percent1")
+                          - F.col("Percent2")), 4).desc(),
+            F.col("Pattern"))
+        .limit(dt_k))
+
+
+@_plugin("diffpatterns", 1, 2)
+def _ev_diffpatterns(df, args, pe, **_):
+    """`evaluate diffpatterns(split_pred [, max_size])` — the Kusto
+    cohort-comparison plugin: for every column subset of size ≤ max_size
+    (default 1) of the input's non-split columns, report
+    per-value-combination counts and cohort fractions in the split=true
+    (A) vs split=false (B) cohorts, with the fraction delta. max_size ≤
+    2 runs one map-side-combinable conditional aggregation per leg;
+    max_size ≥ 3 switches to a single-shuffle bitmask-explode over all
+    subsets (bounded by an 8-column cap). Long-form stacked output (the
+    facet shape; a multi-column pattern renders as pattern_column
+    "c1&c2…" with '&'-joined values, NULLs marked). The projected input
+    is persisted across the passes (the cohort-total action warms it);
+    released via release_caches()."""
+    max_size = args.integer(1) if len(args) == 2 else 1
+    from otel_arrow_spark.dataops.dedup import (
+        persist_registered,
+    )
+
+    pred = pe(args[0]).cast("boolean")
+    base = persist_registered(df.withColumn("_split", pred))
+    na = F.sum(F.when(F.col("_split"), 1).otherwise(0))
+    nb = F.sum(F.when(~F.col("_split"), 1).otherwise(0))
+    tot = base.agg(na.alias("na"), nb.alias("nb")).collect()[0]
+    ta, tb = max(tot.na, 1), max(tot.nb, 1)
+
+    def _null_marked(c: str) -> Column:
+        return F.coalesce(
+            F.col(c).cast("string"), F.lit("~null~")
+        )
+
+    def _dp_leg(pat_name: Column, value: Column, keys):
+        return (
+            base.groupBy(*keys)
+            .agg(na.alias("count_a"), nb.alias("count_b"))
+            .select(
+                pat_name.alias("pattern_column"),
+                value.alias("value"),
+                "count_a",
+                "count_b",
+                F.round(F.col("count_a") / F.lit(ta), 6)
+                .alias("pct_a"),
+                F.round(F.col("count_b") / F.lit(tb), 6)
+                .alias("pct_b"),
+                F.round(
+                    F.col("count_a") / F.lit(ta)
+                    - F.col("count_b") / F.lit(tb), 6
+                ).alias("diff"),
+            )
+        )
+
+    if max_size > 2:
+        # arbitrary-subset mining, ONE shuffle: each row
+        # explodes into its column subsets of size ≤
+        # max_size via a constant-folded bitmask list
+        # (Σ C(ncols, k) per row — hence the explicit
+        # column cap), then a single grouped conditional
+        # aggregation on the canonical column-ordered
+        # subset array covers every pattern at once.
+        dpcols = df.columns
+        if len(dpcols) > 8:
+            raise KqlError(
+                "diffpatterns with max_size > 2 supports "
+                "at most 8 input columns — project the "
+                "candidate dimensions first"
+            )
+        nmc = len(dpcols)
+        names_arr = F.array(*[F.lit(c) for c in dpcols])
+        items = F.array(*[
+            F.struct(F.lit(i).alias("ci"),
+                     F.col(c).cast("string").alias("v"))
+            for i, c in enumerate(dpcols)
+        ])
+        sub = (
+            base.select(items.alias("__items"), "_split")
+            .select(
+                "__items", "_split",
+                F.expr(
+                    f"explode(filter(sequence(1, "
+                    f"shiftleft(1, {nmc}) - 1), mk -> "
+                    f"bit_count(mk) <= {max_size}))"
+                ).alias("__mask"),
+            )
+            .select(
+                "_split",
+                F.expr(
+                    "filter(__items, (x, i) -> "
+                    "(shiftright(__mask, i) & 1) = 1)"
+                ).alias("__set"),
+            )
+            .groupBy("__set")
+            .agg(na.alias("count_a"), nb.alias("count_b"))
+        )
+        setc = F.col("__set")
+        pat = F.array_join(
+            F.transform(
+                setc,
+                lambda x: F.element_at(names_arr,
+                                       x["ci"] + 1)),
+            "&")
+        val = F.when(
+            F.size(setc) == 1, F.element_at(setc, 1)["v"]
+        ).otherwise(F.array_join(
+            F.transform(
+                setc,
+                lambda x: F.coalesce(x["v"],
+                                     F.lit("~null~"))),
+            "&"))
+        return sub.select(
+            pat.alias("pattern_column"),
+            val.alias("value"),
+            "count_a",
+            "count_b",
+            F.round(F.col("count_a") / F.lit(ta), 6)
+            .alias("pct_a"),
+            F.round(F.col("count_b") / F.lit(tb), 6)
+            .alias("pct_b"),
+            F.round(
+                F.col("count_a") / F.lit(ta)
+                - F.col("count_b") / F.lit(tb), 6
+            ).alias("diff"),
+        )
+    legs = [
+        _dp_leg(F.lit(c), F.col(c).cast("string"), [c])
+        for c in df.columns
+    ]
+    if max_size == 2:
+        dpcols = df.columns
+        for i, c1 in enumerate(dpcols):
+            for c2 in dpcols[i + 1:]:
+                legs.append(_dp_leg(
+                    F.lit(f"{c1}&{c2}"),
+                    F.concat_ws(
+                        "&",
+                        _null_marked(c1), _null_marked(c2),
+                    ),
+                    [c1, c2],
+                ))
+    out = legs[0]
+    for leg in legs[1:]:
+        out = out.unionByName(leg)
+    return out
+
+
+@_plugin("bag_unpack", 1, None)
+def _ev_bag_unpack(df, args, bindings, **_):
+    """`evaluate bag_unpack(expr [, "k1[:type]", …])` — expand a dynamic
+    (VARIANT) property bag into columns. With an explicit key list this
+    is ONE narrow projection (`try_variant_get` per key — the 100 TB
+    shape). Without one, a key-discovery aggregation runs first
+    (distinct json keys — same two-job cost profile as value-less pivot;
+    keys sorted for determinism)."""
+    src = args[0]
+    bag = parse_expr_ke(src, bindings)
+    is_var_col = (
+        src in df.columns
+        and df.schema[src].dataType.typeName() == "variant"
+    )
+    if not (bag.variant or is_var_col):
+        raise KqlError(
+            "bag_unpack needs a dynamic value — wrap the "
+            "column in parse_json(...)"
+        )
+    if len(args) > 1:
+        specs = []
+        for p in args[1:]:
+            s = _unquote(p)
+            name, _, typ = s.partition(":")
+            specs.append((name, typ or "string"))
+    else:
+        # implicit key inference: every distinct key becomes
+        # a column, so the discovery is bounded — an
+        # adversarial high-cardinality bag would otherwise
+        # OOM the driver AND produce an absurd schema. A
+        # clear error beats both; pass explicit keys (the
+        # scale path) when a bag legitimately has many.
+        max_keys = 1000
+        keyrows = (
+            df.select(F.explode(F.json_object_keys(
+                F.to_json(bag.col))).alias("k"))
+            .distinct().limit(max_keys + 1).collect()
+        )
+        if len(keyrows) > max_keys:
+            raise KqlError(
+                f"bag_unpack({src}) found more than "
+                f"{max_keys} distinct keys — pass an "
+                "explicit key list: bag_unpack(expr, "
+                '"k1", "k2", …)'
+            )
+        specs = sorted((r.k, "string") for r in keyrows)
+    clash = [n for n, _ in specs if n in df.columns]
+    if clash:
+        raise KqlError(
+            f"bag_unpack key(s) {clash} collide with "
+            "existing columns"
+        )
+    # a bare-column source disappears from the output
+    # (Kusto bag_unpack contract)
+    keep = [c for c in df.columns if c != src]
+    return df.select(
+        *keep,
+        *[F.try_variant_get(bag.col, f"$.{n}", t).alias(n)
+          for n, t in specs],
+    )
+
+
+@_plugin("pivot", 2, None)
+def _ev_pivot(df, args, pe, **_):
+    """`evaluate pivot(pivotCol, agg() [, v1, v2, …])` — the KQL pivot
+    plugin: remaining columns become group keys, one output column per
+    pivot value. With an explicit value list the plan is a single hash
+    aggregation (the 100 TB shape); without one Spark first runs a
+    distinct-values job on the pivot column (documented cost), then
+    sorts the discovered values so column order is deterministic."""
+    pcol, aggsrc = args.col(0), args[1]
+    if not re.fullmatch(r"[A-Za-z_]\w*\s*\(.*\)", aggsrc, re.S):
+        raise KqlError(f"pivot: {aggsrc!r} is not an aggregate call")
+    vals = None
+    if len(args) > 2:
+        vals = [
+            _unquote(v) if _STR_LIT_RE.fullmatch(v) else v
+            for v in args[2:]
+        ]
+    # group keys = every column except the pivot column and the
+    # aggregate's inputs (KQL pivot plugin contract). Only
+    # tokens that are genuine COLUMN references may knock a
+    # column out of the key set: strip string literals first
+    # (a literal containing the word "count" must not drop a
+    # `count` column) and skip tokens used as function names
+    # (`count()` the aggregate vs `count` the column).
+    no_lits = _STR_LIT_RE.sub(" ", aggsrc)
+    agg_cols = {
+        m.group(1)
+        for m in re.finditer(r"([A-Za-z_]\w*)\s*(\()?", no_lits)
+        if m.group(2) is None
+    }
+    keys = [
+        c for c in df.columns if c != pcol and c not in agg_cols
+    ]
+    gb = df.groupBy(*keys)
+    piv = gb.pivot(pcol, vals) if vals is not None else gb.pivot(pcol)
+    return piv.agg(pe(aggsrc))
+
+
+
 def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                   tables: dict[str, DataFrame] | None = None) -> DataFrame:
     from otel_arrow_spark.operators import kql as ops
@@ -6850,1643 +8409,8 @@ def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                 cond = piece if cond is None else (cond | piece)
             df = df.filter(cond)
         elif op == "evaluate":
-            mnar = re.match(r"^narrow\s*\(\s*\)\s*$", rest)
-            if mnar:
-                # `evaluate narrow()` — transpose each row to
-                # (Row, Column, Value-as-string) triples (the Kusto
-                # plugin). Row is the 0-based index in the serialized
-                # order, so like the other serialized-window ops it
-                # requires `sort by …` first; the transpose itself is
-                # one explode over a per-row literal struct array
-                # (narrow, no extra shuffle beyond the serialize
-                # window). Use on small/aggregated relations — the Row
-                # index is a global window by construction, exactly
-                # KQL's serialized-table semantics.
-                if wspec_before is None:
-                    raise KqlError(
-                        "evaluate narrow() requires a serialized row "
-                        "set: `sort by …` first"
-                    )
-                entries = F.array(*[
-                    F.struct(
-                        F.lit(c).alias("Column"),
-                        F.col(c).cast("string").alias("Value"),
-                    )
-                    for c in df.columns
-                ])
-                # Row must bind BEFORE the explode (same-select windows
-                # evaluate after Generate — measured: Row would then
-                # number the exploded triples, not the source rows)
-                df = df.select(
-                    (F.row_number().over(wspec_before) - 1).alias("Row"),
-                    entries.alias("_es"),
-                ).select(
-                    "Row", F.explode("_es").alias("_e")
-                ).select("Row", "_e.Column", "_e.Value")
-                continue
-            mrn = re.match(
-                r"^rows_near\s*\((.*?),\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)"
-                r"\s*$", rest, re.S)
-            if mrn:
-                # `evaluate rows_near(Condition, NumRows[, RowsAfter])`
-                # — keep every row within NumRows before / RowsAfter
-                # (default NumRows) after any row satisfying Condition,
-                # in the serialized order (Kusto's context-rows
-                # plugin; reference grammar has no scan/rows_near — this
-                # is the beyond-reference log-forensics shape). One
-                # Window over the serialize order: row i survives iff
-                # some condition row j exists with j−before ≤ i ≤
-                # j+after ⇔ j ∈ [i−after, i+before], i.e. max(cond)
-                # over ROWS BETWEEN after PRECEDING AND before
-                # FOLLOWING — a single bounded frame, no self-join, no
-                # explode. Like the other serialized ops it requires
-                # `sort by …` (or `serialize by …`) first; output order
-                # must be re-stated downstream (evaluate clears it).
-                if wspec_before is None:
-                    raise KqlError(
-                        "evaluate rows_near() requires a serialized "
-                        "row set: `sort by …` first")
-                cond_src, before_s, after_s = mrn.groups()
-                before = int(before_s)
-                after = int(after_s) if after_s is not None else before
-                flag = F.when(pe(cond_src), 1).otherwise(0)
-                near = F.max(flag).over(
-                    wspec_before.rowsBetween(-after, before))
-                df = (
-                    df.withColumn("_near", near)
-                    .filter(F.col("_near") == 1)
-                    .drop("_near")
-                )
-                continue
-            mbsk = re.match(r"^basket\s*\(\s*([0-9.]*)\s*\)\s*$", rest)
-            if mbsk:
-                # `evaluate basket(SupportFrac)` — frequent itemset
-                # mining over the (categorical) input columns at
-                # ARBITRARY itemset size, two-pass FP-growth-shaped:
-                #
-                #   pass 1 (Apriori base): ONE melt + aggregate finds
-                #     the frequent single (column, value) items; the
-                #     driver collect is bounded (≤ ncols/frac items can
-                #     clear the support floor) and broadcasts back as
-                #     literal isin lists;
-                #   pass 2: each row keeps only its frequent items
-                #     (anti-monotonicity: every member of a frequent
-                #     itemset is itself frequent, so nothing is lost),
-                #     then a bitmask explode emits the row's 2^m − 1
-                #     sub-itemsets (m ≤ ncols ≤ 12 — Kusto's own
-                #     MaxDimensions default is 5) and ONE shuffle on
-                #     the canonical column-ordered itemset array
-                #     counts supports.
-                #
-                # NULL in the output marks a wildcard position (Kusto's
-                # shape); a genuinely-NULL frequent value is kept as an
-                # item via an internal marker and renders as NULL too
-                # (same ambiguity as the plain groupBy it replaces).
-                frac = float(mbsk.group(1) or 0.05)
-                from otel_arrow_spark.dataops.dedup import (
-                    persist_registered,
-                )
-
-                cols = df.columns
-                if len(cols) > 12:
-                    raise KqlError(
-                        "basket supports at most 12 input columns — "
-                        "project the candidate dimensions first"
-                    )
-                # persist the (already-projected) input across the two
-                # passes; the total-count action doubles as the
-                # cache-warming pass; released by release_caches().
-                df = persist_registered(df)
-                total = df.count()
-                thresh = max(int(total * frac), 1)
-                nullm = "\x00null\x00"
-                sv = [
-                    F.coalesce(F.col(c).cast("string"), F.lit(nullm))
-                    for c in cols
-                ]
-                freq_rows = (
-                    df.select(F.explode(F.array(*[
-                        F.struct(F.lit(i).alias("ci"), v.alias("v"))
-                        for i, v in enumerate(sv)])).alias("it"))
-                    .groupBy("it.ci", "it.v")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .filter(F.col("n") >= thresh)
-                    .collect()
-                )
-                freq: dict[int, list[str]] = {}
-                for r in freq_rows:
-                    freq.setdefault(r.ci, []).append(r.v)
-                if not freq:
-                    df = df.limit(0).select(
-                        *[F.col(c).cast("string").alias(c)
-                          for c in cols],
-                        F.lit(0).cast("long").alias("support_count"),
-                    )
-                    continue
-                row_items = F.filter(
-                    F.array(*[
-                        F.when(
-                            sv[i].isin(freq[i]),
-                            F.struct(F.lit(i).alias("ci"),
-                                     sv[i].alias("v")),
-                        )
-                        for i in sorted(freq)
-                    ]),
-                    lambda x: x.isNotNull(),
-                )
-                counted = (
-                    df.select(row_items.alias("__items"))
-                    .filter(F.size("__items") > 0)
-                    .select(
-                        "__items",
-                        F.expr(
-                            "explode(sequence(1, "
-                            "shiftleft(1, size(__items)) - 1))"
-                        ).alias("__mask"),
-                    )
-                    .select(F.expr(
-                        "filter(__items, (x, i) -> "
-                        "(shiftright(__mask, i) & 1) = 1)"
-                    ).alias("__set"))
-                    .groupBy("__set")
-                    .agg(F.count(F.lit(1)).alias("support_count"))
-                    .filter(F.col("support_count") >= thresh)
-                )
-                bm = F.map_from_entries("__set")
-                df = counted.select(*[
-                    F.when(
-                        F.try_element_at(bm, F.lit(i)) == nullm,
-                        F.lit(None).cast("string"),
-                    ).otherwise(F.try_element_at(bm, F.lit(i)))
-                    .alias(c)
-                    for i, c in enumerate(cols)
-                ] + [F.col("support_count")])
-                continue
-            mac = re.match(r"^autocluster\s*\(\s*([0-9.]*)\s*\)\s*$", rest)
-            if mac:
-                # `evaluate autocluster([MinPercentFrac])` — Kusto's
-                # third pattern-mining plugin (family: basket,
-                # diffpatterns): segments = attribute-value patterns
-                # covering a large share of the input. Documented
-                # subset of Kusto's seed-based search: ALL patterns of
-                # 1 and 2 columns above the coverage threshold
-                # (deterministic, exhaustive at these sizes — the sizes
-                # that stay tractable without the seed heuristic).
-                # Output = Kusto's shape: segment_id (0-based, by
-                # coverage desc, stable tiebreak), count_, percent,
-                # then the input columns with NULL marking a wildcard
-                # position. Same persist-once leg loop as basket; the
-                # final ranking window runs over the tiny
-                # above-threshold pattern set only.
-                min_frac = float(mac.group(1) or 0.05)
-                from otel_arrow_spark.dataops.dedup import (
-                    persist_registered,
-                )
-
-                df = persist_registered(df)
-                ac_total = max(df.count(), 1)
-                ac_thresh = max(int(ac_total * min_frac), 1)
-                cols = df.columns
-                legs = []
-
-                def _ac_leg(keys):
-                    return (
-                        df.groupBy(*keys)
-                        .agg(F.count(F.lit(1)).alias("count_"))
-                        .filter(F.col("count_") >= ac_thresh)
-                        .select(*[
-                            (F.col(c).cast("string") if c in keys
-                             else F.lit(None).cast("string")).alias(c)
-                            for c in cols
-                        ] + [F.col("count_")])
-                    )
-
-                for i, c1 in enumerate(cols):
-                    legs.append(_ac_leg([c1]))
-                    for c2 in cols[i + 1:]:
-                        legs.append(_ac_leg([c1, c2]))
-                out = legs[0]
-                for leg in legs[1:]:
-                    out = out.unionByName(leg)
-                pattern_key = F.concat_ws(
-                    "|", *[F.coalesce(F.col(c), F.lit("~*~"))
-                           for c in cols]
-                )
-                w = Window.orderBy(
-                    F.col("count_").desc(), pattern_key.asc()
-                )
-                df = out.select(
-                    (F.row_number().over(w) - 1).alias("segment_id"),
-                    F.col("count_"),
-                    F.round(
-                        F.col("count_") / F.lit(float(ac_total)) * 100, 4
-                    ).alias("percent"),
-                    *cols,
-                )
-                continue
-            mae = re.match(
-                r"^activity_engagement\s*\(\s*([A-Za-z_]\w*)\s*,"
-                r"\s*([A-Za-z_]\w*)\s*,"
-                r"(?:\s*datetime\(([^)]*)\)\s*,\s*datetime\(([^)]*)\)"
-                r"\s*,)?"
-                r"\s*([\w.]+)\s*,\s*([\w.]+)"
-                r"\s*\)\s*$", rest)
-            if mae:
-                # `evaluate activity_engagement(id, timeline,
-                # [datetime(start), datetime(end),] inner, outer)` —
-                # the Kusto DAU/MAU plugin: per inner-window slot, the
-                # ratio of distinct ids active in that slot to distinct
-                # ids active in the TRAILING outer window ending at it.
-                # Shape for scale: activity first collapses to DISTINCT
-                # (id, slot) — the only relation the rest touches —
-                # then the trailing membership is a bounded explode of
-                # k = outer/inner slot ids per activity row (k is a
-                # query constant, e.g. 7 or 28), never a range
-                # self-join. Without bounds, slots with no inner
-                # activity are not emitted (Kusto behavior); WITH
-                # explicit Start/End bounds every slot in
-                # [start//inner, end//inner] is emitted via a
-                # driver-range slot spine left-join (zero dcounts, null
-                # ratio when the outer window is empty), and records
-                # outside [start, end] are filtered first.
-                (idc, tc, ae_st, ae_en,
-                 inner_src, outer_src) = mae.groups()
-                for c in (idc, tc):
-                    if c not in df.columns:
-                        raise KqlError(
-                            f"activity_engagement: no column {c!r}")
-                inner_s = _timespan_secs(inner_src)
-                outer_s = _timespan_secs(outer_src)
-                k = outer_s / inner_s
-                if k < 1 or abs(k - round(k)) > 1e-9:
-                    raise KqlError(
-                        "activity_engagement: OuterActivityWindow must "
-                        "be a positive integer multiple of "
-                        "InnerActivityWindow")
-                k = int(round(k))
-                from otel_arrow_spark.dataops.dedup import (
-                    persist_registered,
-                )
-                src = df
-                if ae_st is not None:
-                    ae_t0 = _plugin_epoch(ae_st)
-                    ae_t1 = _plugin_epoch(ae_en)
-                    ep = F.col(tc).cast("timestamp").cast("double")
-                    src = df.filter((ep >= ae_t0) & (ep <= ae_t1))
-                slot = F.floor(
-                    F.col(tc).cast("timestamp").cast("double")
-                    / F.lit(float(inner_s))).cast("long")
-                # act feeds both dcounts — persist so the distinct
-                # shuffle runs once, not per consumer
-                act = persist_registered(src.select(
-                    F.col(idc).alias("_id"), slot.alias("_slot")
-                ).distinct())
-                inner_d = act.groupBy("_slot").agg(
-                    F.count_distinct("_id").alias(
-                        "dcount_activities_inner"))
-                outer_d = (
-                    act.select(
-                        "_id",
-                        F.explode(
-                            F.sequence(
-                                F.col("_slot"),
-                                F.col("_slot") + F.lit(k - 1))
-                        ).alias("_slot"))
-                    .distinct()
-                    .groupBy("_slot")
-                    .agg(F.count_distinct("_id").alias(
-                        "dcount_activities_outer"))
-                )
-                if ae_st is not None:
-                    spine = df.sparkSession.range(
-                        int(ae_t0 // inner_s), int(ae_t1 // inner_s) + 1
-                    ).select(F.col("id").alias("_slot"))
-                    joined = (
-                        spine.join(inner_d, "_slot", "left")
-                        .join(outer_d, "_slot", "left")
-                        .select(
-                            "_slot",
-                            F.coalesce(
-                                "dcount_activities_inner", F.lit(0)
-                            ).alias("dcount_activities_inner"),
-                            F.coalesce(
-                                "dcount_activities_outer", F.lit(0)
-                            ).alias("dcount_activities_outer"),
-                        )
-                    )
-                else:
-                    joined = inner_d.join(outer_d, "_slot", "inner")
-                df = joined.select(
-                    F.timestamp_seconds(
-                        F.col("_slot") * F.lit(float(inner_s))
-                    ).cast("timestamp_ntz").alias(tc),
-                    "dcount_activities_inner",
-                    "dcount_activities_outer",
-                    F.when(
-                        F.col("dcount_activities_outer") > 0,
-                        F.round(
-                            F.col("dcount_activities_inner")
-                            / F.col("dcount_activities_outer"), 6
-                        ),
-                    ).alias("activity_ratio"),
-                )
-                continue
-            mip = re.match(
-                r"^ipv4_lookup\s*\(\s*([A-Za-z_]\w*)\s*,"
-                r"\s*([A-Za-z_]\w*)\s*,\s*([A-Za-z_]\w*)\s*"
-                r"(?:,\s*(?:return_unmatched\s*=\s*)?(true|false)\s*)?"
-                r"\)\s*$", rest)
-            if mip:
-                # `evaluate ipv4_lookup(LookupTable, SourceIPColumn,
-                # IPNetworkColumn[, return_unmatched])` — longest-
-                # prefix-match CIDR enrichment, the classic distributed
-                # LPM join: the lookup table derives (mask len m,
-                # prefix = ⌊net/2^(32−m)⌋); each DISTINCT source IP
-                # explodes into one candidate (m, prefix) per mask
-                # length PRESENT in the table (≤33 by IPv4 construction
-                # — the one bounded driver collect), equi-joins the
-                # broadcast lookup (a dimension by contract), and a
-                # per-IP rank keeps the longest mask (ties broken on
-                # the network string). The enriched (ip → row) map then
-                # joins back on the IP key — never a theta/range join.
-                lutname, ipc, netc, unmatched = mip.groups()
-                if not tables or lutname not in tables:
-                    raise KqlError(
-                        f"ipv4_lookup: unknown table {lutname!r} — "
-                        "pass it via kql(..., tables={...})")
-                if ipc not in df.columns:
-                    raise KqlError(f"ipv4_lookup: no column {ipc!r}")
-                lut = tables[lutname]
-                if netc not in lut.columns:
-                    raise KqlError(
-                        f"ipv4_lookup: lookup table has no column "
-                        f"{netc!r}")
-                netp = F.split(F.col(netc), "/")
-                mlen = F.coalesce(
-                    F.try_element_at(netp, F.lit(2)).try_cast("int"),
-                    F.lit(32))
-                nint = _ip2long(F.try_element_at(netp, F.lit(1)))
-                lut2 = lut.withColumns({
-                    "__m": mlen,
-                    "__pref": F.floor(
-                        nint / F.pow(F.lit(2.0), 32 - mlen)
-                    ).cast("long"),
-                })
-                masks = sorted(
-                    r[0] for r in
-                    lut2.select("__m").distinct().collect()
-                    if r[0] is not None)
-                if not masks:
-                    raise KqlError("ipv4_lookup: empty lookup table")
-                ips = (
-                    df.select(F.col(ipc).alias("__ip")).distinct()
-                    .withColumn("__ipl", _ip2long(F.col("__ip")))
-                )
-                cand = ips.select(
-                    "__ip",
-                    F.explode(F.array(*[
-                        F.struct(
-                            F.lit(m).alias("__m"),
-                            F.floor(
-                                F.col("__ipl")
-                                / F.lit(float(2 ** (32 - m)))
-                            ).cast("long").alias("__pref"))
-                        for m in masks])).alias("__c"),
-                ).select("__ip", "__c.__m", "__c.__pref")
-                matched = cand.join(
-                    F.broadcast(lut2), ["__m", "__pref"], "inner")
-                wip = Window.partitionBy("__ip").orderBy(
-                    F.col("__m").desc(), F.col(netc).asc())
-                best = (
-                    matched.withColumn(
-                        "__r", F.row_number().over(wip))
-                    .filter(F.col("__r") == 1)
-                    .drop("__m", "__pref", "__r", "__ipl")
-                )
-                for c in best.columns:
-                    if c != "__ip" and c in df.columns:
-                        best = best.withColumnRenamed(c, c + "1")
-                how = "left" if (unmatched or "false") == "true" \
-                    else "inner"
-                df = df.join(
-                    best, df[ipc] == best["__ip"], how
-                ).drop("__ip")
-                continue
-            mi6 = re.match(
-                r"^ipv6_lookup\s*\(\s*([A-Za-z_]\w*)\s*,"
-                r"\s*([A-Za-z_]\w*)\s*,\s*([A-Za-z_]\w*)\s*"
-                r"(?:,\s*(?:return_unmatched\s*=\s*)?(true|false)\s*)?"
-                r"\)\s*$", rest)
-            if mi6:
-                # `evaluate ipv6_lookup(LookupTable, SourceIPColumn,
-                # IPNetworkColumn[, return_unmatched])` — the IPv6 twin
-                # of ipv4_lookup's distributed LPM: the lookup table
-                # derives (mask m, masked canonical prefix) per
-                # network; each DISTINCT source IP parses its 16-bit
-                # groups ONCE (`_ipv6_group_vals`) and derives one
-                # candidate canonical per mask length PRESENT in the
-                # table (≤129 by construction — the one bounded driver
-                # collect), equi-joins the broadcast lookup, and a
-                # per-IP rank keeps the longest mask (ties on the
-                # network string). Enriched rows join back on the IP
-                # key — never a theta join on the big side.
-                lutname, ipc, netc, unmatched = mi6.groups()
-                if not tables or lutname not in tables:
-                    raise KqlError(
-                        f"ipv6_lookup: unknown table {lutname!r} — "
-                        "pass it via kql(..., tables={...})")
-                if ipc not in df.columns:
-                    raise KqlError(f"ipv6_lookup: no column {ipc!r}")
-                lut = tables[lutname]
-                if netc not in lut.columns:
-                    raise KqlError(
-                        f"ipv6_lookup: lookup table has no column "
-                        f"{netc!r}")
-                netp = F.split(F.col(netc), "/")
-                mlen6 = F.coalesce(
-                    F.try_element_at(netp, F.lit(2)).try_cast("int"),
-                    F.lit(128))
-                lut2 = lut.withColumns({
-                    "__m": mlen6,
-                    "__pref": _parse_ipv6_masked(
-                        F.try_element_at(netp, F.lit(1)), mlen6),
-                })
-                masks = sorted(
-                    r[0] for r in
-                    lut2.select("__m").distinct().collect()
-                    if r[0] is not None)
-                if not masks:
-                    raise KqlError("ipv6_lookup: empty lookup table")
-                ips = (
-                    df.select(F.col(ipc).alias("__ip")).distinct()
-                    .withColumn("__g", _ipv6_group_vals(F.col("__ip")))
-                )
-                cand = ips.select(
-                    "__ip",
-                    F.explode(F.array(*[
-                        F.struct(
-                            F.lit(m).alias("__m"),
-                            _ipv6_canon_from_groups(
-                                F.col("__g"), F.lit(m)
-                            ).alias("__pref"))
-                        for m in masks])).alias("__c"),
-                ).select("__ip", "__c.__m", "__c.__pref")
-                matched = cand.join(
-                    F.broadcast(lut2), ["__m", "__pref"], "inner")
-                wip = Window.partitionBy("__ip").orderBy(
-                    F.col("__m").desc(), F.col(netc).asc())
-                best = (
-                    matched.withColumn(
-                        "__r", F.row_number().over(wip))
-                    .filter(F.col("__r") == 1)
-                    .drop("__m", "__pref", "__r")
-                )
-                for c in best.columns:
-                    if c != "__ip" and c in df.columns:
-                        best = best.withColumnRenamed(c, c + "1")
-                how = "left" if (unmatched or "false") == "true" \
-                    else "inner"
-                df = df.join(
-                    best, df[ipc] == best["__ip"], how
-                ).drop("__ip")
-                continue
-            mau = re.match(
-                r"^active_users_count\s*\(\s*([A-Za-z_]\w*)\s*,"
-                r"\s*([A-Za-z_]\w*)\s*,\s*([\w.]+)\s*,\s*([\w.]+)\s*,"
-                r"\s*(\d+)\s*\)\s*$", rest)
-            if mau:
-                # `evaluate active_users_count(id, timeline, period,
-                # lookback, min_active_periods)` — per period slot, the
-                # count of ids active in ≥ m DISTINCT periods of the
-                # trailing lookback window (Kusto's plugin with its
-                # ActivePeriodsCount threshold). Same scale shape as
-                # activity_engagement: distinct (id, slot) first, then
-                # a bounded k=lookback/period explode carrying the
-                # SOURCE slot, so the per-(target, id) aggregate counts
-                # distinct active periods; ids crossing the threshold
-                # aggregate once more to the per-slot count.
-                idc, tc, per_src, look_src, min_p = mau.groups()
-                for c in (idc, tc):
-                    if c not in df.columns:
-                        raise KqlError(
-                            f"active_users_count: no column {c!r}")
-                per_s = _timespan_secs(per_src)
-                look_s = _timespan_secs(look_src)
-                k = look_s / per_s
-                if k < 1 or abs(k - round(k)) > 1e-9:
-                    raise KqlError(
-                        "active_users_count: LookbackWindow must be a "
-                        "positive integer multiple of Period")
-                k, m = int(round(k)), int(min_p)
-                if m < 1 or m > k:
-                    raise KqlError(
-                        "active_users_count: MinActivePeriods must be "
-                        "in [1, lookback/period]")
-                slot = F.floor(
-                    F.col(tc).cast("timestamp").cast("double")
-                    / F.lit(float(per_s))).cast("long")
-                act = df.select(
-                    F.col(idc).alias("_id"), slot.alias("_slot")
-                ).distinct()
-                # act is DISTINCT (id, slot), so after the explode each
-                # (target slot, id) row stands for one distinct active
-                # source period — a plain count IS the distinct-period
-                # count, no second distinct needed
-                spread = act.select(
-                    "_id",
-                    F.explode(F.sequence(
-                        F.col("_slot"),
-                        F.col("_slot") + F.lit(k - 1))).alias("_slot"))
-                per_id = spread.groupBy("_slot", "_id").agg(
-                    F.count(F.lit(1)).alias("_np"))
-                df = (
-                    per_id.filter(F.col("_np") >= m)
-                    .groupBy("_slot")
-                    .agg(F.count(F.lit(1)).alias("dcount_values"))
-                    .select(
-                        F.timestamp_seconds(
-                            F.col("_slot") * F.lit(float(per_s))
-                        ).cast("timestamp_ntz").alias(tc),
-                        "dcount_values")
-                )
-                continue
-            mswc = re.match(
-                r"^sliding_window_counts\s*\(\s*([A-Za-z_]\w*)\s*,"
-                r"\s*([A-Za-z_]\w*)\s*,\s*datetime\(([^)]*)\)\s*,"
-                r"\s*datetime\(([^)]*)\)\s*,\s*([\w.]+)\s*,\s*([\w.]+)"
-                r"\s*((?:,\s*[A-Za-z_]\w*)*)\s*\)\s*$", rest)
-            if mswc:
-                # `evaluate sliding_window_counts(id, timeline,
-                # datetime(start), datetime(end), LookbackWindow, Bin
-                # [, dim…])` — per bin in [start, end]: record count and
-                # distinct-id count over the trailing lookback window
-                # (Kusto's plugin). Scale shape: one per-(slot, dims)
-                # aggregate for counts and one DISTINCT (id, slot, dims)
-                # relation for dcounts, each spread to its k =
-                # lookback/bin target bins by a bounded explode (k is a
-                # query constant) — never a range self-join. The bin
-                # spine (range × distinct dims — both small by plugin
-                # contract) left-joins so empty bins emit zeros.
-                # Records in the pre-start lookback tail
-                # [start − lookback + bin, start) seed the first bins
-                # (full Kusto semantics): the slot filter keeps
-                # slot ≥ s0 − k + 1, and the target sequence clamps
-                # to [s0, e0] so pre-start rows contribute without
-                # emitting pre-start bins.
-                idc, tc, st_src, en_src, look_src, bin_src, dim_tail = \
-                    mswc.groups()
-                dims = [d.strip() for d in dim_tail.split(",")
-                        if d.strip()]
-                for c in (idc, tc, *dims):
-                    if c not in df.columns:
-                        raise KqlError(
-                            f"sliding_window_counts: no column {c!r}")
-                bin_s = _timespan_secs(bin_src)
-                look_s = _timespan_secs(look_src)
-                k = look_s / bin_s
-                if k < 1 or abs(k - round(k)) > 1e-9:
-                    raise KqlError(
-                        "sliding_window_counts: LookbackWindow must be "
-                        "a positive integer multiple of Bin")
-                k = int(round(k))
-                t0 = _plugin_epoch(st_src)
-                t1 = _plugin_epoch(en_src)
-                s0 = int(t0 // bin_s)
-                e0 = int(t1 // bin_s)
-                from otel_arrow_spark.dataops.dedup import (
-                    persist_registered,
-                )
-                epoch = F.col(tc).cast("timestamp").cast("double")
-                slot_raw = F.floor(
-                    epoch / F.lit(float(bin_s))).cast("long")
-                # ev feeds both the count and the distinct-id legs —
-                # persist so the filtered scan runs once; the lower
-                # bound admits the pre-start lookback tail
-                ev = persist_registered(
-                    df.filter(
-                        (epoch <= t1) & (slot_raw >= s0 - k + 1)
-                    ).select(
-                        *dims, F.col(idc).alias("_id"),
-                        slot_raw.alias("_s")))
-                tgt = F.explode(F.sequence(
-                    F.greatest(F.col("_s"), F.lit(s0)),
-                    F.least(F.col("_s") + F.lit(k - 1), F.lit(e0)),
-                )).alias("_t")
-                cnts = (
-                    ev.select(*dims, tgt)
-                    .groupBy(*dims, "_t")
-                    .agg(F.count(F.lit(1)).alias("count_"))
-                )
-                dcs = (
-                    ev.distinct()
-                    .select(*dims, "_id", tgt)
-                    .groupBy(*dims, "_t")
-                    .agg(F.count_distinct("_id").alias("dcount"))
-                )
-                spine = df.sparkSession.range(s0, e0 + 1).select(
-                    F.col("id").alias("_t"))
-                if dims:
-                    spine = spine.crossJoin(
-                        ev.select(*dims).distinct())
-                df = (
-                    spine.join(cnts, ["_t", *dims], "left")
-                    .join(dcs, ["_t", *dims], "left")
-                    .select(
-                        F.timestamp_seconds(
-                            F.col("_t") * F.lit(float(bin_s))
-                        ).cast("timestamp_ntz").alias(tc),
-                        *dims,
-                        F.coalesce("count_", F.lit(0)).alias("count_"),
-                        F.coalesce("dcount", F.lit(0)).alias("dcount"),
-                    )
-                )
-                continue
-            mrp = re.match(
-                r"^rolling_percentile\s*\(\s*([A-Za-z_]\w*)\s*,"
-                r"\s*([\d.]+)\s*,\s*([A-Za-z_]\w*)\s*,\s*([\w.]+)\s*,"
-                r"\s*(\d+)\s*((?:,\s*[A-Za-z_]\w*)*)\s*\)\s*$", rest)
-            if mrp:
-                # `evaluate rolling_percentile(ValueColumn, Percentile,
-                # IndexColumn, BinSize, BinsPerWindow [, dim…])` — per
-                # bin of the index column, the EXACT percentile of the
-                # value over the trailing BinsPerWindow bins (Kusto's
-                # plugin; exact rather than t-digest — F.percentile is
-                # a single-pass partial aggregate and matches the
-                # DuckDB oracle's quantile_cont bit-for-bit). Scale
-                # shape: each row spreads to its W target bins by a
-                # bounded explode (W is a query constant), then ONE
-                # hash aggregate per (bin, dims) — no range self-join,
-                # no per-row window. Every bin the spread reaches is
-                # emitted (full Kusto semantics): trailing and gap bins
-                # that only inherit lookback rows get their percentile
-                # from the inherited window.
-                vc, pct_src, ic, bin_src, w_src, dim_tail = mrp.groups()
-                dims = [d.strip() for d in dim_tail.split(",")
-                        if d.strip()]
-                for c in (vc, ic, *dims):
-                    if c not in df.columns:
-                        raise KqlError(
-                            f"rolling_percentile: no column {c!r}")
-                w = int(w_src)
-                if w < 1:
-                    raise KqlError(
-                        "rolling_percentile: BinsPerWindow must be ≥ 1")
-                pct = float(pct_src)
-                is_ts = dict(df.dtypes)[ic].startswith("timestamp")
-                if is_ts:
-                    bin_s = _timespan_secs(bin_src)
-                    idx = F.col(ic).cast("timestamp").cast("double")
-                else:
-                    bin_s = float(bin_src)
-                    idx = F.col(ic).cast("double")
-                slot = F.floor(idx / F.lit(bin_s)).cast("long")
-                spread = df.select(
-                    *dims, F.col(vc).alias("_v"),
-                    F.explode(F.sequence(
-                        slot, slot + F.lit(w - 1)
-                    )).alias("_t"))
-                out_name = (
-                    f"rolling_{w}_percentile_{vc}_"
-                    + (f"{pct:g}".replace(".", "_")))
-                agg = (
-                    spread.groupBy(*dims, "_t")
-                    .agg(F.percentile("_v", F.lit(pct / 100.0))
-                         .alias(out_name))
-                )
-                bcol = (
-                    F.timestamp_seconds(F.col("_t") * F.lit(bin_s))
-                    .cast("timestamp_ntz") if is_ts
-                    else (F.col("_t") * F.lit(bin_s))
-                ).alias(ic)
-                df = agg.select(bcol, *dims, out_name)
-                continue
-            macm = re.match(
-                r"^activity_counts_metrics\s*\(\s*([A-Za-z_]\w*)\s*,"
-                r"\s*([A-Za-z_]\w*)\s*,\s*datetime\(([^)]*)\)\s*,"
-                r"\s*datetime\(([^)]*)\)\s*,\s*([\w.]+)\s*\)\s*$", rest)
-            if macm:
-                # `evaluate activity_counts_metrics(id, timeline,
-                # datetime(start), datetime(end), bin)` — per bin:
-                # record count, distinct ids, first-ever-seen ids
-                # (new_dcount) and the running distinct total
-                # (aggregated_dcount = ids seen so far ≡ cumulative sum
-                # of new). One DISTINCT (id, slot) relation feeds
-                # everything; the only window is the running sum over
-                # the BIN SPINE — a (end−start)/bin-row relation, the
-                # skew-free small-relation global window (same shape as
-                # training_order's bucket offsets).
-                idc, tc, st_src, en_src, bin_src = macm.groups()
-                for c in (idc, tc):
-                    if c not in df.columns:
-                        raise KqlError(
-                            f"activity_counts_metrics: no column {c!r}")
-                bin_s = _timespan_secs(bin_src)
-                t0 = _plugin_epoch(st_src)
-                t1 = _plugin_epoch(en_src)
-                s0, e0 = int(t0 // bin_s), int(t1 // bin_s)
-                from otel_arrow_spark.dataops.dedup import (
-                    persist_registered,
-                )
-                epoch = F.col(tc).cast("timestamp").cast("double")
-                base = persist_registered(
-                    df.filter((epoch >= t0) & (epoch <= t1)).select(
-                        F.col(idc).alias("_id"),
-                        F.floor(epoch / F.lit(float(bin_s)))
-                        .cast("long").alias("_s")))
-                per_bin = base.groupBy("_s").agg(
-                    F.count(F.lit(1)).alias("count_"),
-                    F.count_distinct("_id").alias("dcount"))
-                news = (
-                    base.groupBy("_id").agg(F.min("_s").alias("_s"))
-                    .groupBy("_s")
-                    .agg(F.count(F.lit(1)).alias("new_dcount"))
-                )
-                spine = df.sparkSession.range(s0, e0 + 1).select(
-                    F.col("id").alias("_s"))
-                wrun = Window.orderBy("_s").rowsBetween(
-                    Window.unboundedPreceding, Window.currentRow)
-                df = (
-                    spine.join(per_bin, "_s", "left")
-                    .join(news, "_s", "left")
-                    .select(
-                        "_s",
-                        F.coalesce("count_", F.lit(0)).alias("count_"),
-                        F.coalesce("dcount", F.lit(0)).alias("dcount"),
-                        F.coalesce("new_dcount", F.lit(0))
-                        .alias("new_dcount"))
-                    .withColumn(
-                        "aggregated_dcount",
-                        F.sum("new_dcount").over(wrun))
-                    .select(
-                        F.timestamp_seconds(
-                            F.col("_s") * F.lit(float(bin_s))
-                        ).cast("timestamp_ntz").alias(tc),
-                        "count_", "dcount", "new_dcount",
-                        "aggregated_dcount")
-                )
-                continue
-            mscn = re.match(
-                r"^session_count\s*\(\s*([A-Za-z_]\w*)\s*,"
-                r"\s*([A-Za-z_]\w*)\s*,\s*datetime\(([^)]*)\)\s*,"
-                r"\s*datetime\(([^)]*)\)\s*,\s*([\w.]+)\s*,"
-                r"\s*([\w.]+)\s*\)\s*$", rest)
-            if mscn:
-                # `evaluate session_count(id, timeline, datetime(start),
-                # datetime(end), Bin, LookBackWindow)` — active sessions
-                # per bin. A session starts at an activity with no
-                # same-id activity in the preceding LookBackWindow and
-                # stays active until LookBackWindow after its last
-                # activity (this engine's precise rendering of Kusto's
-                # plugin; boundary: gap strictly greater than the
-                # window starts a new session). Shape: gap-sessionize
-                # per id (one lag+cumsum window, one shuffle), one
-                # aggregate to session spans, then each span explodes
-                # to the bins it covers — bounded by the query's own
-                # (End−Start)/Bin bin count, never by data size.
-                idc, tc, st_src, en_src, bin_src, look_src = \
-                    mscn.groups()
-                for c in (idc, tc):
-                    if c not in df.columns:
-                        raise KqlError(
-                            f"session_count: no column {c!r}")
-                bin_s = _timespan_secs(bin_src)
-                look_s = _timespan_secs(look_src)
-                t0 = _plugin_epoch(st_src)
-                t1 = _plugin_epoch(en_src)
-                s0, e0 = int(t0 // bin_s), int(t1 // bin_s)
-                from otel_arrow_spark.operators.sequence import (
-                    sessionize,
-                )
-                epoch = F.col(tc).cast("timestamp").cast("double")
-                base = df.filter((epoch >= t0) & (epoch <= t1)).select(
-                    F.col(idc).alias("_id"), epoch.alias("_e"))
-                sess = sessionize(base, ["_id"], "_e", look_s)
-                spans = sess.groupBy("_id", "session_id").agg(
-                    F.min("_e").alias("_st"),
-                    F.max("_e").alias("_en"))
-                b0 = F.floor(
-                    F.col("_st") / F.lit(float(bin_s))).cast("long")
-                b1 = F.least(
-                    F.floor((F.col("_en") + F.lit(float(look_s)))
-                            / F.lit(float(bin_s))).cast("long"),
-                    F.lit(e0))
-                bins = spans.select(
-                    F.explode(F.sequence(b0, b1)).alias("_t"))
-                counts = bins.groupBy("_t").agg(
-                    F.count(F.lit(1)).alias("count_sessions"))
-                spine = df.sparkSession.range(s0, e0 + 1).select(
-                    F.col("id").alias("_t"))
-                df = (
-                    spine.join(counts, "_t", "left")
-                    .select(
-                        F.timestamp_seconds(
-                            F.col("_t") * F.lit(float(bin_s))
-                        ).cast("timestamp_ntz").alias(tc),
-                        F.coalesce("count_sessions", F.lit(0))
-                        .alias("count_sessions"))
-                )
-                continue
-            mnam = re.match(
-                r"^new_activity_metrics\s*\(\s*([A-Za-z_]\w*)\s*,"
-                r"\s*([A-Za-z_]\w*)\s*,\s*datetime\(([^)]*)\)\s*,"
-                r"\s*datetime\(([^)]*)\)\s*,\s*([\w.]+)\s*"
-                r"((?:,\s*[A-Za-z_]\w*)*)\s*\)\s*$", rest)
-            if mnam:
-                # `evaluate new_activity_metrics(id, timeline,
-                # datetime(start), datetime(end), window)` — cohort
-                # retention matrix: ids are cohorted by the window of
-                # their FIRST activity; for every (from, to) pair the
-                # plugin reports the cohort size, how many of the
-                # cohort were active at `to`, and the retention/churn
-                # rates. Shape: first-activity aggregate → cohort join
-                # back on id → one (cohort, slot) count; the (from, to)
-                # spine is range×range (bins², small) left-joined so
-                # silent-cohort bins emit zeros. Trailing bare column
-                # names are split dimensions (Kusto's *dim variant):
-                # activity, cohorting, and the spine all carry the dim
-                # tuple, so each dim combination gets its own cohort
-                # matrix.
-                (idc, tc, st_src, en_src, win_src,
-                 nam_dim_tail) = mnam.groups()
-                nam_dims = [d.strip() for d in nam_dim_tail.split(",")
-                            if d.strip()]
-                for c in (idc, tc, *nam_dims):
-                    if c not in df.columns:
-                        raise KqlError(
-                            f"new_activity_metrics: no column {c!r}")
-                win_s = _timespan_secs(win_src)
-                t0 = _plugin_epoch(st_src)
-                t1 = _plugin_epoch(en_src)
-                s0, e0 = int(t0 // win_s), int(t1 // win_s)
-                from otel_arrow_spark.dataops.dedup import (
-                    persist_registered,
-                )
-                epoch = F.col(tc).cast("timestamp").cast("double")
-                act = persist_registered(
-                    df.filter((epoch >= t0) & (epoch <= t1)).select(
-                        *nam_dims,
-                        F.col(idc).alias("_id"),
-                        F.floor(epoch / F.lit(float(win_s)))
-                        .cast("long").alias("_s")).distinct())
-                firsts = act.groupBy(*nam_dims, "_id").agg(
-                    F.min("_s").alias("_from"))
-                cohort_n = firsts.groupBy(*nam_dims, "_from").agg(
-                    F.count(F.lit(1)).alias("new_dcount"))
-                ret = (
-                    act.join(firsts, [*nam_dims, "_id"])
-                    .groupBy(*nam_dims, "_from",
-                             F.col("_s").alias("_to"))
-                    .agg(F.count(F.lit(1)).alias("retained_dcount"))
-                )
-                sess = df.sparkSession
-                spine = (
-                    sess.range(s0, e0 + 1).select(
-                        F.col("id").alias("_from"))
-                    .crossJoin(sess.range(s0, e0 + 1).select(
-                        F.col("id").alias("_to")))
-                    .filter(F.col("_to") >= F.col("_from"))
-                )
-                if nam_dims:
-                    spine = spine.crossJoin(
-                        act.select(*nam_dims).distinct())
-                df = (
-                    spine
-                    .join(F.broadcast(cohort_n),
-                          [*nam_dims, "_from"], "left")
-                    .join(ret, [*nam_dims, "_from", "_to"], "left")
-                    .select(
-                        F.timestamp_seconds(
-                            F.col("_from") * F.lit(float(win_s))
-                        ).cast("timestamp_ntz").alias("from_" + tc),
-                        F.timestamp_seconds(
-                            F.col("_to") * F.lit(float(win_s))
-                        ).cast("timestamp_ntz").alias("to_" + tc),
-                        *nam_dims,
-                        F.coalesce("new_dcount", F.lit(0))
-                        .alias("new_dcount"),
-                        F.coalesce("retained_dcount", F.lit(0))
-                        .alias("retained_dcount"),
-                        F.round(
-                            F.coalesce("retained_dcount", F.lit(0))
-                            / F.col("new_dcount"), 6
-                        ).alias("retention_rate"),
-                        F.round(
-                            1 - F.coalesce("retained_dcount", F.lit(0))
-                            / F.col("new_dcount"), 6
-                        ).alias("churn_rate"),
-                    )
-                )
-                continue
-            mam = re.match(
-                r"^activity_metrics\s*\(\s*([A-Za-z_]\w*)\s*,"
-                r"\s*([A-Za-z_]\w*)\s*,"
-                r"(?:\s*datetime\(([^)]*)\)\s*,\s*datetime\(([^)]*)\)"
-                r"\s*,)?"
-                r"\s*([\w.]+)\s*\)\s*$", rest)
-            if mam:
-                # `evaluate activity_metrics(id, timeline,
-                # [datetime(start), datetime(end),] window)` — per
-                # window slot: distinct actives, first-ever-seen
-                # actives (new), retention rate (slot t-1 actives still
-                # active in t / slot t-1 actives) and churn (1 −
-                # retention). All from ONE distinct (id, slot) relation:
-                # new = min-slot-per-id aggregate, retained = self
-                # equi-join on (id, slot-1) — no window over ids, no
-                # range join. Without bounds, slots with no activity
-                # are not emitted; WITH bounds every slot in
-                # [start//win, end//win] is emitted via a driver-range
-                # spine left-join (zero dcounts, null rates), with
-                # out-of-bounds records filtered first — the same
-                # bounded contract as activity_engagement.
-                idc, tc, am_st, am_en, win_src = mam.groups()
-                for c in (idc, tc):
-                    if c not in df.columns:
-                        raise KqlError(
-                            f"activity_metrics: no column {c!r}")
-                win_s = _timespan_secs(win_src)
-                from otel_arrow_spark.dataops.dedup import (
-                    persist_registered,
-                )
-                src = df
-                if am_st is not None:
-                    am_t0 = _plugin_epoch(am_st)
-                    am_t1 = _plugin_epoch(am_en)
-                    ep = F.col(tc).cast("timestamp").cast("double")
-                    src = df.filter((ep >= am_t0) & (ep <= am_t1))
-                slot = F.floor(
-                    F.col(tc).cast("timestamp").cast("double")
-                    / F.lit(float(win_s))).cast("long")
-                # act feeds four consumers (dcounts, firsts, both
-                # sides of the retained self-join) — persist so the
-                # distinct shuffle runs once
-                act = persist_registered(src.select(
-                    F.col(idc).alias("_id"), slot.alias("_slot")
-                ).distinct())
-                dcounts = act.groupBy("_slot").agg(
-                    F.count(F.lit(1)).alias("dcount_values"))
-                firsts = act.groupBy("_id").agg(
-                    F.min("_slot").alias("_slot"))
-                news = firsts.groupBy("_slot").agg(
-                    F.count(F.lit(1)).alias("dcount_newvalues"))
-                nxt = act.select(
-                    "_id", (F.col("_slot") + 1).alias("_slot"))
-                retained = act.join(nxt, ["_id", "_slot"]).groupBy(
-                    "_slot").agg(F.count(F.lit(1)).alias("_ret"))
-                prev_d = dcounts.select(
-                    (F.col("_slot") + 1).alias("_slot"),
-                    F.col("dcount_values").alias("_prev"))
-                if am_st is not None:
-                    spine = df.sparkSession.range(
-                        int(am_t0 // win_s), int(am_t1 // win_s) + 1
-                    ).select(F.col("id").alias("_slot"))
-                    base = spine.join(dcounts, "_slot", "left")
-                else:
-                    base = dcounts
-                out = (
-                    base
-                    .join(news, "_slot", "left")
-                    .join(retained, "_slot", "left")
-                    .join(prev_d, "_slot", "left")
-                )
-                rr = F.when(
-                    F.col("_prev").isNotNull(),
-                    F.round(
-                        F.coalesce(F.col("_ret"), F.lit(0))
-                        / F.col("_prev"), 6))
-                df = out.select(
-                    F.timestamp_seconds(
-                        F.col("_slot") * F.lit(float(win_s))
-                    ).cast("timestamp_ntz").alias(tc),
-                    F.coalesce(
-                        F.col("dcount_values"), F.lit(0)
-                    ).alias("dcount_values"),
-                    F.coalesce(
-                        F.col("dcount_newvalues"), F.lit(0)
-                    ).alias("dcount_newvalues"),
-                    rr.alias("retention_rate"),
-                    F.when(rr.isNotNull(),
-                           F.round(1 - rr, 6)).alias("churn_rate"),
-                )
-                continue
-            mdi = re.match(
-                r"^dcount_intersect\s*\(\s*([A-Za-z_]\w*"
-                r"(?:\s*,\s*[A-Za-z_]\w*){1,3})\s*\)\s*$", rest)
-            if mdi:
-                # `evaluate dcount_intersect(hll_1, …, hll_n)` — Kusto's
-                # set-intersection-cardinality plugin over hll() sketch
-                # columns: s_k = |A_1 ∩ … ∩ A_{k+1}| by inclusion-
-                # exclusion over row-level sketch unions (F.hll_union —
-                # sketches are fixed-size, so the whole computation is
-                # per-row JVM codegen, no re-scan of the source rows:
-                # the 100 TB shape where the heavy distinct work
-                # happened once in the upstream hll() aggregate).
-                # Sparse-mode sketches make it exact at gate scale
-                # (aggregates.md); estimates are clamped at ≥ 0.
-                hcols = [c.strip() for c in mdi.group(1).split(",")]
-                for c in hcols:
-                    if c not in df.columns:
-                        raise KqlError(
-                            f"dcount_intersect: no column {c!r}")
-                from itertools import combinations as _combos
-
-                def _union_est(sub: tuple) -> Column:
-                    c = F.col(sub[0])
-                    for x in sub[1:]:
-                        c = F.hll_union(c, x)
-                    return F.hll_sketch_estimate(c)
-
-                outs = {}
-                for k in range(1, len(hcols) + 1):
-                    e = None
-                    for r in range(1, k + 1):
-                        for sub in _combos(hcols[:k], r):
-                            t = _union_est(sub)
-                            t = t if r % 2 == 1 else -t
-                            e = t if e is None else e + t
-                    outs[f"s{k - 1}"] = F.greatest(
-                        e, F.lit(0)).cast("long")
-                keep = [c for c in df.columns if c not in hcols]
-                df = df.select(
-                    *keep,
-                    *[outs[n].alias(n) for n in sorted(outs)])
-                continue
-            mfc = re.match(
-                r"^funnel_sequence_completion\s*\(\s*([A-Za-z_]\w*)\s*,"
-                r"\s*([A-Za-z_]\w*)\s*,\s*datetime\(([^)]*)\)\s*,"
-                r"\s*datetime\(([^)]*)\)\s*,\s*([\w.]+)\s*,"
-                r"\s*([A-Za-z_]\w*)\s*,\s*dynamic\(\s*\[(.*?)\]\s*\)\s*,"
-                r"\s*dynamic\(\s*\[(.*?)\]\s*\)\s*\)\s*$", rest, re.S)
-            if mfc:
-                # `evaluate funnel_sequence_completion(id, timeline,
-                # datetime(start), datetime(end), Bin, state,
-                # dynamic(['s1', …]), dynamic([w1, …]))` — per sequence
-                # PREFIX and per bin, how many ids completed that
-                # prefix in the bin (the funnel-completion matrix).
-                # Prefix k completes at the anchored-earliest chain's
-                # t_k with the FROM-FIRST bound t_k − t_1 ≤ w_k (each
-                # w_k a timespan literal, one per step). Shape: k
-                # chained set-minima windows over ONE per-id Exchange
-                # (the from-first bound references t_1, itself a
-                # partition constant — still pure windows, no state
-                # machine), one per-id aggregate, then one small
-                # (step, bin) count.
-                (idc, tc, st_src, en_src, bin_src, statec,
-                 seq_src, win_src) = mfc.groups()
-                for c in (idc, tc, statec):
-                    if c not in df.columns:
-                        raise KqlError(
-                            "funnel_sequence_completion: no column "
-                            f"{c!r}")
-                seq = [
-                    _unquote(p.strip())
-                    for p in _split_top_level(seq_src, ",") if p.strip()
-                ]
-                wins = [
-                    _timespan_secs(p.strip())
-                    for p in _split_top_level(win_src, ",") if p.strip()
-                ]
-                if len(seq) < 1 or len(wins) not in (
-                        len(seq), max(len(seq) - 1, 1)):
-                    raise KqlError(
-                        "funnel_sequence_completion: one max window "
-                        "per step (or per transition)")
-                if len(wins) == len(seq) - 1:
-                    # per-transition form → shift to per-step (the
-                    # anchor step has no bound)
-                    wins = [0.0] + wins
-                bin_s = _timespan_secs(bin_src)
-                t0 = _plugin_epoch(st_src)
-                t1e = _plugin_epoch(en_src)
-                epoch = F.col(tc).cast("timestamp").cast("double")
-                base = df.filter((epoch >= t0) & (epoch <= t1e)).select(
-                    F.col(idc).alias("_id"), epoch.alias("_e"),
-                    F.col(statec).alias("_st"))
-                wid = Window.partitionBy("_id")
-                chain = base
-                prev_t = None
-                first_t = None
-                tcols = []
-                for i, s in enumerate(seq):
-                    cond = F.col("_st") == s
-                    if prev_t is not None:
-                        cond = cond & (F.col("_e") > prev_t) & (
-                            F.col("_e")
-                            <= first_t + F.lit(float(wins[i])))
-                    col = f"_t{i}"
-                    chain = chain.withColumn(
-                        col, F.min(F.when(cond, F.col("_e"))).over(wid))
-                    prev_t = F.col(col)
-                    if first_t is None:
-                        first_t = F.col(col)
-                    tcols.append(col)
-                per_id = chain.groupBy("_id").agg(
-                    *[F.min(c).alias(c) for c in tcols])
-                legs = []
-                for i, s in enumerate(seq):
-                    legs.append(
-                        per_id.filter(F.col(tcols[i]).isNotNull())
-                        .select(
-                            F.lit(s).alias(statec),
-                            F.floor(
-                                F.col(tcols[i]) / F.lit(float(bin_s))
-                            ).cast("long").alias("_b"))
-                    )
-                out = legs[0]
-                for leg in legs[1:]:
-                    out = out.unionByName(leg)
-                df = out.groupBy(statec, "_b").agg(
-                    F.count(F.lit(1)).alias("dcount")
-                ).select(
-                    F.timestamp_seconds(
-                        F.col("_b") * F.lit(float(bin_s))
-                    ).cast("timestamp_ntz").alias(tc),
-                    statec, "dcount")
-                continue
-            mfs = re.match(
-                r"^funnel_sequence\s*\(\s*([A-Za-z_]\w*)\s*,"
-                r"\s*([A-Za-z_]\w*)\s*,\s*datetime\(([^)]*)\)\s*,"
-                r"\s*datetime\(([^)]*)\)\s*,\s*([\w.]+)\s*,"
-                r"\s*([A-Za-z_]\w*)\s*,\s*dynamic\(\s*\[(.*?)\]\s*\)"
-                r"\s*\)\s*$", rest, re.S)
-            if mfs:
-                # `evaluate funnel_sequence(id, timeline,
-                # datetime(start), datetime(end), MaxStepWindow, state,
-                # dynamic(['s1', 's2', …]))` — for ids that performed
-                # the state sequence (anchored-earliest chain, adjacent
-                # steps within MaxStepWindow), the distribution of the
-                # state just BEFORE the sequence and just AFTER it —
-                # Kusto's funnel context plugin. Shape: the chain is
-                # funnel_steps' set-minima (N windows over ONE per-id
-                # Exchange — no sort, no state machine); prev/next are
-                # two max_by/min_by aggregates against the completed-id
-                # anchors. Ties in the timeline break on the state
-                # value (documented; keeps both engines deterministic).
-                idc, tc, st_src, en_src, win_src, statec, seq_src = \
-                    mfs.groups()
-                for c in (idc, tc, statec):
-                    if c not in df.columns:
-                        raise KqlError(
-                            f"funnel_sequence: no column {c!r}")
-                seq = [
-                    _unquote(p.strip())
-                    for p in _split_top_level(seq_src, ",") if p.strip()
-                ]
-                if len(seq) < 2:
-                    raise KqlError(
-                        "funnel_sequence: the sequence needs ≥ 2 states")
-                win_s = _timespan_secs(win_src)
-                t0 = _plugin_epoch(st_src)
-                t1 = _plugin_epoch(en_src)
-                from otel_arrow_spark.dataops.dedup import (
-                    persist_registered,
-                )
-                epoch = F.col(tc).cast("timestamp").cast("double")
-                # base feeds the chain windows AND both context lookups
-                base = persist_registered(
-                    df.filter((epoch >= t0) & (epoch <= t1)).select(
-                        F.col(idc).alias("_id"),
-                        epoch.alias("_e"),
-                        F.col(statec).alias("_st")))
-                wid = Window.partitionBy("_id")
-                chain = base
-                prev_t = None
-                tcols = []
-                for i, s in enumerate(seq):
-                    cond = F.col("_st") == s
-                    if prev_t is not None:
-                        cond = cond & (F.col("_e") > prev_t) & (
-                            F.col("_e") <= prev_t + F.lit(float(win_s)))
-                    col = f"_t{i}"
-                    chain = chain.withColumn(
-                        col, F.min(F.when(cond, F.col("_e"))).over(wid))
-                    prev_t = F.col(col)
-                    tcols.append(col)
-                anchors = (
-                    chain.groupBy("_id")
-                    .agg(F.min(tcols[0]).alias("_first"),
-                         F.min(tcols[-1]).alias("_last"))
-                    .filter(F.col("_last").isNotNull())
-                )
-                prevs = (
-                    base.join(anchors, "_id")
-                    .filter(F.col("_e") < F.col("_first"))
-                    .groupBy("_id")
-                    .agg(F.max_by(
-                        "_st", F.struct("_e", "_st")).alias("prev"))
-                )
-                nexts = (
-                    base.join(anchors, "_id")
-                    .filter(F.col("_e") > F.col("_last"))
-                    .groupBy("_id")
-                    .agg(F.min_by(
-                        "_st", F.struct("_e", "_st")).alias("next"))
-                )
-                df = (
-                    anchors
-                    .join(prevs, "_id", "left")
-                    .join(nexts, "_id", "left")
-                    .groupBy("prev", "next")
-                    .agg(F.count_distinct("_id").alias("dcount"))
-                )
-                continue
-            msq = re.match(r"^sequence_detect\s*\((.+)\)\s*$", rest, re.S)
-            if msq:
-                # `evaluate sequence_detect(timeline, stepWindow,
-                # maxDuration, step1, step2, …, key1, …)` — steps are
-                # boolean columns/expressions (or `name = pred`
-                # extensions), trailing bare names of non-boolean
-                # input columns are the partition keys (the Kusto
-                # argument order makes this split unambiguous).
-                # Compiles to chained window set-minima
-                # (operators/sequence.py sequence_detect; anchored-
-                # earliest subset documented there).
-                from otel_arrow_spark.operators.sequence import (
-                    sequence_detect,
-                )
-                sparts = _split_top_level(msq.group(1), ",")
-                if len(sparts) < 5:
-                    raise KqlError(
-                        "sequence_detect needs (timeline, stepWindow, "
-                        "maxDuration, step1, step2, …, key…)")
-                timeline = sparts[0].strip()
-                if timeline not in df.columns:
-                    raise KqlError(
-                        f"sequence_detect: no timeline column "
-                        f"{timeline!r}")
-
-                win_s = _timespan_secs(sparts[1])
-                dur_s = _timespan_secs(sparts[2])
-                bool_cols = {
-                    f.name for f in df.schema.fields
-                    if f.dataType.typeName() == "boolean"
-                }
-                rest_parts = [p.strip() for p in sparts[3:]]
-                keys: list[str] = []
-                while rest_parts and re.fullmatch(
-                        r"[A-Za-z_]\w*", rest_parts[-1]) and \
-                        rest_parts[-1] in df.columns and \
-                        rest_parts[-1] not in bool_cols:
-                    keys.insert(0, rest_parts.pop())
-                if not keys:
-                    raise KqlError(
-                        "sequence_detect needs at least one trailing "
-                        "key column (non-boolean input column)")
-                if len(rest_parts) < 2:
-                    raise KqlError(
-                        "sequence_detect needs at least two steps")
-                steps = []
-                for i, p in enumerate(rest_parts):
-                    nm, ex = None, p
-                    for an, ae in _parse_assignments(p):
-                        nm, ex = an, ae
-                    name = nm or (
-                        ex if re.fullmatch(r"[A-Za-z_]\w*", ex.strip())
-                        else f"expr{i + 1}")
-                    steps.append(
-                        (name.strip(), pe(ex).cast("boolean")))
-                df = sequence_detect(
-                    df, keys, timeline, win_s, dur_s, steps)
-                continue
-            mdt = re.match(
-                r"^diffpatterns_text\s*\((.+)\)\s*$", rest, re.S)
-            if mdt:
-                # `evaluate diffpatterns_text(text_col, split_pred
-                # [, top_k])` — Kusto's text-cohort diff plugin,
-                # re-expressed as its documented token-level subset:
-                # whitespace-tokenize the text, count LINES containing
-                # each distinct token in the split=true (1) vs
-                # split=false (2) cohorts, and return the top_k tokens
-                # (default 32) by |Percent1 − Percent2| (Kusto mines
-                # multi-token wildcard patterns seeded from the same
-                # per-token divergences; single tokens are the
-                # deterministic, exhaustive core of that search).
-                # Shape follows Kusto: Count1, Count2, Percent1,
-                # Percent2, Pattern. All JVM: split → array_distinct →
-                # explode → one conditional aggregate; the two cohort
-                # totals ride the same pass as a grand-total row.
-                dt_parts = _split_top_level(mdt.group(1), ",")
-                if len(dt_parts) not in (2, 3):
-                    raise KqlError(
-                        "diffpatterns_text takes "
-                        "(text_col, split_pred [, top_k])")
-                dt_text = pe(dt_parts[0]).cast("string")
-                dt_pred = pe(dt_parts[1]).cast("boolean")
-                dt_k = 32
-                if len(dt_parts) == 3:
-                    if not re.fullmatch(r"[1-9]\d*", dt_parts[2].strip()):
-                        raise KqlError(
-                            "diffpatterns_text top_k must be a "
-                            "positive integer")
-                    dt_k = int(dt_parts[2])
-                toks = F.array_distinct(F.filter(
-                    F.split(F.coalesce(dt_text, F.lit("")), r"\s+"),
-                    lambda t: t != ""))
-                base = df.select(
-                    dt_pred.alias("__in1"),
-                    # grand-total sentinel rides as one extra token so
-                    # cohort sizes come out of the SAME aggregate
-                    F.array_union(
-                        toks, F.array(F.lit(" total"))
-                    ).alias("__toks"))
-                tok = base.select(
-                    "__in1",
-                    F.explode("__toks").alias("Pattern"))
-                counted = tok.groupBy("Pattern").agg(
-                    F.count_if(F.col("__in1")).alias("Count1"),
-                    F.count_if(~F.col("__in1")).alias("Count2"))
-                tot = F.broadcast(
-                    counted.filter(F.col("Pattern") == " total")
-                    .select(F.col("Count1").alias("__t1"),
-                            F.col("Count2").alias("__t2")))
-                scored = (
-                    counted.filter(F.col("Pattern") != " total")
-                    .crossJoin(tot)
-                    .select(
-                        "Count1", "Count2",
-                        F.round(100.0 * F.col("Count1")
-                                / F.greatest("__t1", F.lit(1)), 4)
-                        .alias("Percent1"),
-                        F.round(100.0 * F.col("Count2")
-                                / F.greatest("__t2", F.lit(1)), 4)
-                        .alias("Percent2"),
-                        "Pattern"))
-                df = (
-                    scored
-                    # round the rank key too: 100−33.3333 and
-                    # 66.6667−0 must TIE, not differ in the last ulp
-                    .orderBy(
-                        F.round(F.abs(F.col("Percent1")
-                                      - F.col("Percent2")), 4).desc(),
-                        F.col("Pattern"))
-                    .limit(dt_k))
-                continue
-            mdp = re.match(r"^diffpatterns\s*\((.+)\)\s*$", rest, re.S)
-            if mdp:
-                # `evaluate diffpatterns(split_pred [, max_size])` —
-                # the Kusto cohort-comparison plugin: for every column
-                # subset of size ≤ max_size (default 1) of the input's
-                # non-split columns, report per-value-combination
-                # counts and cohort fractions in the split=true (A) vs
-                # split=false (B) cohorts, with the fraction delta.
-                # max_size ≤ 2 runs one map-side-combinable conditional
-                # aggregation per leg; max_size ≥ 3 switches to a
-                # single-shuffle bitmask-explode over all subsets
-                # (bounded by an 8-column cap). Long-form stacked
-                # output (the facet shape; a multi-column pattern
-                # renders as pattern_column "c1&c2…" with '&'-joined
-                # values, NULLs marked). The projected input is
-                # persisted across the passes (the cohort-total action
-                # warms it); released via release_caches().
-                dp_parts = _split_top_level(mdp.group(1), ",")
-                if len(dp_parts) > 2:
-                    raise KqlError(
-                        "diffpatterns takes (split_pred [, max_size])"
-                    )
-                max_size = 1
-                if len(dp_parts) == 2:
-                    if not re.fullmatch(r"[1-9]\d*", dp_parts[1].strip()):
-                        raise KqlError(
-                            "diffpatterns max_size must be a positive "
-                            "integer"
-                        )
-                    max_size = int(dp_parts[1])
-                from otel_arrow_spark.dataops.dedup import (
-                    persist_registered,
-                )
-
-                pred = pe(dp_parts[0]).cast("boolean")
-                base = persist_registered(df.withColumn("_split", pred))
-                na = F.sum(F.when(F.col("_split"), 1).otherwise(0))
-                nb = F.sum(F.when(~F.col("_split"), 1).otherwise(0))
-                tot = base.agg(na.alias("na"), nb.alias("nb")).collect()[0]
-                ta, tb = max(tot.na, 1), max(tot.nb, 1)
-
-                def _null_marked(c: str) -> Column:
-                    return F.coalesce(
-                        F.col(c).cast("string"), F.lit("~null~")
-                    )
-
-                def _dp_leg(pat_name: Column, value: Column, keys):
-                    return (
-                        base.groupBy(*keys)
-                        .agg(na.alias("count_a"), nb.alias("count_b"))
-                        .select(
-                            pat_name.alias("pattern_column"),
-                            value.alias("value"),
-                            "count_a",
-                            "count_b",
-                            F.round(F.col("count_a") / F.lit(ta), 6)
-                            .alias("pct_a"),
-                            F.round(F.col("count_b") / F.lit(tb), 6)
-                            .alias("pct_b"),
-                            F.round(
-                                F.col("count_a") / F.lit(ta)
-                                - F.col("count_b") / F.lit(tb), 6
-                            ).alias("diff"),
-                        )
-                    )
-
-                if max_size > 2:
-                    # arbitrary-subset mining, ONE shuffle: each row
-                    # explodes into its column subsets of size ≤
-                    # max_size via a constant-folded bitmask list
-                    # (Σ C(ncols, k) per row — hence the explicit
-                    # column cap), then a single grouped conditional
-                    # aggregation on the canonical column-ordered
-                    # subset array covers every pattern at once.
-                    dpcols = df.columns
-                    if len(dpcols) > 8:
-                        raise KqlError(
-                            "diffpatterns with max_size > 2 supports "
-                            "at most 8 input columns — project the "
-                            "candidate dimensions first"
-                        )
-                    nmc = len(dpcols)
-                    names_arr = F.array(*[F.lit(c) for c in dpcols])
-                    items = F.array(*[
-                        F.struct(F.lit(i).alias("ci"),
-                                 F.col(c).cast("string").alias("v"))
-                        for i, c in enumerate(dpcols)
-                    ])
-                    sub = (
-                        base.select(items.alias("__items"), "_split")
-                        .select(
-                            "__items", "_split",
-                            F.expr(
-                                f"explode(filter(sequence(1, "
-                                f"shiftleft(1, {nmc}) - 1), mk -> "
-                                f"bit_count(mk) <= {max_size}))"
-                            ).alias("__mask"),
-                        )
-                        .select(
-                            "_split",
-                            F.expr(
-                                "filter(__items, (x, i) -> "
-                                "(shiftright(__mask, i) & 1) = 1)"
-                            ).alias("__set"),
-                        )
-                        .groupBy("__set")
-                        .agg(na.alias("count_a"), nb.alias("count_b"))
-                    )
-                    setc = F.col("__set")
-                    pat = F.array_join(
-                        F.transform(
-                            setc,
-                            lambda x: F.element_at(names_arr,
-                                                   x["ci"] + 1)),
-                        "&")
-                    val = F.when(
-                        F.size(setc) == 1, F.element_at(setc, 1)["v"]
-                    ).otherwise(F.array_join(
-                        F.transform(
-                            setc,
-                            lambda x: F.coalesce(x["v"],
-                                                 F.lit("~null~"))),
-                        "&"))
-                    df = sub.select(
-                        pat.alias("pattern_column"),
-                        val.alias("value"),
-                        "count_a",
-                        "count_b",
-                        F.round(F.col("count_a") / F.lit(ta), 6)
-                        .alias("pct_a"),
-                        F.round(F.col("count_b") / F.lit(tb), 6)
-                        .alias("pct_b"),
-                        F.round(
-                            F.col("count_a") / F.lit(ta)
-                            - F.col("count_b") / F.lit(tb), 6
-                        ).alias("diff"),
-                    )
-                    continue
-                legs = [
-                    _dp_leg(F.lit(c), F.col(c).cast("string"), [c])
-                    for c in df.columns
-                ]
-                if max_size == 2:
-                    dpcols = df.columns
-                    for i, c1 in enumerate(dpcols):
-                        for c2 in dpcols[i + 1:]:
-                            legs.append(_dp_leg(
-                                F.lit(f"{c1}&{c2}"),
-                                F.concat_ws(
-                                    "&",
-                                    _null_marked(c1), _null_marked(c2),
-                                ),
-                                [c1, c2],
-                            ))
-                out = legs[0]
-                for leg in legs[1:]:
-                    out = out.unionByName(leg)
-                df = out
-                continue
-            mbag = re.match(r"^bag_unpack\s*\((.+)\)\s*$", rest, re.S)
-            if mbag:
-                # `evaluate bag_unpack(expr [, "k1[:type]", …])` —
-                # expand a dynamic (VARIANT) property bag into columns.
-                # With an explicit key list this is ONE narrow
-                # projection (`try_variant_get` per key — the 100 TB
-                # shape). Without one, a key-discovery aggregation runs
-                # first (distinct json keys — same two-job cost profile
-                # as value-less pivot; keys sorted for determinism).
-                parts = _split_top_level(mbag.group(1), ",")
-                src = parts[0].strip()
-                bag = parse_expr_ke(src, bindings)
-                is_var_col = (
-                    src.strip() in df.columns
-                    and df.schema[src.strip()].dataType.typeName()
-                    == "variant"
-                )
-                if not (bag.variant or is_var_col):
-                    raise KqlError(
-                        "bag_unpack needs a dynamic value — wrap the "
-                        "column in parse_json(...)"
-                    )
-                if len(parts) > 1:
-                    specs = []
-                    for p in parts[1:]:
-                        s = _unquote(p.strip())
-                        name, _, typ = s.partition(":")
-                        specs.append((name, typ or "string"))
-                else:
-                    # implicit key inference: every distinct key becomes
-                    # a column, so the discovery is bounded — an
-                    # adversarial high-cardinality bag would otherwise
-                    # OOM the driver AND produce an absurd schema. A
-                    # clear error beats both; pass explicit keys (the
-                    # scale path) when a bag legitimately has many.
-                    max_keys = 1000
-                    keyrows = (
-                        df.select(F.explode(F.json_object_keys(
-                            F.to_json(bag.col))).alias("k"))
-                        .distinct().limit(max_keys + 1).collect()
-                    )
-                    if len(keyrows) > max_keys:
-                        raise KqlError(
-                            f"bag_unpack({src}) found more than "
-                            f"{max_keys} distinct keys — pass an "
-                            "explicit key list: bag_unpack(expr, "
-                            '"k1", "k2", …)'
-                        )
-                    specs = sorted((r.k, "string") for r in keyrows)
-                clash = [n for n, _ in specs if n in df.columns]
-                if clash:
-                    raise KqlError(
-                        f"bag_unpack key(s) {clash} collide with "
-                        "existing columns"
-                    )
-                # a bare-column source disappears from the output
-                # (Kusto bag_unpack contract)
-                keep = [c for c in df.columns
-                        if c != src.strip()]
-                df = df.select(
-                    *keep,
-                    *[F.try_variant_get(bag.col, f"$.{n}", t).alias(n)
-                      for n, t in specs],
-                )
-                continue
-            # `evaluate pivot(pivotCol, agg() [, v1, v2, …])` — the KQL
-            # pivot plugin: remaining columns become group keys, one
-            # output column per pivot value. With an explicit value list
-            # the plan is a single hash aggregation (the 100 TB shape);
-            # without one Spark first runs a distinct-values job on the
-            # pivot column (documented cost), then sorts the discovered
-            # values so column order is deterministic.
-            m2 = re.match(
-                r"^pivot\s*\(\s*([A-Za-z_]\w*)\s*,\s*([A-Za-z_]\w*\s*\(.*?\))"
-                r"\s*(?:,\s*(.+?)\s*)?\)$",
-                rest, re.S,
-            )
-            if not m2:
-                raise KqlError(
-                    "evaluate supports pivot(col, agg() [, values…]) "
-                    "and bag_unpack(expr [, keys…])"
-                )
-            pcol, aggsrc, valsrc = m2.groups()
-            vals = None
-            if valsrc:
-                vals = [
-                    _unquote(v) if _STR_LIT_RE.fullmatch(v) else v
-                    for v in _split_top_level(valsrc, ",")
-                ]
-            # group keys = every column except the pivot column and the
-            # aggregate's inputs (KQL pivot plugin contract). Only
-            # tokens that are genuine COLUMN references may knock a
-            # column out of the key set: strip string literals first
-            # (a literal containing the word "count" must not drop a
-            # `count` column) and skip tokens used as function names
-            # (`count()` the aggregate vs `count` the column).
-            no_lits = _STR_LIT_RE.sub(" ", aggsrc)
-            agg_cols = {
-                m.group(1)
-                for m in re.finditer(r"([A-Za-z_]\w*)\s*(\()?", no_lits)
-                if m.group(2) is None
-            }
-            keys = [
-                c for c in df.columns if c != pcol and c not in agg_cols
-            ]
-            gb = df.groupBy(*keys)
-            piv = gb.pivot(pcol, vals) if vals is not None else gb.pivot(pcol)
-            df = piv.agg(pe(aggsrc))
+            df = _evaluate(df, rest, pe=pe, bindings=bindings,
+                           tables=tables, wspec=wspec_before)
         elif op == "mv-apply":
             # `mv-apply name = expr on (stage | …)` — per-record
             # subquery over an exploded array. Row identity is preserved

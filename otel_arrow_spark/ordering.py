@@ -14,23 +14,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_key(conv_id: Column, turn_idx: Column, salt_buckets: int) -> Column:
-    """Deterministic salt derived from turn_idx (NOT rand(): resumable jobs
-    need identical placement across retries).
-
-    Splits each mega-conversation into ``salt_buckets`` shuffle keys while
-    keeping (conv_id, turn_idx) → bucket stable.
-    """
-    return F.concat_ws("#", conv_id, (turn_idx % salt_buckets).cast("string"))
-
-
-def repartition_salted(df: DataFrame, num_partitions: int, salt_buckets: int = 8) -> DataFrame:
-    """Shuffle on (conv_id, salt) so no single task owns a whole mega-conv."""
-    return df.repartition(
-        num_partitions, F.col("conv_id"), (F.col("turn_idx") % salt_buckets)
-    )
-
-
 def salted_agg(
     df: DataFrame,
     key_cols: list[str],

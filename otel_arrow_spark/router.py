@@ -35,17 +35,10 @@ def observed_sink_counts(m: dict) -> dict[str, int]:
     return {k: int(m[f"n_{k}"]) for k in SINKS if int(m[f"n_{k}"] or 0)}
 
 
-def sink_expr(
-    role: Column | None = None,
-    tool: Column | None = None,
-    fmt: Column | None = None,
-    event_name: Column | None = None,
-) -> Column:
+def sink_expr() -> Column:
     """The routing rule as one deterministic expression (codegen-friendly)."""
-    role = role if role is not None else F.col("role")
-    tool = tool if tool is not None else F.col("tool")
-    fmt = fmt if fmt is not None else F.col("format")
-    event_name = event_name if event_name is not None else F.col("event_name")
+    role, tool = F.col("role"), F.col("tool")
+    fmt, event_name = F.col("format"), F.col("event_name")
     return (
         F.when((role == "tool") & tool.isNotNull(), F.lit("sink_traces"))
         .when(fmt == "malformed", F.lit("sink_malformed"))

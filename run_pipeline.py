@@ -129,7 +129,6 @@ def _bench(spark, args, transcripts, tools, roles) -> int:
     write, one Spark job graph — the unit the scaling-efficiency rule
     measures at two parallelism levels."""
     from pyspark.sql import Observation
-    from pyspark.sql import functions as F
 
     from otel_arrow_spark.enrich import enrich_turns
     from otel_arrow_spark.lineage import with_slice
@@ -145,25 +144,19 @@ def _bench(spark, args, transcripts, tools, roles) -> int:
             enrich_turns(parse_turns(transcripts), tools, roles)
         )
         routed = with_slice(routed, args.n_slices)
+        # the per-sink counters ride the write job for both sinks
+        obs = Observation()
+        observed = routed.observe(obs, *sink_count_metrics())
         if args.sink == "noop":
             # perf-exporter analog (`crates/otap/src/perf_exporter`): the
             # noop-FORMAT write materializes every output column (a bare
             # count would let Catalyst prune the pipeline down to the
-            # router subtree); the per-sink counters ride the same job.
-            obs = Observation()
-            observed = routed.observe(obs, *sink_count_metrics())
+            # router subtree).
             observed.write.format("noop").mode("overwrite").save()
-            counts = observed_sink_counts(obs.get)
         else:
             out = os.path.join(args.output, f"routed_bench_{rep}")
-            routed.write.mode("overwrite").partitionBy("sink").parquet(out)
-            counts = {
-                r["sink"]: r["n"]
-                for r in spark.read.parquet(out)
-                .groupBy("sink")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
+            observed.write.mode("overwrite").partitionBy("sink").parquet(out)
+        counts = observed_sink_counts(obs.get)
         n = sum(counts.values())
         dt = time.time() - t0
         if best is None or dt < best[0]:

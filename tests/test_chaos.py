@@ -130,7 +130,8 @@ def test_kql_parser_never_raises_foreign_exceptions(spark, s):
     "s",
     ["0.", "0x1F + 1", "a.", "a.[", "bin(x, y)", "bin(x)", "1 +", "(a",
      "f(", "a in (", "dynamic(", "case(a)", "substring(a)", "'unterminated",
-     "a matches regex b", "strcat_delim(x, a)", "a[", "a[1", "..", "a..b"],
+     "a matches regex b", "strcat_delim(x, a)", "a[", "a[1", "..", "a..b",
+     "format_bytes(1, -1)"],
 )
 def test_kql_parser_edge_inputs_raise_kql_or_parse(spark, s):
     """Regression corpus for the round-1 fuzz failure ('0.') and the

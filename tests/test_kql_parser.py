@@ -4596,3 +4596,44 @@ def test_every_builtin_checks_its_argument_count(spark):
         for n in bad:
             with pytest.raises(KqlError):
                 parse_expr(f"{name}({', '.join(['1'] * n)})")
+
+
+def test_every_evaluate_plugin_checks_its_argument_count(spark):
+    """One call rule for `evaluate`: every plugin rejects max+1 arguments
+    (and min−1 where min > 0) with a KqlError naming the plugin, and a
+    malformed call names its own plugin — not another plugin's grammar."""
+    from otel_arrow_spark.operators.kql_parser import _PLUGINS
+
+    df = spark.createDataFrame(
+        [(1.0, "u", "2024-01-01 00:00:00")], "v double, user string, ts string"
+    ).withColumn("ts", F.to_timestamp("ts"))
+
+    def raises_naming(call, name):
+        with pytest.raises(KqlError) as exc:
+            kql(df, f"T | evaluate {call}")
+        assert name in str(exc.value), (call, str(exc.value))
+
+    for name, (lo, hi, _handler) in _PLUGINS.items():
+        bad = ([] if hi is None else [hi + 1]) + ([lo - 1] if lo else [])
+        for n in bad:
+            raises_naming(f"{name}({', '.join(['user'] * n)})", name)
+
+    dt = "datetime(2024-01-01), datetime(2024-01-02)"
+    for call in (
+        "session_count(user, ts)",
+        f"session_count(user, ts, {dt}, 1h, 1d, 1h)",
+        f"activity_counts_metrics(user, ts, {dt})",
+        "rolling_percentile(v, 50, ts, 1h)",
+        "basket(0.1, 2)",
+        "narrow(1)",
+        "dcount_intersect(user)",
+        "frobnicate(k)",
+        # argument readers name the plugin too
+        f"session_count(nosuch, ts, {dt}, 1h, 1d)",
+        "session_count(user, ts, 2024-01-01, datetime(2024-01-02), 1h, 1d)",
+        f"session_count(user, ts, {dt}, 1x, 1d)",
+        "rolling_percentile(v, 50, ts, 1h, 0)",
+        f"funnel_sequence(user, ts, {dt}, 1h, user, ['a', 'b'])",
+        "basket(0.1) extra",
+    ):
+        raises_naming(call, call[:call.index("(")])
