@@ -22,7 +22,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 SLICE_COL = "slice_id"
@@ -50,28 +50,17 @@ def with_lineage_cols(df: DataFrame, batch_id: str) -> DataFrame:
     )
 
 
-def content_checksum(df: DataFrame) -> int:
-    """Order-insensitive content checksum over the identity+payload columns.
+def content_checksum() -> Column:
+    """Order-insensitive content checksum aggregate over the
+    identity+payload columns.
 
     XOR of per-row xxhash64 — associative/commutative (and overflow-free
     under ANSI mode), so it is invariant to partitioning and row order (the
     rebuild's version of the reference's vPath-set equivalence,
-    `go/pkg/otel/assert/equiv.go:99-150`).
-
-    Test/assertion helper ONLY: it runs a dedicated action and collects
-    the 1-row aggregate. The pipeline hot path computes the identical
-    checksum for free on the write action via ``df.observe`` (see
-    :class:`SliceRunner`) — use that form anywhere a big relation is
-    already being materialized.
+    `go/pkg/otel/assert/equiv.go:99-150`). :class:`CheckpointedPipeline`
+    computes it for free on the write action via ``df.observe``.
     """
-    row = (
-        df.select(
-            F.xxhash64(F.col("conv_id"), F.col("turn_idx"), F.col("text")).alias("h")
-        )
-        .agg(F.expr("bit_xor(h)").alias("s"))
-        .collect()[0]
-    )
-    return int(row["s"] or 0)
+    return F.expr("bit_xor(xxhash64(conv_id, turn_idx, text))")
 
 
 def retry_with_backoff(
@@ -229,7 +218,7 @@ class CheckpointedPipeline:
                 obs,
                 F.count(F.lit(1)).alias("row_count"),
                 *sink_count_metrics(),
-                F.expr("bit_xor(xxhash64(conv_id, turn_idx, text))").alias("checksum"),
+                content_checksum().alias("checksum"),
             )
             # dynamic partition overwrite: a retry REPLACES this slice's
             # output — never duplicates (exactly-once sink semantics).

@@ -118,6 +118,23 @@ list) raise a ``KqlError`` that names the plugin; checks that are not
 about one argument (lookup tables, a serialized row set, the optional
 datetime pair) stay in the handler.
 
+Tabular operators: each is one entry of the registry ``_STAGES`` —
+name → (keeps_order, keeps_twins, handler) — declared by a module
+function registered with ``@_stage(names, keeps_order=…,
+keeps_twins=…)``; aliases (``order sort``, ``take limit``, ``parse
+parse-where``) share one entry and a name registered twice fails at
+import. ``keeps_order`` says whether the stage's output is still the
+serialized row set of its input (the `sort by` order and the window
+spec of `serialize`; `sort by` and `top` set a new one, so they do not
+keep it); ``keeps_twins`` whether the hidden bag-twin
+columns survive it. ``_apply_stages`` splits ``op rest`` once, rejects
+an unknown operator, drops the twins and resets the order state for an
+entry that does not keep them, then calls the handler with the
+pipeline's ``_StageState``; a handler that reads the order its own
+stage destroys (`scan`, `evaluate`) reads the snapshot ``ctx.before``.
+After the last stage the pending sort is applied and the twins are
+dropped.
+
 Implementation note: every parse result is a ``KE`` node — a Catalyst
 Column plus, when the expression is a literal, its Python value. Literal
 arguments (regex patterns, delimiters, bin widths, accessor keys) travel
@@ -133,13 +150,15 @@ import itertools
 import math
 import re
 import zlib
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from functools import reduce
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from otel_arrow_spark.operators import kql as ops
 
 
 class KqlError(ValueError):
@@ -1983,15 +2002,15 @@ _FUNCS: dict[str, tuple] = {}
 
 
 def _registry(table: dict, kind: str):
-    """The ``(names, lo, hi)`` decorator of ``table``: it registers the
-    decorated function under each space-separated name, each name
-    once."""
-    def register(names: str, lo: int, hi: int | None):
+    """The ``(names, *decl)`` decorator of ``table``: it registers the
+    decorated function under each space-separated name as ``(*decl,
+    fn)``, each name once."""
+    def register(names: str, *decl):
         def reg(fn):
             for n in names.split():
                 if n in table:
-                    raise ValueError(f"{kind} {n}() registered twice")
-                table[n] = (lo, hi, fn)
+                    raise ValueError(f"{kind} {n!r} registered twice")
+                table[n] = (*decl, fn)
             return fn
         return reg
     return register
@@ -2784,8 +2803,9 @@ def _percentilew(v: Column, w: Column, p: Column) -> Column:
 
 
 def _timespan_secs(src: str) -> float:
-    """Seconds of a timespan literal ``<n><d|h|m|s|ms>``."""
-    m = re.fullmatch(r"([\d.]+)(d|h|m|s|ms)", src.strip())
+    """Seconds of a timespan literal ``<n><d|h|m|s|ms>`` (the lexer's
+    number form: digits with at most one fractional part)."""
+    m = re.fullmatch(r"(\d+(?:\.\d+)?)(d|h|m|s|ms)", src.strip())
     if not m:
         raise KqlError(
             f"expected a timespan literal '<n><d|h|m|s|ms>', got {src!r}")
@@ -5569,9 +5589,10 @@ class _PluginArgs(list):
                           lambda m: _plugin_epoch(m.group(1)))
 
     def timespan(self, i: int) -> float:
-        """Argument ``i``: a timespan literal, in seconds."""
-        return self._read(i, "a timespan <n><d|h|m|s|ms>", r".*",
-                          lambda m: _timespan_secs(m.group(0)))
+        """Argument ``i``: a timespan literal > 0, in seconds — every
+        plugin reads a bin, window, period or lookback with it."""
+        return self._read(i, "a timespan <n><d|h|m|s|ms> > 0", r".*",
+                          lambda m: _timespan_secs(m.group(0)) or None)
 
     def integer(self, i: int, lo: int = 1) -> int:
         """Argument ``i``: an integer literal ≥ ``lo``."""
@@ -7052,1800 +7073,1965 @@ def _ev_pivot(df, args, pe, **_):
     return piv.agg(pe(aggsrc))
 
 
+# ---------------------------------------------------------------------------
+# tabular stage registry
+# ---------------------------------------------------------------------------
+
+# stage name → (keeps_order, keeps_twins, handler), see the module
+# docstring. A handler is ``(ctx, df, rest) -> DataFrame``: ``ctx`` is the
+# pipeline's ``_StageState``, ``df`` the stage's input and ``rest`` the
+# text after the operator name.
+_STAGES: dict[str, tuple] = {}
+_stage_entry = _registry(_STAGES, "tabular operator")
+
+
+def _stage(names: str, *, keeps_order: bool, keeps_twins: bool):
+    """Register a stage handler under each space-separated name.
+    ``keeps_order``: the stage's output is still its input's serialized
+    row set (same order, same window spec); otherwise the order state is
+    reset before the handler runs — `sort by` and `top` then set their
+    own. ``keeps_twins``: the hidden bag-twin columns survive the stage;
+    otherwise they are dropped before the handler runs."""
+    return _stage_entry(names, keeps_order, keeps_twins)
+
+
+@dataclass(frozen=True)
+class _Order:
+    """Serialization state (KQL: `sort by` output IS a serialized row
+    set; `serialize by k…` re-partitions the window). ``cols`` holds the
+    sort Columns, ``wspec`` the Window spec window functions compile
+    against, ``order_src``/``keys`` the plain-column sort keys and
+    `serialize by` keys that `scan` needs. An order-destroying stage
+    starts from ``_Order()`` — the KQL rule that summarize/join/…
+    de-serialize the table.
+
+    ``pending_sort`` makes the sort LAZY: a global orderBy placed
+    eagerly before a window stage costs a rangepartition Exchange +
+    full Sort whose order the window's own hash Exchange immediately
+    destroys (measured: two Exchanges instead of one on the serialize
+    path). The sort spec is recorded here and physically applied only
+    where order is actually consumed — `take`/`limit` (first-N
+    semantics) and the end of the pipeline (KQL's sorted-output
+    guarantee, now over the usually much smaller post-filter result).
+    Window functions never need the pre-sort: a Window spec sorts its
+    own partitions."""
+    cols: list | None = None
+    wspec: object = None
+    pending_sort: list | None = None
+    keys: list[str] | None = None
+    order_src: list | None = None
+
+
+class _StageState:
+    """What the stages of one pipeline share: the serialization state
+    ``order`` and ``before``, its value before the running stage (what a
+    stage that destroys the order may still read); the materialized bag
+    twins (KE.bag_map: column name → hidden-column reference); the
+    ``as``-bound ``tables``; the ``make-graph`` value; and the running
+    stage's ``op`` and input ``df``, against whose columns
+    ``pe``/``pek`` compile."""
+
+    def __init__(self, df: DataFrame, bindings: dict,
+                 tables: dict | None):
+        self.df, self.bindings, self.tables = df, bindings, tables
+        self.order = self.before = _Order()
+        self.bag_twins: dict[str, Column] = {}
+        self.graph: dict | None = None
+        self.op = ""
+
+    def pek(self, s: str, order: _Order | None = None) -> KE:
+        """``s`` compiled against the stage input's columns, the bag
+        twins and the window spec of ``order`` (default: the current
+        one)."""
+        vcols = {
+            f.name for f in self.df.schema.fields
+            if f.dataType.typeName() == "variant"
+        }
+        return parse_expr_ke(s, self.bindings,
+                             wspec=(order or self.order).wspec,
+                             variant_cols=vcols, bag_twins=self.bag_twins)
+
+    def pe(self, s: str, order: _Order | None = None) -> Column:
+        return self.pek(s, order).col
+
+    def flush_sort(self, df: DataFrame) -> DataFrame:
+        """``df`` with the pending sort applied (see ``_Order``)."""
+        if self.order.pending_sort is None:
+            return df
+        df = df.orderBy(*self.order.pending_sort)
+        self.order = replace(self.order, pending_sort=None)
+        return df
+
+    def drop_twins(self, df: DataFrame) -> DataFrame:
+        """``df`` without the hidden bag-twin columns."""
+        if self.bag_twins:
+            df = df.drop(*[_TWIN_PREFIX + n for n in self.bag_twins])
+            self.bag_twins.clear()
+        return df
+
 
 def _apply_stages(df: DataFrame, stages: list[str], bindings: dict,
                   tables: dict[str, DataFrame] | None = None) -> DataFrame:
-    from otel_arrow_spark.operators import kql as ops
-
-    # Serialization state (KQL: `sort by` output IS a serialized row
-    # set; `serialize by k…` re-partitions the window). `order` holds
-    # the sort Columns, `wspec` the Window spec window functions
-    # compile against. Order-destroying stages reset both — the KQL
-    # rule that summarize/join/… de-serialize the table.
-    #
-    # `pending_sort` makes the sort LAZY: a global orderBy placed
-    # eagerly before a window stage costs a rangepartition Exchange +
-    # full Sort whose order the window's own hash Exchange immediately
-    # destroys (measured: two Exchanges instead of one on the serialize
-    # path). The sort spec is recorded here and physically applied only
-    # where order is actually consumed — `take`/`limit` (first-N
-    # semantics) and the end of the pipeline (KQL's sorted-output
-    # guarantee, now over the usually much smaller post-filter result).
-    # Window functions never need the pre-sort: a Window spec sorts its
-    # own partitions.
-    sctx: dict = {"order": None, "wspec": None,
-                  "pending_sort": None, "keys": None,
-                  "order_src": None}
-
-    def flush_sort() -> None:
-        nonlocal df
-        if sctx["pending_sort"] is not None:
-            df = df.orderBy(*sctx["pending_sort"])
-            sctx["pending_sort"] = None
-    _ORDER_DESTROYING = {
-        "summarize", "join", "lookup", "union", "distinct", "count",
-        "sample", "sample-distinct", "mv-expand", "mv-apply",
-        "make-series", "evaluate", "top-nested", "search", "reduce",
-        "make-graph", "graph-match", "graph-to-table", "find",
-        "graph-shortest-paths", "graph-mark-components",
-    }
-
-    # Materialized bag twins (KE.bag_map): column name → hidden-column
-    # reference. Twins survive only row-level stages; anything that
-    # reshapes the column set strips the hidden columns first.
-    bag_twins: dict[str, Column] = {}
-    _TWIN_PRESERVING = {
-        "where", "take", "limit", "extend", "order", "sort", "top",
-        "serialize",
-        # project CONSUMES twins (accessors on a fused bag read the map
-        # directly, letting Catalyst prune the serialized VARIANT twin
-        # entirely); its select() then drops the hidden columns, so the
-        # dict is cleared in the project branch rather than here.
-        "project",
-    }
-
-    def drop_twins() -> None:
-        nonlocal df
-        if bag_twins:
-            df = df.drop(*[_TWIN_PREFIX + n for n in bag_twins])
-            bag_twins.clear()
-
-    def pek(s: str) -> KE:
-        vcols = {
-            f.name for f in df.schema.fields
-            if f.dataType.typeName() == "variant"
-        }
-        return parse_expr_ke(s, bindings, wspec=sctx["wspec"],
-                             variant_cols=vcols, bag_twins=bag_twins)
-
-    def pe(s: str) -> Column:
-        return pek(s).col
-
+    """Run each `op rest` stage through its ``_STAGES`` entry."""
+    ctx = _StageState(df, bindings, tables)
     for stage in stages:
         m = re.match(r"^([a-z-]+)\s*(.*)$", stage, re.S)
         if not m:
             raise KqlError(f"bad stage {stage!r}")
         op, rest = m.group(1), m.group(2).strip()
-        if op not in _TWIN_PRESERVING:
-            drop_twins()
-        # narrow() consumes the serialized order its own stage destroys
-        wspec_before = sctx["wspec"]
-        if op in _ORDER_DESTROYING:
-            sctx["order"] = sctx["wspec"] = sctx["pending_sort"] = None
-            sctx["keys"] = sctx["order_src"] = None
-        if op == "where":
-            df = df.filter(pe(rest))
-        elif op == "extend":
-            cols = {}
-            stale: list[str] = []
-            new_twins: list[str] = []
-            for name, expr in _parse_assignments(rest):
-                if name is None:
-                    raise KqlError("extend needs name = expr")
-                if re.fullmatch(r"pack_all\s*\(\s*\)", expr.strip()):
-                    ke = None
-                    cols[name] = _pack_all_col(df)
-                elif (cie := _column_ifexists_col(df, expr, pe)) \
-                        is not None:
-                    ke = None
-                    cols[name] = cie
-                else:
-                    ke = pek(expr)
-                    cols[name] = ke.col
-                if ke is not None and ke.bag_map is not None:
-                    # fuse: keep the map twin as a hidden sibling so
-                    # later bag surgery skips the JSON round-trip
-                    cols[_TWIN_PREFIX + name] = ke.bag_map
-                    new_twins.append(name)
-                elif name in bag_twins:
-                    stale.append(name)  # reassigned to a non-bag
-            df = df.withColumns(cols)
-            for name in stale:
-                del bag_twins[name]
-                df = df.drop(_TWIN_PREFIX + name)
-            for name in new_twins:
-                bag_twins[name] = F.col(_TWIN_PREFIX + name)
-        elif op == "project":
-            sel = []
-            for name, expr in _parse_assignments(rest):
-                if re.fullmatch(r"pack_all\s*\(\s*\)", expr.strip()):
-                    c = _pack_all_col(df)
-                else:
-                    c = _column_ifexists_col(df, expr, pe)
-                    if c is None:
-                        c = pe(expr)
-                sel.append(c.alias(name) if name else c)
-            df = df.select(*sel)
-            bag_twins.clear()  # select() already excluded the twins
-        elif op == "project-keep":
-            pats = [p.strip() for p in rest.split(",")]
-            df = ops.project_keep(df, *pats)
-        elif op == "project-away":
-            pats = [p.strip() for p in rest.split(",")]
-            df = ops.project_away(df, *pats)
-        elif op == "project-reorder":
-            pats = [p.strip() for p in rest.split(",")]
-            df = ops.project_reorder(df, *pats)
-        elif op == "project-rename":
-            renames = {}
-            for name, expr in _parse_assignments(rest):
-                if name is None:
-                    raise KqlError("project-rename needs new = old")
-                renames[name] = expr.strip()
-            df = ops.project_rename(df, **renames)
-        elif op == "summarize":
-            # `hint.shufflekey=k` (+`hint.num_partitions=N`) is
-            # APPLIED: pre-partition the input on k so the aggregate
-            # reuses that Exchange (Kusto's high-cardinality summarize
-            # hint — the skew-spread shape). `hint.strategy=shuffle`
-            # alone is accepted and dropped: Catalyst+AQE already
-            # picks the shuffle strategy from the declared plan.
-            mh = re.match(r"^(?:hint\.\w+\s*=\s*[\w.]+\s+)+", rest)
-            if mh:
-                shints = dict(re.findall(
-                    r"hint\.(\w+)\s*=\s*([\w.]+)", mh.group(0)))
-                rest = rest[mh.end():]
-                if "shufflekey" in shints:
-                    parts = ([int(shints["num_partitions"])]
-                             if "num_partitions" in shints else [])
-                    df = df.repartition(
-                        *parts, F.col(shints["shufflekey"]))
-            by_at = _find_by_top(rest)
-            if by_at is not None:
-                agg_part = rest[:by_at]
-                by_items = _parse_assignments(rest[by_at + 2:])
-            else:
-                agg_part, by_items = rest, []
-            keys = [
-                (pe(e).alias(n) if n else pe(e))
-                for n, e in by_items
-            ]
-            aggs = {}
-            # (kind, rank expr, cols-or-None-for-*)
-            star_rows: list[tuple[str, str, list[str] | None]] = []
-            # internal array-agg column → per-element output names
-            # (plural percentiles/percentilesw expansion, below)
-            pctl_expand: list[tuple[str, list[str]]] = []
-            for i, (name, expr) in enumerate(_parse_assignments(agg_part)):
-                # plural `percentiles(x, p1, p2, …)` / `percentilesw(x,
-                # w, p1, …)` — ONE exact array aggregate (the gated
-                # percentiles_array machinery), expanded to Kusto's
-                # auto-named columns (percentile_x_p, dots → _) after
-                # the groupBy. Tuple assignment `(a, b) = percentiles(
-                # x, 50, 95)` names them explicitly; a single-name
-                # assignment is allowed only for a single percentile.
-                mp = re.fullmatch(
-                    r"(?:\(\s*([A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)"
-                    r"\s*\)\s*=\s*)?percentiles(w?)\s*\((.+)\)",
-                    expr.strip(), re.S)
-                if mp:
-                    tuple_names, wtd, inner = mp.groups()
-                    parts = [p.strip() for p in _split_top_level(inner, ",")]
-                    nlead = 2 if wtd else 1
-                    try:
-                        ps = [float(p) for p in parts[nlead:]]
-                    except ValueError:
-                        raise KqlError(
-                            "percentiles needs literal percentile "
-                            f"values, got {parts[nlead:]!r}")
-                    if not ps:
-                        raise KqlError(
-                            "percentiles needs at least one percentile")
-                    arr = pe(("percentilesw_array(" if wtd
-                              else "percentiles_array(")
-                             + ", ".join(parts[:nlead])
-                             + "".join(f", {p}" for p in ps) + ")")
-                    if tuple_names:
-                        outs = [t.strip()
-                                for t in tuple_names.split(",")]
-                        if len(outs) != len(ps):
-                            raise KqlError(
-                                f"percentiles tuple names {len(outs)} "
-                                f"!= percentile count {len(ps)}")
-                    elif name is not None:
-                        if len(ps) != 1:
-                            raise KqlError(
-                                "a single name can only bind a single "
-                                "percentile — use (n1, n2, …) = "
-                                "percentiles(…)")
-                        outs = [name]
-                    else:
-                        vsan = re.sub(
-                            r"\W+", "_", parts[0]).strip("_")
-                        outs = [
-                            "percentile_" + vsan + "_"
-                            + ("%g" % p).replace(".", "_")
-                            .replace("-", "_")
-                            for p in ps]
-                    internal = f"__pctls_{i}"
-                    aggs[internal] = arr
-                    pctl_expand.append((internal, outs))
-                    continue
-                mstar = re.fullmatch(
-                    r"arg_(max|min)\s*\((.+?),\s*(\*|[A-Za-z_]\w*"
-                    r"(?:\s*,\s*[A-Za-z_]\w*)+)\s*\)", expr.strip(),
-                    re.S)
-                if mstar and (
-                    mstar.group(3) == "*"
-                    or all(c.strip() in df.columns
-                           for c in mstar.group(3).split(","))
-                ):
-                    # `arg_max(rank, *)` / `arg_max(rank, c1, c2, …)` —
-                    # the winning ROW's columns: one max_by/min_by over
-                    # a struct (single map-side-combinable aggregate,
-                    # no window/self-join), exploded back to columns
-                    # after the groupBy. Ties break on the full row
-                    # struct (deterministic; Kusto's pick is
-                    # arbitrary). The 2-arg single-expression form
-                    # stays in the plain aggregate map.
-                    if name is not None:
-                        raise KqlError(
-                            f"arg_{mstar.group(1)}(expr, cols…) cannot "
-                            "be renamed — it expands to the columns")
-                    wanted = (
-                        None if mstar.group(3) == "*"
-                        else [c.strip()
-                              for c in mstar.group(3).split(",")])
-                    star_rows.append(
-                        (mstar.group(1), mstar.group(2), wanted))
-                    continue
-                if re.fullmatch(r"take_any\s*\(\s*\*\s*\)",
-                                expr.strip()):
-                    # `take_any(*)` — any whole row per group; made
-                    # deterministic (min over the row struct) so the
-                    # result is engine- and partitioning-independent
-                    if name is not None:
-                        raise KqlError(
-                            "take_any(*) cannot be renamed — it "
-                            "expands to every column")
-                    star_rows.append(("min", None, None))
-                    continue
-                c = pe(expr)
-                aggs[name or f"agg_{i}"] = c
-            if star_rows:
-                if len(star_rows) > 1:
-                    raise KqlError(
-                        "only one arg_max/arg_min(expr, cols…) per "
-                        "summarize")
-                kind, rank_src, wanted = star_rows[0]
-                key_names = {
-                    (n or e.strip()) for n, e in by_items
-                }
-                row_cols = (
-                    wanted if wanted is not None
-                    else [c for c in df.columns if c not in key_names])
-                # Kusto's output ALSO carries the ranked expression's
-                # column (arg_max(E, c1) → E, c1; arg_max(strlen(s), *)
-                # → strlen_s, *), aliased by its source text — include
-                # it unless a listed/expanded or by-key column already
-                # holds it.
-                rank_out = None
-                if rank_src is not None:
-                    rname = rank_src.strip()
-                    if rname not in row_cols and rname not in key_names:
-                        rank_out = rname
-                fields = [F.col(c).alias(c) for c in row_cols]
-                if rank_out is not None:
-                    fields.insert(0, pe(rank_src).alias("__rank_out"))
-                rowstruct = F.struct(*fields)
-                # Tie-break only on ORDERABLE columns — map / VARIANT
-                # bag columns (common here) would fail analysis inside
-                # a min()/max_by ordering struct; they still travel in
-                # the returned payload struct.
-                dtypes = {f.name: f.dataType for f in df.schema.fields}
-                ord_cols = [F.col(c) for c in row_cols
-                            if _orderable_type(dtypes[c])]
-                fn = F.max_by if kind == "max" else F.min_by
-                if rank_src is None:  # take_any(*): deterministic min
-                    if ord_cols:
-                        picked = F.min_by(
-                            rowstruct, F.struct(*ord_cols)).alias("_row")
-                    else:  # nothing orderable — any non-null row
-                        picked = F.any_value(
-                            rowstruct, True).alias("_row")
-                else:
-                    # rank first, orderable-row tie-break
-                    picked = fn(
-                        rowstruct, F.struct(pe(rank_src), *ord_cols)
-                    ).alias("_row")
-                df = df.groupBy(*keys).agg(
-                    picked,
-                    *[v.alias(k) for k, v in aggs.items()])
-                out_cols = (
-                    [F.col("_row.__rank_out").alias(rank_out)]
-                    if rank_out is not None else [])
-                out_cols += [
-                    F.col(f"_row.{c}").alias(c) for c in row_cols]
-                df = df.select(
-                    *[c for c in df.columns if c != "_row"], *out_cols)
-            else:
-                if not aggs:
-                    raise KqlError(
-                        "summarize needs at least one aggregate "
-                        "(e.g. `summarize n = count() by k`)"
-                    )
-                df = df.groupBy(*keys).agg(
-                    *[v.alias(k) for k, v in aggs.items()]
-                )
-            if pctl_expand:
-                # expand each internal percentile array in place, so
-                # column order matches the declaration order
-                expand = dict(pctl_expand)
-                sel: list[Column] = []
-                for c in df.columns:
-                    if c in expand:
-                        sel += [F.col(c)[j].alias(n)
-                                for j, n in enumerate(expand[c])]
-                    else:
-                        sel.append(F.col(c))
-                df = df.select(*sel)
-        elif op in ("order", "sort"):
-            rest = re.sub(r"^by\s+", "", rest)
-            cols = []
-            order_src: list[tuple[str, bool] | None] = []
-            for part in _split_top_level(rest, ","):
-                part = part.strip()
-                # `… [asc|desc] [nulls first|nulls last]` — explicit
-                # null placement; defaults match both KQL and Spark
-                # (asc → nulls first, desc → nulls last)
-                mnul = re.search(
-                    r"\s+nulls\s+(first|last)$", part, re.I)
-                nulls = None
-                if mnul:
-                    nulls = mnul.group(1).lower()
-                    part = part[:mnul.start()].strip()
-                toks = part.rsplit(None, 1)
-                if len(toks) == 2 and toks[1].lower() in ("asc", "desc"):
-                    expr_src, asc = toks[0], toks[1].lower() == "asc"
-                else:
-                    # KQL default sort order is descending (kql docs)
-                    expr_src, asc = part, False
-                c = pe(expr_src)
-                if nulls == "first":
-                    cols.append(
-                        c.asc_nulls_first() if asc
-                        else c.desc_nulls_first())
-                elif nulls == "last":
-                    cols.append(
-                        c.asc_nulls_last() if asc
-                        else c.desc_nulls_last())
-                else:
-                    cols.append(c.asc() if asc else c.desc())
-                order_src.append(
-                    (expr_src.strip(), asc)
-                    if re.fullmatch(r"[A-Za-z_]\w*", expr_src.strip())
-                    else None  # computed key: fine for windows, not scan
-                )
-            # LAZY: recorded, flushed where order is consumed (see
-            # pending_sort above). sort output is serialized (KQL
-            # semantics): window functions become legal, over a GLOBAL
-            # ordered window until `serialize by k…` re-partitions it.
-            sctx["pending_sort"] = cols
-            sctx["order"] = cols
-            sctx["order_src"] = order_src
-            sctx["wspec"] = Window.orderBy(*cols)
-        elif op == "serialize":
-            # `serialize [by k1, k2…] [name = expr, …]`
-            #
-            # Standard KQL `serialize` freezes the *current* row order —
-            # but a distributed table has no deterministic natural
-            # order, so this engine requires a preceding `sort by` (the
-            # honest deviation; an unsorted serialize would be
-            # nondeterministic at any scale).
-            #
-            # `serialize by k…` is this engine's scale extension: the
-            # window becomes partitionBy(k…).orderBy(sort keys) — one
-            # parallel window per key group (the 100 TB shape; bare
-            # `serialize` is a single ordered partition and belongs
-            # only on small/aggregated relations).
-            if sctx["order"] is None:
-                raise KqlError(
-                    "serialize requires a preceding `sort by` — a "
-                    "distributed table has no natural row order"
-                )
-            m2 = re.match(r"^by\s+([^=]+?)\s*(?:$|(?=[A-Za-z_]\w*\s*=))",
-                          rest, re.S)
-            assigns_src = rest
-            if m2:
-                key_srcs = [k.strip() for k in
-                            _split_top_level(m2.group(1), ",")]
-                keys = [pe(k) for k in key_srcs]
-                sctx["wspec"] = Window.partitionBy(*keys).orderBy(
-                    *sctx["order"])
-                sctx["keys"] = (
-                    key_srcs
-                    if all(re.fullmatch(r"[A-Za-z_]\w*", k)
-                           for k in key_srcs)
-                    else None
-                )
-                assigns_src = rest[m2.end():].strip()
-            if assigns_src:
-                cols = {}
-                for name, expr in _parse_assignments(assigns_src):
-                    if name is None:
-                        raise KqlError("serialize needs name = expr")
-                    cols[name] = pe(expr)
-                df = df.withColumns(cols)
-        elif op in ("take", "limit"):
-            flush_sort()  # first-N consumes the pending order
-            try:
-                df = df.limit(int(rest))
-            except ValueError:
-                raise KqlError(f"take/limit needs an integer, got {rest!r}")
-        elif op == "count":
-            df = df.agg(F.count(F.lit(1)).alias("count_"))
-        elif op == "consume":
-            # Kusto `consume` evaluates the pipeline and returns an
-            # empty result (a perf-harness sink). Declaratively that is
-            # limit(0) over the same schema — Catalyst prunes the scan,
-            # which is the right batch-engine reading (the cost side of
-            # Kusto's consume is the interactive runtime's concern).
-            # `decodeblocks=…` is accepted and ignored.
-            if rest and not re.fullmatch(
-                    r"decodeblocks\s*=\s*(true|false)", rest.strip()):
-                raise KqlError(
-                    "consume takes no arguments (or decodeblocks=…)")
-            df = df.limit(0)
-        elif op == "distinct":
-            if rest == "*":
-                df = df.distinct()
-            else:
-                df = df.select(
-                    *[pe(e) for _n, e in _parse_assignments(rest)]
-                ).distinct()
-        elif op == "top":
-            # `top N by expr [asc|desc][, tiebreak ...]` — sort+limit,
-            # which Catalyst plans as TakeOrderedAndProject (per-
-            # partition heaps, no global sort shuffle; plan-asserted in
-            # tests).
-            m2 = re.match(r"^(\d+)\s+by\s+(.+)$", rest, re.S)
-            if not m2:
-                raise KqlError("top needs `top N by expr [asc|desc]`")
-            cols = []
-            for part in _split_top_level(m2.group(2), ","):
-                toks = part.rsplit(None, 1)
-                if len(toks) == 2 and toks[1].lower() in ("asc", "desc"):
-                    c = pe(toks[0])
-                    cols.append(
-                        c.asc() if toks[1].lower() == "asc" else c.desc()
-                    )
-                else:
-                    # KQL top default order is descending
-                    cols.append(pe(part).desc())
-            df = df.orderBy(*cols).limit(int(m2.group(1)))
-            # top's own order supersedes any earlier sort; its output
-            # is serialized by that order (Kusto top contract)
-            sctx["pending_sort"] = None
-            sctx["order"] = cols
-            sctx["wspec"] = Window.orderBy(*cols)
-        elif op == "top-hitters":
-            # `top-hitters N of c [by sumExpr]` — heavy hitters. Kusto
-            # computes this approximately; this engine computes it
-            # EXACTLY: a map-side-combinable hash aggregation on c
-            # (state = one row per distinct c, the same bound a sketch
-            # would amortize) followed by TakeOrderedAndProject — no
-            # global sort. Output column names match Kusto
-            # (approximate_count_/approximate_sum_) so queries port.
-            m2 = re.match(
-                r"^(\d+)\s+of\s+([A-Za-z_]\w*)(?:\s+by\s+(.+))?$",
-                rest, re.S,
-            )
-            if not m2:
-                raise KqlError(
-                    "top-hitters needs `top-hitters N of col [by expr]`"
-                )
-            n, c, by = int(m2.group(1)), m2.group(2), m2.group(3)
-            if by:
-                out = "approximate_sum_" + re.sub(r"\W+", "_", by.strip())
-                agg = F.sum(pe(by)).alias(out)
-            else:
-                out = f"approximate_count_{c}"
-                agg = F.count(F.lit(1)).alias(out)
-            df = (df.groupBy(c).agg(agg)
-                    .orderBy(F.col(out).desc(), F.col(c).asc())
-                    .limit(n))
-            sctx["order"] = sctx["wspec"] = sctx["pending_sort"] = None
-            sctx["keys"] = sctx["order_src"] = None
-        elif op == "mv-expand":
-            # `mv-expand name = expr` (or a bare array column) — one
-            # element per output row; null/empty arrays yield no rows
-            # (KQL default). One item per stage: multi-column KQL
-            # mv-expand zips arrays, which sequential explodes would
-            # silently turn into a cross product.
-            mwi = re.match(
-                r"^with_itemindex\s*=\s*([A-Za-z_]\w*)\s+(.+)$",
-                rest, re.S)
-            ixname = None
-            if mwi:
-                ixname, rest = mwi.groups()
-            items = _parse_assignments(rest)
-            if len(items) != 1:
-                raise KqlError("mv-expand takes exactly one item per stage")
-            name, expr = items[0]
-            if name is None:
-                name = expr.strip()
-                if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
-                    raise KqlError(
-                        "mv-expand needs `name = expr` for non-column"
-                        " expressions"
-                    )
-            if ixname is not None:
-                # with_itemindex → posexplode (0-based element index)
-                others = [c for c in df.columns if c != name]
-                df = df.select(
-                    *others,
-                    F.posexplode(pe(expr)).alias(ixname, name))
-            else:
-                df = df.withColumn(name, F.explode(pe(expr)))
-        elif op == "make-series":
-            # `make-series name = agg() [default = d] on ts_col
-            #  from datetime(…) to datetime(…) step <timespan> [by keys]`
-            # → one row per key with a REGULAR series array (every bin
-            # present, gaps filled with the default) + the matching
-            # timestamp array. Two map-side-combinable aggregations
-            # ((keys, bin) then keys); the dense grid materializes as a
-            # per-row `transform(sequence(0,n-1), …)` over a bin→value
-            # map — no grid join, no shuffle beyond the two aggs. n is
-            # fixed at plan time from the literal from/to/step.
-            m2 = re.match(
-                r"^([A-Za-z_]\w*)\s*=\s*(.+?)"
-                r"(?:\s+default\s*=\s*(\S+))?"
-                r"\s+on\s+([A-Za-z_]\w*)"
-                r"\s+from\s+datetime\(\s*['\"]?([^)'\"]+)['\"]?\s*\)"
-                r"\s+to\s+datetime\(\s*['\"]?([^)'\"]+)['\"]?\s*\)"
-                r"\s+step\s+([\d.]+(?:ms|d|h|m|s))"
-                r"(?:\s+by\s+(.+))?$",
-                rest, re.S,
-            )
-            if not m2:
-                raise KqlError(
-                    "make-series needs `name = agg() [default = d] on col"
-                    " from datetime(..) to datetime(..) step <span>"
-                    " [by keys]`"
-                )
-            (sname, aggsrc, dflt, oncol, f_s, t_s,
-             stepsrc, bysrc) = m2.groups()
-            from datetime import datetime as _dt
-
-            start = _dt.fromisoformat(f_s.strip())
-            end = _dt.fromisoformat(t_s.strip())
-            mnum = re.match(r"[\d.]+", stepsrc)
-            unit = stepsrc[mnum.end():]
-            step_s = float(mnum.group()) * {
-                "d": 86400, "h": 3600, "m": 60, "s": 1, "ms": 0.001
-            }[unit]
-            n_bins = int(-(-((end - start).total_seconds()) // step_s))
-            if not 0 < n_bins <= 1_000_000:
-                raise KqlError(f"make-series grid of {n_bins} bins")
-            # parquet often yields TIMESTAMP_NTZ, which refuses a direct
-            # double cast — normalize to session-tz timestamp first
-            onc = F.col(oncol).cast("timestamp")
-            startc = F.lit(f_s.strip()).cast("timestamp")
-            keys = []
-            if bysrc:
-                keys = [
-                    (pe(e).alias(nm) if nm else pe(e))
-                    for nm, e in _parse_assignments(bysrc)
-                ]
-            key_names = [
-                df.select(k).columns[0] for k in keys
-            ]
-            dflt_col = pe(dflt) if dflt is not None else F.lit(None)
-            bin_idx = F.floor(
-                (onc.cast("double") - startc.cast("double")) / step_s
-            ).cast("int")
-            seq = F.sequence(F.lit(0), F.lit(n_bins - 1))
-            df = (
-                df.filter((onc >= startc) & (bin_idx < n_bins)
-                          & (bin_idx >= 0))
-                .groupBy(*keys, bin_idx.alias("_msi"))
-                .agg(pe(aggsrc).alias("_msv"))
-                .groupBy(*key_names)
-                .agg(
-                    F.map_from_entries(
-                        F.collect_list(F.struct("_msi", "_msv"))
-                    ).alias("_msm")
-                )
-                .select(
-                    *key_names,
-                    F.transform(
-                        seq,
-                        lambda i: F.coalesce(
-                            F.try_element_at(F.col("_msm"), i), dflt_col
-                        ),
-                    ).alias(sname),
-                    F.transform(
-                        seq,
-                        lambda i: startc + F.make_dt_interval(
-                            F.lit(0), F.lit(0), F.lit(0),
-                            i.cast("double") * F.lit(step_s),
-                        ),
-                    ).alias(oncol),
-                )
-            )
-        elif op in ("parse", "parse-where"):
-            # `parse [kind=simple] expr with [*] "lit" name[:type] …` —
-            # the KQL text-extraction operator (the reference's home
-            # domain: one regex over the line, `parse.py`'s per-format
-            # grok twin). Compiles the whole pattern to ONE anchored
-            # regex; each field is a capture group read by
-            # regexp_extract — narrow, codegen'd, no Python.
-            # `parse-where` is the filtering flavor: rows whose source
-            # does not match the pattern are DROPPED (parse keeps them
-            # with empty/NULL extractions) — one extra rlike on the same
-            # anchored regex, pushed before the extraction projections
-            # so the scan filter prunes early.
-            src, pattern, cols = _compile_parse(rest, pe)
-            if op == "parse-where":
-                df = df.filter(src.rlike(pattern))
-            df = df.withColumns(cols)
-        elif op == "parse-kv":
-            # `parse-kv expr as (k1[:ty], k2…) with (pair_delimiter=',',
-            # kv_delimiter='=')` — key=value extraction into declared
-            # columns. One regexp_extract per declared key (codegen'd,
-            # narrow; missing key → '' → NULL under a typed try_cast,
-            # KQL's behavior). Single-character pair delimiter only: the
-            # value is matched with a negated character class, which is
-            # the form both Java regex and RE2 (DuckDB oracle) agree on
-            # without lookahead.
-            m2 = re.match(r"^(.+?)\s+as\s+\((.+?)\)\s*"
-                          r"(?:with\s*\((.*?)\))?\s*$", rest, re.S)
-            if not m2:
-                raise KqlError(
-                    "parse-kv needs `parse-kv expr as (keys) "
-                    "[with (pair_delimiter=…, kv_delimiter=…)]`"
-                )
-            src = pe(m2.group(1))
-            pd_, kd = ",", "="
-            for nm, val in _parse_assignments(m2.group(3) or ""):
-                if nm == "pair_delimiter":
-                    pd_ = _unquote(val.strip())
-                elif nm == "kv_delimiter":
-                    kd = _unquote(val.strip())
-                elif nm is not None:
-                    raise KqlError(f"unknown parse-kv option {nm!r}")
-            if len(pd_) != 1:
-                raise KqlError("parse-kv pair_delimiter must be one char")
-            cols = {}
-            for item in _split_top_level(m2.group(2), ","):
-                name, _, ty = item.strip().partition(":")
-                name, ty = name.strip(), (ty.strip() or None)
-                esc_pd = re.escape(pd_)
-                kpat = (f"(?:^|{esc_pd})\\s*{re.escape(name)}"
-                        f"\\s*{re.escape(kd)}\\s*([^{esc_pd}]*?)"
-                        f"\\s*(?:{esc_pd}|$)")
-                cols[name] = _typed_cast(
-                    F.regexp_extract(src, kpat, 1), ty)
-            if not cols:
-                raise KqlError("parse-kv declares no keys")
-            df = df.withColumns(cols)
-        elif op == "fork":
-            raise KqlError(
-                "fork yields multiple result tables — use kql_fork()"
-            )
-        elif op == "join":
-            # `join [kind=k] (source) on key[, $left.a == $right.b ...]`
-            # Equi-join only (KQL likewise); bare keys merge into one
-            # output column (KQL shows the key once), `$left/$right`
-            # pairs keep both sides. Colliding non-key right columns are
-            # renamed `name1`, the KQL dedup convention.
-            # strategy hints are APPLIED, not just tolerated:
-            # hint.strategy=broadcast pins a BroadcastHashJoin on the
-            # parenthesized side (the dimension/enrich shape, above
-            # AQE's size threshold too); =shuffle pins shuffle-hash;
-            # hint.shufflekey=k (+hint.num_partitions=N) pre-partitions
-            # both sides on k so the join reuses one Exchange. Hints
-            # Catalyst can't honor for the join type are ignored, same
-            # as Kusto treats them as optimizer suggestions. Only
-            # header hints are consumed — a subquery's own hints
-            # belong to the subquery.
-            hints: dict[str, str] = {}
-
-            def _eat_hints(s: str) -> str:
-                mh = re.match(r"^(?:hint\.\w+\s*=\s*[\w.]+\s+)+", s)
-                if not mh:
-                    return s
-                hints.update(re.findall(
-                    r"hint\.(\w+)\s*=\s*([\w.]+)", mh.group(0)))
-                return s[mh.end():]
-
-            rest = _eat_hints(rest)
-            mk = re.match(r"^kind\s*=\s*([a-z]+)\s+", rest)
-            kind = mk.group(1) if mk else "innerunique"  # KQL default
-            if mk:
-                rest = _eat_hints(rest[mk.end():])
-            m2 = re.match(
-                r"^(\(.*\)|[A-Za-z_][A-Za-z0-9_]*)\s+on\s+(.+)$",
-                rest, re.S,
-            )
-            if not m2:
-                raise KqlError("join needs `join [kind=k] (source) on keys`")
-            if kind not in _JOIN_KINDS:
-                raise KqlError(f"unsupported join kind {kind!r}")
-            right = _parse_source(m2.group(1), tables, bindings)
-            strat = hints.get("strategy")
-            if strat == "broadcast":
-                right = right.hint("broadcast")
-            elif strat == "shuffle":
-                right = right.hint("shuffle_hash")
-            sk = hints.get("shufflekey")
-            if sk:
-                parts = ([int(hints["num_partitions"])]
-                         if "num_partitions" in hints else [])
-                df = df.repartition(*parts, F.col(sk))
-                right = right.repartition(*parts, F.col(sk))
-            keys: list[str] = []
-            pairs: list[tuple[str, str]] = []
-            for item in _split_top_level(m2.group(2), ","):
-                item = item.strip()
-                mm = re.fullmatch(
-                    r"\$left\.([A-Za-z_][A-Za-z0-9_]*)\s*==\s*"
-                    r"\$right\.([A-Za-z_][A-Za-z0-9_]*)", item,
-                )
-                if mm:
-                    pairs.append((mm.group(1), mm.group(2)))
-                elif re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", item):
-                    keys.append(item)
-                else:
-                    raise KqlError(f"bad join key {item!r}")
-            if kind == "innerunique":
-                # KQL default: left side deduplicated on the join keys
-                # (first match wins — arbitrary within a key, like KQL).
-                df = df.dropDuplicates(keys + [l for l, _ in pairs])
-            if kind in ("rightanti", "rightsemi"):
-                if pairs:
-                    lal, ral = right.alias("_l"), df.alias("_r")
-                    cond = None
-                    for lk, rk in pairs + [(k, k) for k in keys]:
-                        piece = F.col(f"_l.{rk}") == F.col(f"_r.{lk}")
-                        cond = piece if cond is None else (cond & piece)
-                    df = lal.join(ral, cond, _JOIN_KINDS[kind])
-                else:
-                    df = right.join(df, keys, _JOIN_KINDS[kind])
-            elif pairs:
-                keys_as_pairs = pairs + [(k, k) for k in keys]
-                left_cols = set(df.columns)
-                ren: dict[str, str] = {}
-                for c in right.columns:
-                    if c in left_cols:
-                        right = right.withColumnRenamed(c, c + "1")
-                        ren[c] = c + "1"
-                lal, ral = df.alias("_l"), right.alias("_r")
-                cond = None
-                for lk, rk in keys_as_pairs:
-                    piece = F.col(f"_l.{lk}") == F.col(f"_r.{ren.get(rk, rk)}")
-                    cond = piece if cond is None else (cond & piece)
-                df = lal.join(ral, cond, _JOIN_KINDS[kind])
-            else:
-                for c in right.columns:
-                    if c in df.columns and c not in keys:
-                        right = right.withColumnRenamed(c, c + "1")
-                df = df.join(right, keys, _JOIN_KINDS[kind])
-        elif op == "lookup":
-            # `lookup [kind=leftouter|inner] (dim) on key[, …]` — KQL's
-            # dimension-join: same surface as `join` but the right side
-            # is a DIMENSION by contract, so it is broadcast explicitly
-            # (BroadcastHashJoin regardless of AQE's size estimate —
-            # the `enrich.py` pattern, lifted into the text lifecycle).
-            # Bare equi-keys only (KQL lookup likewise).
-            m2 = re.match(
-                r"^(?:kind\s*=\s*(leftouter|inner)\s+)?"
-                r"(\(.*\)|[A-Za-z_][A-Za-z0-9_]*)\s+on\s+(.+)$",
-                rest, re.S,
-            )
-            if not m2:
-                raise KqlError("lookup needs `lookup [kind=k] (dim) on keys`")
-            kind = {"leftouter": "left", "inner": "inner",
-                    None: "left"}[m2.group(1)]
-            right = _parse_source(m2.group(2), tables, bindings)
-            keys = []
-            for item in _split_top_level(m2.group(3), ","):
-                item = item.strip()
-                if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", item):
-                    raise KqlError(f"lookup key must be a column: {item!r}")
-                keys.append(item)
-            for c in right.columns:
-                if c in df.columns and c not in keys:
-                    right = right.withColumnRenamed(c, c + "1")
-            df = df.join(F.broadcast(right), keys, kind)
-        elif op == "union":
-            # `union [withsource=Col] [kind=inner|outer] source[, …]` —
-            # outer (the KQL default) aligns by name and null-fills
-            # missing columns; inner keeps only the common columns.
-            # `withsource=` labels every row with its origin: the
-            # upstream relation is labeled `T` (its let-name is not
-            # tracked through the pipe), each operand with its leading
-            # table name (or `unionN` for literal/subquery sources).
-            m2 = re.match(
-                r"^(?:withsource\s*=\s*([A-Za-z_][A-Za-z0-9_]*)\s+)?"
-                r"(?:kind\s*=\s*(inner|outer)\s+)?"
-                r"(?:isfuzzy\s*=\s*(true|false)\s+)?(.+)$",
-                rest, re.S,
-            )
-            if not m2:
-                raise KqlError("union needs at least one source table")
-            srccol, ukind = m2.group(1), m2.group(2) or "outer"
-            fuzzy = m2.group(3) == "true"
-            if srccol:
-                df = df.withColumn(srccol, F.lit("T"))
-            for i, item in enumerate(_split_top_level(m2.group(4), ",")):
-                try:
-                    other = _parse_source(item, tables, bindings)
-                except KqlError:
-                    if fuzzy:
-                        # `isfuzzy=true`: unresolvable operands are
-                        # skipped, not errors (Kusto's rule — the union
-                        # of the sources that DO resolve)
-                        continue
-                    raise
-                if srccol:
-                    mname = re.match(r"\s*([A-Za-z_][A-Za-z0-9_]*)\s*$",
-                                     item)
-                    label = mname.group(1) if mname else f"union{i + 1}"
-                    other = other.withColumn(srccol, F.lit(label))
-                if ukind == "outer":
-                    df = df.unionByName(other, allowMissingColumns=True)
-                else:
-                    common = [c for c in df.columns if c in other.columns]
-                    df = df.select(*common).unionByName(
-                        other.select(*common)
-                    )
-        elif op == "partition":
-            # `partition [hint.strategy=…] by key ( stages )` — run the
-            # subquery per key value and union the results. NOT executed
-            # as per-key jobs (Kusto's legacy strategy caps at 64
-            # partitions for exactly the reason we avoid it): each
-            # subquery stage is REWRITTEN into a key-aware whole-table
-            # plan — `top N by e` becomes a row_number window
-            # partitioned by the key (one shuffle, per-partition heaps),
-            # `summarize … by g` gains the key as a group column, and
-            # row-local stages (where/extend/project*) pass through
-            # unchanged. This is the shuffle-strategy semantics at any
-            # key cardinality.
-            m2 = re.match(
-                r"^(?:hint\.\w+\s*=\s*\w+\s+)?by\s+([A-Za-z_]\w*)"
-                r"\s*\((.+)\)\s*$",
-                rest, re.S,
-            )
-            if not m2:
-                raise KqlError("partition needs `by key ( stages )`")
-            pkey, sub = m2.groups()
-            _ROW_LOCAL = ("where", "extend", "project", "project-away",
-                          "project-keep", "project-rename", "parse")
-            for st in _split_top_level(sub, "|"):
-                sm = re.match(r"^([a-z-]+)\s*(.*)$", st.strip(), re.S)
-                if not sm:
-                    raise KqlError(f"bad partition substage {st!r}")
-                sop, srest = sm.group(1), sm.group(2).strip()
-                if sop in _ROW_LOCAL:
-                    df = _apply_stages(df, [st.strip()], bindings, tables)
-                elif sop == "summarize":
-                    joiner = (", " if _find_by_top(srest) is not None
-                              else " by ")
-                    df = _apply_stages(
-                        df, ["summarize " + srest + joiner + pkey],
-                        bindings, tables,
-                    )
-                elif sop in ("top", "take", "limit"):
-                    if sop == "top":
-                        tm = re.match(r"^(\d+)\s+by\s+(.+)$", srest, re.S)
-                        if not tm:
-                            raise KqlError("top needs `top N by expr`")
-                        n = int(tm.group(1))
-                        order = []
-                        for part in _split_top_level(tm.group(2), ","):
-                            toks = part.rsplit(None, 1)
-                            if (len(toks) == 2
-                                    and toks[1].lower() in ("asc", "desc")):
-                                c = pe(toks[0])
-                                order.append(
-                                    c.asc() if toks[1].lower() == "asc"
-                                    else c.desc()
-                                )
-                            else:
-                                order.append(pe(part).desc())
-                    else:
-                        try:
-                            n = int(srest)
-                        except ValueError:
-                            raise KqlError(
-                                f"{sop} needs an integer, got {srest!r}"
-                            )
-                        # per-key take needs SOME deterministic order;
-                        # require top instead
-                        raise KqlError(
-                            "partition: use `top N by expr` — a bare "
-                            f"`{sop}` has no deterministic per-key order"
-                        )
-                    w = Window.partitionBy(pkey).orderBy(*order)
-                    df = (
-                        df.withColumn("__prn", F.row_number().over(w))
-                        .filter(F.col("__prn") <= n)
-                        .drop("__prn")
-                    )
-                else:
-                    raise KqlError(
-                        f"partition subquery does not support {sop!r}"
-                    )
-            sctx["order"] = sctx["wspec"] = sctx["pending_sort"] = None
-            sctx["keys"] = sctx["order_src"] = None
-        elif op == "scan":
-            # `scan [with_match_id=col] with (step s1: pred; …)` —
-            # KQL's sequential pattern-match operator, the one tabular
-            # op that is genuinely NOT window-expressible (a row's state
-            # depends on the whole prefix). Hybrid execution, the shape
-            # the 100 TB brief prescribes for custom stateful operators:
-            #
-            #   1. step predicates compile to Catalyst boolean columns
-            #      (JVM codegen — the Python side never parses values);
-            #   2. ONE `applyInPandas` per `serialize by` key group runs
-            #      the O(n) state machine over the precomputed bool
-            #      matrix (Arrow-batched both ways).
-            #
-            # Requires `sort by <plain cols> | serialize by <plain keys>`
-            # (the keys bound the state; without keys the scan is a
-            # single serialized task — allowed, but only sensible on
-            # small relations, same rule as bare `serialize`).
-            #
-            # Subset semantics (documented deviation from full Kusto
-            # scan): a row advances the match if it satisfies the NEXT
-            # step, else extends the CURRENT step, else is skipped; a
-            # match completes at the first row reaching the final step;
-            # matched rows of incomplete sequences are still emitted.
-            # Output = matched rows + (match_id, step) + one column per
-            # `declare`d state variable (its value AFTER the row's step
-            # assignments ran). Per-step `output=all|last|none`
-            # (default all) controls emission: `last` keeps only the
-            # final row matched at that step (flushed when the match
-            # advances, completes, or the group ends), `none` drops the
-            # step's rows. Declared variables initialize at match
-            # start, are assignable in step bodies (`step s: pred =>
-            # x = x + v, …`), and may appear in predicates/assignments
-            # by BARE name (simplification of Kusto's step-qualified
-            # `s.x`; one live match candidate per group, so there is a
-            # single unambiguous state).
-            m2 = re.match(
-                r"^(?:with_match_id\s*=\s*([A-Za-z_]\w*)\s+)?"
-                r"(?:declare\s*\((.*?)\)\s*)?"
-                r"with\s*\((.+)\)\s*$",
-                rest, re.S,
-            )
-            if not m2:
-                raise KqlError(
-                    "scan needs `scan [with_match_id=c] "
-                    "[declare (v: type [= lit], …)] with "
-                    "(step s1: pred [=> v = expr, …]; …)`"
-                )
-            mid_col = m2.group(1) or "match_id"
-            decl_src = m2.group(2)
-            declares: list[tuple[str, str, object, object]] = []
-            if decl_src and decl_src.strip():
-                for item in _split_top_level(decl_src, ","):
-                    dm = re.match(
-                        r"^([A-Za-z_]\w*)\s*:\s*([A-Za-z]\w*)"
-                        r"\s*(?:=\s*(.+))?$",
-                        item.strip(), re.S,
-                    )
-                    if not dm or dm.group(2) not in _SCAN_DECL_TYPES:
-                        raise KqlError(
-                            f"bad scan declare item {item!r} (need "
-                            "`name: long|real|string|bool [= literal]`)"
-                        )
-                    vname, vtype, vinit = dm.groups()
-                    if vname in df.columns or vname == mid_col:
-                        raise KqlError(
-                            f"scan declare variable {vname!r} collides "
-                            "with an input column"
-                        )
-                    init = None
-                    if vinit is not None:
-                        initfn, initcols, _us = _compile_scan_expr(
-                            vinit, frozenset()
-                        )
-                        if initcols:
-                            raise KqlError(
-                                f"scan declare init for {vname!r} must "
-                                "be a constant expression"
-                            )
-                        init = initfn({}, {})
-                    spark_t, py_t = _SCAN_DECL_TYPES[vtype]
-                    if init is not None:
-                        init = py_t(init)
-                    declares.append((vname, spark_t, py_t, init))
-            declared_names = frozenset(d[0] for d in declares)
-
-            steps = []       # (name, pred_src)
-            step_assigns = []  # list[list[(var, fn, cols)]]
-            step_modes = []    # per step: "all" (default) | "last" | "none"
-            for st in _split_top_level(m2.group(3), ";"):
-                sm = re.match(
-                    r"^step\s+([A-Za-z_]\w*)\s*"
-                    r"(?:output\s*=\s*(all|last|none)\s*)?"
-                    r":\s*(.+)$",
-                    st.strip(), re.S,
-                )
-                if not sm:
-                    raise KqlError(f"bad scan step {st!r}")
-                step_modes.append(sm.group(2) or "all")
-                body = sm.group(3)
-                arrow = _find_top(body, r"(?<![=!<>])=>")
-                pred_src, assign_src = (
-                    (body.strip(), None) if arrow is None
-                    else (body[:arrow].strip(), body[arrow + 2:].strip()))
-                assigns = []
-                if assign_src is not None:
-                    if not declares:
-                        raise KqlError(
-                            "scan step assignments need declare(...)"
-                        )
-                    for a in _split_top_level(assign_src, ","):
-                        am = re.match(r"^([A-Za-z_]\w*)\s*=\s*(.+)$",
-                                      a.strip(), re.S)
-                        if not am or am.group(1) not in declared_names:
-                            raise KqlError(
-                                f"scan assignment {a!r} must set a "
-                                "declared variable"
-                            )
-                        afn, acols, _us = _compile_scan_expr(
-                            am.group(2), declared_names
-                        )
-                        assigns.append((am.group(1), afn, acols))
-                steps.append((sm.group(1), pred_src))
-                step_assigns.append(assigns)
-            if not steps:
-                raise KqlError("scan needs at least one step")
-            osrc = sctx.get("order_src")
-            if not osrc or any(o is None for o in osrc):
-                raise KqlError(
-                    "scan requires a preceding `sort by` on plain "
-                    "columns"
-                )
-            keys = sctx.get("keys") or []
-            base_cols = list(df.columns)
-            # Hybrid predicate compilation: state-free predicates stay
-            # Catalyst flag columns (JVM codegen); predicates touching
-            # declared variables compile to (row, state) closures run
-            # inside the machine. String literals are stripped before
-            # the reference scan so a literal containing a variable's
-            # name doesn't force the Python path.
-            pred_fns: list = []   # per step: None (JVM flag) or closure
-            pred_cols: set = set()
-            for _nm, pred in steps:
-                no_lits = _STR_LIT_RE.sub(" ", pred)
-                if declared_names and any(
-                    w in declared_names
-                    for w in re.findall(r"[A-Za-z_]\w*", no_lits)
-                ):
-                    pfn, pcols, _us = _compile_scan_expr(
-                        pred, declared_names
-                    )
-                    pred_fns.append(pfn)
-                    pred_cols |= pcols
-                else:
-                    pred_fns.append(None)
-            flags = df
-            for i, (fn_, (_nm, pred)) in enumerate(zip(pred_fns, steps)):
-                flags = flags.withColumn(
-                    f"__scan{i}", F.lit(False) if fn_ else pe(pred)
-                )
-            from pyspark.sql.types import (
-                BooleanType, DoubleType, LongType, StringType,
-                StructField, StructType,
-            )
-
-            _decl_spark_t = {"long": LongType(), "double": DoubleType(),
-                             "string": StringType(),
-                             "boolean": BooleanType()}
-            out_schema = StructType(
-                [f for f in df.schema.fields]
-                + [StructField(mid_col, LongType()),
-                   StructField("step", StringType())]
-                + [StructField(vn, _decl_spark_t[vt])
-                   for vn, vt, _pt, _iv in declares]
-            )
-            names = [n for n, _a in osrc]
-            asc = [a for _n, a in osrc]
-            step_names = [nm for nm, _p in steps]
-            nsteps = len(steps)
-            var_names = [vn for vn, _t, _pt, _iv in declares]
-            init_state = {vn: iv for vn, _t, _pt, iv in declares}
-            coercers = {vn: pt for vn, _t, pt, _iv in declares}
-            # columns the Python closures read (predicates + assigns)
-            ref_cols = sorted(
-                (pred_cols | {c for a in step_assigns
-                              for _v, _f, cs in a for c in cs})
-                & set(base_cols)
-            )
-            missing_refs = (
-                pred_cols | {c for a in step_assigns
-                             for _v, _f, cs in a for c in cs}
-            ) - set(base_cols)
-            if missing_refs:
-                raise KqlError(
-                    f"scan expression references unknown column(s) "
-                    f"{sorted(missing_refs)}"
-                )
-
-            def _scan_group(pdf):
-                import pandas as pd
-
-                pdf = pdf.sort_values(names, ascending=asc,
-                                      kind="stable")
-                fl = pdf[[f"__scan{i}" for i in range(nsteps)]].fillna(
-                    False).to_numpy(dtype=bool)
-                recs = (
-                    [
-                        {k: (None if pd.isna(v) else v)
-                         for k, v in rec.items()}
-                        for rec in pdf[ref_cols].to_dict("records")
-                    ]
-                    if ref_cols else None
-                )
-                n = len(pdf)
-                take, mid_out, step_out = [], [], []
-                var_out: dict = {vn: [] for vn in var_names}
-                s, mid, active = -1, 0, False
-                st: dict = {}
-                # `output=last` buffer: at most ONE pending row — only
-                # the current step buffers, and advancing flushes it
-                # before the advancing row emits, so input order holds.
-                pending: list | None = None
-
-                def test(j, i, state):
-                    fn_ = pred_fns[j]
-                    if fn_ is None:
-                        return bool(fl[i, j])
-                    row = recs[i] if recs is not None else {}
-                    return fn_(row, state) is True
-
-                def emit(i, m, sname, snap):
-                    take.append(i)
-                    mid_out.append(m)
-                    step_out.append(sname)
-                    for vn in var_names:
-                        var_out[vn].append(snap.get(vn))
-
-                def flush_pending():
-                    nonlocal pending
-                    if pending is not None:
-                        emit(*pending)
-                        pending = None
-
-                for i in range(n):
-                    if active and s + 1 < nsteps and test(s + 1, i, st):
-                        flush_pending()  # leaving step s
-                        s += 1
-                    elif active and test(s, i, st):
-                        pass
-                    elif not active:
-                        st0 = dict(init_state)
-                        if test(0, i, st0):
-                            mid += 1
-                            s, active, st = 0, True, st0
-                        else:
-                            continue
-                    else:
-                        continue
-                    row = recs[i] if recs is not None else {}
-                    for vn, afn, _cs in step_assigns[s]:
-                        v = afn(row, st)
-                        st[vn] = None if v is None else coercers[vn](v)
-                    mode = step_modes[s]
-                    if mode == "all":
-                        emit(i, mid, step_names[s], st)
-                    elif mode == "last":
-                        pending = [i, mid, step_names[s], dict(st)]
-                    if s == nsteps - 1:
-                        flush_pending()  # the completing row if 'last'
-                        s, active, st = -1, False, {}
-                flush_pending()  # incomplete match at group end
-                out = pdf.iloc[take][base_cols].copy()
-                out[mid_col] = pd.array(mid_out, dtype="int64")
-                out["step"] = step_out
-                for vn, _t, pt, _iv in declares:
-                    if pt is int:
-                        out[vn] = pd.array(var_out[vn], dtype="Int64")
-                    elif pt is float:
-                        out[vn] = pd.array(var_out[vn], dtype="Float64")
-                    else:
-                        out[vn] = pd.Series(
-                            var_out[vn], index=out.index, dtype="object"
-                        )
-                return out
-
-            if keys:
-                df = flags.groupBy(*keys).applyInPandas(
-                    _scan_group, out_schema)
-            else:
-                df = (
-                    flags.withColumn("__g", F.lit(0))
-                    .groupBy("__g")
-                    .applyInPandas(
-                        lambda pdf: _scan_group(pdf.drop(columns="__g")),
-                        out_schema,
-                    )
-                )
-            sctx["order"] = sctx["wspec"] = sctx["pending_sort"] = None
-            sctx["keys"] = sctx["order_src"] = None
-        elif op == "invoke":
-            # `invoke f(args…)` — apply a table-valued user function to
-            # the pipeline-so-far: the first table parameter binds to
-            # the current relation, scalar arguments bind as constants,
-            # and the body pipeline compiles INLINE into this plan (no
-            # materialization boundary — Catalyst optimizes across the
-            # call).
-            m2 = re.match(r"^([A-Za-z_]\w*)\s*\((.*)\)\s*$", rest, re.S)
-            if not m2:
-                raise KqlError("invoke needs `invoke f(args…)`")
-            fname, argsrc = m2.groups()
-            fn = bindings.get(fname)
-            if not isinstance(fn, KqlFunc):
-                raise KqlError(f"{fname} is not a user function")
-            tps = fn.table_params
-            if not tps:
-                raise KqlError(
-                    f"{fname}() has no table parameter — use it as a "
-                    "scalar function"
-                )
-            scalars = [p for p, k in fn.params if k == "scalar"]
-            argsrcs = [a for a in _split_top_level(argsrc, ",") if a.strip()]
-            if len(argsrcs) != len(scalars):
-                raise KqlError(
-                    f"invoke {fname}() takes {len(scalars)} scalar "
-                    f"arg(s), got {len(argsrcs)}"
-                )
-            if fn.expanding:
-                raise KqlError(f"recursive user function {fname}()")
-            child_bind = dict(bindings)
-            for pname, a in zip(scalars, argsrcs):
-                child_bind[pname] = parse_expr_ke(a, bindings)
-            child_tables = dict(tables) if tables else {}
-            child_tables[tps[0]] = df
-            fn.expanding = True
-            try:
-                df = _parse_source(fn.body, child_tables, child_bind)
-            finally:
-                fn.expanding = False
-            sctx["order"] = sctx["wspec"] = sctx["pending_sort"] = None
-            sctx["keys"] = sctx["order_src"] = None
-        elif op == "facet":
-            # `facet by c1, c2…` — Kusto returns one value-count table
-            # PER column; a single-DataFrame engine returns the long
-            # form instead: (facet_column, value, count_) stacked. Each
-            # facet is its own map-side-combinable aggregation; the
-            # stack is a zero-shuffle union. Values render as strings
-            # so heterogeneous columns stack into one schema.
-            rest2 = re.sub(r"^by\s+", "", rest)
-            fcols = [c.strip() for c in _split_top_level(rest2, ",")]
-            if not fcols or not all(
-                re.fullmatch(r"[A-Za-z_]\w*", c) for c in fcols
-            ):
-                raise KqlError("facet needs `facet by col[, col…]`")
-            missing = [c for c in fcols if c not in df.columns]
-            if missing:
-                raise KqlError(f"facet column(s) not found: {missing}")
-            parts = [
-                df.groupBy(F.col(c).cast("string").alias("value"))
-                .agg(F.count(F.lit(1)).alias("count_"))
-                .select(F.lit(c).alias("facet_column"), "value", "count_")
-                for c in fcols
-            ]
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            df = out
-            sctx["order"] = sctx["wspec"] = sctx["pending_sort"] = None
-            sctx["keys"] = sctx["order_src"] = None
-        elif op == "render":
-            # `render timechart|barchart|…` — presentation-layer
-            # directive; accepted and ignored (no server-side effect in
-            # Kusto either), so dashboards' queries run unmodified.
-            if not rest:
-                raise KqlError("render needs a chart type")
-        elif op == "as":
-            # `as name` — bind the pipeline-so-far into the table
-            # registry so a later `join`/`union`/`lookup` subquery can
-            # reference it by name. Pure plan aliasing: the bound
-            # relation is the lazy DataFrame (Catalyst reuses the
-            # common subplan; nothing materializes here).
-            m2 = re.match(r"^(?:hint\.materialized\s*=\s*\w+\s+)?"
-                          r"([A-Za-z_]\w*)$", rest)
-            if not m2:
-                raise KqlError("as needs an identifier: `as name`")
-            if tables is None:
-                tables = {}
-            tables[m2.group(1)] = df
-        elif op == "getschema":
-            # `getschema` — the table's schema as rows (driver-side
-            # constant relation; never touches data).
-            spark = df.sparkSession
-            df = spark.createDataFrame(
-                [(f.name, i, f.dataType.simpleString())
-                 for i, f in enumerate(df.schema.fields)],
-                "ColumnName string, ColumnOrdinal long, ColumnType string",
-            )
-            sctx["order"] = sctx["wspec"] = sctx["pending_sort"] = None
-            sctx["keys"] = sctx["order_src"] = None
-        elif op == "search":
-            # `search "term"` — case-insensitive containment over EVERY
-            # string column (KQL search over the current table). Compiles
-            # to one OR of contains() predicates — codegen'd, pushable;
-            # no UDF, no per-column passes.
-            m2 = re.match(r"""^(['"])(.*)\1$""", rest.strip(), re.S)
-            if not m2:
-                raise KqlError('search needs a quoted term: search "x"')
-            term = m2.group(2).lower()
-            from pyspark.sql.types import StringType
-
-            scols = [
-                f.name for f in df.schema.fields
-                if isinstance(f.dataType, StringType)
-            ]
-            if not scols:
-                raise KqlError("search needs at least one string column")
-            cond = None
-            for c in scols:
-                piece = F.lower(F.col(c)).contains(term)
-                cond = piece if cond is None else (cond | piece)
-            df = df.filter(cond)
-        elif op == "evaluate":
-            df = _evaluate(df, rest, pe=pe, bindings=bindings,
-                           tables=tables, wspec=wspec_before)
-        elif op == "mv-apply":
-            # `mv-apply name = expr on (stage | …)` — per-record
-            # subquery over an exploded array. Row identity is preserved
-            # WITHOUT a self-join: the exploded relation keeps every
-            # original column plus a per-row id, and each `summarize`
-            # inside the subquery is rewritten to group by (original
-            # columns, row id) — so "aggregate per record" is one hash
-            # aggregation and the original row never has to be joined
-            # back (a rejoin on a generated id is the classic
-            # recomputation hazard). The id only disambiguates duplicate
-            # input rows inside this single plan.
-            m2 = re.match(
-                r"^([A-Za-z_]\w*)\s*=\s*(.+?)\s+on\s*\((.+)\)\s*$",
-                rest, re.S,
-            )
-            if not m2:
-                raise KqlError("mv-apply needs `name = expr on (stages)`")
-            name, arrsrc, sub = m2.groups()
-            base_cols = list(df.columns)
-            mv = df.withColumn(
-                "_mvid", F.monotonically_increasing_id()
-            ).withColumn(name, F.explode(pe(arrsrc)))
-            substages = []
-            for st in _split_top_level(sub, "|"):
-                if re.match(r"^summarize\b", st.strip()):
-                    joiner = (", " if _find_by_top(st) is not None
-                              else " by ")
-                    st = st + joiner + ", ".join(base_cols + ["_mvid"])
-                substages.append(st)
-            df = _apply_stages(mv, substages, bindings, tables)
-            if "_mvid" in df.columns:
-                df = df.drop("_mvid")
-        elif op == "reduce":
-            # `reduce by expr` — Kusto's log-pattern clustering: rows
-            # whose string collapses to the same wildcard pattern group
-            # together, output (Pattern, Count, Representative). The
-            # pattern rule is a documented deterministic subset of
-            # Kusto's similarity heuristic: hex runs (>= 4 chars) then
-            # digit runs become `*`. Representative is the MIN source
-            # string (Kusto picks an arbitrary member; min keeps the
-            # result engine-portable). One map-side-combinable
-            # aggregation — the 100 TB shape for template mining.
-            m2 = re.match(r"^by\s+(.+)$", rest, re.S)
-            if not m2:
-                raise KqlError("reduce needs `by <expr>`")
-            src_col = pe(m2.group(1).strip())
-            pat = F.regexp_replace(
-                F.regexp_replace(src_col, F.lit("[0-9a-f]{4,}"), F.lit("*")),
-                F.lit("[0-9]+"), F.lit("*"),
-            )
-            df = (
-                df.select(pat.alias("Pattern"), src_col.alias("_src"))
-                .groupBy("Pattern")
-                .agg(
-                    F.count(F.lit(1)).alias("Count"),
-                    F.min("_src").alias("Representative"),
-                )
-            )
-        elif op == "sample":
-            # `sample N` — KQL's row sample. Engine choice: order by a
-            # 64-bit hash of the row content and keep N, which Catalyst
-            # plans as TakeOrderedAndProject (per-partition heaps, no
-            # global sort shuffle). The "sample" is therefore
-            # deterministic across runs AND partitionings — the same
-            # reproducibility role the content-derived ids play in
-            # `signals.py` — while a hash is still uniform over the
-            # data. Map-typed columns are excluded from the hash (Spark
-            # hash functions reject MapType).
-            try:
-                n = int(rest)
-            except ValueError:
-                raise KqlError(f"sample needs an integer, got {rest!r}")
-            from pyspark.sql.types import MapType
-
-            hcols = [
-                f.name for f in df.schema.fields
-                if not isinstance(f.dataType, MapType)
-            ]
-            if not hcols:
-                raise KqlError("sample needs at least one hashable column")
-            df = df.orderBy(F.xxhash64(*hcols)).limit(n)
-        elif op == "sample-distinct":
-            # `sample-distinct N of expr` — N distinct values of expr,
-            # hash-ordered for the same determinism as `sample`.
-            m2 = re.match(r"^(\d+)\s+of\s+(.+)$", rest, re.S)
-            if not m2:
-                raise KqlError("sample-distinct needs `N of expr`")
-            vals = df.select(pe(m2.group(2))).distinct()
-            df = vals.orderBy(F.xxhash64(vals.columns[0])).limit(
-                int(m2.group(1))
-            )
-        elif op == "top-nested":
-            # `top-nested N of col by [name =] agg()[, top-nested ...]`
-            # — hierarchical top-k: level 1 keeps the global top-N keys
-            # by the aggregate; each deeper level keeps the per-parent
-            # top-N. Scale shape: level 1 is agg + TakeOrderedAndProject
-            # (no global sort); deeper levels aggregate the full input
-            # once, broadcast-SEMI-join against the tiny kept parent set
-            # (≤ ∏Nᵢ rows) BEFORE ranking, then rank inside each parent
-            # with a window whose partitions are the kept parents only.
-            # Ties break on the key value ascending so results are
-            # deterministic (KQL leaves ties arbitrary).
-            #
-            # `with others = "Label"` per level adds one row per kept
-            # parent combo aggregating everything OUTSIDE that level's
-            # top-N (recomputed from the RAW rows — correct for any
-            # aggregate, not just distributive ones — via anti-join
-            # against the tiny kept key set). Documented subset: others
-            # rows are terminal (deeper-level columns NULL, they do not
-            # nest), and the level column must be string-typed so the
-            # label shares its type.
-            kept = None
-            prev_cols: list[str] = []
-            out_cols: list[str] = []
-            others_parts: list[DataFrame] = []
-            for lvl in re.split(r",\s*top-nested\s+", rest):
-                m2 = re.match(
-                    r"^(\d+)\s+of\s+([A-Za-z_]\w*)\s*"
-                    r"(?:with\s+others\s*=\s*"
-                    rf"({_STR_LIT})\s*)?"
-                    r"\s+by\s+(?:([A-Za-z_]\w*)\s*=\s*)?(.+)$",
-                    lvl.strip(), re.S,
-                )
-                if not m2:
-                    raise KqlError(
-                        "top-nested needs `N of col "
-                        "[with others = \"label\"] by [name =] agg()`"
-                    )
-                n, col, others_src, aname, aggsrc = m2.groups()
-                aname = aname or f"aggregated_{col}"
-                grp = df.groupBy(*prev_cols, col).agg(pe(aggsrc).alias(aname))
-                if kept is not None:
-                    grp = grp.join(
-                        F.broadcast(kept.select(*prev_cols)),
-                        prev_cols, "semi",
-                    )
-                if prev_cols:
-                    w = Window.partitionBy(*prev_cols).orderBy(
-                        F.col(aname).desc(), F.col(col).asc()
-                    )
-                    grp = (
-                        grp.withColumn("_tn_rank", F.row_number().over(w))
-                        .filter(F.col("_tn_rank") <= int(n))
-                        .drop("_tn_rank")
-                    )
-                else:
-                    grp = grp.orderBy(
-                        F.col(aname).desc(), F.col(col).asc()
-                    ).limit(int(n))
-                if others_src is not None:
-                    if df.schema[col].dataType.typeName() != "string":
-                        raise KqlError(
-                            f"top-nested with others: column {col!r} "
-                            "must be string-typed (the label shares "
-                            "its type)"
-                        )
-                    label = _unquote(others_src)
-                    src = df
-                    if kept is not None:
-                        src = src.join(
-                            F.broadcast(kept.select(*prev_cols)),
-                            prev_cols, "semi",
-                        )
-                    excl = src.join(
-                        F.broadcast(grp.select(*prev_cols, col)),
-                        prev_cols + [col], "anti",
-                    )
-                    oth = (
-                        excl.groupBy(*prev_cols)
-                        .agg(pe(aggsrc).alias(aname))
-                        .withColumn(col, F.lit(label))
-                    )
-                    if kept is not None:
-                        oth = oth.join(F.broadcast(kept), prev_cols,
-                                       "inner")
-                    others_parts.append(
-                        oth.select(*out_cols, col, aname)
-                    )
-                if prev_cols:
-                    grp = grp.join(F.broadcast(kept), prev_cols, "inner")
-                kept = grp
-                prev_cols = prev_cols + [col]
-                out_cols += [col, aname]
-            df = kept.select(*out_cols)
-            for oth in others_parts:
-                df = df.unionByName(oth, allowMissingColumns=True)
-        elif op == "find":
-            # `find in (T1, T2, …) where <pred> [project col, …]` —
-            # cross-table search (Kusto findoperator): the predicate
-            # runs against every listed table; tables where it cannot
-            # compile (references a column the table lacks) are skipped,
-            # Kusto's own rule. Output: `source_` + the projected
-            # columns (absent ones NULL via unionByName), or the union
-            # of all matching tables' columns without `project`. Each
-            # leg is an independent filtered scan — predicate pushdown
-            # per table, the union is plan-level (no shuffle).
-            m2 = re.match(r"^in\s*\(([^)]+)\)\s*where\s+(.+)$",
-                          rest, re.S)
-            if not m2:
-                raise KqlError(
-                    "find needs `in (T1, T2, …) where pred "
-                    "[project col, …]`")
-            src_names = [n.strip() for n in
-                         _split_top_level(m2.group(1), ",")]
-            tail2 = m2.group(2)
-            pidx = _find_kw_top(tail2, "project")
-            pred_src = tail2[:pidx].strip() if pidx is not None \
-                else tail2.strip()
-            proj_names = (
-                [c.strip() for c in
-                 _split_top_level(tail2[pidx + len("project"):], ",")]
-                if pidx is not None else None)
-            parts: list[DataFrame] = []
-            for name in src_names:
-                if not tables or name not in tables:
-                    raise KqlError(
-                        f"find: unknown table {name!r} — pass it via "
-                        "kql(..., tables={...})")
-                tdf = tables[name]
-                vcols = {
-                    f.name for f in tdf.schema.fields
-                    if f.dataType.typeName() == "variant"
-                }
-                try:
-                    cond = parse_expr(pred_src, bindings,
-                                      variant_cols=vcols)
-                    part = tdf.filter(cond)
-                    part.schema  # force analysis: missing col → skip
-                except KqlError:
-                    raise
-                except Exception:
-                    continue
-                if proj_names is not None:
-                    keep = [c for c in proj_names if c in tdf.columns]
-                    part = part.select(*keep)
-                part = part.select(
-                    F.lit(name).alias("source_"), "*")
-                parts.append(part)
-            if not parts:
-                raise KqlError(
-                    "find: the predicate compiles against none of the "
-                    "listed tables")
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p, allowMissingColumns=True)
-            if proj_names is not None:
-                df = df.select(
-                    "source_",
-                    *[c for c in proj_names if c in df.columns])
-        elif op == "make-graph":
-            # `make-graph src --> dst [with <nodes> on <id>]`
-            # `make-graph src --> dst [with_node_id=<name>]`
-            # Builds the graph value graph-match / graph-to-table
-            # consume (Kusto make-graph-operator.md). Nodes absent →
-            # implicit node set (edge endpoints), id column named by
-            # with_node_id (default `node_id`).
-            m2 = re.match(
-                r"^([A-Za-z_]\w*)\s*-->\s*([A-Za-z_]\w*)\s*"
-                r"(?:with\s+(.+?)\s+on\s+([A-Za-z_]\w*)"
-                r"|with_node_id\s*=\s*([A-Za-z_]\w*))?\s*$",
-                rest, re.S,
-            )
-            if not m2:
-                raise KqlError(
-                    "make-graph needs `srcCol --> dstCol "
-                    "[with nodesSource on idCol | with_node_id=name]`"
-                )
-            srcc, dstc, nsrc, nid, anon_id = m2.groups()
-            for c in (srcc, dstc):
-                if c not in df.columns:
-                    raise KqlError(f"make-graph: no column {c!r}")
-            ndf = (_parse_source(nsrc, tables, bindings)
-                   if nsrc is not None else None)
-            sctx["graph"] = {
-                "edges": df, "src": srcc, "dst": dstc,
-                "nodes": ndf, "nid": nid or anon_id or "node_id",
-            }
-        elif op == "graph-mark-components":
-            # `graph-mark-components [kind = weak]
-            #  [with_component_id = name]` — label every node with its
-            # weakly-connected component: the component id is the
-            # MINIMUM node id reachable treating edges as undirected
-            # (deterministic canonical label, Kusto's
-            # graph-mark-components with kind=weak; kind=strong is
-            # rejected, documented subset). Reuses the near-dup
-            # min-label propagation (dataops/dedup.py
-            # connected_components: one equi-join + one map-side min
-            # per round, checkpointed frontier, converges in
-            # O(diameter) rounds) — the right CC algorithm at scale.
-            # NULL endpoints are ignored. The marked node set replaces
-            # the graph's nodes; export it with `graph-to-table nodes`.
-            g = sctx.get("graph")
-            if g is None:
-                raise KqlError(
-                    "graph-mark-components requires a preceding "
-                    "make-graph")
-            m2 = re.match(
-                r"^(?:kind\s*=\s*(\w+)\s*)?"
-                r"(?:with_component_id\s*=\s*([A-Za-z_]\w*)\s*)?$",
-                rest)
-            if not m2:
-                raise KqlError(
-                    "graph-mark-components takes [kind = weak] "
-                    "[with_component_id = name]")
-            kind, cname = m2.groups()
-            if kind not in (None, "weak"):
-                raise KqlError(
-                    "graph-mark-components: only kind=weak is "
-                    "supported (strong components are not)")
-            cname = cname or "ComponentId"
-            from otel_arrow_spark.dataops.dedup import (
-                connected_components,
-            )
-            nid = g["nid"]
-            pairs = g["edges"].select(
-                F.col(g["src"]).alias("doc_a"),
-                F.col(g["dst"]).alias("doc_b"),
-            ).filter(
-                F.col("doc_a").isNotNull()
-                & F.col("doc_b").isNotNull())
-            if g["nodes"] is not None:
-                nodes = g["nodes"]
-            else:
-                nodes = (
-                    g["edges"].select(F.col(g["src"]).alias(nid))
-                    .unionByName(
-                        g["edges"].select(F.col(g["dst"]).alias(nid)))
-                    .distinct()
-                )
-            uni = nodes.select(F.col(nid).alias("doc_id")) \
-                .filter(F.col("doc_id").isNotNull()).distinct()
-            labels = connected_components(pairs, uni)
-            sctx["graph"] = dict(
-                g,
-                nodes=nodes.join(
-                    labels.select(
-                        F.col("doc_id").alias(nid),
-                        F.col("cluster_id").alias(cname)),
-                    nid, "left"),
-            )
-        elif op == "graph-to-table":
-            g = sctx.get("graph")
-            if g is None:
-                raise KqlError(
-                    "graph-to-table requires a preceding make-graph")
-            which = rest.strip() or "edges"
-            if which == "edges":
-                df = g["edges"]
-            elif which == "nodes":
-                if g["nodes"] is not None:
-                    df = g["nodes"]
-                else:
-                    # implicit node set: distinct edge endpoints
-                    df = (
-                        g["edges"].select(
-                            F.col(g["src"]).alias(g["nid"]))
-                        .unionByName(g["edges"].select(
-                            F.col(g["dst"]).alias(g["nid"])))
-                        .distinct()
-                    )
-            else:
-                raise KqlError(
-                    "graph-to-table takes `nodes` or `edges`")
-            sctx["graph"] = None
-        elif op == "graph-match":
-            # `graph-match [cycles=all|none|unique_edges] (a)-[e]->(b)…
-            #  [where <expr>] project [name =] expr, …`
-            # Bounded-length patterns — each edge variable is one
-            # prefixed copy of the edge relation, chained by equi-joins
-            # on shared node variables; named node variables LEFT-join
-            # node properties by id (nodes missing from the node table
-            # still match, their non-id properties NULL — Kusto keeps
-            # edge-endpoint nodes that carry no node row). `cycles=`:
-            # `unique_edges` (the Kusto default) filters pairwise
-            # identical edge ROWS (whole-row null-safe compare — a
-            # multigraph with fully duplicate edge rows cannot be
-            # distinguished without an id column, same as Kusto without
-            # one); `none` makes all node variables pairwise distinct;
-            # `all` adds nothing.
-            g = sctx.get("graph")
-            if g is None:
-                raise KqlError(
-                    "graph-match requires a preceding make-graph")
-            mm = re.match(
-                r"^(?:cycles\s*=\s*(all|none|unique_edges)\s+)?", rest)
-            cycles = mm.group(1) or "unique_edges"
-            npat, epat, pos = _parse_graph_pattern(rest, mm.end())
-            tail = rest[pos:].strip()
-            pidx = _find_kw_top(tail, "project")
-            if pidx is None:
-                raise KqlError("graph-match needs a `project` clause")
-            head = tail[:pidx].strip()
-            proj_src = tail[pidx + len("project"):].strip()
-            where_src = None
-            if head:
-                if not re.match(r"^where\b", head):
-                    raise KqlError(
-                        f"graph-match: unexpected {head[:30]!r} between "
-                        "pattern and project (only `where` is allowed)")
-                where_src = head[5:].strip()
-            df = _graph_match(g, npat, epat, cycles, where_src,
-                              proj_src, bindings)
-            sctx["graph"] = None
-        elif op == "graph-shortest-paths":
-            # `graph-shortest-paths [output=any|all] (a)-[e*1..k]->(b)
-            #  [where <expr>] project …` — see _graph_shortest.
-            g = sctx.get("graph")
-            if g is None:
-                raise KqlError(
-                    "graph-shortest-paths requires a preceding "
-                    "make-graph")
-            mm = re.match(r"^(?:output\s*=\s*(any|all)\s+)?", rest)
-            mode = mm.group(1) or "any"
-            npat, epat, pos = _parse_graph_pattern(rest, mm.end())
-            tail = rest[pos:].strip()
-            pidx = _find_kw_top(tail, "project")
-            if pidx is None:
-                raise KqlError(
-                    "graph-shortest-paths needs a `project` clause")
-            head = tail[:pidx].strip()
-            proj_src = tail[pidx + len("project"):].strip()
-            where_src = None
-            if head:
-                if not re.match(r"^where\b", head):
-                    raise KqlError(
-                        f"graph-shortest-paths: unexpected "
-                        f"{head[:30]!r} between pattern and project")
-                where_src = head[5:].strip()
-            # shortest-path semantics walk simple paths: repeated
-            # nodes would let a longer expansion shadow a shorter one
-            df = _graph_shortest(g, npat, epat, "none", where_src,
-                                 proj_src, bindings, mode)
-            sctx["graph"] = None
-        else:
+        if op not in _STAGES:
             raise KqlError(f"unknown operator {op!r}")
-    flush_sort()  # KQL sorted-output guarantee, on the final relation
-    drop_twins()  # hidden bag-twin columns never leave the query
+        keeps_order, keeps_twins, handler = _STAGES[op]
+        if not keeps_twins:
+            df = ctx.drop_twins(df)
+        ctx.op, ctx.df, ctx.before = op, df, ctx.order
+        if not keeps_order:
+            ctx.order = _Order()
+        df = handler(ctx, df, rest)
+    # KQL sorted-output guarantee, on the final relation; hidden
+    # bag-twin columns never leave the query
+    return ctx.drop_twins(ctx.flush_sort(df))
+
+
+@_stage("where", keeps_order=True, keeps_twins=True)
+def _op_where(ctx, df, rest):
+    """`where pred` — the rows where pred is true."""
+    return df.filter(ctx.pe(rest))
+
+
+@_stage("extend", keeps_order=True, keeps_twins=True)
+def _op_extend(ctx, df, rest):
+    """`extend a = e, …` — add or replace columns; a bag result keeps
+    its map twin as a hidden sibling column (KE.bag_map)."""
+    cols = {}
+    stale: list[str] = []
+    new_twins: list[str] = []
+    for name, expr in _parse_assignments(rest):
+        if name is None:
+            raise KqlError("extend needs name = expr")
+        if re.fullmatch(r"pack_all\s*\(\s*\)", expr.strip()):
+            ke = None
+            cols[name] = _pack_all_col(df)
+        elif (cie := _column_ifexists_col(df, expr, ctx.pe)) \
+                is not None:
+            ke = None
+            cols[name] = cie
+        else:
+            ke = ctx.pek(expr)
+            cols[name] = ke.col
+        if ke is not None and ke.bag_map is not None:
+            # fuse: keep the map twin as a hidden sibling so
+            # later bag surgery skips the JSON round-trip
+            cols[_TWIN_PREFIX + name] = ke.bag_map
+            new_twins.append(name)
+        elif name in ctx.bag_twins:
+            stale.append(name)  # reassigned to a non-bag
+    df = df.withColumns(cols)
+    for name in stale:
+        del ctx.bag_twins[name]
+        df = df.drop(_TWIN_PREFIX + name)
+    for name in new_twins:
+        ctx.bag_twins[name] = F.col(_TWIN_PREFIX + name)
+    return df
+
+
+@_stage("project", keeps_order=True, keeps_twins=True)
+def _op_project(ctx, df, rest):
+    """`project a, b = e, …` — exactly these columns."""
+    sel = []
+    for name, expr in _parse_assignments(rest):
+        if re.fullmatch(r"pack_all\s*\(\s*\)", expr.strip()):
+            c = _pack_all_col(df)
+        else:
+            c = _column_ifexists_col(df, expr, ctx.pe)
+            if c is None:
+                c = ctx.pe(expr)
+        sel.append(c.alias(name) if name else c)
+    df = df.select(*sel)
+    ctx.bag_twins.clear()  # select() already excluded the twins
+    return df
+
+
+@_stage("project-keep", keeps_order=True, keeps_twins=False)
+def _op_project_keep(ctx, df, rest):
+    """`project-keep p1, p2*` — keep the columns matching the
+    patterns."""
+    pats = [p.strip() for p in rest.split(",")]
+    return ops.project_keep(df, *pats)
+
+
+@_stage("project-away", keeps_order=True, keeps_twins=False)
+def _op_project_away(ctx, df, rest):
+    """`project-away p1, p2*` — drop the columns matching the
+    patterns."""
+    pats = [p.strip() for p in rest.split(",")]
+    return ops.project_away(df, *pats)
+
+
+@_stage("project-reorder", keeps_order=True, keeps_twins=False)
+def _op_project_reorder(ctx, df, rest):
+    """`project-reorder p1, p2*` — move the matching columns first."""
+    pats = [p.strip() for p in rest.split(",")]
+    return ops.project_reorder(df, *pats)
+
+
+@_stage("project-rename", keeps_order=True, keeps_twins=False)
+def _op_project_rename(ctx, df, rest):
+    """`project-rename new = old, …`."""
+    renames = {}
+    for name, expr in _parse_assignments(rest):
+        if name is None:
+            raise KqlError("project-rename needs new = old")
+        renames[name] = expr.strip()
+    return ops.project_rename(df, **renames)
+
+
+@_stage("summarize", keeps_order=False, keeps_twins=False)
+def _op_summarize(ctx, df, rest):
+    """`summarize [hint.…] agg(), … [by k, …]` — one row per key group
+    (one row without keys)."""
+    # `hint.shufflekey=k` (+`hint.num_partitions=N`) is
+    # APPLIED: pre-partition the input on k so the aggregate
+    # reuses that Exchange (Kusto's high-cardinality summarize
+    # hint — the skew-spread shape). `hint.strategy=shuffle`
+    # alone is accepted and dropped: Catalyst+AQE already
+    # picks the shuffle strategy from the declared plan.
+    mh = re.match(r"^(?:hint\.\w+\s*=\s*[\w.]+\s+)+", rest)
+    if mh:
+        shints = dict(re.findall(
+            r"hint\.(\w+)\s*=\s*([\w.]+)", mh.group(0)))
+        rest = rest[mh.end():]
+        if "shufflekey" in shints:
+            parts = ([int(shints["num_partitions"])]
+                     if "num_partitions" in shints else [])
+            df = df.repartition(
+                *parts, F.col(shints["shufflekey"]))
+    by_at = _find_by_top(rest)
+    if by_at is not None:
+        agg_part = rest[:by_at]
+        by_items = _parse_assignments(rest[by_at + 2:])
+    else:
+        agg_part, by_items = rest, []
+    keys = [
+        (ctx.pe(e).alias(n) if n else ctx.pe(e))
+        for n, e in by_items
+    ]
+    aggs = {}
+    # (kind, rank expr, cols-or-None-for-*)
+    star_rows: list[tuple[str, str, list[str] | None]] = []
+    # internal array-agg column → per-element output names
+    # (plural percentiles/percentilesw expansion, below)
+    pctl_expand: list[tuple[str, list[str]]] = []
+    for i, (name, expr) in enumerate(_parse_assignments(agg_part)):
+        # plural `percentiles(x, p1, p2, …)` / `percentilesw(x,
+        # w, p1, …)` — ONE exact array aggregate (the gated
+        # percentiles_array machinery), expanded to Kusto's
+        # auto-named columns (percentile_x_p, dots → _) after
+        # the groupBy. Tuple assignment `(a, b) = percentiles(
+        # x, 50, 95)` names them explicitly; a single-name
+        # assignment is allowed only for a single percentile.
+        mp = re.fullmatch(
+            r"(?:\(\s*([A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)"
+            r"\s*\)\s*=\s*)?percentiles(w?)\s*\((.+)\)",
+            expr.strip(), re.S)
+        if mp:
+            tuple_names, wtd, inner = mp.groups()
+            parts = [p.strip() for p in _split_top_level(inner, ",")]
+            nlead = 2 if wtd else 1
+            try:
+                ps = [float(p) for p in parts[nlead:]]
+            except ValueError:
+                raise KqlError(
+                    "percentiles needs literal percentile "
+                    f"values, got {parts[nlead:]!r}")
+            if not ps:
+                raise KqlError(
+                    "percentiles needs at least one percentile")
+            arr = ctx.pe(("percentilesw_array(" if wtd
+                      else "percentiles_array(")
+                     + ", ".join(parts[:nlead])
+                     + "".join(f", {p}" for p in ps) + ")")
+            if tuple_names:
+                outs = [t.strip()
+                        for t in tuple_names.split(",")]
+                if len(outs) != len(ps):
+                    raise KqlError(
+                        f"percentiles tuple names {len(outs)} "
+                        f"!= percentile count {len(ps)}")
+            elif name is not None:
+                if len(ps) != 1:
+                    raise KqlError(
+                        "a single name can only bind a single "
+                        "percentile — use (n1, n2, …) = "
+                        "percentiles(…)")
+                outs = [name]
+            else:
+                vsan = re.sub(
+                    r"\W+", "_", parts[0]).strip("_")
+                outs = [
+                    "percentile_" + vsan + "_"
+                    + ("%g" % p).replace(".", "_")
+                    .replace("-", "_")
+                    for p in ps]
+            internal = f"__pctls_{i}"
+            aggs[internal] = arr
+            pctl_expand.append((internal, outs))
+            continue
+        mstar = re.fullmatch(
+            r"arg_(max|min)\s*\((.+?),\s*(\*|[A-Za-z_]\w*"
+            r"(?:\s*,\s*[A-Za-z_]\w*)+)\s*\)", expr.strip(),
+            re.S)
+        if mstar and (
+            mstar.group(3) == "*"
+            or all(c.strip() in df.columns
+                   for c in mstar.group(3).split(","))
+        ):
+            # `arg_max(rank, *)` / `arg_max(rank, c1, c2, …)` —
+            # the winning ROW's columns: one max_by/min_by over
+            # a struct (single map-side-combinable aggregate,
+            # no window/self-join), exploded back to columns
+            # after the groupBy. Ties break on the full row
+            # struct (deterministic; Kusto's pick is
+            # arbitrary). The 2-arg single-expression form
+            # stays in the plain aggregate map.
+            if name is not None:
+                raise KqlError(
+                    f"arg_{mstar.group(1)}(expr, cols…) cannot "
+                    "be renamed — it expands to the columns")
+            wanted = (
+                None if mstar.group(3) == "*"
+                else [c.strip()
+                      for c in mstar.group(3).split(",")])
+            star_rows.append(
+                (mstar.group(1), mstar.group(2), wanted))
+            continue
+        if re.fullmatch(r"take_any\s*\(\s*\*\s*\)",
+                        expr.strip()):
+            # `take_any(*)` — any whole row per group; made
+            # deterministic (min over the row struct) so the
+            # result is engine- and partitioning-independent
+            if name is not None:
+                raise KqlError(
+                    "take_any(*) cannot be renamed — it "
+                    "expands to every column")
+            star_rows.append(("min", None, None))
+            continue
+        c = ctx.pe(expr)
+        aggs[name or f"agg_{i}"] = c
+    if star_rows:
+        if len(star_rows) > 1:
+            raise KqlError(
+                "only one arg_max/arg_min(expr, cols…) per "
+                "summarize")
+        kind, rank_src, wanted = star_rows[0]
+        key_names = {
+            (n or e.strip()) for n, e in by_items
+        }
+        row_cols = (
+            wanted if wanted is not None
+            else [c for c in df.columns if c not in key_names])
+        # Kusto's output ALSO carries the ranked expression's
+        # column (arg_max(E, c1) → E, c1; arg_max(strlen(s), *)
+        # → strlen_s, *), aliased by its source text — include
+        # it unless a listed/expanded or by-key column already
+        # holds it.
+        rank_out = None
+        if rank_src is not None:
+            rname = rank_src.strip()
+            if rname not in row_cols and rname not in key_names:
+                rank_out = rname
+        fields = [F.col(c).alias(c) for c in row_cols]
+        if rank_out is not None:
+            fields.insert(0, ctx.pe(rank_src).alias("__rank_out"))
+        rowstruct = F.struct(*fields)
+        # Tie-break only on ORDERABLE columns — map / VARIANT
+        # bag columns (common here) would fail analysis inside
+        # a min()/max_by ordering struct; they still travel in
+        # the returned payload struct.
+        dtypes = {f.name: f.dataType for f in df.schema.fields}
+        ord_cols = [F.col(c) for c in row_cols
+                    if _orderable_type(dtypes[c])]
+        fn = F.max_by if kind == "max" else F.min_by
+        if rank_src is None:  # take_any(*): deterministic min
+            if ord_cols:
+                picked = F.min_by(
+                    rowstruct, F.struct(*ord_cols)).alias("_row")
+            else:  # nothing orderable — any non-null row
+                picked = F.any_value(
+                    rowstruct, True).alias("_row")
+        else:
+            # rank first, orderable-row tie-break
+            picked = fn(
+                rowstruct, F.struct(ctx.pe(rank_src), *ord_cols)
+            ).alias("_row")
+        df = df.groupBy(*keys).agg(
+            picked,
+            *[v.alias(k) for k, v in aggs.items()])
+        out_cols = (
+            [F.col("_row.__rank_out").alias(rank_out)]
+            if rank_out is not None else [])
+        out_cols += [
+            F.col(f"_row.{c}").alias(c) for c in row_cols]
+        df = df.select(
+            *[c for c in df.columns if c != "_row"], *out_cols)
+    else:
+        if not aggs:
+            raise KqlError(
+                "summarize needs at least one aggregate "
+                "(e.g. `summarize n = count() by k`)"
+            )
+        df = df.groupBy(*keys).agg(
+            *[v.alias(k) for k, v in aggs.items()]
+        )
+    if pctl_expand:
+        # expand each internal percentile array in place, so
+        # column order matches the declaration order
+        expand = dict(pctl_expand)
+        sel: list[Column] = []
+        for c in df.columns:
+            if c in expand:
+                sel += [F.col(c)[j].alias(n)
+                        for j, n in enumerate(expand[c])]
+            else:
+                sel.append(F.col(c))
+        df = df.select(*sel)
+    return df
+
+
+@_stage("order sort", keeps_order=False, keeps_twins=True)
+def _op_order(ctx, df, rest):
+    """`order by` / `sort by e [asc|desc] [nulls first|last], …` —
+    the serialized row set ordered by e (recorded, applied lazily)."""
+    rest = re.sub(r"^by\s+", "", rest)
+    cols = []
+    order_src: list[tuple[str, bool] | None] = []
+    for part in _split_top_level(rest, ","):
+        part = part.strip()
+        # `… [asc|desc] [nulls first|nulls last]` — explicit
+        # null placement; defaults match both KQL and Spark
+        # (asc → nulls first, desc → nulls last)
+        mnul = re.search(
+            r"\s+nulls\s+(first|last)$", part, re.I)
+        nulls = None
+        if mnul:
+            nulls = mnul.group(1).lower()
+            part = part[:mnul.start()].strip()
+        toks = part.rsplit(None, 1)
+        if len(toks) == 2 and toks[1].lower() in ("asc", "desc"):
+            expr_src, asc = toks[0], toks[1].lower() == "asc"
+        else:
+            # KQL default sort order is descending (kql docs)
+            expr_src, asc = part, False
+        c = ctx.pe(expr_src)
+        if nulls == "first":
+            cols.append(
+                c.asc_nulls_first() if asc
+                else c.desc_nulls_first())
+        elif nulls == "last":
+            cols.append(
+                c.asc_nulls_last() if asc
+                else c.desc_nulls_last())
+        else:
+            cols.append(c.asc() if asc else c.desc())
+        order_src.append(
+            (expr_src.strip(), asc)
+            if re.fullmatch(r"[A-Za-z_]\w*", expr_src.strip())
+            else None  # computed key: fine for windows, not scan
+        )
+    # LAZY: recorded, flushed where order is consumed (see
+    # _Order.pending_sort). sort output is serialized (KQL
+    # semantics): window functions become legal, over a GLOBAL
+    # ordered window until `serialize by k…` re-partitions it.
+    ctx.order = _Order(cols=cols, wspec=Window.orderBy(*cols),
+                       pending_sort=cols, order_src=order_src)
+    return df
+
+
+@_stage("serialize", keeps_order=True, keeps_twins=True)
+def _op_serialize(ctx, df, rest):
+    """`serialize [by k1, k2…] [name = expr, …]`
+
+    Standard KQL `serialize` freezes the *current* row order —
+    but a distributed table has no deterministic natural
+    order, so this engine requires a preceding `sort by` (the
+    honest deviation; an unsorted serialize would be
+    nondeterministic at any scale).
+
+    `serialize by k…` is this engine's scale extension: the
+    window becomes partitionBy(k…).orderBy(sort keys) — one
+    parallel window per key group (the 100 TB shape; bare
+    `serialize` is a single ordered partition and belongs
+    only on small/aggregated relations)."""
+    if ctx.order.cols is None:
+        raise KqlError(
+            "serialize requires a preceding `sort by` — a "
+            "distributed table has no natural row order"
+        )
+    m2 = re.match(r"^by\s+([^=]+?)\s*(?:$|(?=[A-Za-z_]\w*\s*=))",
+                  rest, re.S)
+    assigns_src = rest
+    if m2:
+        key_srcs = [k.strip() for k in
+                    _split_top_level(m2.group(1), ",")]
+        keys = [ctx.pe(k) for k in key_srcs]
+        ctx.order = replace(
+            ctx.order,
+            wspec=Window.partitionBy(*keys).orderBy(*ctx.order.cols),
+            keys=(key_srcs
+                  if all(re.fullmatch(r"[A-Za-z_]\w*", k)
+                         for k in key_srcs)
+                  else None))
+        assigns_src = rest[m2.end():].strip()
+    if assigns_src:
+        cols = {}
+        for name, expr in _parse_assignments(assigns_src):
+            if name is None:
+                raise KqlError("serialize needs name = expr")
+            cols[name] = ctx.pe(expr)
+        df = df.withColumns(cols)
+    return df
+
+
+@_stage("take limit", keeps_order=True, keeps_twins=True)
+def _op_take(ctx, df, rest):
+    """`take N` / `limit N` — the first N rows."""
+    df = ctx.flush_sort(df)  # first-N consumes the pending order
+    try:
+        return df.limit(int(rest))
+    except ValueError:
+        raise KqlError(f"take/limit needs an integer, got {rest!r}")
+
+
+@_stage("count", keeps_order=False, keeps_twins=False)
+def _op_count(ctx, df, rest):
+    """`count` — one row, the number of input rows."""
+    return df.agg(F.count(F.lit(1)).alias("count_"))
+
+
+@_stage("consume", keeps_order=True, keeps_twins=False)
+def _op_consume(ctx, df, rest):
+    """Kusto `consume` evaluates the pipeline and returns an
+    empty result (a perf-harness sink). Declaratively that is
+    limit(0) over the same schema — Catalyst prunes the scan,
+    which is the right batch-engine reading (the cost side of
+    Kusto's consume is the interactive runtime's concern).
+    `decodeblocks=…` is accepted and ignored."""
+    if rest and not re.fullmatch(
+            r"decodeblocks\s*=\s*(true|false)", rest.strip()):
+        raise KqlError(
+            "consume takes no arguments (or decodeblocks=…)")
+    return df.limit(0)
+
+
+@_stage("distinct", keeps_order=False, keeps_twins=False)
+def _op_distinct(ctx, df, rest):
+    """`distinct *` / `distinct e, …` — the distinct rows or values."""
+    if rest == "*":
+        df = df.distinct()
+    else:
+        df = df.select(
+            *[ctx.pe(e) for _n, e in _parse_assignments(rest)]
+        ).distinct()
+    return df
+
+
+@_stage("top", keeps_order=False, keeps_twins=True)
+def _op_top(ctx, df, rest):
+    """`top N by expr [asc|desc][, tiebreak ...]` — sort+limit,
+    which Catalyst plans as TakeOrderedAndProject (per-
+    partition heaps, no global sort shuffle; plan-asserted in
+    tests)."""
+    n, cols = _top_order(rest, ctx.pe)
+    df = df.orderBy(*cols).limit(n)
+    # top's own order supersedes any earlier sort; its output
+    # is serialized by that order (Kusto top contract)
+    ctx.order = _Order(cols=cols, wspec=Window.orderBy(*cols))
+    return df
+
+
+def _top_order(src: str, pe) -> tuple[int, list[Column]]:
+    """``N by expr [asc|desc][, …]`` of `top` (also inside `partition`)
+    → (N, sort Columns compiled by ``pe``)."""
+    m = re.match(r"^(\d+)\s+by\s+(.+)$", src, re.S)
+    if not m:
+        raise KqlError("top needs `top N by expr [asc|desc]`")
+    cols = []
+    for part in _split_top_level(m.group(2), ","):
+        toks = part.rsplit(None, 1)
+        if len(toks) == 2 and toks[1].lower() in ("asc", "desc"):
+            c = pe(toks[0])
+            cols.append(
+                c.asc() if toks[1].lower() == "asc" else c.desc()
+            )
+        else:
+            # KQL top default order is descending
+            cols.append(pe(part).desc())
+    return int(m.group(1)), cols
+
+
+@_stage("top-hitters", keeps_order=False, keeps_twins=False)
+def _op_top_hitters(ctx, df, rest):
+    """`top-hitters N of c [by sumExpr]` — heavy hitters. Kusto
+    computes this approximately; this engine computes it
+    EXACTLY: a map-side-combinable hash aggregation on c
+    (state = one row per distinct c, the same bound a sketch
+    would amortize) followed by TakeOrderedAndProject — no
+    global sort. Output column names match Kusto
+    (approximate_count_/approximate_sum_) so queries port."""
+    m2 = re.match(
+        r"^(\d+)\s+of\s+([A-Za-z_]\w*)(?:\s+by\s+(.+))?$",
+        rest, re.S,
+    )
+    if not m2:
+        raise KqlError(
+            "top-hitters needs `top-hitters N of col [by expr]`"
+        )
+    n, c, by = int(m2.group(1)), m2.group(2), m2.group(3)
+    if by:
+        out = "approximate_sum_" + re.sub(r"\W+", "_", by.strip())
+        agg = F.sum(ctx.pe(by)).alias(out)
+    else:
+        out = f"approximate_count_{c}"
+        agg = F.count(F.lit(1)).alias(out)
+    return (df.groupBy(c).agg(agg)
+            .orderBy(F.col(out).desc(), F.col(c).asc())
+            .limit(n))
+
+
+@_stage("mv-expand", keeps_order=False, keeps_twins=False)
+def _op_mv_expand(ctx, df, rest):
+    """`mv-expand name = expr` (or a bare array column) — one
+    element per output row; null/empty arrays yield no rows
+    (KQL default). One item per stage: multi-column KQL
+    mv-expand zips arrays, which sequential explodes would
+    silently turn into a cross product."""
+    mwi = re.match(
+        r"^with_itemindex\s*=\s*([A-Za-z_]\w*)\s+(.+)$",
+        rest, re.S)
+    ixname = None
+    if mwi:
+        ixname, rest = mwi.groups()
+    items = _parse_assignments(rest)
+    if len(items) != 1:
+        raise KqlError("mv-expand takes exactly one item per stage")
+    name, expr = items[0]
+    if name is None:
+        name = expr.strip()
+        if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
+            raise KqlError(
+                "mv-expand needs `name = expr` for non-column"
+                " expressions"
+            )
+    if ixname is not None:
+        # with_itemindex → posexplode (0-based element index)
+        others = [c for c in df.columns if c != name]
+        df = df.select(
+            *others,
+            F.posexplode(ctx.pe(expr)).alias(ixname, name))
+    else:
+        df = df.withColumn(name, F.explode(ctx.pe(expr)))
+    return df
+
+
+@_stage("make-series", keeps_order=False, keeps_twins=False)
+def _op_make_series(ctx, df, rest):
+    """`make-series name = agg() [default = d] on ts_col
+     from datetime(…) to datetime(…) step <timespan> [by keys]`
+    → one row per key with a REGULAR series array (every bin
+    present, gaps filled with the default) + the matching
+    timestamp array. Two map-side-combinable aggregations
+    ((keys, bin) then keys); the dense grid materializes as a
+    per-row `transform(sequence(0,n-1), …)` over a bin→value
+    map — no grid join, no shuffle beyond the two aggs. n is
+    fixed at plan time from the literal from/to/step."""
+    m2 = re.match(
+        r"^([A-Za-z_]\w*)\s*=\s*(.+?)"
+        r"(?:\s+default\s*=\s*(\S+))?"
+        r"\s+on\s+([A-Za-z_]\w*)"
+        r"\s+from\s+datetime\(\s*['\"]?([^)'\"]+)['\"]?\s*\)"
+        r"\s+to\s+datetime\(\s*['\"]?([^)'\"]+)['\"]?\s*\)"
+        r"\s+step\s+([\d.]+(?:ms|d|h|m|s))"
+        r"(?:\s+by\s+(.+))?$",
+        rest, re.S,
+    )
+    if not m2:
+        raise KqlError(
+            "make-series needs `name = agg() [default = d] on col"
+            " from datetime(..) to datetime(..) step <span>"
+            " [by keys]`"
+        )
+    (sname, aggsrc, dflt, oncol, f_s, t_s,
+     stepsrc, bysrc) = m2.groups()
+    from datetime import datetime as _dt
+
+    start = _dt.fromisoformat(f_s.strip())
+    end = _dt.fromisoformat(t_s.strip())
+    step_s = _timespan_secs(stepsrc)
+    if step_s <= 0:
+        raise KqlError(f"make-series step must be > 0, got {stepsrc!r}")
+    n_bins = int(-(-((end - start).total_seconds()) // step_s))
+    if not 0 < n_bins <= 1_000_000:
+        raise KqlError(f"make-series grid of {n_bins} bins")
+    # parquet often yields TIMESTAMP_NTZ, which refuses a direct
+    # double cast — normalize to session-tz timestamp first
+    onc = F.col(oncol).cast("timestamp")
+    startc = F.lit(f_s.strip()).cast("timestamp")
+    keys = []
+    if bysrc:
+        keys = [
+            (ctx.pe(e).alias(nm) if nm else ctx.pe(e))
+            for nm, e in _parse_assignments(bysrc)
+        ]
+    key_names = [
+        df.select(k).columns[0] for k in keys
+    ]
+    dflt_col = ctx.pe(dflt) if dflt is not None else F.lit(None)
+    bin_idx = F.floor(
+        (onc.cast("double") - startc.cast("double")) / step_s
+    ).cast("int")
+    seq = F.sequence(F.lit(0), F.lit(n_bins - 1))
+    return (
+        df.filter((onc >= startc) & (bin_idx < n_bins)
+                  & (bin_idx >= 0))
+        .groupBy(*keys, bin_idx.alias("_msi"))
+        .agg(ctx.pe(aggsrc).alias("_msv"))
+        .groupBy(*key_names)
+        .agg(
+            F.map_from_entries(
+                F.collect_list(F.struct("_msi", "_msv"))
+            ).alias("_msm")
+        )
+        .select(
+            *key_names,
+            F.transform(
+                seq,
+                lambda i: F.coalesce(
+                    F.try_element_at(F.col("_msm"), i), dflt_col
+                ),
+            ).alias(sname),
+            F.transform(
+                seq,
+                lambda i: startc + F.make_dt_interval(
+                    F.lit(0), F.lit(0), F.lit(0),
+                    i.cast("double") * F.lit(step_s),
+                ),
+            ).alias(oncol),
+        )
+    )
+
+
+@_stage("parse parse-where", keeps_order=True, keeps_twins=False)
+def _op_parse(ctx, df, rest):
+    """`parse [kind=simple] expr with [*] "lit" name[:type] …` —
+    the KQL text-extraction operator (the reference's home
+    domain: one regex over the line, `parse.py`'s per-format
+    grok twin). Compiles the whole pattern to ONE anchored
+    regex; each field is a capture group read by
+    regexp_extract — narrow, codegen'd, no Python.
+    `parse-where` is the filtering flavor: rows whose source
+    does not match the pattern are DROPPED (parse keeps them
+    with empty/NULL extractions) — one extra rlike on the same
+    anchored regex, pushed before the extraction projections
+    so the scan filter prunes early."""
+    src, pattern, cols = _compile_parse(rest, ctx.pe)
+    if ctx.op == "parse-where":
+        df = df.filter(src.rlike(pattern))
+    return df.withColumns(cols)
+
+
+@_stage("parse-kv", keeps_order=True, keeps_twins=False)
+def _op_parse_kv(ctx, df, rest):
+    """`parse-kv expr as (k1[:ty], k2…) with (pair_delimiter=',',
+    kv_delimiter='=')` — key=value extraction into declared
+    columns. One regexp_extract per declared key (codegen'd,
+    narrow; missing key → '' → NULL under a typed try_cast,
+    KQL's behavior). Single-character pair delimiter only: the
+    value is matched with a negated character class, which is
+    the form both Java regex and RE2 (DuckDB oracle) agree on
+    without lookahead."""
+    m2 = re.match(r"^(.+?)\s+as\s+\((.+?)\)\s*"
+                  r"(?:with\s*\((.*?)\))?\s*$", rest, re.S)
+    if not m2:
+        raise KqlError(
+            "parse-kv needs `parse-kv expr as (keys) "
+            "[with (pair_delimiter=…, kv_delimiter=…)]`"
+        )
+    src = ctx.pe(m2.group(1))
+    pd_, kd = ",", "="
+    for nm, val in _parse_assignments(m2.group(3) or ""):
+        if nm == "pair_delimiter":
+            pd_ = _unquote(val.strip())
+        elif nm == "kv_delimiter":
+            kd = _unquote(val.strip())
+        elif nm is not None:
+            raise KqlError(f"unknown parse-kv option {nm!r}")
+    if len(pd_) != 1:
+        raise KqlError("parse-kv pair_delimiter must be one char")
+    cols = {}
+    for item in _split_top_level(m2.group(2), ","):
+        name, _, ty = item.strip().partition(":")
+        name, ty = name.strip(), (ty.strip() or None)
+        esc_pd = re.escape(pd_)
+        kpat = (f"(?:^|{esc_pd})\\s*{re.escape(name)}"
+                f"\\s*{re.escape(kd)}\\s*([^{esc_pd}]*?)"
+                f"\\s*(?:{esc_pd}|$)")
+        cols[name] = _typed_cast(
+            F.regexp_extract(src, kpat, 1), ty)
+    if not cols:
+        raise KqlError("parse-kv declares no keys")
+    return df.withColumns(cols)
+
+
+@_stage("fork", keeps_order=True, keeps_twins=False)
+def _op_fork(ctx, df, rest):
+    """`fork` has several result tables: it is compiled by `kql_fork`."""
+    raise KqlError(
+        "fork yields multiple result tables — use kql_fork()"
+    )
+
+
+@_stage("join", keeps_order=False, keeps_twins=False)
+def _op_join(ctx, df, rest):
+    """`join [kind=k] (source) on key[, $left.a == $right.b ...]`
+    Equi-join only (KQL likewise); bare keys merge into one
+    output column (KQL shows the key once), `$left/$right`
+    pairs keep both sides. Colliding non-key right columns are
+    renamed `name1`, the KQL dedup convention.
+    strategy hints are APPLIED, not just tolerated:
+    hint.strategy=broadcast pins a BroadcastHashJoin on the
+    parenthesized side (the dimension/enrich shape, above
+    AQE's size threshold too); =shuffle pins shuffle-hash;
+    hint.shufflekey=k (+hint.num_partitions=N) pre-partitions
+    both sides on k so the join reuses one Exchange. Hints
+    Catalyst can't honor for the join type are ignored, same
+    as Kusto treats them as optimizer suggestions. Only
+    header hints are consumed — a subquery's own hints
+    belong to the subquery."""
+    hints: dict[str, str] = {}
+
+    def _eat_hints(s: str) -> str:
+        mh = re.match(r"^(?:hint\.\w+\s*=\s*[\w.]+\s+)+", s)
+        if not mh:
+            return s
+        hints.update(re.findall(
+            r"hint\.(\w+)\s*=\s*([\w.]+)", mh.group(0)))
+        return s[mh.end():]
+
+    rest = _eat_hints(rest)
+    mk = re.match(r"^kind\s*=\s*([a-z]+)\s+", rest)
+    kind = mk.group(1) if mk else "innerunique"  # KQL default
+    if mk:
+        rest = _eat_hints(rest[mk.end():])
+    m2 = re.match(
+        r"^(\(.*\)|[A-Za-z_][A-Za-z0-9_]*)\s+on\s+(.+)$",
+        rest, re.S,
+    )
+    if not m2:
+        raise KqlError("join needs `join [kind=k] (source) on keys`")
+    if kind not in _JOIN_KINDS:
+        raise KqlError(f"unsupported join kind {kind!r}")
+    right = _parse_source(m2.group(1), ctx.tables, ctx.bindings)
+    strat = hints.get("strategy")
+    if strat == "broadcast":
+        right = right.hint("broadcast")
+    elif strat == "shuffle":
+        right = right.hint("shuffle_hash")
+    sk = hints.get("shufflekey")
+    if sk:
+        parts = ([int(hints["num_partitions"])]
+                 if "num_partitions" in hints else [])
+        df = df.repartition(*parts, F.col(sk))
+        right = right.repartition(*parts, F.col(sk))
+    keys: list[str] = []
+    pairs: list[tuple[str, str]] = []
+    for item in _split_top_level(m2.group(2), ","):
+        item = item.strip()
+        mm = re.fullmatch(
+            r"\$left\.([A-Za-z_][A-Za-z0-9_]*)\s*==\s*"
+            r"\$right\.([A-Za-z_][A-Za-z0-9_]*)", item,
+        )
+        if mm:
+            pairs.append((mm.group(1), mm.group(2)))
+        elif re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", item):
+            keys.append(item)
+        else:
+            raise KqlError(f"bad join key {item!r}")
+    if kind == "innerunique":
+        # KQL default: left side deduplicated on the join keys
+        # (first match wins — arbitrary within a key, like KQL).
+        df = df.dropDuplicates(keys + [l for l, _ in pairs])
+    if kind in ("rightanti", "rightsemi"):
+        if pairs:
+            lal, ral = right.alias("_l"), df.alias("_r")
+            cond = None
+            for lk, rk in pairs + [(k, k) for k in keys]:
+                piece = F.col(f"_l.{rk}") == F.col(f"_r.{lk}")
+                cond = piece if cond is None else (cond & piece)
+            df = lal.join(ral, cond, _JOIN_KINDS[kind])
+        else:
+            df = right.join(df, keys, _JOIN_KINDS[kind])
+    elif pairs:
+        keys_as_pairs = pairs + [(k, k) for k in keys]
+        left_cols = set(df.columns)
+        ren: dict[str, str] = {}
+        for c in right.columns:
+            if c in left_cols:
+                right = right.withColumnRenamed(c, c + "1")
+                ren[c] = c + "1"
+        lal, ral = df.alias("_l"), right.alias("_r")
+        cond = None
+        for lk, rk in keys_as_pairs:
+            piece = F.col(f"_l.{lk}") == F.col(f"_r.{ren.get(rk, rk)}")
+            cond = piece if cond is None else (cond & piece)
+        df = lal.join(ral, cond, _JOIN_KINDS[kind])
+    else:
+        for c in right.columns:
+            if c in df.columns and c not in keys:
+                right = right.withColumnRenamed(c, c + "1")
+        df = df.join(right, keys, _JOIN_KINDS[kind])
+    return df
+
+
+@_stage("lookup", keeps_order=False, keeps_twins=False)
+def _op_lookup(ctx, df, rest):
+    """`lookup [kind=leftouter|inner] (dim) on key[, …]` — KQL's
+    dimension-join: same surface as `join` but the right side
+    is a DIMENSION by contract, so it is broadcast explicitly
+    (BroadcastHashJoin regardless of AQE's size estimate —
+    the `enrich.py` pattern, lifted into the text lifecycle).
+    Bare equi-keys only (KQL lookup likewise)."""
+    m2 = re.match(
+        r"^(?:kind\s*=\s*(leftouter|inner)\s+)?"
+        r"(\(.*\)|[A-Za-z_][A-Za-z0-9_]*)\s+on\s+(.+)$",
+        rest, re.S,
+    )
+    if not m2:
+        raise KqlError("lookup needs `lookup [kind=k] (dim) on keys`")
+    kind = {"leftouter": "left", "inner": "inner",
+            None: "left"}[m2.group(1)]
+    right = _parse_source(m2.group(2), ctx.tables, ctx.bindings)
+    keys = []
+    for item in _split_top_level(m2.group(3), ","):
+        item = item.strip()
+        if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", item):
+            raise KqlError(f"lookup key must be a column: {item!r}")
+        keys.append(item)
+    for c in right.columns:
+        if c in df.columns and c not in keys:
+            right = right.withColumnRenamed(c, c + "1")
+    return df.join(F.broadcast(right), keys, kind)
+
+
+@_stage("union", keeps_order=False, keeps_twins=False)
+def _op_union(ctx, df, rest):
+    """`union [withsource=Col] [kind=inner|outer] source[, …]` —
+    outer (the KQL default) aligns by name and null-fills
+    missing columns; inner keeps only the common columns.
+    `withsource=` labels every row with its origin: the
+    upstream relation is labeled `T` (its let-name is not
+    tracked through the pipe), each operand with its leading
+    table name (or `unionN` for literal/subquery sources)."""
+    m2 = re.match(
+        r"^(?:withsource\s*=\s*([A-Za-z_][A-Za-z0-9_]*)\s+)?"
+        r"(?:kind\s*=\s*(inner|outer)\s+)?"
+        r"(?:isfuzzy\s*=\s*(true|false)\s+)?(.+)$",
+        rest, re.S,
+    )
+    if not m2:
+        raise KqlError("union needs at least one source table")
+    srccol, ukind = m2.group(1), m2.group(2) or "outer"
+    fuzzy = m2.group(3) == "true"
+    if srccol:
+        df = df.withColumn(srccol, F.lit("T"))
+    for i, item in enumerate(_split_top_level(m2.group(4), ",")):
+        try:
+            other = _parse_source(item, ctx.tables, ctx.bindings)
+        except KqlError:
+            if fuzzy:
+                # `isfuzzy=true`: unresolvable operands are
+                # skipped, not errors (Kusto's rule — the union
+                # of the sources that DO resolve)
+                continue
+            raise
+        if srccol:
+            mname = re.match(r"\s*([A-Za-z_][A-Za-z0-9_]*)\s*$",
+                             item)
+            label = mname.group(1) if mname else f"union{i + 1}"
+            other = other.withColumn(srccol, F.lit(label))
+        if ukind == "outer":
+            df = df.unionByName(other, allowMissingColumns=True)
+        else:
+            common = [c for c in df.columns if c in other.columns]
+            df = df.select(*common).unionByName(
+                other.select(*common)
+            )
+    return df
+
+
+@_stage("partition", keeps_order=False, keeps_twins=False)
+def _op_partition(ctx, df, rest):
+    """`partition [hint.strategy=…] by key ( stages )` — run the
+    subquery per key value and union the results. NOT executed
+    as per-key jobs (Kusto's legacy strategy caps at 64
+    partitions for exactly the reason we avoid it): each
+    subquery stage is REWRITTEN into a key-aware whole-table
+    plan — `top N by e` becomes a row_number window
+    partitioned by the key (one shuffle, per-partition heaps),
+    `summarize … by g` gains the key as a group column, and
+    row-local stages — those whose `_STAGES` entry keeps the
+    serialized order (where/extend/project*/parse*…) — pass through
+    unchanged. This is the shuffle-strategy semantics at any
+    key cardinality."""
+    m2 = re.match(
+        r"^(?:hint\.\w+\s*=\s*\w+\s+)?by\s+([A-Za-z_]\w*)"
+        r"\s*\((.+)\)\s*$",
+        rest, re.S,
+    )
+    if not m2:
+        raise KqlError("partition needs `by key ( stages )`")
+    pkey, sub = m2.groups()
+    for sub_stage in _split_top_level(sub, "|"):
+        sub_stage = sub_stage.strip()
+        sm = re.match(r"^([a-z-]+)\s*(.*)$", sub_stage, re.S)
+        if not sm:
+            raise KqlError(f"bad partition substage {sub_stage!r}")
+        sop, srest = sm.group(1), sm.group(2).strip()
+        if sop == "top":
+            # compiled against the sub-stage's input columns and the
+            # serialized order of the partition's input
+            sub = _StageState(df, ctx.bindings, ctx.tables)
+            n, order = _top_order(srest, lambda s: sub.pe(s, ctx.before))
+            w = Window.partitionBy(pkey).orderBy(*order)
+            df = (
+                df.withColumn("__prn", F.row_number().over(w))
+                .filter(F.col("__prn") <= n)
+                .drop("__prn")
+            )
+        elif sop in ("take", "limit"):
+            # per-key take needs SOME deterministic order;
+            # require top instead
+            raise KqlError(
+                "partition: use `top N by expr` — a bare "
+                f"`{sop}` has no deterministic per-key order"
+            )
+        elif sop == "summarize":
+            joiner = (", " if _find_by_top(srest) is not None
+                      else " by ")
+            df = _apply_stages(
+                df, ["summarize " + srest + joiner + pkey],
+                ctx.bindings, ctx.tables,
+            )
+        elif sop in _STAGES and _STAGES[sop][0]:  # keeps_order
+            df = _apply_stages(df, [sub_stage], ctx.bindings, ctx.tables)
+        else:
+            raise KqlError(
+                f"partition subquery does not support {sop!r}"
+            )
+    return df
+
+
+@_stage("scan", keeps_order=False, keeps_twins=False)
+def _op_scan(ctx, df, rest):
+    """`scan [with_match_id=col] with (step s1: pred; …)` —
+    KQL's sequential pattern-match operator, the one tabular
+    op that is genuinely NOT window-expressible (a row's state
+    depends on the whole prefix). Hybrid execution, the shape
+    the 100 TB brief prescribes for custom stateful operators:
+
+      1. step predicates compile to Catalyst boolean columns
+         (JVM codegen — the Python side never parses values);
+      2. ONE `applyInPandas` per `serialize by` key group runs
+         the O(n) state machine over the precomputed bool
+         matrix (Arrow-batched both ways).
+
+    Requires `sort by <plain cols> | serialize by <plain keys>`
+    (the keys bound the state; without keys the scan is a
+    single serialized task — allowed, but only sensible on
+    small relations, same rule as bare `serialize`).
+
+    Subset semantics (documented deviation from full Kusto
+    scan): a row advances the match if it satisfies the NEXT
+    step, else extends the CURRENT step, else is skipped; a
+    match completes at the first row reaching the final step;
+    matched rows of incomplete sequences are still emitted.
+    Output = matched rows + (match_id, step) + one column per
+    `declare`d state variable (its value AFTER the row's step
+    assignments ran). Per-step `output=all|last|none`
+    (default all) controls emission: `last` keeps only the
+    final row matched at that step (flushed when the match
+    advances, completes, or the group ends), `none` drops the
+    step's rows. Declared variables initialize at match
+    start, are assignable in step bodies (`step s: pred =>
+    x = x + v, …`), and may appear in predicates/assignments
+    by BARE name (simplification of Kusto's step-qualified
+    `s.x`; one live match candidate per group, so there is a
+    single unambiguous state)."""
+    m2 = re.match(
+        r"^(?:with_match_id\s*=\s*([A-Za-z_]\w*)\s+)?"
+        r"(?:declare\s*\((.*?)\)\s*)?"
+        r"with\s*\((.+)\)\s*$",
+        rest, re.S,
+    )
+    if not m2:
+        raise KqlError(
+            "scan needs `scan [with_match_id=c] "
+            "[declare (v: type [= lit], …)] with "
+            "(step s1: pred [=> v = expr, …]; …)`"
+        )
+    mid_col = m2.group(1) or "match_id"
+    decl_src = m2.group(2)
+    declares: list[tuple[str, str, object, object]] = []
+    if decl_src and decl_src.strip():
+        for item in _split_top_level(decl_src, ","):
+            dm = re.match(
+                r"^([A-Za-z_]\w*)\s*:\s*([A-Za-z]\w*)"
+                r"\s*(?:=\s*(.+))?$",
+                item.strip(), re.S,
+            )
+            if not dm or dm.group(2) not in _SCAN_DECL_TYPES:
+                raise KqlError(
+                    f"bad scan declare item {item!r} (need "
+                    "`name: long|real|string|bool [= literal]`)"
+                )
+            vname, vtype, vinit = dm.groups()
+            if vname in df.columns or vname == mid_col:
+                raise KqlError(
+                    f"scan declare variable {vname!r} collides "
+                    "with an input column"
+                )
+            init = None
+            if vinit is not None:
+                initfn, initcols, _us = _compile_scan_expr(
+                    vinit, frozenset()
+                )
+                if initcols:
+                    raise KqlError(
+                        f"scan declare init for {vname!r} must "
+                        "be a constant expression"
+                    )
+                init = initfn({}, {})
+            spark_t, py_t = _SCAN_DECL_TYPES[vtype]
+            if init is not None:
+                init = py_t(init)
+            declares.append((vname, spark_t, py_t, init))
+    declared_names = frozenset(d[0] for d in declares)
+
+    steps = []       # (name, pred_src)
+    step_assigns = []  # list[list[(var, fn, cols)]]
+    step_modes = []    # per step: "all" (default) | "last" | "none"
+    for st in _split_top_level(m2.group(3), ";"):
+        sm = re.match(
+            r"^step\s+([A-Za-z_]\w*)\s*"
+            r"(?:output\s*=\s*(all|last|none)\s*)?"
+            r":\s*(.+)$",
+            st.strip(), re.S,
+        )
+        if not sm:
+            raise KqlError(f"bad scan step {st!r}")
+        step_modes.append(sm.group(2) or "all")
+        body = sm.group(3)
+        arrow = _find_top(body, r"(?<![=!<>])=>")
+        pred_src, assign_src = (
+            (body.strip(), None) if arrow is None
+            else (body[:arrow].strip(), body[arrow + 2:].strip()))
+        assigns = []
+        if assign_src is not None:
+            if not declares:
+                raise KqlError(
+                    "scan step assignments need declare(...)"
+                )
+            for a in _split_top_level(assign_src, ","):
+                am = re.match(r"^([A-Za-z_]\w*)\s*=\s*(.+)$",
+                              a.strip(), re.S)
+                if not am or am.group(1) not in declared_names:
+                    raise KqlError(
+                        f"scan assignment {a!r} must set a "
+                        "declared variable"
+                    )
+                afn, acols, _us = _compile_scan_expr(
+                    am.group(2), declared_names
+                )
+                assigns.append((am.group(1), afn, acols))
+        steps.append((sm.group(1), pred_src))
+        step_assigns.append(assigns)
+    if not steps:
+        raise KqlError("scan needs at least one step")
+    osrc = ctx.before.order_src
+    if not osrc or any(o is None for o in osrc):
+        raise KqlError(
+            "scan requires a preceding `sort by` on plain "
+            "columns"
+        )
+    keys = ctx.before.keys or []
+    base_cols = list(df.columns)
+    # Hybrid predicate compilation: state-free predicates stay
+    # Catalyst flag columns (JVM codegen); predicates touching
+    # declared variables compile to (row, state) closures run
+    # inside the machine. String literals are stripped before
+    # the reference scan so a literal containing a variable's
+    # name doesn't force the Python path.
+    pred_fns: list = []   # per step: None (JVM flag) or closure
+    pred_cols: set = set()
+    for _nm, pred in steps:
+        no_lits = _STR_LIT_RE.sub(" ", pred)
+        if declared_names and any(
+            w in declared_names
+            for w in re.findall(r"[A-Za-z_]\w*", no_lits)
+        ):
+            pfn, pcols, _us = _compile_scan_expr(
+                pred, declared_names
+            )
+            pred_fns.append(pfn)
+            pred_cols |= pcols
+        else:
+            pred_fns.append(None)
+    flags = df
+    for i, (fn_, (_nm, pred)) in enumerate(zip(pred_fns, steps)):
+        flags = flags.withColumn(
+            f"__scan{i}",
+            F.lit(False) if fn_ else ctx.pe(pred, ctx.before))
+    from pyspark.sql.types import (
+        BooleanType, DoubleType, LongType, StringType,
+        StructField, StructType,
+    )
+
+    _decl_spark_t = {"long": LongType(), "double": DoubleType(),
+                     "string": StringType(),
+                     "boolean": BooleanType()}
+    out_schema = StructType(
+        [f for f in df.schema.fields]
+        + [StructField(mid_col, LongType()),
+           StructField("step", StringType())]
+        + [StructField(vn, _decl_spark_t[vt])
+           for vn, vt, _pt, _iv in declares]
+    )
+    names = [n for n, _a in osrc]
+    asc = [a for _n, a in osrc]
+    step_names = [nm for nm, _p in steps]
+    nsteps = len(steps)
+    var_names = [vn for vn, _t, _pt, _iv in declares]
+    init_state = {vn: iv for vn, _t, _pt, iv in declares}
+    coercers = {vn: pt for vn, _t, pt, _iv in declares}
+    # columns the Python closures read (predicates + assigns)
+    ref_cols = sorted(
+        (pred_cols | {c for a in step_assigns
+                      for _v, _f, cs in a for c in cs})
+        & set(base_cols)
+    )
+    missing_refs = (
+        pred_cols | {c for a in step_assigns
+                     for _v, _f, cs in a for c in cs}
+    ) - set(base_cols)
+    if missing_refs:
+        raise KqlError(
+            f"scan expression references unknown column(s) "
+            f"{sorted(missing_refs)}"
+        )
+
+    def _scan_group(pdf):
+        import pandas as pd
+
+        pdf = pdf.sort_values(names, ascending=asc,
+                              kind="stable")
+        fl = pdf[[f"__scan{i}" for i in range(nsteps)]].fillna(
+            False).to_numpy(dtype=bool)
+        recs = (
+            [
+                {k: (None if pd.isna(v) else v)
+                 for k, v in rec.items()}
+                for rec in pdf[ref_cols].to_dict("records")
+            ]
+            if ref_cols else None
+        )
+        n = len(pdf)
+        take, mid_out, step_out = [], [], []
+        var_out: dict = {vn: [] for vn in var_names}
+        s, mid, active = -1, 0, False
+        st: dict = {}
+        # `output=last` buffer: at most ONE pending row — only
+        # the current step buffers, and advancing flushes it
+        # before the advancing row emits, so input order holds.
+        pending: list | None = None
+
+        def test(j, i, state):
+            fn_ = pred_fns[j]
+            if fn_ is None:
+                return bool(fl[i, j])
+            row = recs[i] if recs is not None else {}
+            return fn_(row, state) is True
+
+        def emit(i, m, sname, snap):
+            take.append(i)
+            mid_out.append(m)
+            step_out.append(sname)
+            for vn in var_names:
+                var_out[vn].append(snap.get(vn))
+
+        def flush_pending():
+            nonlocal pending
+            if pending is not None:
+                emit(*pending)
+                pending = None
+
+        for i in range(n):
+            if active and s + 1 < nsteps and test(s + 1, i, st):
+                flush_pending()  # leaving step s
+                s += 1
+            elif active and test(s, i, st):
+                pass
+            elif not active:
+                st0 = dict(init_state)
+                if test(0, i, st0):
+                    mid += 1
+                    s, active, st = 0, True, st0
+                else:
+                    continue
+            else:
+                continue
+            row = recs[i] if recs is not None else {}
+            for vn, afn, _cs in step_assigns[s]:
+                v = afn(row, st)
+                st[vn] = None if v is None else coercers[vn](v)
+            mode = step_modes[s]
+            if mode == "all":
+                emit(i, mid, step_names[s], st)
+            elif mode == "last":
+                pending = [i, mid, step_names[s], dict(st)]
+            if s == nsteps - 1:
+                flush_pending()  # the completing row if 'last'
+                s, active, st = -1, False, {}
+        flush_pending()  # incomplete match at group end
+        out = pdf.iloc[take][base_cols].copy()
+        out[mid_col] = pd.array(mid_out, dtype="int64")
+        out["step"] = step_out
+        for vn, _t, pt, _iv in declares:
+            if pt is int:
+                out[vn] = pd.array(var_out[vn], dtype="Int64")
+            elif pt is float:
+                out[vn] = pd.array(var_out[vn], dtype="Float64")
+            else:
+                out[vn] = pd.Series(
+                    var_out[vn], index=out.index, dtype="object"
+                )
+        return out
+
+    if keys:
+        df = flags.groupBy(*keys).applyInPandas(
+            _scan_group, out_schema)
+    else:
+        df = (
+            flags.withColumn("__g", F.lit(0))
+            .groupBy("__g")
+            .applyInPandas(
+                lambda pdf: _scan_group(pdf.drop(columns="__g")),
+                out_schema,
+            )
+        )
+    return df
+
+
+@_stage("invoke", keeps_order=False, keeps_twins=False)
+def _op_invoke(ctx, df, rest):
+    """`invoke f(args…)` — apply a table-valued user function to
+    the pipeline-so-far: the first table parameter binds to
+    the current relation, scalar arguments bind as constants,
+    and the body pipeline compiles INLINE into this plan (no
+    materialization boundary — Catalyst optimizes across the
+    call)."""
+    m2 = re.match(r"^([A-Za-z_]\w*)\s*\((.*)\)\s*$", rest, re.S)
+    if not m2:
+        raise KqlError("invoke needs `invoke f(args…)`")
+    fname, argsrc = m2.groups()
+    fn = ctx.bindings.get(fname)
+    if not isinstance(fn, KqlFunc):
+        raise KqlError(f"{fname} is not a user function")
+    tps = fn.table_params
+    if not tps:
+        raise KqlError(
+            f"{fname}() has no table parameter — use it as a "
+            "scalar function"
+        )
+    scalars = [p for p, k in fn.params if k == "scalar"]
+    argsrcs = [a for a in _split_top_level(argsrc, ",") if a.strip()]
+    if len(argsrcs) != len(scalars):
+        raise KqlError(
+            f"invoke {fname}() takes {len(scalars)} scalar "
+            f"arg(s), got {len(argsrcs)}"
+        )
+    if fn.expanding:
+        raise KqlError(f"recursive user function {fname}()")
+    child_bind = dict(ctx.bindings)
+    for pname, a in zip(scalars, argsrcs):
+        child_bind[pname] = parse_expr_ke(a, ctx.bindings)
+    child_tables = dict(ctx.tables) if ctx.tables else {}
+    child_tables[tps[0]] = df
+    fn.expanding = True
+    try:
+        df = _parse_source(fn.body, child_tables, child_bind)
+    finally:
+        fn.expanding = False
+    return df
+
+
+@_stage("facet", keeps_order=False, keeps_twins=False)
+def _op_facet(ctx, df, rest):
+    """`facet by c1, c2…` — Kusto returns one value-count table
+    PER column; a single-DataFrame engine returns the long
+    form instead: (facet_column, value, count_) stacked. Each
+    facet is its own map-side-combinable aggregation; the
+    stack is a zero-shuffle union. Values render as strings
+    so heterogeneous columns stack into one schema."""
+    rest2 = re.sub(r"^by\s+", "", rest)
+    fcols = [c.strip() for c in _split_top_level(rest2, ",")]
+    if not fcols or not all(
+        re.fullmatch(r"[A-Za-z_]\w*", c) for c in fcols
+    ):
+        raise KqlError("facet needs `facet by col[, col…]`")
+    missing = [c for c in fcols if c not in df.columns]
+    if missing:
+        raise KqlError(f"facet column(s) not found: {missing}")
+    parts = [
+        df.groupBy(F.col(c).cast("string").alias("value"))
+        .agg(F.count(F.lit(1)).alias("count_"))
+        .select(F.lit(c).alias("facet_column"), "value", "count_")
+        for c in fcols
+    ]
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
+@_stage("render", keeps_order=True, keeps_twins=False)
+def _op_render(ctx, df, rest):
+    """`render timechart|barchart|…` — presentation-layer
+    directive; accepted and ignored (no server-side effect in
+    Kusto either), so dashboards' queries run unmodified."""
+    if not rest:
+        raise KqlError("render needs a chart type")
+    return df
+
+
+@_stage("as", keeps_order=True, keeps_twins=False)
+def _op_as(ctx, df, rest):
+    """`as name` — bind the pipeline-so-far into the table
+    registry so a later `join`/`union`/`lookup` subquery can
+    reference it by name. Pure plan aliasing: the bound
+    relation is the lazy DataFrame (Catalyst reuses the
+    common subplan; nothing materializes here)."""
+    m2 = re.match(r"^(?:hint\.materialized\s*=\s*\w+\s+)?"
+                  r"([A-Za-z_]\w*)$", rest)
+    if not m2:
+        raise KqlError("as needs an identifier: `as name`")
+    if ctx.tables is None:
+        ctx.tables = {}
+    ctx.tables[m2.group(1)] = df
+    return df
+
+
+@_stage("getschema", keeps_order=False, keeps_twins=False)
+def _op_getschema(ctx, df, rest):
+    """`getschema` — the table's schema as rows (driver-side
+    constant relation; never touches data)."""
+    spark = df.sparkSession
+    return spark.createDataFrame(
+        [(f.name, i, f.dataType.simpleString())
+         for i, f in enumerate(df.schema.fields)],
+        "ColumnName string, ColumnOrdinal long, ColumnType string",
+    )
+
+
+@_stage("search", keeps_order=False, keeps_twins=False)
+def _op_search(ctx, df, rest):
+    """`search "term"` — case-insensitive containment over EVERY
+    string column (KQL search over the current table). Compiles
+    to one OR of contains() predicates — codegen'd, pushable;
+    no UDF, no per-column passes."""
+    m2 = re.match(r"""^(['"])(.*)\1$""", rest.strip(), re.S)
+    if not m2:
+        raise KqlError('search needs a quoted term: search "x"')
+    term = m2.group(2).lower()
+    from pyspark.sql.types import StringType
+
+    scols = [
+        f.name for f in df.schema.fields
+        if isinstance(f.dataType, StringType)
+    ]
+    if not scols:
+        raise KqlError("search needs at least one string column")
+    cond = None
+    for c in scols:
+        piece = F.lower(F.col(c)).contains(term)
+        cond = piece if cond is None else (cond | piece)
+    return df.filter(cond)
+
+
+@_stage("evaluate", keeps_order=False, keeps_twins=False)
+def _op_evaluate(ctx, df, rest):
+    """`evaluate plugin(args…)` — see ``_evaluate``."""
+    return _evaluate(df, rest, pe=ctx.pe, bindings=ctx.bindings,
+                     tables=ctx.tables, wspec=ctx.before.wspec)
+
+
+@_stage("mv-apply", keeps_order=False, keeps_twins=False)
+def _op_mv_apply(ctx, df, rest):
+    """`mv-apply name = expr on (stage | …)` — per-record
+    subquery over an exploded array. Row identity is preserved
+    WITHOUT a self-join: the exploded relation keeps every
+    original column plus a per-row id, and each `summarize`
+    inside the subquery is rewritten to group by (original
+    columns, row id) — so "aggregate per record" is one hash
+    aggregation and the original row never has to be joined
+    back (a rejoin on a generated id is the classic
+    recomputation hazard). The id only disambiguates duplicate
+    input rows inside this single plan."""
+    m2 = re.match(
+        r"^([A-Za-z_]\w*)\s*=\s*(.+?)\s+on\s*\((.+)\)\s*$",
+        rest, re.S,
+    )
+    if not m2:
+        raise KqlError("mv-apply needs `name = expr on (stages)`")
+    name, arrsrc, sub = m2.groups()
+    base_cols = list(df.columns)
+    mv = df.withColumn(
+        "_mvid", F.monotonically_increasing_id()
+    ).withColumn(name, F.explode(ctx.pe(arrsrc)))
+    substages = []
+    for st in _split_top_level(sub, "|"):
+        if re.match(r"^summarize\b", st.strip()):
+            joiner = (", " if _find_by_top(st) is not None
+                      else " by ")
+            st = st + joiner + ", ".join(base_cols + ["_mvid"])
+        substages.append(st)
+    df = _apply_stages(mv, substages, ctx.bindings, ctx.tables)
+    if "_mvid" in df.columns:
+        df = df.drop("_mvid")
+    return df
+
+
+@_stage("reduce", keeps_order=False, keeps_twins=False)
+def _op_reduce(ctx, df, rest):
+    """`reduce by expr` — Kusto's log-pattern clustering: rows
+    whose string collapses to the same wildcard pattern group
+    together, output (Pattern, Count, Representative). The
+    pattern rule is a documented deterministic subset of
+    Kusto's similarity heuristic: hex runs (>= 4 chars) then
+    digit runs become `*`. Representative is the MIN source
+    string (Kusto picks an arbitrary member; min keeps the
+    result engine-portable). One map-side-combinable
+    aggregation — the 100 TB shape for template mining."""
+    m2 = re.match(r"^by\s+(.+)$", rest, re.S)
+    if not m2:
+        raise KqlError("reduce needs `by <expr>`")
+    src_col = ctx.pe(m2.group(1).strip())
+    pat = F.regexp_replace(
+        F.regexp_replace(src_col, F.lit("[0-9a-f]{4,}"), F.lit("*")),
+        F.lit("[0-9]+"), F.lit("*"),
+    )
+    return (
+        df.select(pat.alias("Pattern"), src_col.alias("_src"))
+        .groupBy("Pattern")
+        .agg(
+            F.count(F.lit(1)).alias("Count"),
+            F.min("_src").alias("Representative"),
+        )
+    )
+
+
+@_stage("sample", keeps_order=False, keeps_twins=False)
+def _op_sample(ctx, df, rest):
+    """`sample N` — KQL's row sample. Engine choice: order by a
+    64-bit hash of the row content and keep N, which Catalyst
+    plans as TakeOrderedAndProject (per-partition heaps, no
+    global sort shuffle). The "sample" is therefore
+    deterministic across runs AND partitionings — the same
+    reproducibility role the content-derived ids play in
+    `signals.py` — while a hash is still uniform over the
+    data. Map-typed columns are excluded from the hash (Spark
+    hash functions reject MapType)."""
+    try:
+        n = int(rest)
+    except ValueError:
+        raise KqlError(f"sample needs an integer, got {rest!r}")
+    from pyspark.sql.types import MapType
+
+    hcols = [
+        f.name for f in df.schema.fields
+        if not isinstance(f.dataType, MapType)
+    ]
+    if not hcols:
+        raise KqlError("sample needs at least one hashable column")
+    return df.orderBy(F.xxhash64(*hcols)).limit(n)
+
+
+@_stage("sample-distinct", keeps_order=False, keeps_twins=False)
+def _op_sample_distinct(ctx, df, rest):
+    """`sample-distinct N of expr` — N distinct values of expr,
+    hash-ordered for the same determinism as `sample`."""
+    m2 = re.match(r"^(\d+)\s+of\s+(.+)$", rest, re.S)
+    if not m2:
+        raise KqlError("sample-distinct needs `N of expr`")
+    vals = df.select(ctx.pe(m2.group(2))).distinct()
+    return vals.orderBy(F.xxhash64(vals.columns[0])).limit(
+        int(m2.group(1))
+    )
+
+
+@_stage("top-nested", keeps_order=False, keeps_twins=False)
+def _op_top_nested(ctx, df, rest):
+    """`top-nested N of col by [name =] agg()[, top-nested ...]`
+    — hierarchical top-k: level 1 keeps the global top-N keys
+    by the aggregate; each deeper level keeps the per-parent
+    top-N. Scale shape: level 1 is agg + TakeOrderedAndProject
+    (no global sort); deeper levels aggregate the full input
+    once, broadcast-SEMI-join against the tiny kept parent set
+    (≤ ∏Nᵢ rows) BEFORE ranking, then rank inside each parent
+    with a window whose partitions are the kept parents only.
+    Ties break on the key value ascending so results are
+    deterministic (KQL leaves ties arbitrary).
+
+    `with others = "Label"` per level adds one row per kept
+    parent combo aggregating everything OUTSIDE that level's
+    top-N (recomputed from the RAW rows — correct for any
+    aggregate, not just distributive ones — via anti-join
+    against the tiny kept key set). Documented subset: others
+    rows are terminal (deeper-level columns NULL, they do not
+    nest), and the level column must be string-typed so the
+    label shares its type."""
+    kept = None
+    prev_cols: list[str] = []
+    out_cols: list[str] = []
+    others_parts: list[DataFrame] = []
+    for lvl in re.split(r",\s*top-nested\s+", rest):
+        m2 = re.match(
+            r"^(\d+)\s+of\s+([A-Za-z_]\w*)\s*"
+            r"(?:with\s+others\s*=\s*"
+            rf"({_STR_LIT})\s*)?"
+            r"\s+by\s+(?:([A-Za-z_]\w*)\s*=\s*)?(.+)$",
+            lvl.strip(), re.S,
+        )
+        if not m2:
+            raise KqlError(
+                "top-nested needs `N of col "
+                "[with others = \"label\"] by [name =] agg()`"
+            )
+        n, col, others_src, aname, aggsrc = m2.groups()
+        aname = aname or f"aggregated_{col}"
+        grp = df.groupBy(*prev_cols, col).agg(ctx.pe(aggsrc).alias(aname))
+        if kept is not None:
+            grp = grp.join(
+                F.broadcast(kept.select(*prev_cols)),
+                prev_cols, "semi",
+            )
+        if prev_cols:
+            w = Window.partitionBy(*prev_cols).orderBy(
+                F.col(aname).desc(), F.col(col).asc()
+            )
+            grp = (
+                grp.withColumn("_tn_rank", F.row_number().over(w))
+                .filter(F.col("_tn_rank") <= int(n))
+                .drop("_tn_rank")
+            )
+        else:
+            grp = grp.orderBy(
+                F.col(aname).desc(), F.col(col).asc()
+            ).limit(int(n))
+        if others_src is not None:
+            if df.schema[col].dataType.typeName() != "string":
+                raise KqlError(
+                    f"top-nested with others: column {col!r} "
+                    "must be string-typed (the label shares "
+                    "its type)"
+                )
+            label = _unquote(others_src)
+            src = df
+            if kept is not None:
+                src = src.join(
+                    F.broadcast(kept.select(*prev_cols)),
+                    prev_cols, "semi",
+                )
+            excl = src.join(
+                F.broadcast(grp.select(*prev_cols, col)),
+                prev_cols + [col], "anti",
+            )
+            oth = (
+                excl.groupBy(*prev_cols)
+                .agg(ctx.pe(aggsrc).alias(aname))
+                .withColumn(col, F.lit(label))
+            )
+            if kept is not None:
+                oth = oth.join(F.broadcast(kept), prev_cols,
+                               "inner")
+            others_parts.append(
+                oth.select(*out_cols, col, aname)
+            )
+        if prev_cols:
+            grp = grp.join(F.broadcast(kept), prev_cols, "inner")
+        kept = grp
+        prev_cols = prev_cols + [col]
+        out_cols += [col, aname]
+    df = kept.select(*out_cols)
+    for oth in others_parts:
+        df = df.unionByName(oth, allowMissingColumns=True)
+    return df
+
+
+@_stage("find", keeps_order=False, keeps_twins=False)
+def _op_find(ctx, df, rest):
+    """`find in (T1, T2, …) where <pred> [project col, …]` —
+    cross-table search (Kusto findoperator): the predicate
+    runs against every listed table; tables where it cannot
+    compile (references a column the table lacks) are skipped,
+    Kusto's own rule. Output: `source_` + the projected
+    columns (absent ones NULL via unionByName), or the union
+    of all matching tables' columns without `project`. Each
+    leg is an independent filtered scan — predicate pushdown
+    per table, the union is plan-level (no shuffle)."""
+    m2 = re.match(r"^in\s*\(([^)]+)\)\s*where\s+(.+)$",
+                  rest, re.S)
+    if not m2:
+        raise KqlError(
+            "find needs `in (T1, T2, …) where pred "
+            "[project col, …]`")
+    src_names = [n.strip() for n in
+                 _split_top_level(m2.group(1), ",")]
+    tail2 = m2.group(2)
+    pidx = _find_kw_top(tail2, "project")
+    pred_src = tail2[:pidx].strip() if pidx is not None \
+        else tail2.strip()
+    proj_names = (
+        [c.strip() for c in
+         _split_top_level(tail2[pidx + len("project"):], ",")]
+        if pidx is not None else None)
+    parts: list[DataFrame] = []
+    for name in src_names:
+        if not ctx.tables or name not in ctx.tables:
+            raise KqlError(
+                f"find: unknown table {name!r} — pass it via "
+                "kql(..., tables={...})")
+        tdf = ctx.tables[name]
+        vcols = {
+            f.name for f in tdf.schema.fields
+            if f.dataType.typeName() == "variant"
+        }
+        try:
+            cond = parse_expr(pred_src, ctx.bindings,
+                              variant_cols=vcols)
+            part = tdf.filter(cond)
+            part.schema  # force analysis: missing col → skip
+        except KqlError:
+            raise
+        except Exception:
+            continue
+        if proj_names is not None:
+            keep = [c for c in proj_names if c in tdf.columns]
+            part = part.select(*keep)
+        part = part.select(
+            F.lit(name).alias("source_"), "*")
+        parts.append(part)
+    if not parts:
+        raise KqlError(
+            "find: the predicate compiles against none of the "
+            "listed tables")
+    df = parts[0]
+    for p in parts[1:]:
+        df = df.unionByName(p, allowMissingColumns=True)
+    if proj_names is not None:
+        df = df.select(
+            "source_",
+            *[c for c in proj_names if c in df.columns])
+    return df
+
+
+@_stage("make-graph", keeps_order=False, keeps_twins=False)
+def _op_make_graph(ctx, df, rest):
+    """`make-graph src --> dst [with <nodes> on <id>]`
+    `make-graph src --> dst [with_node_id=<name>]`
+    Builds the graph value graph-match / graph-to-table
+    consume (Kusto make-graph-operator.md). Nodes absent →
+    implicit node set (edge endpoints), id column named by
+    with_node_id (default `node_id`)."""
+    m2 = re.match(
+        r"^([A-Za-z_]\w*)\s*-->\s*([A-Za-z_]\w*)\s*"
+        r"(?:with\s+(.+?)\s+on\s+([A-Za-z_]\w*)"
+        r"|with_node_id\s*=\s*([A-Za-z_]\w*))?\s*$",
+        rest, re.S,
+    )
+    if not m2:
+        raise KqlError(
+            "make-graph needs `srcCol --> dstCol "
+            "[with nodesSource on idCol | with_node_id=name]`"
+        )
+    srcc, dstc, nsrc, nid, anon_id = m2.groups()
+    for c in (srcc, dstc):
+        if c not in df.columns:
+            raise KqlError(f"make-graph: no column {c!r}")
+    ndf = (_parse_source(nsrc, ctx.tables, ctx.bindings)
+           if nsrc is not None else None)
+    ctx.graph = {
+        "edges": df, "src": srcc, "dst": dstc,
+        "nodes": ndf, "nid": nid or anon_id or "node_id",
+    }
+    return df
+
+
+def _made_graph(ctx) -> dict:
+    """The graph value of the preceding `make-graph` (graph stages)."""
+    if ctx.graph is None:
+        raise KqlError(f"{ctx.op} requires a preceding make-graph")
+    return ctx.graph
+
+
+@_stage("graph-mark-components", keeps_order=False, keeps_twins=False)
+def _op_graph_mark_components(ctx, df, rest):
+    """`graph-mark-components [kind = weak]
+     [with_component_id = name]` — label every node with its
+    weakly-connected component: the component id is the
+    MINIMUM node id reachable treating edges as undirected
+    (deterministic canonical label, Kusto's
+    graph-mark-components with kind=weak; kind=strong is
+    rejected, documented subset). Reuses the near-dup
+    min-label propagation (dataops/dedup.py
+    connected_components: one equi-join + one map-side min
+    per round, checkpointed frontier, converges in
+    O(diameter) rounds) — the right CC algorithm at scale.
+    NULL endpoints are ignored. The marked node set replaces
+    the graph's nodes; export it with `graph-to-table nodes`."""
+    g = _made_graph(ctx)
+    m2 = re.match(
+        r"^(?:kind\s*=\s*(\w+)\s*)?"
+        r"(?:with_component_id\s*=\s*([A-Za-z_]\w*)\s*)?$",
+        rest)
+    if not m2:
+        raise KqlError(
+            "graph-mark-components takes [kind = weak] "
+            "[with_component_id = name]")
+    kind, cname = m2.groups()
+    if kind not in (None, "weak"):
+        raise KqlError(
+            "graph-mark-components: only kind=weak is "
+            "supported (strong components are not)")
+    cname = cname or "ComponentId"
+    from otel_arrow_spark.dataops.dedup import (
+        connected_components,
+    )
+    nid = g["nid"]
+    pairs = g["edges"].select(
+        F.col(g["src"]).alias("doc_a"),
+        F.col(g["dst"]).alias("doc_b"),
+    ).filter(
+        F.col("doc_a").isNotNull()
+        & F.col("doc_b").isNotNull())
+    if g["nodes"] is not None:
+        nodes = g["nodes"]
+    else:
+        nodes = (
+            g["edges"].select(F.col(g["src"]).alias(nid))
+            .unionByName(
+                g["edges"].select(F.col(g["dst"]).alias(nid)))
+            .distinct()
+        )
+    uni = nodes.select(F.col(nid).alias("doc_id")) \
+        .filter(F.col("doc_id").isNotNull()).distinct()
+    labels = connected_components(pairs, uni)
+    ctx.graph = dict(
+        g,
+        nodes=nodes.join(
+            labels.select(
+                F.col("doc_id").alias(nid),
+                F.col("cluster_id").alias(cname)),
+            nid, "left"),
+    )
+    return df
+
+
+@_stage("graph-to-table", keeps_order=False, keeps_twins=False)
+def _op_graph_to_table(ctx, df, rest):
+    """`graph-to-table [nodes|edges]` — the make-graph value's node or
+    edge table (edges by default)."""
+    g = _made_graph(ctx)
+    which = rest.strip() or "edges"
+    if which == "edges":
+        df = g["edges"]
+    elif which == "nodes":
+        if g["nodes"] is not None:
+            df = g["nodes"]
+        else:
+            # implicit node set: distinct edge endpoints
+            df = (
+                g["edges"].select(
+                    F.col(g["src"]).alias(g["nid"]))
+                .unionByName(g["edges"].select(
+                    F.col(g["dst"]).alias(g["nid"])))
+                .distinct()
+            )
+    else:
+        raise KqlError(
+            "graph-to-table takes `nodes` or `edges`")
+    ctx.graph = None
+    return df
+
+
+def _graph_clauses(op: str, rest: str, start: int) -> tuple:
+    """The pattern at ``rest[start:]`` and the ``[where <expr>] project
+    …`` after it → (node patterns, edge patterns, where source or None,
+    project source); errors name ``op``."""
+    npat, epat, pos = _parse_graph_pattern(rest, start)
+    tail = rest[pos:].strip()
+    pidx = _find_kw_top(tail, "project")
+    if pidx is None:
+        raise KqlError(f"{op} needs a `project` clause")
+    head = tail[:pidx].strip()
+    where_src = None
+    if head:
+        if not re.match(r"^where\b", head):
+            raise KqlError(
+                f"{op}: unexpected {head[:30]!r} between pattern and "
+                "project (only `where` is allowed)")
+        where_src = head[5:].strip()
+    return npat, epat, where_src, tail[pidx + len("project"):].strip()
+
+
+@_stage("graph-match", keeps_order=False, keeps_twins=False)
+def _op_graph_match(ctx, df, rest):
+    """`graph-match [cycles=all|none|unique_edges] (a)-[e]->(b)…
+     [where <expr>] project [name =] expr, …`
+    Bounded-length patterns — each edge variable is one
+    prefixed copy of the edge relation, chained by equi-joins
+    on shared node variables; named node variables LEFT-join
+    node properties by id (nodes missing from the node table
+    still match, their non-id properties NULL — Kusto keeps
+    edge-endpoint nodes that carry no node row). `cycles=`:
+    `unique_edges` (the Kusto default) filters pairwise
+    identical edge ROWS (whole-row null-safe compare — a
+    multigraph with fully duplicate edge rows cannot be
+    distinguished without an id column, same as Kusto without
+    one); `none` makes all node variables pairwise distinct;
+    `all` adds nothing."""
+    g = _made_graph(ctx)
+    mm = re.match(
+        r"^(?:cycles\s*=\s*(all|none|unique_edges)\s+)?", rest)
+    cycles = mm.group(1) or "unique_edges"
+    npat, epat, where_src, proj_src = _graph_clauses(
+        "graph-match", rest, mm.end())
+    df = _graph_match(g, npat, epat, cycles, where_src,
+                      proj_src, ctx.bindings)
+    ctx.graph = None
+    return df
+
+
+@_stage("graph-shortest-paths", keeps_order=False, keeps_twins=False)
+def _op_graph_shortest_paths(ctx, df, rest):
+    """`graph-shortest-paths [output=any|all] (a)-[e*1..k]->(b)
+     [where <expr>] project …` — see _graph_shortest."""
+    g = _made_graph(ctx)
+    mm = re.match(r"^(?:output\s*=\s*(any|all)\s+)?", rest)
+    mode = mm.group(1) or "any"
+    npat, epat, where_src, proj_src = _graph_clauses(
+        "graph-shortest-paths", rest, mm.end())
+    # shortest-path semantics walk simple paths: repeated
+    # nodes would let a longer expansion shadow a shorter one
+    df = _graph_shortest(g, npat, epat, "none", where_src,
+                         proj_src, ctx.bindings, mode)
+    ctx.graph = None
     return df

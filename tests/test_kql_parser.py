@@ -614,6 +614,11 @@ def test_make_series_gap_fill_and_axis(spark):
     with pytest.raises(KqlError):
         kql(df, "T | make-series s = sum(v) on ts from datetime(2024-01-01)"
                 " to datetime(2024-01-01) step 1h")  # empty grid
+    for step in ("0h", "1.2.3h"):  # a timespan literal > 0
+        with pytest.raises(KqlError):
+            kql(df, "T | make-series s = sum(v) on ts"
+                    " from datetime(2024-01-01)"
+                    f" to datetime(2024-01-01 04:00:00) step {step}")
 
 
 def test_lookup_broadcasts_dimension(spark):
@@ -990,6 +995,10 @@ def test_partition_operator(spark):
         kql(df, "T | partition by k (take 1)")
     with pytest.raises(KqlError):
         kql(df, "T | partition by k (sort by v)")
+    # any stage that keeps the serialized order is row-local here
+    out4 = kql(df, "T | partition by k (project-reorder v | top 1 by v)")
+    assert out4.columns[0] == "v"
+    assert {(r.k, r.v) for r in out4.collect()} == {("a", 30.0), ("b", 15.0)}
 
 
 def test_user_scalar_function(spark):
@@ -1142,6 +1151,19 @@ def test_scan_operator(spark):
     assert ms == [(1, 2, 1), (1, 3, 2), (2, 3, 1)]
     with pytest.raises(KqlError):
         kql(df, 'T | scan with (step a: et == "x")')  # no sort
+    # a later `sort by`/`top` starts a new serialized row set: the
+    # earlier `serialize by` keys and sort keys no longer apply
+    out3 = kql(
+        df,
+        "T | sort by uid asc, seq asc | serialize by uid"
+        " | sort by uid asc, seq asc"
+        ' | scan with_match_id=m with (step hit: et == "view")',
+    )
+    ms = sorted((r.uid, r.seq, r.m) for r in out3.collect())
+    assert ms == [(1, 2, 1), (1, 3, 2), (2, 3, 3)]
+    with pytest.raises(KqlError):
+        kql(df, "T | sort by uid asc, seq asc | serialize by uid"
+                ' | top 10 by seq desc | scan with (step a: et == "x")')
 
 
 def test_scan_declare_state_variables(spark):
@@ -4635,5 +4657,28 @@ def test_every_evaluate_plugin_checks_its_argument_count(spark):
         "rolling_percentile(v, 50, ts, 1h, 0)",
         f"funnel_sequence(user, ts, {dt}, 1h, user, ['a', 'b'])",
         "basket(0.1) extra",
+        # timespans: the lexer's number form, and > 0
+        f"session_count(user, ts, {dt}, 1.2.3h, 1d)",
+        f"session_count(user, ts, {dt}, .d, 1d)",
+        f"session_count(user, ts, {dt}, 0h, 1d)",
+        "active_users_count(user, ts, 0d, 3d, 1)",
+        "activity_metrics(user, ts, 0d)",
     ):
         raises_naming(call, call[:call.index("(")])
+
+
+@pytest.mark.parametrize("stage", [
+    "top-hitters 2 of k",
+    "partition by k (top 1 by v)",
+    "scan with (step s1: v > 0)",
+    "invoke f()",
+    "facet by k",
+    "getschema",
+])
+def test_order_destroying_stages_end_the_serialized_row_set(spark, stage):
+    """A stage whose `_STAGES` entry destroys the order leaves no
+    serialized row set behind it, even after `sort by`."""
+    df = spark.createDataFrame([("a", 1.0), ("b", 2.0)], "k string, v double")
+    with pytest.raises(KqlError, match="requires a serialized row set"):
+        kql(df, "let f = (T: (*)) { T };"
+                f"T | sort by v | {stage} | extend r = row_number()")

@@ -9,6 +9,16 @@ import pytest
 from pyspark.sql import functions as F
 
 
+def _await(q, timeout: int) -> None:
+    """Wait up to ``timeout`` seconds for the streaming query ``q``, then
+    stop it whether or not it finished: a stream that outlives its test
+    keeps Python workers busy for the rest of the session."""
+    try:
+        q.awaitTermination(timeout)
+    finally:
+        q.stop()
+
+
 @pytest.fixture(scope="module")
 def stream_dirs(tmp_path_factory, spark, fixture_pdf):
     root = tmp_path_factory.mktemp("stream")
@@ -30,7 +40,7 @@ def test_stream_equals_batch_routing(spark, stream_dirs, catalogs, fixture_pdf):
     in_dir, out_dir, ckpt = stream_dirs
     tools, roles = catalogs
     q = stream_pipeline(spark, in_dir, out_dir, ckpt, tools, roles)
-    q.awaitTermination(120)
+    _await(q, 120)
 
     streamed = spark.read.parquet(out_dir)
     batch = route_turns(
@@ -71,7 +81,7 @@ def test_stream_resume_no_duplicates(spark, stream_dirs, catalogs):
     tools, roles = catalogs
     before = spark.read.parquet(out_dir).count()
     q = stream_pipeline(spark, in_dir, out_dir, ckpt, tools, roles)
-    q.awaitTermination(120)
+    _await(q, 120)
     after = spark.read.parquet(out_dir).count()
     assert before == after
 
@@ -96,7 +106,7 @@ def test_windowed_counts_with_watermark(spark, stream_dirs, catalogs):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await(q, 120)
     got = {
         (r.window_start, r.sink): r.n_turns
         for r in spark.sql("SELECT * FROM win_counts").collect()
@@ -128,7 +138,7 @@ def test_stateful_sessionization(spark, stream_dirs):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    _await(q, 180)
     rows = spark.sql(
         "SELECT conv_id, max(n_turns) AS n FROM sessions "
         "WHERE closed = 'open' GROUP BY conv_id"
@@ -167,7 +177,7 @@ def test_streaming_histograms_equal_batch(spark, stream_dirs, catalogs):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await(q, 120)
     streamed = spark.sql("SELECT * FROM hist_stream")
 
     batch_df = histogram_data_points(
@@ -213,7 +223,7 @@ def test_streaming_spans_equal_batch(spark, stream_dirs):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await(q, 300)
     streamed = spark.sql("SELECT * FROM spans_stream")
 
     batch = spans_table(
@@ -284,7 +294,7 @@ def test_streaming_dedup_drops_replays(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    _await(q, 180)
     got = spark.sql(
         "SELECT COUNT(*) AS n, COUNT(DISTINCT conv_id || '#' || turn_idx)"
         " AS nk FROM dedup_stream"
@@ -331,7 +341,7 @@ def test_streaming_interval_join_equals_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    _await(q, 180)
     got = {
         (r.conv_id, r.turn_idx, r.turn_idx_r)
         for r in spark.sql("SELECT * FROM ssj").collect()
@@ -384,7 +394,7 @@ def test_exactly_once_batch_sink_replay_safe(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    _await(q, 180)
     assert cat.read("routed").count() == 100
 
     # clean replay of an already-committed batch: skipped via ledger
@@ -440,7 +450,7 @@ def test_streaming_spans_multichunk_order(spark, tmp_path, fixture_pdf):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _await(q, 300)
     finally:
         spark.conf.set(key, prev)
     streamed = spark.sql("SELECT * FROM spans_stream_chunked")
@@ -515,7 +525,7 @@ def test_streaming_make_series_equals_batch(spark, stream_dirs):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await(q, 300)
     assembled = assemble_series(
         spark.sql("SELECT * FROM ms_bins"),
         start, end, step_sec=3600, keys=("tool",), name="n", default=0,
@@ -584,7 +594,7 @@ def test_streaming_enrich_equals_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    _await(q, 180)
     got = spark.sql("SELECT * FROM enrich_stream")
     exp = enrich_turns(
         spark.read.parquet(in_dir), tools, roles)
@@ -630,7 +640,7 @@ def test_streaming_sliding_counts_equals_batch(spark, stream_dirs):
                 leg.writeStream.format("memory").queryName(name)
                 .outputMode("complete").trigger(availableNow=True).start())
         for q in qs:
-            q.awaitTermination(300)
+            _await(q, 300)
         return {
             str(r.ts): (r.count_, r.dcount)
             for r in assemble_sliding_counts(
